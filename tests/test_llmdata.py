@@ -516,11 +516,15 @@ def test_minhash_columnar_equals_long_form(spark):
             assert r[f"m{j}"] == long[(r["doc_id"], j)]
 
 
-def test_connected_components_chain_and_cliques(spark):
+def test_connected_components_chain_and_cliques(spark, monkeypatch):
+    from transcriptomics_data_integration_spark.llmdata import dedup as dd
     from transcriptomics_data_integration_spark.llmdata.dedup import (
         connected_components,
         dedup_clusters,
     )
+
+    # small graphs take the driver arm; this test covers propagation
+    monkeypatch.setattr(dd, "DRIVER_CLOSURE_MAX_EDGES", -1)
 
     # a 12-node chain (diameter >> 1: forces pointer jumping to earn its
     # keep within max_iter) plus a separate triangle and an isolated pair
@@ -1449,11 +1453,13 @@ def test_minhash_star_mode_connectivity_equivalent(spark):
     assert comp(all_pairs) == comp(star_pairs)
 
 
-def test_connected_components_stats_rounds(spark):
+def test_connected_components_stats_rounds(spark, monkeypatch):
+    from transcriptomics_data_integration_spark.llmdata import dedup as dd
     from transcriptomics_data_integration_spark.llmdata.dedup import (
         connected_components,
     )
 
+    monkeypatch.setattr(dd, "DRIVER_CLOSURE_MAX_EDGES", -1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "id_a long, id_b long"
     )
@@ -1461,6 +1467,7 @@ def test_connected_components_stats_rounds(spark):
     cc = connected_components(pairs, stats=st)
     assert cc.select("component").distinct().count() == 1
     assert 1 <= st["rounds"] <= 8  # log2(21) + confirm pass
+    assert st["arm"] == "propagation" and st["edges"] == 40
 
 
 def test_dedup_paragraphs_corpus_level(spark):
@@ -1587,49 +1594,6 @@ def test_semdedup_arrow_empty_corpus_and_id_type(spark):
     # exactly one of the twin pair survives when they share a cell
     if got[1]["cell"] == got[2]["cell"]:
         assert got[1]["kept"] != got[2]["kept"]
-
-
-def test_connected_components_stars_matches_labelprop(spark):
-    """The large/small-star variant reaches the same fixpoint
-    (component = min reachable id) as the label-propagation default on
-    random graphs, descending-local-minima chains (the adversarial case
-    measured in r6 — ids interleaved so pointer jumps never compose),
-    self-loops, and cliques."""
-    import random
-
-    from transcriptomics_data_integration_spark.llmdata.dedup import (
-        connected_components,
-        connected_components_stars,
-    )
-
-    rnd = random.Random(7)
-    cases = []
-    # random sparse graph
-    cases.append([(rnd.randrange(60), rnd.randrange(60)) for _ in range(50)])
-    # interleaved-id chain: 0-59-1-58-2-57-...  (descending local minima)
-    seq = []
-    lo, hi = 0, 59
-    for i in range(60):
-        seq.append(lo if i % 2 == 0 else hi)
-        if i % 2 == 0:
-            lo += 1
-        else:
-            hi -= 1
-    cases.append(list(zip(seq, seq[1:])))
-    # clique + isolated self-loop
-    cases.append([(a, b) for a in range(5) for b in range(a)] + [(99, 99)])
-    for rows in cases:
-        edges = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in rows], "id_a long, id_b long"
-        )
-        lp = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-        st = {}
-        stars = {
-            r["node"]: r["component"]
-            for r in connected_components_stars(edges, stats=st).collect()
-        }
-        assert stars == lp, rows
-        assert st["rounds"] <= 10
 
 
 def test_semdedup_2level_tiers_agree_and_drop_twins(spark):
@@ -1931,39 +1895,6 @@ def test_leakage_safe_split_cluster_atomicity(spark):
     # clusters=None: doc-keyed fallback still total and deterministic
     nofilter = leakage_safe_split(docs, None, "doc_id", val_frac=0.3)
     assert nofilter.count() == docs.count()
-
-
-def test_connected_components_stars_nonconverged_emits_unique_nodes(spark):
-    """With max_iter exhausted before the fixpoint, the non-converged
-    edge list can hold the same node as `hi` with several distinct
-    `lo` roots; the final join must still emit exactly ONE row per
-    node (over-split components are the documented degradation —
-    duplicate/conflicting node rows are not)."""
-    import warnings
-
-    from transcriptomics_data_integration_spark.llmdata.dedup import (
-        connected_components_stars,
-    )
-
-    # interleaved-id chain (descending local minima) needs several star
-    # rounds; max_iter=1 guarantees non-convergence
-    seq, lo, hi = [], 0, 59
-    for i in range(60):
-        seq.append(lo if i % 2 == 0 else hi)
-        if i % 2 == 0:
-            lo += 1
-        else:
-            hi -= 1
-    edges = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in zip(seq, seq[1:])], "id_a long, id_b long"
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", RuntimeWarning)
-        rows = connected_components_stars(edges, max_iter=1).collect()
-    node_ids = [r["node"] for r in rows]
-    assert len(node_ids) == len(set(node_ids)) == 60
-    # every node maps to exactly one component <= itself
-    assert all(r["component"] <= r["node"] for r in rows)
 
 
 def test_jpeg_codec_roundtrip_and_tolerant_reader():
@@ -4127,14 +4058,17 @@ def test_video_phash_wide_neardup(spark):
 
 
 
-def test_connected_components_steps_per_cycle_invariant(spark):
+def test_connected_components_steps_per_cycle_invariant(spark, monkeypatch):
     """r11: composing multiple propagation steps per lineage/convergence
     cycle is a latency lever only — the min-label fixpoint (and hence
     every closure consumer's output) is identical for any
     steps_per_cycle."""
+    from transcriptomics_data_integration_spark.llmdata import dedup as dd
     from transcriptomics_data_integration_spark.llmdata.dedup import (
         connected_components,
     )
+
+    monkeypatch.setattr(dd, "DRIVER_CLOSURE_MAX_EDGES", -1)
 
     chain = [(i, i + 1) for i in range(100, 111)]
     tri = [(1, 2), (2, 3), (1, 3)]
@@ -4149,6 +4083,150 @@ def test_connected_components_steps_per_cycle_invariant(spark):
             for r in connected_components(edges, steps_per_cycle=steps).collect()
         }
         assert alt == base
+
+
+def _closure(spark, rows, schema, bound):
+    """connected_components with the driver-arm bound set to ``bound``
+    -> ({(node, component)}, stats); stats["dtypes"] holds the output's
+    column types."""
+    from transcriptomics_data_integration_spark.llmdata import dedup as dd
+
+    old = dd.DRIVER_CLOSURE_MAX_EDGES
+    dd.DRIVER_CLOSURE_MAX_EDGES = bound
+    try:
+        st = {}
+        out = dd.connected_components(spark.createDataFrame(rows, schema), stats=st)
+        st["dtypes"] = out.dtypes
+        return {(r["node"], r["component"]) for r in out.collect()}, st
+    finally:
+        dd.DRIVER_CLOSURE_MAX_EDGES = old
+
+
+def test_connected_components_arms_agree_property(spark):
+    """Property: on ANY undirected int-id graph —
+    random edges, chains, cliques, duplicate and reversed edges,
+    self-loops, isolated pairs — the driver union-find arm and the
+    label-propagation arm return identical (node, component) sets, and
+    propagation reaches its fixpoint within max_iter (an empty graph
+    included)."""
+    import warnings
+
+    from hypothesis import HealthCheck, example, given, settings
+    from hypothesis import strategies as st
+
+    node = st.one_of(st.integers(-20, 40), st.integers(2**40, 2**40 + 5))
+
+    @st.composite
+    def graphs(draw):
+        edges = draw(st.lists(st.tuples(node, node), max_size=12))
+        chain = draw(st.lists(node, max_size=10, unique=True))
+        edges += list(zip(chain, chain[1:]))
+        clique = draw(st.lists(node, max_size=5, unique=True))
+        edges += [(a, b) for a in clique for b in clique if a < b]
+        edges.append(draw(st.tuples(st.integers(1000, 1005), st.integers(1006, 1010))))
+        dup = draw(st.lists(st.sampled_from(edges), max_size=4))
+        edges += dup + [(b, a) for a, b in dup]
+        return draw(st.permutations(edges))
+
+    # interleaved-id chain 0-59-1-58-...: descending local minima, so
+    # pointer jumps compose nothing and propagation needs many rounds
+    zigzag = [v for i in range(30) for v in (i, 59 - i)]
+
+    @given(graphs())
+    @example(list(zip(zigzag, zigzag[1:])) + [(99, 99)])
+    @example([])
+    @settings(max_examples=10, deadline=None, database=None,
+              suppress_health_check=list(HealthCheck))
+    def check(rows):
+        schema = "id_a long, id_b long"
+        driver, st_d = _closure(spark, rows, schema, 10**9)
+        with warnings.catch_warnings():
+            warnings.filterwarnings("error", message="connected_components: no fixpoint")
+            prop, st_p = _closure(spark, rows, schema, -1)
+        assert (st_d["arm"], st_p["arm"]) == ("driver", "propagation")
+        assert st_d["dtypes"] == st_p["dtypes"] == [("node", "bigint"), ("component", "bigint")]
+        assert st_d["edges"] == st_p["edges"] and st_d["rounds"] == 0
+        assert driver == prop, rows
+
+    check()
+
+
+def test_connected_components_string_ids_use_spark_order(spark):
+    """String ids: Python's codepoint order equals Spark's UTF-8 byte
+    order, so both arms pick the same min id — including past the BMP,
+    where UTF-16 order (U+1F600 as a D83D surrogate) would put the
+    emoji below U+FFFF.  The driver arm keeps the id column's type."""
+    rows = [("\U0001f600", "\uffff"), ("é", "a"), ("Z", "é"), ("b", "b")]
+    schema = "id_a string, id_b string"
+    driver, st = _closure(spark, rows, schema, 10**9)
+    prop, st_p = _closure(spark, rows, schema, -1)
+    assert st["arm"] == "driver"
+    assert st["dtypes"] == st_p["dtypes"] == [("node", "string"), ("component", "string")]
+    assert driver == prop
+    _, st_int = _closure(spark, [(1, 2)], "id_a int, id_b int", 10**9)
+    assert st_int["dtypes"] == [("node", "int"), ("component", "int")]
+    comp = dict(driver)
+    assert comp["\U0001f600"] == "\uffff"
+    assert comp["é"] == comp["a"] == "Z"
+    assert comp["b"] == "b"
+
+
+def test_connected_components_null_and_float_ids(spark):
+    """A null endpoint raises on either arm; float ids (NaN is one
+    value and the largest in Spark, unequal to itself in Python) never
+    take the driver arm, so NaN still links its neighbours, and a
+    chain of fractional ids converges to its true minimum."""
+    for bound in (10**9, -1):
+        with pytest.raises(ValueError, match="null endpoint"):
+            _closure(spark, [(1, 2), (3, None)], "id_a long, id_b long", bound)
+    nan = float("nan")
+    fracs = [i / 10 for i in range(9, 0, -1)]
+    rows = [(1.0, nan), (nan, 2.0), (3.0, 4.0)] + list(zip(fracs, fracs[1:]))
+    got, st = _closure(spark, rows, "id_a double, id_b double", 10**9)
+    assert st["arm"] == "propagation"
+    comp = {n: c for n, c in got if n == n}
+    assert comp == {1.0: 1.0, 2.0: 1.0, 3.0: 3.0, 4.0: 3.0, **{f: 0.1 for f in fracs}}
+
+
+def test_observed_wait_is_bounded(spark, monkeypatch):
+    """An Observation that never arrives warns and falls back to a
+    direct aggregate after OBSERVATION_WAIT_S instead of blocking."""
+    from pyspark.sql import Observation
+
+    from transcriptomics_data_integration_spark.llmdata import dedup as dd
+
+    agg = F.count(F.lit(1)).alias("n")
+    obs = Observation()
+    spark.range(7).observe(obs, agg)  # no action ever runs on it
+    monkeypatch.setattr(dd, "OBSERVATION_WAIT_S", 0.05)
+    with pytest.warns(RuntimeWarning, match="not delivered"):
+        assert dd._observed(obs, spark.range(7), agg) == {"n": 7}
+
+
+def test_plan_size_fallback_warns():
+    """An unreadable size estimate still maps to the shuffle-arm
+    sentinel, but says so."""
+    from transcriptomics_data_integration_spark.llmdata import dedup as dd
+
+    with pytest.warns(RuntimeWarning, match="no Catalyst size estimate"):
+        assert dd._plan_size_bytes(None) == 1 << 62
+
+
+def test_unigram_max_piece_len_guard(spark):
+    """max_piece_len outside 1..4 would alias the base-5 lens pack;
+    both public entry points refuse it."""
+    from transcriptomics_data_integration_spark.llmdata.bpe import (
+        unigram_encode,
+        unigram_train_fixed,
+    )
+
+    df = _docs(spark, [(0, "the cat sat")])
+    pieces = unigram_train_fixed(df, vocab_size=8, n_iters=1, n_seed=4)
+    for bad in (0, 5, 6):
+        with pytest.raises(ValueError, match="max_piece_len"):
+            unigram_train_fixed(df, max_piece_len=bad)
+        with pytest.raises(ValueError, match="max_piece_len"):
+            unigram_encode(df, pieces, max_piece_len=bad)
 
 
 def test_incremental_dedup_band_index_and_no_broadcast_match(spark):

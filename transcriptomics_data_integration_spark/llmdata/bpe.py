@@ -240,6 +240,17 @@ def bpe_encode(
 # anywhere.
 
 UNIGRAM_MAX_WORD_LEN = 12
+# the Viterbi state packs piece lengths as base-5 digits, so a length
+# of 5 or more would alias its neighbours (lens [1,5] packs as [2,0])
+UNIGRAM_MAX_PIECE_LEN = 4
+
+
+def _check_max_piece_len(max_piece_len: int) -> None:
+    if not 1 <= max_piece_len <= UNIGRAM_MAX_PIECE_LEN:
+        raise ValueError(
+            f"max_piece_len must be in 1..{UNIGRAM_MAX_PIECE_LEN} "
+            f"(base-5 Viterbi lens pack), got {max_piece_len}"
+        )
 
 
 def _microlog_sql(x: str) -> str:
@@ -404,6 +415,7 @@ def unigram_train_fixed(
     unused multi-char pieces dropping and characters floored at count
     1); finally prune to ``vocab_size`` = all characters + the top
     multi-char pieces by (count DESC, piece ASC) and re-score."""
+    _check_max_piece_len(max_piece_len)
     words = _unigram_words(df, text_col).persist()
     register_persisted(words)
 
@@ -511,6 +523,7 @@ def unigram_encode(
     per-doc sums, undercounting n_tokens/n_chars_tok.  Callers
     encoding out-of-domain text should diff ``sum(length(w))`` against
     ``n_chars_tok`` to detect uncovered words."""
+    _check_max_piece_len(max_piece_len)
     toks = F.split(F.lower(F.col(text_col)), "[^a-z0-9]+")
     # r11 measured NEGATIVE (do not re-attempt): _spread_input here —
     # doc_words feeds TWO consumers (the distinct-word aggregation and

@@ -24,9 +24,13 @@ from __future__ import annotations
 
 import os
 import re
+import time
+import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, IntegralType, StringType
 
 from transcriptomics_data_integration_spark.runtime import register_persisted
 
@@ -775,138 +779,70 @@ def simhash_neardup_pairs(
     return pairs
 
 
-def connected_components_stars(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    2014) -> ``(node, component)`` with ``component`` = min reachable
-    id — the same fixpoint as :func:`connected_components`.
+# Edge bound of connected_components' driver arm: a deduplicated
+# symmetric edge list of at most this many rows is collected and closed
+# by union-find on the driver; a larger one keeps label propagation.
+# The driver arm won at every probed size (connected_components
+# docstring), so this is the largest one: its collect is ~6 MB pickled,
+# far below spark.driver.maxResultSize, and the driver's Python process
+# peaked near 0.4 GB.
+DRIVER_CLOSURE_MAX_EDGES = 1_000_000
 
-    Each iteration rewires every node's larger neighbors (large-star)
-    then its smaller neighbors (small-star) to the minimum of its
-    neighborhood, monotonically shrinking the edge list toward
-    per-component stars rooted at the component minimum.  Provably
-    O(log^2 n) iterations regardless of id arrangement.
+# Longest wait for an Observation after the action that delivers it.
+# Spark posts observed metrics through its listener bus, a moment after
+# the action returns; a wait past this bound warns and recomputes the
+# metrics with a direct aggregate instead of hanging.
+OBSERVATION_WAIT_S = 30.0
 
-    Measured tradeoff vs the label-propagation default (r6, PLANS.md):
-    on the sf0.1 two-crawl SimHash graph stars converge in 5 rounds
-    where label propagation needs 10 (near-dup chains interleave
-    descending local minima, so pointer jumping composes nothing away
-    and the min advances one hop per round) — but each star round
-    shuffles ~2|E| twice + a distinct, vs one |E|-join + one |V|-join,
-    so wall-clock LOST (7.2 s vs 3.8 s closure).  Use this variant for
-    adversarial chain-heavy graphs whose diameter defeats label
-    propagation; production dedup graphs are near-cliques that
-    converge in 3-4 label rounds (50 M-doc probe).
 
-    Convergence is detected with an order-independent edge-set
-    signature: (count, sum of xxhash64(hi, lo)) — one tiny aggregate
-    that doubles as the lazy localCheckpoint's materializing action.
-    """
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # node inventory up front: self-loop-only nodes drop out of the
-    # canonical edge list but are components of their own (parity with
-    # the label-propagation contract)
-    nodes = (
-        e0.select(F.col("a").alias("node"))
-        .unionByName(e0.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # canonical directed form: (hi, lo) with hi > lo; self-loops gone
-    e = (
-        e0.where(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sig = None
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # ---- large-star: for every node u, attach each LARGER
-        # neighbor v to m(u) = min(N(u) u {u}); m <= u < v so emitted
-        # edges are already (hi=v, lo=m) canonical, never self-loops
-        sym = e.unionByName(
-            e.select(F.col("lo").alias("hi"), F.col("hi").alias("lo"))
-        ).select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        m_lg = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mv"))
-            .select("u", F.least("_mv", "u").alias("m"))
-        )
-        # no distinct here: duplicate (hi, lo) rows are harmless to the
-        # small-star min and the final distinct dedups — one less
-        # E-shuffle per round
-        e_lg = (
-            sym.join(m_lg, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-        )
-        # ---- small-star on the directed (hi -> lo) list: attach every
-        # smaller neighbor (and hi itself) to m(hi) = min of them
-        m_sm = e_lg.groupBy("hi").agg(F.min("lo").alias("m"))
-        e_sm = (
-            e_lg.join(m_sm, "hi")
-            .select(F.col("lo").alias("node"), F.col("m"))
-            .unionByName(
-                m_sm.select(F.col("hi").alias("node"), F.col("m"))
+def _observed(obs: Observation, fallback: DataFrame, *aggs: Column) -> dict:
+    """``obs``'s metrics, waiting at most ``OBSERVATION_WAIT_S`` for
+    delivery; on timeout, warn and evaluate ``aggs`` (the observed
+    expressions) over ``fallback`` (the materialized observed frame)."""
+    deadline = time.monotonic() + OBSERVATION_WAIT_S
+    while not obs._jo.future().isCompleted():
+        if time.monotonic() >= deadline:
+            warnings.warn(
+                f"Observation not delivered within {OBSERVATION_WAIT_S} s; "
+                "computing its metrics with a direct aggregate",
+                RuntimeWarning,
+                stacklevel=2,
             )
-            .where(F.col("node") != F.col("m"))
-            .select(F.col("node").alias("hi"), F.col("m").alias("lo"))
-            .distinct()
-            # LAZY checkpoint: the signature aggregate right below is
-            # the materializing action, so lineage truncation and the
-            # convergence check share ONE job per round
-            .localCheckpoint(eager=False)
-        )
-        e = e_sm
-        sig_row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(F.col("hi"), F.col("lo")).cast("decimal(38,0)")
-            ).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        import warnings
+            return fallback.agg(*aggs).first().asDict()
+        time.sleep(0.002)
+    return obs.get
 
-        warnings.warn(
-            f"connected_components: no fixpoint after max_iter={max_iter} "
-            "star rounds; components may be over-split.  Raise max_iter.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    # converged edges are stars: (node -> component root); roots and
-    # self-loop-only nodes map to themselves.  On the non-converged
-    # path a node can still appear as `hi` with several distinct `lo`
-    # roots — reduce to min(lo) so the join stays 1:1 (over-split
-    # components, never duplicate/conflicting node rows)
-    roots = e.groupBy(F.col("hi").alias("node")).agg(
-        F.min("lo").alias("_root")
-    )
-    return (
-        nodes.join(
-            roots,
-            "node",
-            "left",
-        )
-        .select(
-            "node", F.coalesce("_root", F.col("node")).alias("component")
-        )
-    )
+
+def _driver_orderable(t: DataType) -> bool:
+    """Whether Python orders collected values of ``t`` exactly as Spark
+    does, so the driver arm's min id is Spark's: integers, and strings
+    under the default binary collation (codepoint order equals UTF-8
+    byte order).  Floats are out: NaN and -0.0 compare differently."""
+    return isinstance(t, IntegralType) or t == StringType()
+
+
+def _union_find(pairs) -> dict:
+    """node -> minimum node id of its component.  The smaller root wins
+    every union, so each root is its component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {n: find(n) for n in parent}
 
 
 def connected_components(
@@ -925,40 +861,100 @@ def connected_components(
     PAIRS, but "keep one copy" needs the transitive closure of those
     pairs (a~b, b~c => one cluster {a,b,c}).
 
-    Algorithm: min-label propagation with pointer jumping.  Each round
-    does (1) a neighbor step — every node takes the min label over
-    itself and its neighbors (one shuffle on the edge list) — and (2) a
-    pointer-jump step — label(n) <- label(label(n)) (one self-join on
-    the label table, whose size is |V|, not |E|).  Lineage is truncated
-    every round with ``localCheckpoint`` (iterative plans otherwise
-    grow unboundedly and re-execute from the scan).
+    Arm selection: the job that checkpoints the deduplicated symmetric
+    edge list also counts its rows (an ``Observation`` on that job, so
+    choosing costs no extra job).  At most
+    ``DRIVER_CLOSURE_MAX_EDGES`` rows, with an id type Python orders
+    as Spark does (integers, binary-collated strings), take the DRIVER
+    arm; anything else takes label PROPAGATION.  Both reach the same
+    min-id fixpoint.  ``stats`` gets ``arm`` ("driver"/"propagation"),
+    ``edges`` (the observed row count) and ``rounds`` (0 on the driver
+    arm).  A null endpoint raises ``ValueError`` on either arm.
 
-    Convergence is O(log diameter) when pointer jumps compose, and
-    O(diameter) on chains that interleave descending local minima
-    (measured r6: the sf0.1 two-crawl SimHash graph takes 10 rounds
-    and extra jumps compose NOTHING away — see PLANS.md).  Kept as the
-    default anyway: production dup graphs are near-cliques (tiny
-    diameter — the 50 M-doc probe converged in 4 rounds) and each
-    round is far lighter than a star round
-    (:func:`connected_components_stars`, the O(log^2 n) fallback for
-    adversarial chain-heavy graphs, measured 2x slower here).
+    Driver arm: collect one orientation of each edge and run
+    union-find in which the smaller id wins every union; the result
+    comes back as a local (Arrow-built) DataFrame with the id column's
+    own type.  Small dedup graphs pay a handful of jobs instead of ~30 for
+    propagation's checkpoint rounds.  Measured crossover (4-core host,
+    local[4], warm, closure plus one aggregate over its output; graphs
+    of disjoint 4-node cycles, propagation's easy case at 4 rounds):
+    10^4 rows 2.0 s driver vs 4.8 s propagation, 10^5 rows 2.1 s vs
+    5.0 s, 10^6 rows 6.9 s vs 17.0 s.  With every tenth edge rewired
+    at random (16-22 propagation rounds) propagation took 11-16 s at
+    10^4-10^5 rows while the driver arm stayed at ~2 s.  No crossover
+    was found, so ``DRIVER_CLOSURE_MAX_EDGES`` is the largest probed
+    size, 10^6, where the collect is ~6 MB.
 
-    At 100 TB scale: the per-round cost is one shuffle of E on dst plus
-    one shuffle of V; dup graphs have tiny diameter (near-cliques), so
-    2-4 rounds dominate in practice.
+    Propagation arm: min-label propagation with pointer jumping.  Each
+    round does (1) a neighbor step — every node takes the min label
+    over itself and its neighbors (one shuffle on the edge list) — and
+    (2) a pointer-jump step — label(n) <- label(label(n)) (one
+    self-join on the label table, whose size is |V|, not |E|).
+    Lineage is truncated every cycle with ``localCheckpoint``
+    (iterative plans otherwise grow unboundedly and re-execute from
+    the scan).  Convergence is O(log diameter) when pointer jumps
+    compose, and O(diameter) on chains that interleave descending
+    local minima (measured r6: the sf0.1 two-crawl SimHash graph takes
+    10 rounds — see PLANS.md).  Production dup graphs are near-cliques
+    (the 50 M-doc probe converged in 4 rounds); per round it shuffles
+    E on dst plus V.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    sym = sym.localCheckpoint(eager=True)
+    edge_aggs = (
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("a").isNull() | F.col("b").isNull(), 1)).alias("nulls"),
+    )
+    edge_obs = Observation()
+    sym = (
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .observe(edge_obs, *edge_aggs)
+        .localCheckpoint(eager=True)
+    )
+    counts = _observed(edge_obs, sym, *edge_aggs)
+    if counts["nulls"]:
+        raise ValueError(
+            f"connected_components: {counts['nulls']} edge rows have a null "
+            f"endpoint in {src!r}/{dst!r}; drop or fill them first"
+        )
+    id_type = sym.schema["a"].dataType
+    driver = counts["n"] <= DRIVER_CLOSURE_MAX_EDGES and _driver_orderable(id_type)
+    if stats is not None:
+        stats["arm"] = "driver" if driver else "propagation"
+        stats["edges"] = counts["n"]
+        stats["rounds"] = 0
+    if driver:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        comp = _union_find(sym.where(F.col("a") <= F.col("b")).collect())
+        arrow_type = to_arrow_type(id_type)
+        # an Arrow table becomes a LocalRelation: consumers get exact
+        # size stats and scan it without Python workers (a list of rows
+        # would go through a Python-side RDD on every evaluation)
+        table = pa.table(
+            {
+                "node": pa.array(list(comp), arrow_type),
+                "component": pa.array(list(comp.values()), arrow_type),
+            }
+        )
+        return sym.sparkSession.createDataFrame(table)
+
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
+    # labels only ever DECREASE, so convergence <=> sum(label) is
+    # unchanged (decimal sum: exact at any integer id magnitude; other
+    # id types sum a 64-bit hash of the label instead, which misses a
+    # change only on a hash-sum collision)
+    key = F.col("label") if isinstance(id_type, IntegralType) else F.xxhash64("label")
+    label_sum = F.sum(key.cast("decimal(38,0)")).alias("s")
     prev_sum = None
     rounds = 0
-    for _ in range(max_iter):
+    for cycle in range(max_iter):
         # r11: the dominant cost at moderate graph sizes is the FIXED
         # per-cycle overhead (checkpoint job + convergence collect +
         # scheduling barriers), not the shuffled bytes — so compose
@@ -984,15 +980,12 @@ def connected_components(
         parent = stepped.select(
             F.col("node").alias("label"), F.col("label").alias("plabel")
         )
-        # labels only ever DECREASE, so convergence <=> sum(label) is
-        # unchanged (decimal sum: exact at any node-id magnitude).
-        # r12 (VERDICT r11 item 5): the sum rides the CHECKPOINT job as
-        # an Observation side-channel (CollectMetrics node) instead of
-        # a dedicated collect job — ONE driver-barrier job per cycle,
-        # down from two; delivery through localCheckpoint(eager=True)'s
-        # materializing action is proven by tools/r12_observe_probe.py
-        # (52 ms, value == direct aggregate) and pinned by
-        # test_connected_components_* staying green.  The checkpoint
+        # r12 (VERDICT r11 item 5): the label sum rides the CHECKPOINT
+        # job as an Observation side-channel (CollectMetrics node) instead
+        # of a dedicated collect job — ONE driver-barrier job per cycle,
+        # down from two; the metrics arrive through the listener bus a
+        # moment after localCheckpoint(eager=True)'s materializing action
+        # returns, so _observed waits for them, bounded.  The checkpoint
         # stays EAGER — the r6 negative (lazy checkpoint with the
         # aggregate as materializer: 4.9 -> 5.2-6.2 s) fused two
         # CONSUMERS over an unpinned plan, which is a different shape.
@@ -1003,17 +996,17 @@ def connected_components(
                 "node",
                 F.least(F.col("label"), F.coalesce("plabel", "label")).alias("label"),
             )
-            .observe(obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
+            .observe(obs, label_sum)
             .localCheckpoint(eager=True)
         )
         labels = jumped
-        cur_sum = obs.get["s"]
-        if prev_sum is not None and cur_sum == prev_sum:
+        cur_sum = _observed(obs, jumped, label_sum)["s"]
+        # the first cycle has nothing to compare against (an empty
+        # graph's sum is NULL, so a None sentinel would never match)
+        if cycle and cur_sum == prev_sum:
             break
         prev_sum = cur_sum
     else:
-        import warnings
-
         warnings.warn(
             f"connected_components: no fixpoint after max_iter={max_iter} "
             "rounds; labels may be unconverged (components over-split). "
@@ -1513,10 +1506,18 @@ def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's optimized-plan size estimate in bytes — plan-build
     only, runs no job.  Unknown/unavailable estimates return a huge
     sentinel so the caller's auto-selection falls back to the arm that
-    is safe at any size (the shuffle arm)."""
+    is safe at any size (the shuffle arm).  A failure to read the
+    estimate at all warns, so a broken estimate is visible instead of
+    silently moving every batch onto the shuffle arm."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    except (AttributeError, TypeError, ValueError, Py4JError) as exc:
+        warnings.warn(
+            f"no Catalyst size estimate ({type(exc).__name__}: {exc}); "
+            "incremental_minhash_dedup takes the shuffle arm",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return 1 << 62
 
 
