@@ -49,6 +49,32 @@ def test_load_tables_returns_all_driver_tables(spark):
     assert t["region"].count() == 5
 
 
+def test_session_defaults_fit_host(monkeypatch):
+    """Without overrides the local session takes the process's CPU
+    affinity count and a heap of half physical memory, capped at 48 g;
+    the two environment variables still override both."""
+    import os
+
+    from transcriptomics_data_integration_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    cpus, mem = session._local_resources()
+    assert cpus == len(os.sched_getaffinity(0))
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert mem == f"{max(1, min(48, phys // 2 // (1 << 30)))}g"
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (1 << 40) // 4096}  # 1 TiB
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    assert session._local_resources()[1] == "48g"
+    pages["SC_PHYS_PAGES"] = (1 << 30) // 4096  # 1 GiB
+    assert session._local_resources()[1] == "1g"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session._local_resources() == (3, "2g")
+
+
 def test_no_driver_divergent_oracle_types():
     """Static sweep of every oracle's DESCRIBE'd output types (the r6
     burn): DuckDB types a windowed SUM(BIGINT) as HUGEINT, and the

@@ -1,7 +1,7 @@
 """Exercise the library paths no suite query reaches: the decimal-exact
 moment helpers (and their SQL twins vs DuckDB), the dense-matrix fill,
-the interval-join overlap contract, and the registry delta — the
-icc_blockmatrix lesson: an unexecuted path is an unverified path."""
+the interval-join overlap contract, and the registry delta — an
+unexecuted path is an unverified path."""
 
 from __future__ import annotations
 

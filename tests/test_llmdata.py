@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import hashlib
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -4204,12 +4205,14 @@ def test_observed_wait_is_bounded(spark, monkeypatch):
 
 
 def test_plan_size_fallback_warns():
-    """An unreadable size estimate still maps to the shuffle-arm
-    sentinel, but says so."""
-    from transcriptomics_data_integration_spark.llmdata import dedup as dd
+    """An unreadable size estimate still maps to "unknown" (the
+    scale-safe arm), but says so."""
+    from transcriptomics_data_integration_spark.operators.windows import (
+        estimated_plan_bytes,
+    )
 
     with pytest.warns(RuntimeWarning, match="no Catalyst size estimate"):
-        assert dd._plan_size_bytes(None) == 1 << 62
+        assert estimated_plan_bytes(None) is None
 
 
 def test_unigram_max_piece_len_guard(spark):
@@ -4286,6 +4289,9 @@ def test_incremental_dedup_auto_arm_selection(spark, tmp_path):
     falls back to the always-safe shuffle arm; both arms produce
     identical rows."""
     from transcriptomics_data_integration_spark.llmdata import dedup as dd
+    from transcriptomics_data_integration_spark.operators.windows import (
+        estimated_plan_bytes,
+    )
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     mem_existing = spark.createDataFrame(
@@ -4301,10 +4307,13 @@ def test_incremental_dedup_auto_arm_selection(spark, tmp_path):
     mem_incoming.write.parquet(p_in)
     existing, incoming = spark.read.parquet(p_ex), spark.read.parquet(p_in)
     # parquet-backed: file-size estimate, tiny -> broadcast arm
-    est = dd._plan_size_bytes(incoming)
+    est = estimated_plan_bytes(incoming)
     assert 0 < est < dd.INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
-    # RDD-backed: unknown stats -> the Long.MaxValue sentinel -> shuffle arm
-    assert dd._plan_size_bytes(mem_incoming) > dd.INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
+    # RDD-backed: unknown stats (Long.MaxValue) -> None -> shuffle arm,
+    # silently: an unknown estimate is routine, not a fault
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert estimated_plan_bytes(mem_incoming) is None
     auto_bcast = sorted(
         map(
             tuple,
@@ -4324,8 +4333,9 @@ def test_incremental_dedup_auto_arm_selection(spark, tmp_path):
     finally:
         dd.INCREMENTAL_BROADCAST_AUTO_MAX_BYTES = old
     assert auto_shuffle == auto_bcast
-    # an unestimable plan falls back to the huge sentinel (shuffle arm)
-    assert dd._plan_size_bytes(None) == 1 << 62
+    # an unreadable plan maps to "unknown" too (shuffle arm), with a warning
+    with pytest.warns(RuntimeWarning, match="no Catalyst size estimate"):
+        assert estimated_plan_bytes(None) is None
 
 
 def test_minhash_index_bucketed_roundtrip(spark, tmp_path):

@@ -259,33 +259,6 @@ def test_combat_nonparametric_matches_reference_loop():
         assert got["delta_star"][i] == pytest.approx(d_exp, rel=1e-9)
 
 
-def test_icc_blockmatrix_matches_numpy_correlations(spark):
-    """The gram-matrix scale path must reproduce plain Pearson gene-gene
-    correlations."""
-    import numpy as np
-
-    from transcriptomics_data_integration_spark.stats.icc import icc_blockmatrix
-
-    rng = np.random.default_rng(21)
-    genes, samples = [f"g{i}" for i in range(6)], [f"s{j}" for j in range(10)]
-    mat = rng.normal(0, 1, (len(genes), len(samples)))
-    rows = [
-        ("p1", g, s, float(mat[i, j]))
-        for i, g in enumerate(genes)
-        for j, s in enumerate(samples)
-    ]
-    cells = spark.createDataFrame(rows, ["platform", "gene_id", "sample_id", "value"])
-    got = {
-        (r["g"], r["h"]): r["r"]
-        for r in icc_blockmatrix(cells, ["p1"], block_size=4).collect()
-    }
-    expect = np.corrcoef(mat)
-    for i, g in enumerate(genes):
-        for j, h in enumerate(genes):
-            if i != j:
-                assert got[(g, h)] == pytest.approx(expect[i, j], abs=1e-9)
-
-
 def test_ks_test_matches_python_ecdf(spark):
     """KS statistic against a literal python ECDF computation (with
     ties), p monotone in D."""

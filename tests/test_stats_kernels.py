@@ -8,35 +8,49 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.operators import windows as W
 from transcriptomics_data_integration_spark.stats import (
-    bh_adjust,
-    bh_adjust_histogram,
     fem_rem_effects,
+    p_adjust,
     quantile_normalize,
     stouffer_combine,
     two_group_ttest,
 )
+from transcriptomics_data_integration_spark.stats.bh import (
+    _adjust_histogram,
+    _adjust_window,
+)
+
+_R_GOLDEN_ROWS = [("g1", 0.01), ("g2", 0.02), ("g3", 0.02), ("g4", 0.5), ("g5", 0.04)]
 
 
-def test_bh_matches_r_p_adjust(spark):
+def _on_both_arms(monkeypatch, df, method, key="gene"):
+    """``p_adjust`` with the window arm and then the histogram arm
+    forced through ``fits_single_task``; each plan is checked to be the
+    arm it claims (the histogram arm alone carries ``_bkt``)."""
+    outs = []
+    for fits in (True, False):
+        monkeypatch.setattr(W, "fits_single_task", lambda d, fits=fits: fits)
+        adj = p_adjust(df, "p", "adj", method=method, tiebreak_col=key)
+        plan = adj._jdf.queryExecution().optimizedPlan().toString()
+        assert ("_bkt" in plan) is not fits
+        outs.append({r[key]: r["adj"] for r in adj.collect()})
+    return outs
+
+
+def test_bh_matches_r_p_adjust(spark, monkeypatch):
     # R: p.adjust(c(.01,.02,.02,.5,.04), "BH")
     #    -> 0.03333333 0.03333333 0.03333333 0.50000000 0.05000000
-    df = spark.createDataFrame(
-        [("g1", 0.01), ("g2", 0.02), ("g3", 0.02), ("g4", 0.5), ("g5", 0.04)],
-        ["gene", "p"],
-    )
-    out = {
-        r["gene"]: r["adj"]
-        for r in bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()
-    }
-    assert out["g1"] == pytest.approx(1 / 30)
-    assert out["g2"] == pytest.approx(1 / 30)
-    assert out["g3"] == pytest.approx(1 / 30)
-    assert out["g4"] == pytest.approx(0.5)
-    assert out["g5"] == pytest.approx(0.05)
+    df = spark.createDataFrame(_R_GOLDEN_ROWS, ["gene", "p"])
+    for out in _on_both_arms(monkeypatch, df, "BH"):
+        assert out["g1"] == pytest.approx(1 / 30)
+        assert out["g2"] == pytest.approx(1 / 30)
+        assert out["g3"] == pytest.approx(1 / 30)
+        assert out["g4"] == pytest.approx(0.5)
+        assert out["g5"] == pytest.approx(0.05)
 
 
-def test_bh_histogram_matches_sort_window(spark):
+def test_bh_histogram_matches_sort_window(spark, monkeypatch):
     # the scale path must be BIT-identical to the sort-window form on
     # adversarial inputs: duplicated p, values on bucket boundaries
     # (k/n_buckets), a spike at 0, p = 1, and a near-uniform tail
@@ -47,34 +61,23 @@ def test_bh_histogram_matches_sort_window(spark):
         + [(f"g{i}", ((i * 37) % 997 + 1) / 1000.0) for i in range(500)]
     )
     df = spark.createDataFrame(rows, ["gene", "p"])
-    exact = {
-        r["gene"]: r["adj"]
-        for r in bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()
-    }
-    hist = {
-        r["gene"]: r["adj"]
-        for r in bh_adjust_histogram(
-            df, "p", "adj", tiebreak_col="gene", n_buckets=8
-        ).collect()
-    }
-    assert hist == exact  # dict equality => bitwise-equal doubles
+    for method in ("BH", "BY", "holm"):
+        exact, hist = _on_both_arms(monkeypatch, df, method)
+        hist8 = {
+            r["gene"]: r["adj"]
+            for r in _adjust_histogram(df, "p", "adj", method, "gene", n_buckets=8).collect()
+        }
+        assert hist == exact  # dict equality => bitwise-equal doubles
+        assert hist8 == exact
 
 
-def test_by_matches_r_p_adjust(spark):
+def test_by_matches_r_p_adjust(spark, monkeypatch):
     # R: p.adjust(c(.01,.02,.02,.5,.04), "BY")
     #    -> 0.07611111 0.07611111 0.07611111 1.00000000 0.11416667
     # (BH times c(5) = 1 + 1/2 + 1/3 + 1/4 + 1/5 = 2.2833...; the .5
     # row clamps at 1).  Asserted to the last ulp of R's left-fold
     # harmonic — the engine replays R's exact operand order.
-    from transcriptomics_data_integration_spark.stats import (
-        by_adjust,
-        by_adjust_histogram,
-    )
-
-    df = spark.createDataFrame(
-        [("g1", 0.01), ("g2", 0.02), ("g3", 0.02), ("g4", 0.5), ("g5", 0.04)],
-        ["gene", "p"],
-    )
+    df = spark.createDataFrame(_R_GOLDEN_ROWS, ["gene", "p"])
     expected = {
         "g1": 0.07611111111111112,
         "g2": 0.07611111111111112,
@@ -82,34 +85,18 @@ def test_by_matches_r_p_adjust(spark):
         "g4": 1.0,
         "g5": 0.11416666666666667,
     }
-    for fn in (by_adjust, by_adjust_histogram):
-        out = {
-            r["gene"]: r["adj"]
-            for r in fn(df, "p", "adj", tiebreak_col="gene").collect()
-        }
+    for out in _on_both_arms(monkeypatch, df, "BY"):
         assert out == expected  # dict equality => bitwise-equal doubles
 
 
-def test_holm_matches_r_p_adjust(spark):
+def test_holm_matches_r_p_adjust(spark, monkeypatch):
     # R: p.adjust(c(.01,.02,.02,.5,.04), "holm")
     #    -> 0.05 0.08 0.08 0.50 0.08
     # (step-down: tied .02s and the .04 all collapse to 4*.02 = .08
     # under the forward cummax)
-    from transcriptomics_data_integration_spark.stats import (
-        holm_adjust,
-        holm_adjust_histogram,
-    )
-
-    df = spark.createDataFrame(
-        [("g1", 0.01), ("g2", 0.02), ("g3", 0.02), ("g4", 0.5), ("g5", 0.04)],
-        ["gene", "p"],
-    )
+    df = spark.createDataFrame(_R_GOLDEN_ROWS, ["gene", "p"])
     expected = {"g1": 0.05, "g2": 0.08, "g3": 0.08, "g4": 0.5, "g5": 0.08}
-    for fn in (holm_adjust, holm_adjust_histogram):
-        out = {
-            r["gene"]: r["adj"]
-            for r in fn(df, "p", "adj", tiebreak_col="gene").collect()
-        }
+    for out in _on_both_arms(monkeypatch, df, "holm"):
         assert out == expected
 
 
@@ -119,11 +106,9 @@ def test_p_adjust_dispatch_and_de_wiring(spark):
     # 'fdr' aliases BH, 'none' is the identity, unknown raises; and
     # the DE pipeline's `adjust=` parameter reaches the kernel (BY
     # inflates every non-clamped adjusted p by the harmonic factor).
-    from transcriptomics_data_integration_spark.stats import bh_adjust, p_adjust
-
     rows = [(f"g{i}", ((i * 37) % 97 + 1) / 100.0) for i in range(50)]
     df = spark.createDataFrame(rows, ["gene", "p"])
-    bh = {r["gene"]: r["adj"] for r in bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()}
+    bh = {r["gene"]: r["adj"] for r in p_adjust(df, "p", "adj", tiebreak_col="gene").collect()}
     fdr = {r["gene"]: r["adj"] for r in p_adjust(df, "p", "adj", method="fdr", tiebreak_col="gene").collect()}
     assert fdr == bh
     none = {r["gene"]: r["adj"] for r in p_adjust(df, "p", "adj", method="none").collect()}
@@ -173,7 +158,7 @@ def test_bh_monotone_and_bounded(spark):
     # pipeline invariant (SURVEY.md section 5.3): adj p >= raw p, <= 1
     rows = [(f"g{i}", ((i * 37) % 97 + 1) / 100.0) for i in range(50)]
     df = spark.createDataFrame(rows, ["gene", "p"])
-    out = bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()
+    out = p_adjust(df, "p", "adj", tiebreak_col="gene").collect()
     for r in out:
         assert r["adj"] >= r["p"] - 1e-15
         assert r["adj"] <= 1.0
@@ -353,7 +338,8 @@ def test_lmfit_design_matches_numpy_ols(spark):
 
 def test_bh_histogram_property_random_psets(spark):
     """Property check: for arbitrary p-sets (dups, extremes, clumps) the
-    bucket-partitioned BH equals the sort-window BH bitwise."""
+    bucket-partitioned arm equals the sort-window arm bitwise, for every
+    method."""
     import random
 
     rnd = random.Random(1234)
@@ -369,42 +355,50 @@ def test_bh_histogram_property_random_psets(spark):
                 p = rnd.random()
             rows.append((f"t{trial}g{i}", p))
         df = spark.createDataFrame(rows, ["gene", "p"])
-        exact = {
-            r["gene"]: r["adj"]
-            for r in bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()
-        }
-        hist = {
-            r["gene"]: r["adj"]
-            for r in bh_adjust_histogram(
-                df, "p", "adj", tiebreak_col="gene", n_buckets=rnd.choice([2, 7, 64])
-            ).collect()
-        }
-        assert hist == exact
+        n_buckets = rnd.choice([2, 7, 64])
+        for method in ("BH", "BY", "holm"):
+            exact = {
+                r["gene"]: r["adj"]
+                for r in _adjust_window(df, "p", "adj", method, None, "gene").collect()
+            }
+            hist = {
+                r["gene"]: r["adj"]
+                for r in _adjust_histogram(
+                    df, "p", "adj", method, "gene", n_buckets=n_buckets
+                ).collect()
+            }
+            assert hist == exact, method
 
 
 def test_bh_property_random_ties_match_r_padjust(spark):
-    """Property test (SURVEY.md §7 hard part: exact BH tie semantics):
-    on randomly generated p-vectors WITH deliberate ties, both BH
-    variants match a literal transcription of R's p.adjust(method="BH")
-    (cummin over p*n/rank in decreasing-p order)."""
+    """Property test (SURVEY.md §7 hard part: exact tie semantics): on
+    randomly generated p-vectors WITH deliberate ties, both arms of
+    every method match a literal transcription of R's p.adjust — BH and
+    BY a cummin over the scaled term in decreasing-p order (BY with the
+    left-fold c(n) and R's ``q * n/i * p`` operand order), holm a
+    cummax over ``(n - i + 1) * p`` in increasing-p order."""
     import random
 
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from transcriptomics_data_integration_spark.stats.bh import (
-        bh_adjust,
-        bh_adjust_histogram,
-    )
-
-    def r_p_adjust_bh(ps):
+    def r_p_adjust(ps, method):
         n = len(ps)
-        order = sorted(range(n), key=lambda i: -ps[i])
         out = [0.0] * n
+        if method == "holm":
+            running = 0.0
+            for rank, i in enumerate(sorted(range(n), key=lambda i: ps[i]), 1):
+                running = max(running, (n - rank + 1) * ps[i])
+                out[i] = min(running, 1.0)
+            return out
+        q = 0.0
+        for i in range(1, n + 1):
+            q += 1.0 / i
         running = 1.0
-        for pos, i in enumerate(order):
+        for pos, i in enumerate(sorted(range(n), key=lambda i: -ps[i])):
             rank = n - pos
-            running = min(running, ps[i] * n / rank)
+            term = ps[i] * n / rank if method == "BH" else q * n / rank * ps[i]
+            running = min(running, term)
             out[i] = running
         return out
 
@@ -415,22 +409,22 @@ def test_bh_property_random_ties_match_r_padjust(spark):
             max_size=40,
         ),
         st.randoms(use_true_random=False),
+        st.sampled_from(["BH", "BY", "holm"]),
     )
     @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-    def check(ps, rnd):
+    def check(ps, rnd, method):
         # inject ties: duplicate a random subset of the values
         ps = ps + [rnd.choice(ps) for _ in range(rnd.randrange(0, 4))]
-        expected = r_p_adjust_bh(ps)
+        expected = r_p_adjust(ps, method)
         df = spark.createDataFrame(
             [(i, float(p)) for i, p in enumerate(ps)], "id long, p double"
         )
-        for variant in (
-            lambda d: bh_adjust(d, "p", "adj", tiebreak_col="id"),
-            lambda d: bh_adjust_histogram(d, "p", "adj", tiebreak_col="id", n_buckets=8),
+        for arm in (
+            lambda d: _adjust_window(d, "p", "adj", method, None, "id"),
+            lambda d: _adjust_histogram(d, "p", "adj", method, "id", n_buckets=8),
         ):
-            got = {r["id"]: r["adj"] for r in variant(df).collect()}
-            for i, e in enumerate(expected):
-                assert abs(got[i] - e) < 1e-12, (i, got[i], e, ps)
+            got = {r["id"]: r["adj"] for r in arm(df).collect()}
+            assert [got[i] for i in range(len(ps))] == expected, (method, ps)
 
     check()
 
@@ -461,29 +455,27 @@ def test_quantile_norm_average_ties_matches_r_semantics(spark):
 
 
 def test_bh_adjust_delegates_to_histogram_above_single_task_size(spark, tmp_path):
-    """Unpartitioned bh_adjust must route to the bucket-partitioned
-    histogram form when Catalyst cannot prove the p-set small (local
+    """Unpartitioned p_adjust must route to the bucket-partitioned
+    histogram arm when Catalyst cannot prove the p-set small (local
     relations report unknown stats), and keep the simple sort window
     for provably-small parquet inputs."""
-    from transcriptomics_data_integration_spark.stats.bh import bh_adjust
-
     # unknown stats (local relation) -> conservative histogram plan
     local = spark.createDataFrame(
         [(i, (i % 97) / 97.0) for i in range(200)], "gene long, p double"
     )
-    plan_local = bh_adjust(local, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
+    plan_local = p_adjust(local, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
     assert "_bkt" in plan_local
 
     # small parquet input -> plain sort-window plan (no buckets)
     d = str(tmp_path / "p")
     local.write.parquet(d)
     small = spark.read.parquet(d)
-    plan_small = bh_adjust(small, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
+    plan_small = p_adjust(small, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
     assert "_bkt" not in plan_small
 
     # both produce identical values
-    a = sorted((r["gene"], r["adj"]) for r in bh_adjust(local, "p", "adj", tiebreak_col="gene").collect())
-    b = sorted((r["gene"], r["adj"]) for r in bh_adjust(small, "p", "adj", tiebreak_col="gene").collect())
+    a = sorted((r["gene"], r["adj"]) for r in p_adjust(local, "p", "adj", tiebreak_col="gene").collect())
+    b = sorted((r["gene"], r["adj"]) for r in p_adjust(small, "p", "adj", tiebreak_col="gene").collect())
     assert a == b
 
 

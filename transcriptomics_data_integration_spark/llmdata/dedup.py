@@ -22,16 +22,15 @@ Scale notes (the reason each variant exists):
 
 from __future__ import annotations
 
-import os
 import re
 import time
 import warnings
 
-from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, IntegralType, StringType
 
+from transcriptomics_data_integration_spark.operators.windows import estimated_plan_bytes
 from transcriptomics_data_integration_spark.runtime import register_persisted
 
 SHINGLE_LEN = 5
@@ -75,8 +74,8 @@ def _md5_60bit(col: Column) -> Column:
 # variance J(1-J)/n; 30-bit min values add only ~n/2^30 spurious
 # equality per seed) is what the 16-md5 recipe gave — unlike
 # ARITHMETIC seed mixing: a Kirsch–Mitzenmacher A/B
-# (h_j = (h1 + j*h2) mod 2^60, tools/r9_seedmix_probe.py) made h_j
-# AFFINE in j, so the 4 rows of a band were order-correlated (a
+# (h_j = (h1 + j*h2) mod 2^60, PLANS.md r9 seed-family rework) made
+# h_j AFFINE in j, so the 4 rows of a band were order-correlated (a
 # shingle winning the min at seed j keeps winning at j+1..j+3), band
 # match probability collapsed from J^4 toward J, and the incremental
 # verify join exploded at the 1 M-doc probe (ENOSPC, then a stuck
@@ -1495,30 +1494,8 @@ def read_minhash_index(spark, table_prefix: str) -> tuple[DataFrame, DataFrame]:
 # arm; larger (or unestimable) batches take the bucketed/shuffle arm.
 # Estimated TEXT bytes, not broadcast bytes — the broadcasts carry
 # ~8-byte keys per doc, so 256 MB of estimated batch corresponds to a
-# few MB on the wire.  Env-tunable for cluster profiles where bigger
-# driver/executor memories justify a higher bound.
-INCREMENTAL_BROADCAST_AUTO_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_INC_BCAST_MAX_BYTES", str(256 * 1024 * 1024))
-)
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate in bytes — plan-build
-    only, runs no job.  Unknown/unavailable estimates return a huge
-    sentinel so the caller's auto-selection falls back to the arm that
-    is safe at any size (the shuffle arm).  A failure to read the
-    estimate at all warns, so a broken estimate is visible instead of
-    silently moving every batch onto the shuffle arm."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except (AttributeError, TypeError, ValueError, Py4JError) as exc:
-        warnings.warn(
-            f"no Catalyst size estimate ({type(exc).__name__}: {exc}); "
-            "incremental_minhash_dedup takes the shuffle arm",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return 1 << 62
+# few MB on the wire.
+INCREMENTAL_BROADCAST_AUTO_MAX_BYTES = 256 * 1024 * 1024
 
 
 def incremental_minhash_dedup(
@@ -1615,9 +1592,8 @@ def incremental_minhash_dedup(
         content_digest(F.col(text_col)).alias("digest"),
     )
     if broadcast_batch is None:
-        broadcast_batch = (
-            _plan_size_bytes(incoming) <= INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
-        )
+        est = estimated_plan_bytes(incoming)
+        broadcast_batch = est is not None and est <= INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
     if existing_index is None:
         # built in-query: cache it — ex_digest, band keys, and the
         # verify join all consume it (a stored-index caller already

@@ -2288,7 +2288,7 @@ def audio_envelope_bits(samples: np.ndarray, n_frames: int = 29) -> int:
 
     CAPACITY: false pairs at hamming <= h grow ~ n^2 * 2^-bits, so the
     28-bit default suits corpora to ~1e5 clips (measured: 13.8k false
-    pairs at 20k random clips, tools/r9_perceptual_probe.py); larger
+    pairs at 20k random clips, PLANS.md r9 perceptual scale probe); larger
     corpora raise ``n_frames`` (57 -> 56 bits matches the image hash;
     the scale probe runs that configuration at 500k)."""
     n = len(samples)

@@ -55,7 +55,7 @@ def _dot(a: str, b: str, dim: int | None = None) -> Column:
     - CHUNKED wide fold (``aggregate`` over 8-term chunk indices,
       same addition order, never handed to janino): bit-identical and
       0.72 vs 0.96 s on an ISOLATED checkpointed 400k-pair table
-      (tools/r11_dot_ab.py), but a consistent net LOSS inside the
+      (OPTIMIZATION_r11.md §13), but a consistent net LOSS inside the
       real queries — same-session A/B with ONLY the chunk toggled:
       cosine_topk 1.38 -> 2.47, ivf_fixed 2.00 -> 3.46, semdedup
       1.52 -> 2.49.  In situ the fold shares its stage with scans,

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import warnings
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -35,7 +38,11 @@ _SINGLE_TASK_BYTES = 64 << 20
 def estimated_plan_bytes(df: DataFrame) -> int | None:
     """Catalyst's size-in-bytes estimate for ``df`` (driver-side plan
     statistics; runs no job).  ``None`` when the estimate is
-    unavailable — callers must treat that as \"not small\"."""
+    unavailable — callers must treat that as \"not small\" and take
+    their scale-safe arm.  An unknown estimate (Catalyst's >= 2^60
+    sentinels, e.g. any RDD-backed relation) is routine and silent; a
+    failure to read the estimate at all warns, so a broken estimate is
+    visible instead of silently moving every caller onto its scale arm."""
     try:
         # OPTIMIZED plan: the analyzed-plan estimate pre-dates column
         # pruning, so post-aggregate relations derived from wide fact
@@ -49,7 +56,13 @@ def estimated_plan_bytes(df: DataFrame) -> int | None:
         size = int(raw) if isinstance(raw, int) else int(raw.toString())
         # Long.MaxValue et al. mean "unknown", not "huge known"
         return size if 0 <= size < (1 << 60) else None
-    except Exception:  # pragma: no cover - py4j / plan-shape drift
+    except (AttributeError, TypeError, ValueError, Py4JError) as exc:
+        warnings.warn(
+            f"no Catalyst size estimate ({type(exc).__name__}: {exc}); "
+            "taking the scale-safe arm",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return None
 
 
@@ -84,7 +97,7 @@ def monotone_range_buckets(
     keys buckets skew; AQE skew-split covers the imbalance, and the
     algebra stays exact regardless of skew.
 
-    Same pattern as ``stats.bh.bh_adjust_histogram`` (p in [0,1] lets
+    Same pattern as ``stats.bh._adjust_histogram`` (p in [0,1] lets
     that one skip the bounds pass).
     """
     bounds = df.agg(

@@ -2,7 +2,7 @@
 
 Local testing runs on ``local[N]``; the configs below are the ones that
 also matter on a real cluster (AQE, broadcast threshold, Arrow).  Shuffle
-partition count is sized by ``SPARK_GRAFT_CPUS`` locally; on a 1000-executor
+partition count is sized by the local core count; on a 1000-executor
 cluster it should be set to ~2-3x total cores by the submitter.
 """
 
@@ -13,8 +13,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+# cap on the host-derived driver heap (the former fixed default)
+_MAX_DRIVER_MEM_GB = 48
+
+
+def _local_resources() -> tuple[int, str]:
+    """(cores, driver heap) of the local session.  ``SPARK_GRAFT_CPUS``
+    and ``SPARK_GRAFT_DRIVER_MEM`` win when set; otherwise fit the host:
+    the CPUs this process may run on (its affinity set — containers and
+    taskset pin fewer than the machine has) and half of physical memory
+    in whole GiB (the rest stays for Python workers, off-heap and the
+    OS), at least 1 g and at most 48 g."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{max(1, min(_MAX_DRIVER_MEM_GB, phys // 2 // (1 << 30)))}g"
+    return int(cpus), mem
+
+
 def get_spark(app_name: str = "transcriptomics-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_mem = _local_resources()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
@@ -26,7 +45,7 @@ def get_spark(app_name: str = "transcriptomics-spark", shuffle_partitions: int |
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # long sessions run hundreds of broadcast-heavy queries; the
@@ -34,19 +53,15 @@ def get_spark(app_name: str = "transcriptomics-spark", shuffle_partitions: int |
         # GC-triggered cleanup bursts into multi-second stalls charged
         # to whatever query is running (observed 8s -> 30s outliers)
         .config("spark.cleaner.referenceTracking.blocking", "false")
-        # io codec decision (r11, VERDICT item 9): lz4 stays the
-        # session default — a same-host A/B on the closure-heavy
+        # io codec decision (r11, VERDICT item 9): lz4 (Spark's own
+        # default) stays — a same-host A/B on the closure-heavy
         # dedup_clusters gate measured zstd 29% SLOWER end-to-end
         # (9.4 -> 12.1 s; banded pairs 1.25 -> 3.15 s) because
         # iterative CC rounds ship many tiny shuffle blocks where
         # zstd's per-block cost dominates.  zstd's ~35% smaller spill
-        # (PLANS.md r10) still wins on disk-tight SCALE PROBES (the
-        # 5M index build ENOSPCs under lz4) — probe tools set
-        # SPARK_GRAFT_IO_CODEC=zstd per session for exactly that.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        # (PLANS.md r10) only pays on disk-tight scale runs, which can
+        # set spark.io.compression.codec themselves.
+        .config("spark.io.compression.codec", "lz4")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -6,15 +6,7 @@ oracle-checkable.  Iterative kernels (ComBat EB shrinkage, general limma
 designs) use Arrow-vectorized grouped-map pandas.
 """
 
-from transcriptomics_data_integration_spark.stats.bh import (
-    bh_adjust,
-    bh_adjust_histogram,
-    by_adjust,
-    by_adjust_histogram,
-    holm_adjust,
-    holm_adjust_histogram,
-    p_adjust,
-)
+from transcriptomics_data_integration_spark.stats.bh import p_adjust
 from transcriptomics_data_integration_spark.stats.quantile_norm import quantile_normalize
 from transcriptomics_data_integration_spark.stats.ttest import two_group_ttest
 from transcriptomics_data_integration_spark.stats.stouffer import stouffer_combine
@@ -39,12 +31,6 @@ __all__ = [
     "kmeans_lloyd_fixed",
     "mds_bmatrix",
     "pca_space_outliers",
-    "bh_adjust",
-    "bh_adjust_histogram",
-    "by_adjust",
-    "by_adjust_histogram",
-    "holm_adjust",
-    "holm_adjust_histogram",
     "p_adjust",
     "cqn_spline",
     "fem_rem_effects",

@@ -28,136 +28,31 @@ reproducible in any engine that folds left — the DuckDB oracle replays
 the same fold via ``list_reduce``; an unordered SUM over 1/i would be
 permutation-dependent in the last ulp.
 
-Spark shape: two window functions over the same (optional partition,
-order-by-p) window — one shuffle if partitioned, single-stage on
-post-aggregate relations otherwise.  Unpartitioned calls on relations
-Catalyst can't prove small route to the bucket-partitioned histogram
-form (see ``bh_adjust_histogram``) — the billion-row scale path, shared
-by all three methods.
+Spark shape: one method table (scaled term + step direction) and two
+arm builders shared by all three methods.  ``_adjust_window`` runs the
+rank and the cumulative extreme as windows over the same (optional
+partition, order-by-p) window — one shuffle if partitioned,
+single-stage on post-aggregate relations otherwise.  Unpartitioned
+calls on relations Catalyst can't prove small route to
+``_adjust_histogram``, the bucket-partitioned billion-row scale path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.operators import windows
 
-def bh_adjust_histogram(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "adj_p_value",
-    tiebreak_col: str | None = None,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Exact BH without a global sort window — the billion-row scale
-    path.  ``bh_adjust``'s unpartitioned ``orderBy(p)`` window moves the
-    whole relation to ONE task; fine for post-aggregate gene lists,
-    fatal for permutation-scale p-sets.  This variant range-buckets p
-    into ``n_buckets`` equi-width bins so every window is partitioned by
-    bucket:
-
-    1. histogram pass: per-bucket counts -> cumulative base rank per
-       bucket + total n (a <= n_buckets-row relation, broadcast back);
-    2. rank pass: global rank = bucket base + row_number within bucket
-       (exact, because buckets are value ranges: every p in bucket k
-       sorts before every p in bucket k+1, and ties share a bucket);
-    3. reverse cumulative min = min(within-bucket reverse cummin,
-       suffix-min of higher buckets) — the suffix-min is again computed
-       on the tiny per-bucket relation and broadcast.
-
-    Identical output to ``bh_adjust`` (same ``p * n / rank`` expression,
-    same tie semantics); the only unpartitioned windows run on
-    ``n_buckets`` rows regardless of |df|.  Under a uniform-ish p
-    distribution each bucket holds |df|/n_buckets rows; AQE skew-split
-    covers spiky nulls at p≈0.
-    """
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    rev = [F.col(p_col).desc()] + (
-        [F.col(tiebreak_col).desc()] if tiebreak_col else []
-    )
-    with_b = df.withColumn(
-        "_bkt",
-        F.least(
-            F.floor(F.col(p_col) * n_buckets).cast("int"), F.lit(n_buckets - 1)
-        ),
-    )
-    hist = with_b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
-    w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    cum = (
-        hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
-        .withColumn("_n", F.sum("_cnt").over(Window.partitionBy()))
-        .select("_bkt", "_base", "_n")
-    )
-    w_in = Window.partitionBy("_bkt").orderBy(*order)
-    ranked = (
-        with_b.join(F.broadcast(cum), "_bkt")
-        .withColumn("_rank", F.col("_base") + F.row_number().over(w_in))
-        .withColumn(
-            "_scaled",
-            F.least(F.col(p_col) * F.col("_n") / F.col("_rank"), F.lit(1.0)),
-        )
-    )
-    bmin = ranked.groupBy("_bkt").agg(F.min("_scaled").alias("_bmin"))
-    w_suf = Window.orderBy(F.col("_bkt").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    suf = bmin.withColumn("_sufmin", F.min("_bmin").over(w_suf)).select(
-        "_bkt", "_sufmin"
-    )
-    w_rev_in = Window.partitionBy("_bkt").orderBy(*rev).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # least() ignores nulls, so the highest bucket (null suffix) falls
-    # back to its within-bucket reverse cummin alone
-    return (
-        ranked.join(F.broadcast(suf), "_bkt")
-        .withColumn("_revmin", F.min("_scaled").over(w_rev_in))
-        .withColumn(out_col, F.least(F.col("_revmin"), F.col("_sufmin")))
-        .drop("_bkt", "_base", "_n", "_rank", "_scaled", "_revmin", "_sufmin")
-    )
-
-
-def bh_adjust(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "adj_p_value",
-    partition_cols: list[str] | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    parts = partition_cols or []
-    if not parts:
-        # adaptive scale guard: an unpartitioned sort window on a
-        # relation Catalyst can't prove single-task-small funnels the
-        # whole p-set through one task — route it to the bit-identical
-        # bucket-partitioned histogram form instead (p in [0,1] by BH's
-        # contract, so the equi-width bucketing needs no bounds pass)
-        from transcriptomics_data_integration_spark.operators.windows import (
-            fits_single_task,
-        )
-
-        if not fits_single_task(df):
-            return bh_adjust_histogram(
-                df, p_col, out_col=out_col, tiebreak_col=tiebreak_col
-            )
-    order = [F.col(p_col).asc()]
-    if tiebreak_col:
-        order.append(F.col(tiebreak_col).asc())
-    w_rank = Window.partitionBy(*parts).orderBy(*order)
-    w_rev = (
-        Window.partitionBy(*parts)
-        .orderBy(*[c.desc() for c in [F.col(p_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy(*parts)
-    return (
-        df.withColumn("_rank", F.row_number().over(w_rank))
-        .withColumn("_n", F.count(F.lit(1)).over(w_all))
-        .withColumn("_scaled", F.least(F.col(p_col) * F.col("_n") / F.col("_rank"), F.lit(1.0)))
-        .withColumn(out_col, F.min("_scaled").over(w_rev))
-        .drop("_rank", "_n", "_scaled")
-    )
+# method -> (scaled term over (p, n, rank, c(n)) in R's operand order,
+# step-up).  Step-up methods take a reverse cummin, step-down a forward
+# cummax.  BY's ``q * n/i * p`` order is kept so the doubles match an R
+# replay bit-for-bit.
+_METHODS = {
+    "BH": (lambda p, n, rank, cn: p * n / rank, True),
+    "BY": (lambda p, n, rank, cn: cn * n / rank * p, True),
+    "holm": (lambda p, n, rank, cn: (n - rank + F.lit(1)) * p, False),
+}
 
 
 def _harmonic(n_col: str, chunk: int = 1_000_000):
@@ -185,85 +80,99 @@ def _harmonic(n_col: str, chunk: int = 1_000_000):
     )
 
 
-def by_adjust(
+def _orders(p_col: str, tiebreak_col: str | None) -> tuple[list[Column], list[Column]]:
+    """(ascending, descending) sort keys: p, then the tie-break column."""
+    keys = [F.col(p_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
+    return [k.asc() for k in keys], [k.desc() for k in keys]
+
+
+def _scaled(method: str, p_col: str) -> Column:
+    term, _ = _METHODS[method]
+    return F.least(
+        term(F.col(p_col), F.col("_n"), F.col("_rank"), F.col("_cn")), F.lit(1.0)
+    )
+
+
+def _adjust_window(
     df: DataFrame,
     p_col: str,
-    out_col: str = "adj_p_value",
-    partition_cols: list[str] | None = None,
-    tiebreak_col: str | None = None,
+    out_col: str,
+    method: str,
+    partition_cols: list[str] | None,
+    tiebreak_col: str | None,
 ) -> DataFrame:
-    """R ``p.adjust(method="BY")``: BH's step-up reverse cummin with
-    the scaled term ``(c(n) * n / rank) * p`` — R's exact operand
-    order (``q * n/i * p[o]``), kept so the IEEE doubles match an R
-    replay bit-for-bit.  The per-partition (n, c(n)) pair is computed
-    on a one-row-per-group aggregate and broadcast back, so the O(n)
-    harmonic fold runs once per group, not once per row."""
+    """Rank, scale, then the cumulative extreme — all windows over the
+    (partition, order-by-p) window.  BY alone joins the one-row-per-
+    partition (n, c(n)) aggregate, so the O(n) harmonic fold runs once
+    per partition, not once per row."""
     parts = partition_cols or []
-    if not parts:
-        from transcriptomics_data_integration_spark.operators.windows import (
-            fits_single_task,
+    step_up = _METHODS[method][1]
+    asc, desc = _orders(p_col, tiebreak_col)
+    if method == "BY":
+        counts = (
+            df.groupBy(*parts)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .withColumn("_cn", _harmonic("_n"))
         )
-
-        if not fits_single_task(df):
-            return by_adjust_histogram(
-                df, p_col, out_col=out_col, tiebreak_col=tiebreak_col
-            )
-    counts = (
-        df.groupBy(*parts)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn("_cn", _harmonic("_n"))
+        df = (
+            df.join(F.broadcast(counts), parts)
+            if parts
+            else df.crossJoin(F.broadcast(counts))
+        )
+    df = df.withColumn(
+        "_rank", F.row_number().over(Window.partitionBy(*parts).orderBy(*asc))
     )
-    joined = (
-        df.join(F.broadcast(counts), parts)
-        if parts
-        else df.crossJoin(F.broadcast(counts))
-    )
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    rev = [F.col(p_col).desc()] + (
-        [F.col(tiebreak_col).desc()] if tiebreak_col else []
-    )
-    w_rank = Window.partitionBy(*parts).orderBy(*order)
-    w_rev = (
+    if method != "BY":
+        df = df.withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*parts)))
+    w_cum = (
         Window.partitionBy(*parts)
-        .orderBy(*rev)
+        .orderBy(*(desc if step_up else asc))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    extreme = F.min if step_up else F.max
     return (
-        joined.withColumn("_rank", F.row_number().over(w_rank))
-        .withColumn(
-            "_scaled",
-            F.least(
-                F.col("_cn") * F.col("_n") / F.col("_rank") * F.col(p_col),
-                F.lit(1.0),
-            ),
-        )
-        .withColumn(out_col, F.min("_scaled").over(w_rev))
+        df.withColumn("_scaled", _scaled(method, p_col))
+        .withColumn(out_col, extreme("_scaled").over(w_cum))
         .drop("_rank", "_n", "_cn", "_scaled")
     )
 
 
-def by_adjust_histogram(
+def _adjust_histogram(
     df: DataFrame,
     p_col: str,
-    out_col: str = "adj_p_value",
-    tiebreak_col: str | None = None,
+    out_col: str,
+    method: str,
+    tiebreak_col: str | None,
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """BY via the same bucket-partitioned two-pass shape as
-    ``bh_adjust_histogram`` (the billion-row scale path): the only
-    deltas are the c(n) factor — computed ONCE on a one-row total
-    aggregated from the histogram and broadcast into the cumulative
-    relation (the chunked ``_harmonic`` fold evaluates exactly once,
-    not once per bucket row) — and the R operand order in the scaled
-    term.  Bit-identical to ``by_adjust``."""
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    rev = [F.col(p_col).desc()] + (
-        [F.col(tiebreak_col).desc()] if tiebreak_col else []
-    )
+    """Exact adjustment without a global sort window — the billion-row
+    scale path.  The window arm's unpartitioned ``orderBy(p)`` moves the
+    whole relation to ONE task; fine for post-aggregate gene lists,
+    fatal for permutation-scale p-sets.  This arm range-buckets p into
+    ``n_buckets`` equi-width bins (p in [0,1] by contract, so no bounds
+    pass) so every window is partitioned by bucket:
+
+    1. histogram pass: per-bucket counts -> cumulative base rank per
+       bucket + total n (a <= n_buckets-row relation, broadcast back);
+       BY's c(n) is folded ONCE on a one-row total and broadcast in;
+    2. rank pass: global rank = bucket base + row_number within bucket
+       (exact, because buckets are value ranges: every p in bucket k
+       sorts before every p in bucket k+1, and ties share a bucket);
+    3. cumulative extreme = within-bucket cumulative extreme combined
+       with the extreme over the buckets before it in the scan order —
+       the suffix-min of HIGHER buckets for the step-up methods, the
+       prefix-max of LOWER buckets for holm — again computed on the
+       tiny per-bucket relation and broadcast.  ``least``/``greatest``
+       ignore nulls, so the first bucket in scan order (null edge)
+       falls back to its within-bucket extreme alone.
+
+    Bit-identical to ``_adjust_window`` (same scaled expression, same
+    tie semantics); the only unpartitioned windows run on ``n_buckets``
+    rows regardless of |df|.  Under a uniform-ish p distribution each
+    bucket holds |df|/n_buckets rows; AQE skew-split covers spiky nulls
+    at p≈0."""
+    step_up = _METHODS[method][1]
+    asc, desc = _orders(p_col, tiebreak_col)
     with_b = df.withColumn(
         "_bkt",
         F.least(
@@ -272,149 +181,44 @@ def by_adjust_histogram(
     )
     hist = with_b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
     w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    totals = hist.agg(F.sum("_cnt").alias("_n")).withColumn(
-        "_cn", _harmonic("_n")
-    )
-    cum = (
-        hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
-        .crossJoin(F.broadcast(totals))
-        .select("_bkt", "_base", "_n", "_cn")
-    )
-    w_in = Window.partitionBy("_bkt").orderBy(*order)
+    cum = hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
+    if method == "BY":
+        totals = hist.agg(F.sum("_cnt").alias("_n")).withColumn(
+            "_cn", _harmonic("_n")
+        )
+        cum = cum.crossJoin(F.broadcast(totals)).select("_bkt", "_base", "_n", "_cn")
+    else:
+        cum = cum.withColumn("_n", F.sum("_cnt").over(Window.partitionBy())).select(
+            "_bkt", "_base", "_n"
+        )
     ranked = (
         with_b.join(F.broadcast(cum), "_bkt")
-        .withColumn("_rank", F.col("_base") + F.row_number().over(w_in))
         .withColumn(
-            "_scaled",
-            F.least(
-                F.col("_cn") * F.col("_n") / F.col("_rank") * F.col(p_col),
-                F.lit(1.0),
-            ),
+            "_rank",
+            F.col("_base")
+            + F.row_number().over(Window.partitionBy("_bkt").orderBy(*asc)),
         )
+        .withColumn("_scaled", _scaled(method, p_col))
     )
-    bmin = ranked.groupBy("_bkt").agg(F.min("_scaled").alias("_bmin"))
-    w_suf = Window.orderBy(F.col("_bkt").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
+    extreme, combine = (F.min, F.least) if step_up else (F.max, F.greatest)
+    bkt = F.col("_bkt").desc() if step_up else F.col("_bkt").asc()
+    w_edge = Window.orderBy(bkt).rowsBetween(Window.unboundedPreceding, -1)
+    edge = (
+        ranked.groupBy("_bkt")
+        .agg(extreme("_scaled").alias("_bext"))
+        .withColumn("_edge", extreme("_bext").over(w_edge))
+        .select("_bkt", "_edge")
     )
-    suf = bmin.withColumn("_sufmin", F.min("_bmin").over(w_suf)).select(
-        "_bkt", "_sufmin"
-    )
-    w_rev_in = Window.partitionBy("_bkt").orderBy(*rev).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        ranked.join(F.broadcast(suf), "_bkt")
-        .withColumn("_revmin", F.min("_scaled").over(w_rev_in))
-        .withColumn(out_col, F.least(F.col("_revmin"), F.col("_sufmin")))
-        .drop("_bkt", "_base", "_n", "_cn", "_rank", "_scaled", "_revmin", "_sufmin")
-    )
-
-
-def holm_adjust(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "adj_p_value",
-    partition_cols: list[str] | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """R ``p.adjust(method="holm")``: step-DOWN FWER control —
-    ``adj_i = max_{j <= i} min(1, (n - j + 1) * p_(j))``, i.e. a
-    FORWARD cumulative max over ascending p (the mirror of BH's
-    reverse cummin).  Tied p values collapse to one adjusted value
-    under the cummax exactly as in R.  Same window shape and the same
-    adaptive histogram fallback as ``bh_adjust``."""
-    parts = partition_cols or []
-    if not parts:
-        from transcriptomics_data_integration_spark.operators.windows import (
-            fits_single_task,
-        )
-
-        if not fits_single_task(df):
-            return holm_adjust_histogram(
-                df, p_col, out_col=out_col, tiebreak_col=tiebreak_col
-            )
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    w_rank = Window.partitionBy(*parts).orderBy(*order)
-    w_fwd = (
-        Window.partitionBy(*parts)
-        .orderBy(*order)
+    w_in = (
+        Window.partitionBy("_bkt")
+        .orderBy(*(desc if step_up else asc))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_all = Window.partitionBy(*parts)
     return (
-        df.withColumn("_rank", F.row_number().over(w_rank))
-        .withColumn("_n", F.count(F.lit(1)).over(w_all))
-        .withColumn(
-            "_scaled",
-            F.least(
-                (F.col("_n") - F.col("_rank") + F.lit(1)) * F.col(p_col),
-                F.lit(1.0),
-            ),
-        )
-        .withColumn(out_col, F.max("_scaled").over(w_fwd))
-        .drop("_rank", "_n", "_scaled")
-    )
-
-
-def holm_adjust_histogram(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "adj_p_value",
-    tiebreak_col: str | None = None,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Holm via the bucket-partitioned shape: global rank = bucket
-    base + within-bucket row_number (exact, buckets are value ranges),
-    forward cummax = max(within-bucket forward cummax, prefix-max of
-    LOWER buckets) — the mirror image of ``bh_adjust_histogram``'s
-    suffix-min.  ``greatest`` ignores the null prefix of bucket 0 the
-    same way ``least`` ignores the null suffix of the top bucket.
-    Bit-identical to ``holm_adjust``."""
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    with_b = df.withColumn(
-        "_bkt",
-        F.least(
-            F.floor(F.col(p_col) * n_buckets).cast("int"), F.lit(n_buckets - 1)
-        ),
-    )
-    hist = with_b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
-    w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    cum = (
-        hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
-        .withColumn("_n", F.sum("_cnt").over(Window.partitionBy()))
-        .select("_bkt", "_base", "_n")
-    )
-    w_in = Window.partitionBy("_bkt").orderBy(*order)
-    ranked = (
-        with_b.join(F.broadcast(cum), "_bkt")
-        .withColumn("_rank", F.col("_base") + F.row_number().over(w_in))
-        .withColumn(
-            "_scaled",
-            F.least(
-                (F.col("_n") - F.col("_rank") + F.lit(1)) * F.col(p_col),
-                F.lit(1.0),
-            ),
-        )
-    )
-    bmax = ranked.groupBy("_bkt").agg(F.max("_scaled").alias("_bmax"))
-    w_pre = Window.orderBy(F.col("_bkt").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    pre = bmax.withColumn("_premax", F.max("_bmax").over(w_pre)).select(
-        "_bkt", "_premax"
-    )
-    w_fwd_in = Window.partitionBy("_bkt").orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        ranked.join(F.broadcast(pre), "_bkt")
-        .withColumn("_fwdmax", F.max("_scaled").over(w_fwd_in))
-        .withColumn(out_col, F.greatest(F.col("_fwdmax"), F.col("_premax")))
-        .drop("_bkt", "_base", "_n", "_rank", "_scaled", "_fwdmax", "_premax")
+        ranked.join(F.broadcast(edge), "_bkt")
+        .withColumn("_within", extreme("_scaled").over(w_in))
+        .withColumn(out_col, combine(F.col("_within"), F.col("_edge")))
+        .drop("_bkt", "_base", "_n", "_cn", "_rank", "_scaled", "_within", "_edge")
     )
 
 
@@ -427,27 +231,22 @@ def p_adjust(
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """The reference DE scripts' full ``adjust`` argument surface
-    (`DiffExpression_closedPlatform.R:24`): dispatch to the matching
-    R ``p.adjust`` method.  ``fdr`` is R's own alias of BH; ``none``
-    passes p through unchanged (R returns p itself)."""
-    if method in ("BH", "fdr"):
-        return bh_adjust(
-            df, p_col, out_col,
-            partition_cols=partition_cols, tiebreak_col=tiebreak_col,
-        )
-    if method == "BY":
-        return by_adjust(
-            df, p_col, out_col,
-            partition_cols=partition_cols, tiebreak_col=tiebreak_col,
-        )
-    if method == "holm":
-        return holm_adjust(
-            df, p_col, out_col,
-            partition_cols=partition_cols, tiebreak_col=tiebreak_col,
-        )
+    (`DiffExpression_closedPlatform.R:24`): R ``p.adjust`` semantics.
+    ``fdr`` is R's own alias of BH; ``none`` passes p through unchanged
+    (R returns p itself).
+
+    Adaptive scale guard: an unpartitioned sort window on a relation
+    Catalyst can't prove single-task-small funnels the whole p-set
+    through one task — such calls take the bit-identical
+    bucket-partitioned histogram arm instead."""
     if method == "none":
         return df.withColumn(out_col, F.col(p_col))
-    raise ValueError(
-        f"unknown p-adjust method {method!r}; expected one of "
-        "'none', 'BH', 'fdr', 'BY', 'holm'"
-    )
+    method = "BH" if method == "fdr" else method
+    if method not in _METHODS:
+        raise ValueError(
+            f"unknown p-adjust method {method!r}; expected one of "
+            "'none', 'BH', 'fdr', 'BY', 'holm'"
+        )
+    if not partition_cols and not windows.fits_single_task(df):
+        return _adjust_histogram(df, p_col, out_col, method, tiebreak_col)
+    return _adjust_window(df, p_col, out_col, method, partition_cols, tiebreak_col)

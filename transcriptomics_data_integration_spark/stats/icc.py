@@ -14,9 +14,7 @@ Spark decomposition:
 - gene-pair correlations: self-join on (platform, sample) — shuffle on
   the join key, then one aggregation to (platform, g, h) moments.
   This is the O(G^2) step: restrict genes first (the reference runs it
-  after the F5 top-variance filter, 3k-10k genes).  For the large-G
-  regime the same standardized cells feed a BlockMatrix gram-matrix
-  multiply (mllib) — `icc_blockmatrix` below;
+  after the F5 top-variance filter, 3k-10k genes);
 - profile correlations: join platform A rows to platform B rows on
   (g, h) and aggregate per (g, pair) — tiny relative to step 2.
 
@@ -135,9 +133,9 @@ def icc(
 def _profile_stage(
     rr: DataFrame, platforms: list[str], tick_scale: int | None = None
 ) -> DataFrame:
-    """Second ICC stage, shared by the exact / BlockMatrix / DIMSUM /
-    partner-sampled gene-correlation tiers: correlate each gene's two
-    correlation profiles across partner genes per platform pair, then
+    """Second ICC stage, shared by the exact / DIMSUM / partner-sampled
+    gene-correlation tiers: correlate each gene's two correlation
+    profiles across partner genes per platform pair, then
     average over pairs.  ``rr``: (platform, g, h, r).
 
     ``tick_scale``: order-independent mode (the combat_eb2 precedent)
@@ -203,84 +201,6 @@ def _profile_stage(
     return unioned.groupBy("gene_id").agg(
         F.avg("pair_icc").alias("icc"), F.count(F.lit(1)).alias("n_pairs")
     )
-
-
-def icc_blockmatrix(cells: DataFrame, platforms: list[str], block_size: int = 1024) -> DataFrame:
-    """Scale path for large gene sets: standardized cells per platform
-    form a (genes x samples) RowMatrix; the gene-gene correlation matrix
-    is the gram matrix of the standardized rows, computed as a
-    BlockMatrix multiply (O(G^2 S / parallelism) flops, no G^2-row
-    shuffle of raw pairs).  Falls back to the relational path for the
-    profile-correlation stage, which is O(G^2) rows but only scalars.
-    """
-    # NOTE: must be the mllib linalg Vectors — IndexedRow rejects the
-    # pyspark.ml flavor with "Cannot convert type ... into Vector"
-    from pyspark.mllib.linalg import Vectors
-    from pyspark.mllib.linalg.distributed import IndexedRow, IndexedRowMatrix
-
-    spark = cells.sparkSession
-    out = None
-    for plat in platforms:
-        sub = cells.where(F.col("platform") == plat)
-        # standardize per gene
-        stats = sub.groupBy("gene_id").agg(
-            F.avg("value").alias("m"), F.stddev("value").alias("sd"), F.count(F.lit(1)).alias("n")
-        ).where(F.col("sd") > 0)
-        std = sub.join(stats, "gene_id").withColumn(
-            "z", (F.col("value") - F.col("m")) / (F.col("sd") * F.sqrt(F.col("n") - 1))
-        )
-        samples = [r["sample_id"] for r in sub.select("sample_id").distinct().orderBy("sample_id").collect()]
-        genes = [r["gene_id"] for r in stats.select("gene_id").orderBy("gene_id").collect()]
-        s_idx = {s: i for i, s in enumerate(samples)}
-        g_idx = {g: i for i, g in enumerate(genes)}
-        bc_s = spark.sparkContext.broadcast(s_idx)
-        bc_g = spark.sparkContext.broadcast(g_idx)
-        dim = len(samples)
-
-        # Arrow-batched vector assembly: the standardized cells (G x S
-        # rows — the big relation) reach Python only as Arrow batches
-        # inside applyInPandas; the subsequent RDD map touches G
-        # already-assembled vector rows, not raw cells
-        def to_vec(pdf):
-            import numpy as np
-            import pandas as pd
-
-            gi = int(bc_g.value[pdf["gene_id"].iloc[0]])
-            vec = np.zeros(dim)
-            vec[pdf["sample_id"].map(bc_s.value).to_numpy()] = pdf["z"].to_numpy()
-            return pd.DataFrame({"idx": [gi], "vec": [vec.tolist()]})
-
-        vec_df = (
-            std.select("gene_id", "sample_id", "z")
-            .groupBy("gene_id")
-            .applyInPandas(to_vec, schema="idx long, vec array<double>")
-        )
-        rdd = vec_df.rdd.map(lambda r: IndexedRow(r["idx"], Vectors.dense(r["vec"])))
-        mat = IndexedRowMatrix(rdd).toBlockMatrix(block_size, block_size)
-        gram = mat.multiply(mat.transpose())  # gene x gene correlations
-        # G x G enumeration stays JVM-side: IndexedRow -> DataFrame with
-        # a vector column, mllib->ml vector cast, posexplode — the
-        # earlier Python flatMap pickled all G^2 cells through the
-        # driver-side serializer path
-        from pyspark.ml.functions import vector_to_array
-        from pyspark.mllib.util import MLUtils
-
-        gdf = gram.toIndexedRowMatrix().rows.toDF()
-        gdf = MLUtils.convertVectorColumnsToML(gdf, "vector")
-        rdf = gdf.select(
-            F.col("index").cast("int").alias("gi"),
-            F.posexplode(vector_to_array(F.col("vector"))).alias("hj", "r"),
-        ).where(F.col("gi") != F.col("hj"))
-        inv_g = spark.createDataFrame(
-            [(i, g) for g, i in g_idx.items()], ["idx", "gene_id"]
-        )
-        rdf = (
-            rdf.join(inv_g.withColumnRenamed("idx", "gi").withColumnRenamed("gene_id", "g"), "gi")
-            .join(inv_g.withColumnRenamed("idx", "hj").withColumnRenamed("gene_id", "h"), "hj")
-            .select(F.lit(plat).alias("platform"), "g", "h", "r")
-        )
-        out = rdf if out is None else out.unionByName(rdf)
-    return out
 
 
 def platform_gene_correlations_dimsum(
@@ -397,7 +317,7 @@ def icc_dimsum(
 ) -> DataFrame:
     """ICC with the DIMSUM-thresholded gene-correlation tier feeding
     the shared profile stage — the 100 TB approximation path next to
-    the exact relational / BlockMatrix tiers (exact stays the oracle;
+    the exact relational tier (exact stays the oracle;
     this tier is bounded against it by
     `tests/test_stats_ml.py::test_icc_dimsum_tiers`).  The profile
     correlations run over the partner genes DIMSUM kept (|r| above

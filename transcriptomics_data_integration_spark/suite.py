@@ -43,15 +43,13 @@ from transcriptomics_data_integration_spark.operators.filters import (
     zero_repair,
 )
 from transcriptomics_data_integration_spark.stats import (
-    bh_adjust,
-    bh_adjust_histogram,
-    by_adjust,
-    holm_adjust,
     fem_rem_effects,
+    p_adjust,
     quantile_normalize,
     stouffer_combine,
     two_group_ttest,
 )
+from transcriptomics_data_integration_spark.stats.bh import _adjust_histogram
 from transcriptomics_data_integration_spark.stats.genemeta import effect_sizes
 from transcriptomics_data_integration_spark.suite_llm import ORACLES_LLM, QUERIES_LLM
 
@@ -841,7 +839,7 @@ def q_diff_expression(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`DiffExpression_closedPlatform.R:474-633`, `:566` adjust="BH")."""
     li = _t(spark, sf_dir, "lineitem")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
-    adj = bh_adjust(tt, "p_value", "adj_p_value", tiebreak_col="l_partkey")
+    adj = p_adjust(tt, "p_value", "adj_p_value", method="BH", tiebreak_col="l_partkey")
     return adj.select(
         "l_partkey",
         "n_a",
@@ -886,7 +884,7 @@ def q_bh_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     BH SQL — this query IS the equivalence proof at gate SF."""
     li = _t(spark, sf_dir, "lineitem")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
-    adj = bh_adjust_histogram(tt, "p_value", "adj_p_value", tiebreak_col="l_partkey")
+    adj = _adjust_histogram(tt, "p_value", "adj_p_value", "BH", "l_partkey")
     return adj.select(
         "l_partkey",
         F.round("p_value", 8).alias("p_value"),
@@ -929,8 +927,8 @@ def q_de_adjust_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     two non-BH methods on production-shaped p-values, ties included."""
     li = _t(spark, sf_dir, "lineitem")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
-    out = by_adjust(tt, "p_value", "adj_by", tiebreak_col="l_partkey")
-    out = holm_adjust(out, "p_value", "adj_holm", tiebreak_col="l_partkey")
+    out = p_adjust(tt, "p_value", "adj_by", method="BY", tiebreak_col="l_partkey")
+    out = p_adjust(out, "p_value", "adj_holm", method="holm", tiebreak_col="l_partkey")
     return out.select(
         "l_partkey",
         F.round("p_value", 8).alias("p_value"),

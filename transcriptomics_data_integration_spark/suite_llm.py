@@ -3424,7 +3424,7 @@ def q_web_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage-CUT, not just cache: consuming a persisted relation whose
     # analyzed plan still carries the whole html->gopher->bloom tree
     # costs tens of seconds of per-action replanning at scale (probe:
-    # mixture stage 81 -> 4 s after the cut; tools/web_pipeline_probe)
+    # mixture stage 81 -> 4 s after the cut; PLANS.md round-7 findings)
     clean = (
         kept.join(screened.select("doc_id", "n_exact"), "doc_id", "left")
         .where(F.coalesce(F.col("n_exact"), F.lit(0)) <= 150)

@@ -1108,7 +1108,7 @@ def q_pairwise_contrasts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itertools import combinations
 
     from transcriptomics_data_integration_spark.operators.aggregates import bitmask_venn
-    from transcriptomics_data_integration_spark.stats.bh import bh_adjust
+    from transcriptomics_data_integration_spark.stats.bh import p_adjust
 
     li = _t(spark, sf_dir, "lineitem")
     groups = ["A", "N", "R"]
@@ -1119,8 +1119,13 @@ def q_pairwise_contrasts(spark: SparkSession, sf_dir: str) -> DataFrame:
     de = per_contrast[0]
     for d in per_contrast[1:]:
         de = de.unionByName(d)
-    adj = bh_adjust(
-        de, "p_value", "adj_p_value", partition_cols=["contrast"], tiebreak_col="l_partkey"
+    adj = p_adjust(
+        de,
+        "p_value",
+        "adj_p_value",
+        method="BH",
+        partition_cols=["contrast"],
+        tiebreak_col="l_partkey",
     )
     decided = adj.withColumn(
         "decide",
@@ -2080,11 +2085,11 @@ def q_p_adjust_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     {'none','BH','fdr','BY','holm'}; consumed by ``topTable`` at
     `:566,600`).  A deterministic p-set with heavy ties (orderkey
     Knuth-hash quantized to 4096 levels, so ~n/4096 rows share each p)
-    runs through ``stats.bh.by_adjust``; the oracle replays R's exact
+    runs through ``stats.bh.p_adjust(method="BY")``; the oracle replays R's exact
     formula — ordered-left-fold harmonic factor via ``list_reduce``,
     the ``q * n/i * p`` operand order, reverse cummin — so a hash
     match proves the doubles bit-for-bit, tie collapse included."""
-    from transcriptomics_data_integration_spark.stats.bh import by_adjust
+    from transcriptomics_data_integration_spark.stats.bh import p_adjust
 
     orders = _t(spark, sf_dir, "orders")
     ps = orders.where((F.col("o_orderkey") % 4) == 1).select(
@@ -2094,7 +2099,7 @@ def q_p_adjust_by(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(4095.0)
         ).alias("p_value"),
     )
-    return by_adjust(ps, "p_value", "adj_by", tiebreak_col="id")
+    return p_adjust(ps, "p_value", "adj_by", method="BY", tiebreak_col="id")
 
 
 ORACLE_P_ADJUST_BY = """
@@ -2133,11 +2138,11 @@ def q_p_adjust_holm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M10 Holm step-down FWER adjustment, HASH-GATED (r10) — the
     third method of the ``adjust`` argument surface (see
     ``q_p_adjust_by``).  Same tie-heavy deterministic p-set through
-    ``stats.bh.holm_adjust``; the oracle replays R's
+    ``stats.bh.p_adjust(method="holm")``; the oracle replays R's
     ``pmin(1, cummax((n - i + 1) * p[o]))`` as a forward-cummax
     window, proving the step-DOWN direction (the mirror of BH/BY's
     step-up reverse cummin) end-to-end."""
-    from transcriptomics_data_integration_spark.stats.bh import holm_adjust
+    from transcriptomics_data_integration_spark.stats.bh import p_adjust
 
     orders = _t(spark, sf_dir, "orders")
     ps = orders.where((F.col("o_orderkey") % 4) == 1).select(
@@ -2147,7 +2152,7 @@ def q_p_adjust_holm(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(4095.0)
         ).alias("p_value"),
     )
-    return holm_adjust(ps, "p_value", "adj_holm", tiebreak_col="id")
+    return p_adjust(ps, "p_value", "adj_holm", method="holm", tiebreak_col="id")
 
 
 ORACLE_P_ADJUST_HOLM = """
