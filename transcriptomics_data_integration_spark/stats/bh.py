@@ -29,7 +29,7 @@ the same fold via ``list_reduce``; an unordered SUM over 1/i would be
 permutation-dependent in the last ulp.
 
 Spark shape: one method table (scaled term + step direction) and two
-arm builders shared by all three methods.  ``_adjust_window`` runs the
+arm functions shared by all three methods.  ``_adjust_window`` runs the
 rank and the cumulative extreme as windows over the same (optional
 partition, order-by-p) window — one shuffle if partitioned,
 single-stage on post-aggregate relations otherwise.  Unpartitioned
