@@ -48,6 +48,31 @@ def test_tsv_matrix_io_roundtrip(spark, tmp_path):
     assert got[("g2", "s2")] == 4.5
 
 
+def test_read_matrix_tsv_keeps_string_ids_in_one_job(spark, tmp_path):
+    """The reference's matrix layout (unnamed rowname column): an
+    all-numeric id column stays strings, an ``NA`` cell reads as null,
+    and the read runs one job (the header line), not a schema-inference
+    scan."""
+    path = tmp_path / "m.tsv"
+    path.write_text("\ts1\ts2\n00123\t1.5\tNA\n00456\t2\t3.25\n")
+    sc = spark.sparkContext
+    sc.setJobGroup("read_matrix_tsv_jobs", "read_matrix_tsv")
+    try:
+        long = read_matrix_tsv(spark, str(path))
+        jobs = sc.statusTracker().getJobIdsForGroup("read_matrix_tsv_jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 1
+    assert dict(long.dtypes) == {"gene_id": "string", "sample_id": "string", "value": "double"}
+    got = {(r["gene_id"], r["sample_id"]): r["value"] for r in long.collect()}
+    assert got == {
+        ("00123", "s1"): 1.5,
+        ("00123", "s2"): None,
+        ("00456", "s1"): 2.0,
+        ("00456", "s2"): 3.25,
+    }
+
+
 def test_read_htseq_counts_filters_summary_rows(spark, tmp_path):
     d = tmp_path / "counts"
     d.mkdir()

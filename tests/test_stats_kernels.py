@@ -155,13 +155,38 @@ def test_p_adjust_dispatch_and_de_wiring(spark):
 
 
 def test_bh_monotone_and_bounded(spark):
-    # pipeline invariant (SURVEY.md section 5.3): adj p >= raw p, <= 1
-    rows = [(f"g{i}", ((i * 37) % 97 + 1) / 100.0) for i in range(50)]
-    df = spark.createDataFrame(rows, ["gene", "p"])
-    out = p_adjust(df, "p", "adj", tiebreak_col="gene").collect()
-    for r in out:
-        assert r["adj"] >= r["p"] - 1e-15
-        assert r["adj"] <= 1.0
+    """Property (SURVEY.md section 5.3 pipeline invariant), through the
+    public ``p_adjust`` for every method on random p-sets with ties:
+    p <= adj <= 1, and adj never decreases as p grows."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    @given(
+        st.lists(
+            st.floats(min_value=0.0, max_value=1.0, allow_nan=False, width=32),
+            min_size=1,
+            max_size=40,
+        ),
+        st.randoms(use_true_random=False),
+        st.sampled_from(["BH", "BY", "holm"]),
+    )
+    @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+    def check(ps, rnd, method):
+        ps = ps + [rnd.choice(ps) for _ in range(rnd.randrange(0, 4))]
+        df = spark.createDataFrame(
+            [(i, float(p)) for i, p in enumerate(ps)], "id long, p double"
+        )
+        out = sorted(
+            (r["p"], r["adj"])
+            for r in p_adjust(df, "p", "adj", method=method, tiebreak_col="id").collect()
+        )
+        assert len(out) == len(ps)
+        for p, adj in out:
+            assert p <= adj <= 1.0, (method, p, adj)
+        for (_, lo), (_, hi) in zip(out, out[1:]):
+            assert lo <= hi, (method, out)
+
+    check()
 
 
 def test_quantile_normalization_two_samples(spark):
@@ -268,6 +293,55 @@ def test_stouffer_single_platform_dropped(spark):
     )
     out = stouffer_combine(df, "gene", "platform", "p", "fc", "icc").collect()
     assert [r["gene"] for r in out] == ["g2"]
+
+
+def test_stouffer_invariant_to_platform_order(spark):
+    """Property: the combined z and p of a gene do not depend on the
+    row order of its per-platform table.  Two platforms sum two terms,
+    which commute exactly; with more, float summation order may move
+    the last bits, so those compare to 1e-12 relative."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    p_val = st.floats(min_value=1e-12, max_value=1.0, allow_nan=False)
+    # |FC| > 0: a gene whose fold changes are all 0 has no weight
+    fc_val = st.builds(
+        lambda m, neg: -m if neg else m,
+        st.floats(min_value=0.01, max_value=8.0),
+        st.booleans(),
+    )
+
+    @given(
+        st.integers(min_value=2, max_value=4),
+        st.lists(st.tuples(p_val, fc_val), min_size=4, max_size=4 * 6),
+        st.randoms(use_true_random=False),
+    )
+    @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+    def check(n_platforms, cells, rnd):
+        rows = [
+            (f"g{i // n_platforms}", f"pl{i % n_platforms}", p, fc)
+            for i, (p, fc) in enumerate(cells[: len(cells) // n_platforms * n_platforms])
+        ]
+        shuffled = rows[:]
+        rnd.shuffle(shuffled)
+        outs = []
+        for rs in (rows, shuffled):
+            df = spark.createDataFrame(
+                rs, "gene string, platform string, p double, fc double"
+            ).repartition(3)
+            outs.append({
+                r["gene"]: (r["z_comb"], r["p_comb"])
+                for r in stouffer_combine(df, "gene", "platform", "p", "fc").collect()
+            })
+        a, b = outs
+        assert a.keys() == b.keys()
+        for g in a:
+            if n_platforms == 2:
+                assert a[g] == b[g], (g, a[g], b[g])
+            else:
+                assert a[g] == pytest.approx(b[g], rel=1e-12, abs=0.0), (g, a[g], b[g])
+
+    check()
 
 
 def test_fem_rem_golden(spark):
@@ -454,29 +528,51 @@ def test_quantile_norm_average_ties_matches_r_semantics(spark):
         assert abs(got[k] - v) < 1e-12, (k, got[k], v)
 
 
-def test_bh_adjust_delegates_to_histogram_above_single_task_size(spark, tmp_path):
-    """Unpartitioned p_adjust must route to the bucket-partitioned
-    histogram arm when Catalyst cannot prove the p-set small (local
-    relations report unknown stats), and keep the simple sort window
-    for provably-small parquet inputs."""
-    # unknown stats (local relation) -> conservative histogram plan
-    local = spark.createDataFrame(
-        [(i, (i % 97) / 97.0) for i in range(200)], "gene long, p double"
-    )
-    plan_local = p_adjust(local, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
-    assert "_bkt" in plan_local
+def test_bh_arm_chosen_on_measured_size_when_joins_inflate_estimate(spark, tmp_path, monkeypatch):
+    """An unpartitioned p_adjust decides its arm on the input's measured
+    size when Catalyst cannot prove it small.  The input here is the
+    shape ``meta_analysis`` builds: two per-gene aggregates joined on
+    gene.  The size-only estimate multiplies the join's children, so
+    it is far above the single-task size; measured, the relation is a
+    few KB and takes the window arm.  With the threshold at 0 bytes the
+    same input takes the histogram arm, and both arms agree bitwise."""
+    import random
 
-    # small parquet input -> plain sort-window plan (no buckets)
-    d = str(tmp_path / "p")
-    local.write.parquet(d)
-    small = spark.read.parquet(d)
-    plan_small = p_adjust(small, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
-    assert "_bkt" not in plan_small
+    from transcriptomics_data_integration_spark.runtime import cleanup_persisted
 
-    # both produce identical values
-    a = sorted((r["gene"], r["adj"]) for r in p_adjust(local, "p", "adj", tiebreak_col="gene").collect())
-    b = sorted((r["gene"], r["adj"]) for r in p_adjust(small, "p", "adj", tiebreak_col="gene").collect())
-    assert a == b
+    cleanup_persisted()
+    rnd = random.Random(7)
+    spark.createDataFrame(
+        [(f"g{i:03d}", f"s{k}", rnd.random()) for i in range(1000) for k in range(8)],
+        "gene string, sample string, p double",
+    ).write.parquet(str(tmp_path / "cells"))
+    spark.createDataFrame(
+        [(f"s{k}", f"pl{k % 2}") for k in range(8)], "sample string, platform string"
+    ).write.parquet(str(tmp_path / "targets"))
+    cells = spark.read.parquet(str(tmp_path / "cells"))
+    targets = spark.read.parquet(str(tmp_path / "targets"))
+    # a provably small input is decided on the estimate: no job, no cache
+    same, small = W.fits_single_task_measured(targets)
+    assert same is targets and small and not targets.is_cached
+    de = cells.join(targets, "sample")
+    comb = de.groupBy("gene").agg(F.min("p").alias("p"))
+    n_pl = de.groupBy("gene").agg(F.countDistinct("platform").alias("n_platforms"))
+    meta = comb.join(n_pl, "gene")
+    assert W.estimated_plan_bytes(meta) > W._SINGLE_TASK_BYTES
+
+    def run():
+        adj = p_adjust(meta, "p", "adj", tiebreak_col="gene")
+        plan = adj._jdf.queryExecution().optimizedPlan().toString()
+        return "_bkt" in plan, {r["gene"]: r["adj"] for r in adj.collect()}
+
+    bkt_window, window = run()
+    assert not bkt_window
+    fits = W.fits_single_task
+    monkeypatch.setattr(W, "fits_single_task", lambda df: fits(df, 0))
+    bkt_hist, hist = run()
+    assert bkt_hist
+    assert len(window) == 1000 and window == hist
+    assert cleanup_persisted() >= 1
 
 
 def test_two_group_ttest_drops_zero_variance_genes(spark):

@@ -8,6 +8,8 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.runtime import register_persisted
+
 
 def top_k_by(df: DataFrame, order_col: str, k: int, tiebreak_col: str, desc: bool = True) -> DataFrame:
     """W1/W4 — global top-k rows by ``order_col`` with deterministic
@@ -76,6 +78,26 @@ def fits_single_task(df: DataFrame, threshold_bytes: int = _SINGLE_TASK_BYTES) -
     as AQE's broadcast-join demotion, applied to window strategy."""
     size = estimated_plan_bytes(df)
     return size is not None and size <= threshold_bytes
+
+
+def fits_single_task_measured(df: DataFrame) -> tuple[DataFrame, bool]:
+    """``fits_single_task`` on the input's measured size when Catalyst
+    cannot prove it small.  Returns the DataFrame to build on and the
+    decision.  A provably small ``df`` comes back as is and no job
+    runs.  Otherwise ``df`` is persisted (and registered for cleanup),
+    materialized by one ``count()`` job, and the decision is re-read
+    from a new DataFrame over the cached plan, whose estimate is now
+    the cached relation's exact in-memory size.  The new DataFrame
+    matters: ``df``'s own query execution keeps the optimized plan of
+    its first estimate.  The size-only visitor multiplies the sizes of
+    a join's children, so an 800-row table with four joins in its
+    lineage is estimated at ~259 MB; measured, it is ~46 KB."""
+    if fits_single_task(df):
+        return df, True
+    register_persisted(df.persist())
+    df.count()
+    cached = df.select("*")
+    return cached, fits_single_task(cached)
 
 
 def monotone_range_buckets(

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 
 def melt_wide(
@@ -59,12 +60,20 @@ def read_matrix_tsv(
     spark: SparkSession, path: str, gene_col: str = "gene_id"
 ) -> DataFrame:
     """Read a reference-style TSV matrix into long form.  The unnamed
-    rowname column arrives as ``_c0``/first header cell."""
-    wide = spark.read.csv(path, sep="\t", header=True, inferSchema=True)
-    first = wide.columns[0]
-    wide = wide.withColumnRenamed(first, gene_col)
-    long = melt_wide(wide, gene_col)
-    return long.withColumn("value", F.col("value").cast("double"))
+    rowname column arrives as ``_c0``/first header cell.
+
+    The schema is built from the header line (one job reads it): the
+    gene ids stay strings, so a numeric id like ``00123`` keeps its
+    zeros, and every sample column is double.  ``NA`` cells read as
+    null, as R's ``read.table`` reads them.  The data read itself runs
+    no job; schema inference would scan the whole file first."""
+    header = spark.read.csv(path, sep="\t", header=True).columns
+    schema = StructType(
+        [StructField(header[0], StringType())]
+        + [StructField(c, DoubleType()) for c in header[1:]]
+    )
+    wide = spark.read.csv(path, sep="\t", header=True, schema=schema, nullValue="NA")
+    return melt_wide(wide.withColumnRenamed(header[0], gene_col), gene_col)
 
 
 def write_matrix_tsv(

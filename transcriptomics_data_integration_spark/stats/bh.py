@@ -33,8 +33,9 @@ arm functions shared by all three methods.  ``_adjust_window`` runs the
 rank and the cumulative extreme as windows over the same (optional
 partition, order-by-p) window — one shuffle if partitioned,
 single-stage on post-aggregate relations otherwise.  Unpartitioned
-calls on relations Catalyst can't prove small route to
-``_adjust_histogram``, the bucket-partitioned billion-row scale path.
+calls on relations that neither Catalyst's estimate nor a measurement
+proves small route to ``_adjust_histogram``, the bucket-partitioned
+billion-row scale path.
 """
 
 from __future__ import annotations
@@ -235,10 +236,16 @@ def p_adjust(
     ``fdr`` is R's own alias of BH; ``none`` passes p through unchanged
     (R returns p itself).
 
-    Adaptive scale guard: an unpartitioned sort window on a relation
-    Catalyst can't prove single-task-small funnels the whole p-set
-    through one task — such calls take the bit-identical
-    bucket-partitioned histogram arm instead."""
+    Adaptive scale guard: an unpartitioned sort window funnels the
+    whole p-set through one task, so unpartitioned calls take it only
+    on an input that fits one task, and otherwise the bit-identical
+    bucket-partitioned histogram arm.  When Catalyst's estimate cannot
+    prove the input small, the call is EAGER: it persists the input
+    (registered for ``runtime.cleanup_persisted``), runs one
+    materializing job and decides on the measured size
+    (``windows.fits_single_task_measured``); either arm then reads the
+    cached input.  Partitioned calls take the window arm and run no
+    job."""
     if method == "none":
         return df.withColumn(out_col, F.col(p_col))
     method = "BH" if method == "fdr" else method
@@ -247,6 +254,8 @@ def p_adjust(
             f"unknown p-adjust method {method!r}; expected one of "
             "'none', 'BH', 'fdr', 'BY', 'holm'"
         )
-    if not partition_cols and not windows.fits_single_task(df):
-        return _adjust_histogram(df, p_col, out_col, method, tiebreak_col)
+    if not partition_cols:
+        df, small = windows.fits_single_task_measured(df)
+        if not small:
+            return _adjust_histogram(df, p_col, out_col, method, tiebreak_col)
     return _adjust_window(df, p_col, out_col, method, partition_cols, tiebreak_col)
