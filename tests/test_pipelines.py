@@ -259,3 +259,159 @@ def test_normalized_matrix_de_imputes_and_restricts(spark):
     genes = {r["gene_id"] for r in out}
     assert "g7" not in genes and "g3" in genes
     assert out[0]["gene_id"] == "g0" and out[0]["decide"] == 1
+
+
+def _join_form_meta(de, gene_col="gene_id"):
+    """The combine as three aggregates and two joins back: the form
+    ``meta_analysis`` replaced with one gene-keyed aggregate.  ``de``
+    carries the per-(gene, platform) DE rows with ``icc`` attached."""
+    from transcriptomics_data_integration_spark.stats.stouffer import (
+        p_improvement,
+        stouffer_combine,
+    )
+
+    comb = stouffer_combine(de, gene_col, "platform", "p_value", "log2fc", "icc")
+    improved = p_improvement(
+        de.join(comb.select(gene_col, "p_comb"), gene_col), "p_value", "p_comb"
+    )
+    per_platform_imp = improved.groupBy(gene_col).agg(
+        F.avg("p_improvement").alias("avg_p_improvement")
+    )
+    icc_per_gene = de.groupBy(gene_col).agg(F.first("icc").alias("icc"))
+    return (
+        comb.join(icc_per_gene, gene_col, "left")
+        .join(per_platform_imp, gene_col, "left")
+        .orderBy("p_comb", gene_col)
+    )
+
+
+_META_COLS = ["gene_id", "n_platforms", "avg_log2fc", "z_comb", "p_comb", "icc", "avg_p_improvement"]
+
+
+def _assert_meta_equal(got, want, abs_tol=0.0):
+    """Per gene: exact when the gene is on 2 platforms (two-term sums
+    commute), 1e-12 relative above (summation order may move the last
+    bits).  ``abs_tol`` > 0 compares every gene to 1e-12 relative or
+    ``abs_tol`` absolute."""
+    assert [r["gene_id"] for r in got] == [r["gene_id"] for r in want]
+    for g, w in zip(got, want):
+        assert g["n_platforms"] == w["n_platforms"]
+        for c in _META_COLS[2:]:
+            if w["n_platforms"] == 2 and not abs_tol:
+                assert g[c] == w[c], (g["gene_id"], c, g[c], w[c])
+            else:
+                assert g[c] == pytest.approx(w[c], rel=1e-12, abs=abs_tol), (g["gene_id"], c)
+
+
+def test_meta_analysis_one_aggregate_matches_join_form(spark):
+    """Property: on random multi-platform expression (2-4 platforms,
+    genes missing from some platforms) the one-aggregate combine in
+    ``meta_analysis`` gives the join form's rows, in its order and with
+    its columns.  DE is decimal-exact (``exact_scale=2``) so both sides
+    see the same per-(gene, platform) table.  One fixed two-platform
+    case runs the ICC-weighted path; ICC's profile correlations are
+    float sums whose order moves their last bit between runs, so that
+    case compares to 1e-12 relative or absolute."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from transcriptomics_data_integration_spark.stats.icc import icc
+    from transcriptomics_data_integration_spark.stats.ttest import two_group_ttest
+
+    def join_form(expr, targets, with_icc):
+        labeled = expr.join(targets, "sample_id")
+        de = two_group_ttest(
+            labeled, ["gene_id", "platform"], "target", "value", "T", "N", exact_scale=2
+        )
+        if with_icc:
+            platforms = sorted(r[0] for r in expr.select("platform").distinct().collect())
+            gene_icc = icc(expr, platforms, exact_scale=2).select("gene_id", "icc")
+            de = de.join(gene_icc, "gene_id", "left").withColumn(
+                "icc", F.coalesce(F.col("icc"), F.lit(0.0))
+            )
+        else:
+            de = de.withColumn("icc", F.lit(0.0))
+        return _join_form_meta(de).collect()
+
+    value = st.integers(min_value=1, max_value=9999).map(lambda c: c / 100.0)
+
+    @given(
+        st.integers(min_value=2, max_value=4),
+        st.integers(min_value=2, max_value=6),
+        st.integers(min_value=2, max_value=3),
+        st.data(),
+    )
+    @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+    def check(n_platforms, n_genes, per_group, data):
+        rows, trows = [], []
+        for pl in range(n_platforms):
+            present = data.draw(
+                st.lists(st.booleans(), min_size=n_genes, max_size=n_genes)
+            )
+            for j in range(2 * per_group):
+                s = f"pl{pl}_s{j}"
+                trows.append((s, "T" if j < per_group else "N"))
+                for g in range(n_genes):
+                    if present[g]:
+                        rows.append((f"g{g}", s, f"pl{pl}", data.draw(value)))
+        if not rows:
+            return
+        expr = spark.createDataFrame(
+            rows, "gene_id string, sample_id string, platform string, value double"
+        ).repartition(3)
+        targets = spark.createDataFrame(trows, "sample_id string, target string")
+        got = meta_analysis(expr, targets, "T", "N", with_icc=False, exact_scale=2)
+        assert got.columns == _META_COLS
+        _assert_meta_equal(got.collect(), join_form(expr, targets, False))
+
+    check()
+
+    expr, targets = _two_platform_fixture(spark)
+    got = meta_analysis(expr, targets, "T", "N", exact_scale=2).collect()
+    want = join_form(expr, targets.select("sample_id", "target"), True)
+    assert len(want) == 8 and any(r["icc"] != 0.0 for r in want)
+    _assert_meta_equal(got, want, abs_tol=1e-12)
+
+
+def test_meta_analysis_persists_nothing_without_icc(spark):
+    from transcriptomics_data_integration_spark.runtime import cleanup_persisted
+
+    expr, targets = _two_platform_fixture(spark)
+    cleanup_persisted()
+    meta_analysis(expr, targets, "T", "N", with_icc=False).collect()
+    assert cleanup_persisted() == 0
+
+
+def test_meta_analysis_zero_reference_mean_gives_null_fold_change(spark):
+    """Raw-scale input where one gene's reference group is all zeros on
+    one platform: the query completes (no divide-by-zero under ANSI),
+    that (gene, platform) has a null log2fc, and the gene's average fold
+    change is the other platform's."""
+    from transcriptomics_data_integration_spark.stats.ttest import two_group_ttest
+
+    expr, targets = _two_platform_fixture(spark)
+    zeroed = expr.withColumn(
+        "value",
+        F.when(
+            (F.col("gene_id") == "g1")
+            & (F.col("platform") == "P2")
+            & F.col("sample_id").rlike("_s[345]$"),
+            F.lit(0.0),
+        ).otherwise(F.col("value")),
+    )
+    de = {
+        (r["gene_id"], r["platform"]): r
+        for r in two_group_ttest(
+            zeroed.join(targets, "sample_id"), ["gene_id", "platform"], "target", "value", "T", "N"
+        ).collect()
+    }
+    assert de[("g1", "P2")]["mean_b"] == 0.0
+    assert de[("g1", "P2")]["log2fc"] is None
+    assert de[("g1", "P2")]["p_value"] > 0.0
+    out = {
+        r["gene_id"]: r
+        for r in meta_analysis(zeroed, targets, "T", "N", with_icc=False, exact_scale=2).collect()
+    }
+    assert out["g1"]["n_platforms"] == 2
+    assert out["g1"]["avg_log2fc"] == de[("g1", "P1")]["log2fc"]
+    assert out["g1"]["p_comb"] is not None

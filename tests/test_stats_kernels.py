@@ -530,9 +530,10 @@ def test_quantile_norm_average_ties_matches_r_semantics(spark):
 
 def test_bh_arm_chosen_on_measured_size_when_joins_inflate_estimate(spark, tmp_path, monkeypatch):
     """An unpartitioned p_adjust decides its arm on the input's measured
-    size when Catalyst cannot prove it small.  The input here is the
-    shape ``meta_analysis`` builds: two per-gene aggregates joined on
-    gene.  The size-only estimate multiplies the join's children, so
+    size when Catalyst cannot prove it small.  The input here is two
+    per-gene aggregates joined on gene, a per-gene table downstream of
+    a join like ``meta_analysis``'s.  The size-only estimate multiplies
+    the join's children, so
     it is far above the single-task size; measured, the relation is a
     few KB and takes the window arm.  With the threshold at 0 bytes the
     same input takes the histogram arm, and both arms agree bitwise."""

@@ -157,7 +157,7 @@ def ngram_jaccard_pairs(
     inter/union are integers, so the ratio is a single IEEE division —
     bit-identical across engines.
     """
-    sh = shingles(df, id_col, text_col, k).cache()
+    sh = register_persisted(shingles(df, id_col, text_col, k).cache())
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -527,6 +527,7 @@ def minhash_lsh_pairs(
     member = df.select(
         F.col(id_col), content_digest(F.col(text_col)).alias("digest")
     ).cache()
+    register_persisted(member)
     rep = member.groupBy("digest").agg(F.min(id_col).alias("rep_id"))
     rep_docs = df.join(rep.select(F.col("rep_id").alias(id_col)), id_col)
 
@@ -551,6 +552,7 @@ def minhash_lsh_pairs(
         )
         .cache()
     )
+    register_persisted(per_doc)
     sigs = per_doc.select(id_col, *[f"m{j}" for j in range(n_hashes)])
     cands = lsh_candidates_from_columns(sigs, id_col, n_bands, n_hashes)
     # verification via per-doc shingle-set arrays: two equi-joins on doc

@@ -12,10 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from transcriptomics_data_integration_spark.runtime import register_persisted
-
 from transcriptomics_data_integration_spark.stats.icc import icc
-from transcriptomics_data_integration_spark.stats.stouffer import p_improvement, stouffer_combine
+from transcriptomics_data_integration_spark.stats.stouffer import (
+    stouffer_aggregates,
+    stouffer_finish,
+)
 from transcriptomics_data_integration_spark.stats.ttest import two_group_ttest
 
 
@@ -38,12 +39,6 @@ def meta_analysis(
     ``exact_scale`` flows to the per-platform DE moments and the ICC
     pair moments (functions/exact.py scheme) so the composition is
     hash-gateable end-to-end (``q_meta_pipeline``)."""
-    # the per-(gene, platform) DE table below feeds four consumers
-    # (ICC attach, Stouffer combine, p-improvement join, per-gene icc)
-    # — persist it (gene-sized, trivially cacheable) so none of them
-    # re-executes the fact aggregation.  `expr` itself (matrix-sized)
-    # is left to the caller: caching it was measured slower than the
-    # re-scan at bench scale.
     labeled = expr.join(F.broadcast(targets.select(sample_col, group_col)), sample_col)
     de = two_group_ttest(
         labeled,
@@ -53,8 +48,7 @@ def meta_analysis(
         group_a,
         group_b,
         exact_scale=exact_scale,
-    ).persist()
-    register_persisted(de)
+    )
     if with_icc:
         platforms = [r[0] for r in expr.select(platform_col).distinct().collect()]
         cells = expr.select(
@@ -71,16 +65,25 @@ def meta_analysis(
         )
     else:
         de = de.withColumn("icc", F.lit(0.0))
-    comb = stouffer_combine(de, gene_col, platform_col, "p_value", "log2fc", "icc")
-    improved = p_improvement(
-        de.join(comb.select(gene_col, "p_comb"), gene_col), "p_value", "p_comb"
+    # every output column is a function of one gene's DE rows, so one
+    # groupBy(gene) carries the Stouffer sums, the gene's icc and its
+    # p-values; the p-improvement average (A16) is then a projection
+    comb = stouffer_finish(
+        de.groupBy(gene_col).agg(
+            *stouffer_aggregates("p_value", "log2fc", "icc"),
+            F.first("icc").alias("icc"),
+            F.collect_list("p_value").alias("_ps"),
+        )
     )
-    per_platform_imp = improved.groupBy(gene_col).agg(
-        F.avg("p_improvement").alias("avg_p_improvement")
+    log2_ratio_sum = F.aggregate(
+        "_ps", F.lit(0.0), lambda acc, p: acc + F.log2(p / F.col("p_comb"))
     )
-    icc_per_gene = de.groupBy(gene_col).agg(F.first("icc").alias("icc"))
-    return (
-        comb.join(icc_per_gene, gene_col, "left")
-        .join(per_platform_imp, gene_col, "left")
-        .orderBy("p_comb", gene_col)
-    )
+    return comb.select(
+        gene_col,
+        "n_platforms",
+        "avg_log2fc",
+        "z_comb",
+        "p_comb",
+        "icc",
+        (log2_ratio_sum / F.size("_ps")).alias("avg_p_improvement"),
+    ).orderBy("p_comb", gene_col)

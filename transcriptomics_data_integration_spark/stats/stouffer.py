@@ -13,17 +13,62 @@ Reference formulas (`scripts/data_integration/Meta_analysis.R`):
 - combined p: ``P = 2 * pnorm(-|Z|)`` (`:1226`);
 - only genes present on > 1 platform are combined (`:1218`).
 
-Pure grouped SQL: one shuffle on gene.  The normal quantile/CDF are the
-shared portable SQL formulas (functions/normal.py), so the DuckDB
-oracle runs the identical arithmetic.
+Pure grouped SQL: one shuffle on gene.  The combine is split in two
+so a caller can fold it into a wider per-gene aggregate:
+``stouffer_aggregates`` gives the aggregate columns (add more to the
+same ``groupBy``) and ``stouffer_finish`` turns the grouped relation
+into z_comb and p_comb.  ``stouffer_combine`` is the pair around one
+``groupBy(gene)``.  The normal quantile/CDF are the shared portable SQL
+formulas (functions/normal.py), so the DuckDB oracle runs the identical
+arithmetic.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.functions.normal import norm_ppf_sql, two_sided_p_sql
+
+
+def stouffer_aggregates(p_col: str, fc_col: str, icc_col: str | None = None) -> list[Column]:
+    """The per-gene aggregate columns of the combine: ``n_platforms``,
+    ``avg_log2fc`` and the two private sums ``stouffer_finish`` reads.
+
+    ``icc_col`` of None means ICC weighting off (w_raw = |FC|), matching
+    the reference's fallback when integrative correlations are absent.
+    """
+    qn = norm_ppf_sql(f"(({p_col}) / 2.0)")
+    # FC > 0 keeps qnorm(p/2) (negative); FC <= 0 (incl. 0) negates —
+    # exact branch structure of convert.pvalue (`Meta_analysis.R:80-86`).
+    z = F.expr(f"CASE WHEN ({fc_col}) > 0 THEN {qn} ELSE -({qn}) END")
+    if icc_col:
+        w_raw = f"greatest(abs({fc_col}) + abs({fc_col}) * ({icc_col}) * ({icc_col}), 0.0)"
+    else:
+        w_raw = f"abs({fc_col})"
+    return [
+        F.count(F.lit(1)).alias("n_platforms"),
+        F.avg(fc_col).alias("avg_log2fc"),
+        F.sum(F.expr(w_raw)).alias("_w_sum"),
+        # Algebraic regroup: w_p = sqrt(|FC_p|)/sqrt(w_sum), so
+        # Z = sum_p sqrt(|FC_p|) * z_p / sqrt(w_sum) — lets the whole
+        # combine run as one partial+final aggregation instead of
+        # materializing per-gene weight vectors.
+        F.sum(F.sqrt(F.abs(F.col(fc_col))) * z).alias("_wz"),
+    ]
+
+
+def stouffer_finish(agg: DataFrame) -> DataFrame:
+    """Keep genes on > 1 platform and append z_comb and p_comb to a
+    relation grouped with :func:`stouffer_aggregates`; its other
+    columns pass through."""
+    z_comb = F.col("_wz") / F.sqrt(F.col("_w_sum"))
+    out = (
+        agg.where(F.col("n_platforms") > 1)
+        .withColumn("z_comb", z_comb)
+        .drop("_wz", "_w_sum")
+    )
+    return out.withColumn("p_comb", F.expr(two_sided_p_sql("z_comb")))
 
 
 def stouffer_combine(
@@ -36,37 +81,12 @@ def stouffer_combine(
 ) -> DataFrame:
     """Combine per-(gene, platform) p-values into per-gene meta results.
 
-    ``icc_col`` of None means ICC weighting off (w_raw = |FC|), matching
-    the reference's fallback when integrative correlations are absent.
+    ``icc_col`` as in :func:`stouffer_aggregates`.
     Output: gene, n_platforms, avg_log2fc, z_comb, p_comb.
     """
-    qn = norm_ppf_sql(f"(({p_col}) / 2.0)")
-    # FC > 0 keeps qnorm(p/2) (negative); FC <= 0 (incl. 0) negates —
-    # exact branch structure of convert.pvalue (`Meta_analysis.R:80-86`).
-    z_expr = f"CASE WHEN ({fc_col}) > 0 THEN {qn} ELSE -({qn}) END"
-    if icc_col:
-        w_raw = f"greatest(abs({fc_col}) + abs({fc_col}) * ({icc_col}) * ({icc_col}), 0.0)"
-    else:
-        w_raw = f"abs({fc_col})"
-    with_z = df.withColumn("_z", F.expr(z_expr)).withColumn("_w_raw", F.expr(w_raw))
-    agg = (
-        with_z.groupBy(gene_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_platforms"),
-            F.avg(fc_col).alias("avg_log2fc"),
-            F.sum("_w_raw").alias("_w_sum"),
-            # Algebraic regroup: w_p = sqrt(|FC_p|)/sqrt(w_sum), so
-            # Z = sum_p sqrt(|FC_p|) * z_p / sqrt(w_sum) — lets the whole
-            # combine run as one partial+final aggregation instead of
-            # materializing per-gene weight vectors.
-            F.sum(F.sqrt(F.abs(F.col(fc_col))) * F.col("_z")).alias("_wz"),
-        )
-        .where(F.col("n_platforms") > 1)
+    return stouffer_finish(
+        df.groupBy(gene_col).agg(*stouffer_aggregates(p_col, fc_col, icc_col))
     )
-    z_comb = F.col("_wz") / F.sqrt(F.col("_w_sum"))
-    out = agg.withColumn("z_comb", z_comb).drop("_wz", "_w_sum")
-    p_expr = two_sided_p_sql("z_comb")
-    return out.withColumn("p_comb", F.expr(p_expr))
 
 
 def p_improvement(joined: DataFrame, p_col: str, p_comb_col: str) -> DataFrame:

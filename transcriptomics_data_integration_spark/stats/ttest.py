@@ -115,6 +115,11 @@ def two_group_ttest(
     convention ``mean_a - mean_b`` (`DiffExpression_closedPlatform.R:
     474-520`), not log2 of the mean ratio — the ratio of log-scale
     means is meaningless and divides by zero for floored values.
+
+    On raw-scale input a zero group mean leaves log2fc null (``mean_a``
+    = 0: log2 of 0; ``mean_b`` = 0: the ratio is null, not a
+    divide-by-zero error).  The row keeps its t and p; in a Stouffer
+    combine its null fold change adds nothing to z or to the weight sum.
     """
     gene_cols = [gene_col] if isinstance(gene_col, str) else list(gene_col)
     agg = _group_moments(df, gene_cols, group_col, value_col, group_a, group_b, exact_scale)
@@ -136,7 +141,7 @@ def ttest_from_group_moments(
     lfc = (
         F.col("mean_a") - F.col("mean_b")
         if log_scale_values
-        else F.log2(F.col("mean_a") / F.col("mean_b"))
+        else F.log2(F.try_divide(F.col("mean_a"), F.col("mean_b")))
     )
     out = (
         agg.withColumn("log2fc", lfc)
@@ -370,7 +375,7 @@ def weighted_two_group_ttest(
             "log2fc",
             (F.col("mean_a") - F.col("mean_b"))
             if log_scale_values
-            else F.log2(F.col("mean_a") / F.col("mean_b")),
+            else F.log2(F.try_divide(F.col("mean_a"), F.col("mean_b"))),
         )
         .withColumn("t_statistic", (F.col("mean_a") - F.col("mean_b")) / F.col("_se"))
         # exposed for eBayes moderation over the weighted fit
