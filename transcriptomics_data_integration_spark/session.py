@@ -53,6 +53,13 @@ def get_spark(app_name: str = "transcriptomics-spark", shuffle_partitions: int |
         # GC-triggered cleanup bursts into multi-second stalls charged
         # to whatever query is running (observed 8s -> 30s outliers)
         .config("spark.cleaner.referenceTracking.blocking", "false")
+        # one meta-analysis query (TSV read, pivot write, DE, Stouffer,
+        # BH) generates ~100 distinct classes; at Spark's default of 100
+        # cached classes a repeated query evicts its own code and Janino
+        # recompiled ~70 classes on every run (4-core host: 0.5-1 s of
+        # a ~4 s query, falling as the JIT warms, so the timing spread
+        # too).  Generated classes average ~2.6 KB of bytecode.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # io codec decision (r11, VERDICT item 9): lz4 (Spark's own
         # default) stays — a same-host A/B on the closure-heavy
         # dedup_clusters gate measured zstd 29% SLOWER end-to-end
