@@ -415,3 +415,73 @@ def test_meta_analysis_zero_reference_mean_gives_null_fold_change(spark):
     assert out["g1"]["n_platforms"] == 2
     assert out["g1"]["avg_log2fc"] == de[("g1", "P1")]["log2fc"]
     assert out["g1"]["p_comb"] is not None
+
+
+def test_f5_single_pass_equals_filter_then_ttest(spark):
+    """Property: with ``top_k_genes`` both DE entry points (batch
+    correction off) equal ``nonspecific_filter_topk`` ->
+    ``two_group_ttest`` -> the same limma tail.  The single pass
+    aggregates the facts once for F5 and the t moments, so at
+    ``exact_scale=2`` every value must match exactly; in float mode
+    the sums may run in another order, so values compare to 1e-12
+    relative (1e-12 absolute for a t that is exactly 0 on one side)."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from transcriptomics_data_integration_spark.operators.filters import (
+        nonspecific_filter_topk,
+    )
+    from transcriptomics_data_integration_spark.pipelines.diffexpr import (
+        _toptable,
+        normalized_matrix_de,
+    )
+    from transcriptomics_data_integration_spark.stats.ttest import two_group_ttest
+
+    @given(
+        st.integers(min_value=3, max_value=7),
+        st.integers(min_value=2, max_value=4),
+        st.integers(min_value=1, max_value=7),
+        st.lists(st.integers(min_value=0, max_value=2000), min_size=7 * 8, max_size=7 * 8),
+    )
+    @settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
+    def check(n_genes, per_group, k, cells):
+        samples = [f"s{j}" for j in range(2 * per_group)]
+        rows = [
+            (f"g{g}", s, cells[g * 8 + j] / 100.0)
+            for g in range(n_genes)
+            for j, s in enumerate(samples)
+        ]
+        expr = spark.createDataFrame(rows, "gene_id string, sample_id string, value double")
+        targets = spark.createDataFrame(
+            [(s, "T" if j < per_group else "N", "ds") for j, s in enumerate(samples)],
+            ["sample_id", "target", "dataset"],
+        )
+        labeled = expr.join(targets, "sample_id")
+        for scale in (2, None):
+            ref = _toptable(
+                two_group_ttest(
+                    nonspecific_filter_topk(labeled, "gene_id", "value", k, exact_scale=scale),
+                    "gene_id", "target", "value", "T", "N",
+                    exact_scale=scale, log_scale_values=True,
+                ),
+                "gene_id", "BH", 0.05,
+            ).collect()
+            for out in (
+                differential_expression(
+                    expr, targets, "T", "N", top_k_genes=k,
+                    batch_correct=False, exact_scale=scale,
+                ).collect(),
+                normalized_matrix_de(
+                    expr, targets, "T", "N", top_k_genes=k, exact_scale=scale
+                ).collect(),
+            ):
+                if scale is not None:
+                    assert out == ref
+                    continue
+                got = {r["gene_id"]: r.asDict() for r in out}
+                want = {r["gene_id"]: r.asDict() for r in ref}
+                assert got.keys() == want.keys()
+                for g in want:
+                    assert got[g] == pytest.approx(want[g], rel=1e-12, abs=1e-12), g
+
+    check()

@@ -361,75 +361,6 @@ def test_combat_eb_fixed_converges_to_arrow_solver(spark):
     assert max(abs(ref[k] - fx2[k]) for k in ref) > 1e-3
 
 
-def test_icc_dimsum_tiers(spark):
-    """DIMSUM gene-correlation tier (r7, SURVEY §4.2): with
-    threshold=0 columnSimilarities is exact brute-force cosine, so
-    the (platform, g, h, r) relation must match numpy Pearson
-    correlations and the full icc_dimsum must match the exact
-    relational icc(); with a moderate threshold, every SURVIVING pair
-    keeps a bounded relative error and the per-gene ICC stays within
-    a bounded deviation of exact (the verdict-item-5 error bound)."""
-    import numpy as np
-
-    from transcriptomics_data_integration_spark.stats.icc import (
-        icc,
-        icc_dimsum,
-        platform_gene_correlations_dimsum,
-    )
-
-    rng = np.random.default_rng(33)
-    genes = [f"g{i:02d}" for i in range(8)]
-    samples = [f"s{j:02d}" for j in range(12)]
-    rows = []
-    mats = {}
-    # two platforms with correlated structure so ICC is non-trivial
-    base = rng.normal(0, 1, (len(genes), len(samples)))
-    for pi, plat in enumerate(["p1", "p2"]):
-        mat = base + rng.normal(0, 0.3, base.shape)
-        mats[plat] = mat
-        rows += [
-            (plat, g, s, float(mat[i, j]))
-            for i, g in enumerate(genes)
-            for j, s in enumerate(samples)
-        ]
-    cells = spark.createDataFrame(rows, ["platform", "gene_id", "sample_id", "value"])
-
-    # tier exactness at threshold=0 (brute-force branch)
-    rr = {
-        (r["platform"], r["g"], r["h"]): r["r"]
-        for r in platform_gene_correlations_dimsum(cells, ["p1", "p2"], 0.0).collect()
-    }
-    for plat in ("p1", "p2"):
-        expect = np.corrcoef(mats[plat])
-        for i, g in enumerate(genes):
-            for j, h in enumerate(genes):
-                if i != j:
-                    assert rr[(plat, g, h)] == pytest.approx(
-                        expect[i, j], abs=1e-9
-                    ), (plat, g, h)
-
-    exact = {r["gene_id"]: r["icc"] for r in icc(cells, ["p1", "p2"], exact_scale=None).collect()}
-    d0 = {r["gene_id"]: r["icc"] for r in icc_dimsum(cells, ["p1", "p2"], 0.0).collect()}
-    assert set(d0) == set(exact)
-    for g in exact:
-        assert d0[g] == pytest.approx(exact[g], abs=1e-9), g
-
-    # thresholded tier: small matrix => DIMSUM's sampling probability
-    # saturates (gamma > colMag products), so surviving pairs are
-    # exact; the ICC deviation comes only from profile truncation and
-    # must stay bounded
-    rr_t = {
-        (r["platform"], r["g"], r["h"]): r["r"]
-        for r in platform_gene_correlations_dimsum(cells, ["p1", "p2"], 0.3).collect()
-    }
-    for (plat, g, h), v in rr_t.items():
-        i, j = genes.index(g), genes.index(h)
-        assert v == pytest.approx(np.corrcoef(mats[plat])[i, j], rel=1e-6), (plat, g, h)
-    dt = {r["gene_id"]: r["icc"] for r in icc_dimsum(cells, ["p1", "p2"], 0.3).collect()}
-    for g, v in dt.items():
-        assert abs(v - exact[g]) <= 0.35, (g, v, exact[g])
-
-
 def test_icc_partner_sampled_tier(spark):
     """Oracled partner-sampled ICC tier (r7): at partner_frac=1.0 the
     hashed subset keeps every partner, so the result equals exact ICC

@@ -819,3 +819,72 @@ def test_squeeze_var_fitfdist_nonfinite_inputs_propagate(spark):
     # moments for non-finite inputs) — the contract here is only
     # "propagate, don't raise"
     assert math.isinf(out["g0"]["_s2_post"]) or math.isnan(out["g0"]["_s2_post"])
+
+
+def test_p_adjust_null_p_follows_r_na_rule(spark, monkeypatch):
+    """R's p.adjust keeps NA as NA and leaves it out of n and of every
+    rank, on both arms and for partitioned calls:
+    p.adjust(c(NA, .01, .02, .03), "BH")   -> NA .03 .03 .03
+    p.adjust(c(NA, .01, .02, .03), "BY")   -> NA .055 .055 .055
+    p.adjust(c(NA, .01, .02, .03), "holm") -> NA .03 .04 .04"""
+    df = spark.createDataFrame(
+        [("g0", None), ("g1", 0.01), ("g2", 0.02), ("g3", 0.03)], "gene string, p double"
+    )
+    expected = {
+        "BH": [0.03, 0.03, 0.03],
+        "BY": [0.055, 0.055, 0.055],
+        "holm": [0.03, 0.04, 0.04],
+    }
+    for method, want in expected.items():
+        for out in _on_both_arms(monkeypatch, df, method):
+            assert out["g0"] is None, method
+            assert [out[g] for g in ("g1", "g2", "g3")] == pytest.approx(want), method
+        two = df.withColumn("part", F.lit("a")).unionByName(
+            df.withColumn("part", F.lit("b"))
+        )
+        parted = p_adjust(two, "p", "adj", method=method, partition_cols=["part"], tiebreak_col="gene")
+        for part in ("a", "b"):
+            out = {r["gene"]: r["adj"] for r in parted.where(F.col("part") == part).collect()}
+            assert out["g0"] is None, (method, part)
+            assert [out[g] for g in ("g1", "g2", "g3")] == pytest.approx(want), (method, part)
+
+
+def test_stouffer_null_for_zero_or_null_fold_changes(spark):
+    """A gene whose fold change is 0 on every platform has a zero weight
+    sum, and one whose fold change is null on every platform has a null
+    one: both get a null z_comb and p_comb (R: NaN), not a divide-by-zero
+    error or p = 1e-300.  meta_analysis orders such genes last, as R's
+    order() does."""
+    df = spark.createDataFrame(
+        [
+            ("g", "p1", 0.05, 1.0),
+            ("g", "p2", 0.05, 1.0),
+            ("zero", "p1", 0.05, 0.0),
+            ("zero", "p2", 0.02, 0.0),
+            ("null", "p1", 0.05, None),
+            ("null", "p2", 0.02, None),
+        ],
+        "gene string, platform string, p double, fc double",
+    )
+    out = {r["gene"]: r for r in stouffer_combine(df, "gene", "platform", "p", "fc").collect()}
+    assert out["g"]["p_comb"] == pytest.approx(0.0055742, abs=1e-5)
+    for g in ("zero", "null"):
+        assert out[g]["z_comb"] is None and out[g]["p_comb"] is None, g
+
+    from transcriptomics_data_integration_spark.pipelines import meta_analysis
+
+    # gene "a0" has a zero reference mean on both platforms: null log2fc
+    rows = []
+    for plat in ("P1", "P2"):
+        for j in range(6):
+            grp = "T" if j < 3 else "N"
+            rows.append(("a0", f"{plat}s{j}", plat, float(j + 1) if grp == "T" else 0.0))
+            rows.append(("b1", f"{plat}s{j}", plat, 5.0 + j + (6.0 if grp == "T" else 0.0)))
+    expr = spark.createDataFrame(rows, ["gene_id", "sample_id", "platform", "value"])
+    targets = spark.createDataFrame(
+        [(f"{plat}s{j}", "T" if j < 3 else "N") for plat in ("P1", "P2") for j in range(6)],
+        ["sample_id", "target"],
+    )
+    meta = meta_analysis(expr, targets, "T", "N", with_icc=False).collect()
+    assert [r["gene_id"] for r in meta] == ["b1", "a0"]
+    assert meta[1]["p_comb"] is None and meta[0]["p_comb"] is not None

@@ -30,36 +30,71 @@ from pyspark.sql import functions as F
 _PREC = 18
 
 
-def dsum(col: str, scale: int = 2) -> Column:
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def dec(col: Column | str, scale: int = 2) -> Column:
+    """``col`` as ``decimal(18, scale)``."""
+    return _col(col).cast(f"decimal({_PREC},{scale})")
+
+
+def dec_sql(expr: str, scale: int = 2) -> str:
+    return f"CAST({expr} AS DECIMAL({_PREC},{scale}))"
+
+
+def dprod(
+    a: Column | str, b: Column | str, scale_a: int = 2, scale_b: int = 2
+) -> Column:
+    """Exact product of two ``decimal(18, s)`` values, typed
+    ``decimal(38, scale_a + scale_b)`` so no digit is dropped."""
+    return (dec(a, scale_a) * dec(b, scale_b)).cast(f"decimal(38,{scale_a + scale_b})")
+
+
+def dprod_sql(a: str, b: str, scale_a: int = 2, scale_b: int = 2) -> str:
+    prod = f"{dec_sql(a, scale_a)} * {dec_sql(b, scale_b)}"
+    return f"CAST({prod} AS DECIMAL(38,{scale_a + scale_b}))"
+
+
+def dsum(col: Column | str, scale: int = 2) -> Column:
     """Exact SUM via decimal, returned as double."""
-    return F.sum(F.col(col).cast(f"decimal({_PREC},{scale})")).cast("double")
+    return F.sum(dec(col, scale)).cast("double")
 
 
 def dsum_sql(col: str, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({col} AS DECIMAL({_PREC},{scale}))) AS DOUBLE)"
+    return f"CAST(SUM({dec_sql(col, scale)}) AS DOUBLE)"
 
 
-def dsum2(col: str, scale: int = 2) -> Column:
-    """Exact SUM of squares via decimal product, as double."""
-    c = F.col(col).cast(f"decimal({_PREC},{scale})")
-    return F.sum((c * c).cast(f"decimal(38,{2 * scale})")).cast("double")
-
-
-def dsum2_sql(col: str, scale: int = 2) -> str:
-    c = f"CAST({col} AS DECIMAL({_PREC},{scale}))"
-    return f"CAST(SUM(CAST({c} * {c} AS DECIMAL(38,{2 * scale}))) AS DOUBLE)"
-
-
-def dsumprod(a: str, b: str, scale_a: int = 2, scale_b: int = 2) -> Column:
-    ca = F.col(a).cast(f"decimal({_PREC},{scale_a})")
-    cb = F.col(b).cast(f"decimal({_PREC},{scale_b})")
-    return F.sum((ca * cb).cast(f"decimal(38,{scale_a + scale_b})")).cast("double")
+def dsumprod(
+    a: Column | str, b: Column | str, scale_a: int = 2, scale_b: int = 2
+) -> Column:
+    """Exact SUM of products via decimal, as double."""
+    return F.sum(dprod(a, b, scale_a, scale_b)).cast("double")
 
 
 def dsumprod_sql(a: str, b: str, scale_a: int = 2, scale_b: int = 2) -> str:
-    ca = f"CAST({a} AS DECIMAL({_PREC},{scale_a}))"
-    cb = f"CAST({b} AS DECIMAL({_PREC},{scale_b}))"
-    return f"CAST(SUM(CAST({ca} * {cb} AS DECIMAL(38,{scale_a + scale_b}))) AS DOUBLE)"
+    return f"CAST(SUM({dprod_sql(a, b, scale_a, scale_b)}) AS DOUBLE)"
+
+
+def dsum2(col: Column | str, scale: int = 2) -> Column:
+    """Exact SUM of squares via decimal product, as double."""
+    return dsumprod(col, col, scale, scale)
+
+
+def dsum2_sql(col: str, scale: int = 2) -> str:
+    return dsumprod_sql(col, col, scale, scale)
+
+
+def quantize(col: Column, scale: int) -> Column:
+    """Tie-free quantization to ``scale`` decimals: ``floor(x*q + 0.5)/q``.
+
+    A double -> DECIMAL cast of a computed value can hit a dyadic
+    rounding TIE (x.125 at scale 2) where Spark's HALF_UP and other
+    engines' tie rules diverge.  The floor form has no tie rule, so the
+    quantized value, and every decimal moment taken of it, is the same
+    in every engine."""
+    q = float(10**scale)
+    return F.floor(col * q + F.lit(0.5)) / F.lit(q)
 
 
 def var_from_moments(sx: Column, sx2: Column, n: Column) -> Column:

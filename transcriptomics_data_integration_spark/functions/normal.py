@@ -131,7 +131,9 @@ def two_sided_p_sql(stat: str) -> str:
     ``1 - (1 - upper)`` cancellation snaps tiny p to exactly 0 and then
     poisons downstream ``ln``/``log2`` (qnorm of p/2, improvement
     ratios).  Floored at 1e-300 so the value stays strictly positive
-    even when the Gaussian pdf underflows (|stat| > ~38).
+    even when the Gaussian pdf underflows (|stat| > ~38).  A null
+    ``stat`` gives a null p: ``greatest`` skips nulls, so the floor
+    alone would turn a missing statistic into the strongest evidence.
     """
     ax = f"abs({stat})"
     t = f"(1.0 / (1.0 + {_lit(_CDF_P)} * {ax}))"
@@ -140,4 +142,7 @@ def two_sided_p_sql(stat: str) -> str:
         f"+ {_lit(_CDF_B[1])}) * {t} + {_lit(_CDF_B[0])}) * {t})"
     )
     pdf = f"({_lit(_INV_SQRT_2PI)} * exp(-0.5 * {ax} * {ax}))"
-    return f"greatest(2.0 * {pdf} * {poly}, {_lit(1e-300)})"
+    return (
+        f"(CASE WHEN ({stat}) IS NOT NULL"
+        f" THEN greatest(2.0 * {pdf} * {poly}, {_lit(1e-300)}) END)"
+    )

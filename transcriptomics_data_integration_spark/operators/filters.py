@@ -13,6 +13,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import (
+    dsum,
+    dsum2,
+    var_from_moments,
+)
+
 
 def exclude_ids(df: DataFrame, exclusion: DataFrame, key: str) -> DataFrame:
     """F2 — drop rows whose ``key`` appears in ``exclusion``.
@@ -99,26 +105,41 @@ def nonspecific_filter_topk(
     not flip membership on a last-ulp stddev difference when the
     filter gates a hash-checked composition.
     """
-    if exact_scale is not None:
-        s, s2 = exact_scale, 2 * exact_scale
-        dv = F.col(value_col).cast(f"decimal(18,{s})")
-        mom = df.groupBy(gene_col).agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(dv).cast("double").alias("_s"),
-            F.sum((dv * dv).cast(f"decimal(38,{s2})")).cast("double").alias("_s2"),
-        ).where(F.col("_n") >= 2)
-        sd = mom.withColumn(
-            "_sd",
-            F.sqrt(
-                (F.col("_s2") - F.col("_s") * F.col("_s") / F.col("_n"))
-                / (F.col("_n") - 1)
-            ),
-        )
-    else:
-        sd = df.groupBy(gene_col).agg(F.stddev(value_col).alias("_sd"))
-    w = Window.orderBy(F.col("_sd").desc(), F.col(gene_col))
-    keep = sd.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k).select(gene_col)
+    per_gene = df.groupBy(gene_col).agg(*top_variance_aggregates(value_col, exact_scale))
+    keep = top_variance_genes(per_gene, gene_col, k, exact_scale)
     return df.join(F.broadcast(keep), gene_col, "left_semi")
+
+
+def top_variance_aggregates(value_col: str, exact_scale: int | None) -> list[Column]:
+    """The per-gene aggregate columns F5 ranks on, finished by
+    :func:`top_variance_genes`: ``_sd`` itself in float mode, the
+    decimal moments ``_n``, ``_s``, ``_s2`` with ``exact_scale``."""
+    if exact_scale is None:
+        return [F.stddev(value_col).alias("_sd")]
+    return [
+        F.count(F.lit(1)).alias("_n"),
+        dsum(value_col, exact_scale).alias("_s"),
+        dsum2(value_col, exact_scale).alias("_s2"),
+    ]
+
+
+def top_variance_genes(
+    per_gene: DataFrame, gene_col: str, k: int, exact_scale: int | None
+) -> DataFrame:
+    """The ``gene_col`` ids of the k genes with the largest sd in a
+    relation grouped with :func:`top_variance_aggregates`, ties broken
+    on gene id."""
+    if exact_scale is not None:
+        n, sx, sx2 = F.col("_n"), F.col("_s"), F.col("_s2")
+        per_gene = per_gene.where(n >= 2).withColumn(
+            "_sd", F.sqrt(var_from_moments(sx, sx2, n))
+        )
+    w = Window.orderBy(F.col("_sd").desc(), F.col(gene_col))
+    return (
+        per_gene.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= k)
+        .select(gene_col)
+    )
 
 
 def reliability_filter(

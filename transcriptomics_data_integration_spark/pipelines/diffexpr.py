@@ -13,11 +13,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import dec, quantize
+from transcriptomics_data_integration_spark.operators.filters import (
+    top_variance_aggregates,
+    top_variance_genes,
+)
 from transcriptomics_data_integration_spark.runtime import register_persisted
-
 from transcriptomics_data_integration_spark.stats.bh import p_adjust
 from transcriptomics_data_integration_spark.stats.combat import check_confounding, combat
-from transcriptomics_data_integration_spark.stats.ttest import moderated_t, two_group_ttest
+from transcriptomics_data_integration_spark.stats.ttest import (
+    group_moment_aggregates,
+    group_moments_finish,
+    moderated_t,
+    ttest_from_group_moments,
+    two_group_ttest,
+)
 
 
 def _f5_ttest_single_pass(
@@ -32,91 +42,49 @@ def _f5_ttest_single_pass(
 ) -> DataFrame:
     """F5 top-variance filter + pooled t from ONE fact aggregation.
 
-    The per-gene relation below carries both the all-sample moments
-    (the F5 sd — identical decimal expressions and tie-break to
-    ``nonspecific_filter_topk``) and the per-group moments the pooled
-    t consumes, so the fact relation is aggregated exactly once; the
-    top-k semi-join then restricts the BOUNDED per-gene relation,
-    which is row-for-row what filtering facts first would produce
-    (gene-level filter feeding a gene-level aggregation).  Without
-    ``top_k_genes`` this is plain :func:`two_group_ttest`.
+    The per-gene relation below carries both F5's sd aggregates (the
+    ones ``nonspecific_filter_topk`` ranks on, with its tie-break) and
+    the per-group moments the pooled t consumes, so the fact relation
+    is aggregated exactly once; the top-k semi-join then restricts the
+    BOUNDED per-gene relation, which is row-for-row what filtering
+    facts first would produce (gene-level filter feeding a gene-level
+    aggregation).  Without ``top_k_genes`` this is plain
+    :func:`two_group_ttest`.
     """
-    from pyspark.sql import Window
-
-    from transcriptomics_data_integration_spark.stats.ttest import (
-        ttest_from_group_moments,
-    )
-
     if not top_k_genes:
         return two_group_ttest(
             labeled, gene_col, group_col, value_col, group_a, group_b,
             exact_scale=exact_scale, log_scale_values=True,
         )
-    g, v = F.col(group_col), F.col(value_col)
-    va = F.when(g == F.lit(group_a), v)
-    vb = F.when(g == F.lit(group_b), v)
-    if exact_scale is not None:
-        s, s2 = exact_scale, 2 * exact_scale
-        dall = v.cast(f"decimal(18,{s})")
-        ca, cb = va.cast(f"decimal(18,{s})"), vb.cast(f"decimal(18,{s})")
-        sum_all = F.sum(dall).cast("double")
-        sum2_all = F.sum((dall * dall).cast(f"decimal(38,{s2})")).cast("double")
-        sum_a = F.sum(ca).cast("double")
-        sum_b = F.sum(cb).cast("double")
-        sum2_a = F.sum((ca * ca).cast(f"decimal(38,{s2})")).cast("double")
-        sum2_b = F.sum((cb * cb).cast(f"decimal(38,{s2})")).cast("double")
-    else:
-        sum_all, sum2_all = F.sum(v), F.sum(v * v)
-        sum_a, sum_b = F.sum(va), F.sum(vb)
-        sum2_a, sum2_b = F.sum(va * va), F.sum(vb * vb)
     # persist the BOUNDED per-gene moment relation: it has two
     # consumers (the F5 ranking and the semi-joined t input), and an
     # unpersisted DAG fork re-executes the whole fact aggregation
     # subtree per consumer — one row per gene is always cacheable,
     # the fact relation never is
     mom = labeled.groupBy(gene_col).agg(
-        F.count(F.lit(1)).alias("_n_all"),
-        sum_all.alias("_s_all"),
-        sum2_all.alias("_s2_all"),
-        F.count(va).alias("n_a"),
-        F.count(vb).alias("n_b"),
-        sum_a.alias("_sa"),
-        sum_b.alias("_sb"),
-        sum2_a.alias("_sa2"),
-        sum2_b.alias("_sb2"),
+        *top_variance_aggregates(value_col, exact_scale),
+        *group_moment_aggregates(group_col, value_col, group_a, group_b, exact_scale),
     ).persist()
     register_persisted(mom)
-    ranked = mom.where(F.col("_n_all") >= 2).withColumn(
-        "_sd",
-        F.sqrt(
-            (F.col("_s2_all") - F.col("_s_all") * F.col("_s_all") / F.col("_n_all"))
-            / (F.col("_n_all") - 1)
+    keep = top_variance_genes(mom, gene_col, top_k_genes, exact_scale)
+    agg = group_moments_finish(mom.join(F.broadcast(keep), gene_col, "left_semi"))
+    # drop F5's columns (float mode has ``_sd`` alone)
+    return ttest_from_group_moments(
+        agg.drop("_n", "_s", "_s2", "_sd"), log_scale_values=True
+    )
+
+
+def _toptable(tt: DataFrame, gene_col: str, adjust: str, alpha: float) -> DataFrame:
+    """limma's tail over a pooled-t table: eBayes moderation, p-value
+    adjustment, the decideTests sign and the topTable order."""
+    mod = moderated_t(tt)
+    adj = p_adjust(mod, "p_value", "adj_p_value", method=adjust, tiebreak_col=gene_col)
+    return adj.withColumn(
+        "decide",
+        F.when(F.col("adj_p_value") > alpha, 0).otherwise(
+            F.signum(F.col("log2fc")).cast("int")
         ),
-    )
-    w = Window.orderBy(F.col("_sd").desc(), F.col(gene_col))
-    keep = (
-        ranked.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= top_k_genes)
-        .select(gene_col)
-    )
-    agg = (
-        mom.join(F.broadcast(keep), gene_col, "left_semi")
-        .where((F.col("n_a") >= 2) & (F.col("n_b") >= 2))
-        .withColumn("mean_a", F.col("_sa") / F.col("n_a"))
-        .withColumn("mean_b", F.col("_sb") / F.col("n_b"))
-        .withColumn(
-            "var_a",
-            (F.col("_sa2") - F.col("_sa") * F.col("_sa") / F.col("n_a"))
-            / (F.col("n_a") - 1),
-        )
-        .withColumn(
-            "var_b",
-            (F.col("_sb2") - F.col("_sb") * F.col("_sb") / F.col("n_b"))
-            / (F.col("n_b") - 1),
-        )
-        .drop("_n_all", "_s_all", "_s2_all", "_sa", "_sb", "_sa2", "_sb2")
-    )
-    return ttest_from_group_moments(agg, log_scale_values=True)
+    ).orderBy("p_value", gene_col)
 
 
 def differential_expression(
@@ -169,10 +137,9 @@ def differential_expression(
                 "(reference guard, DiffExpression_closedPlatform.R:390-418)"
             )
         if batch_adjust == "center":
+            dv = F.col(value_col)
             if exact_scale is not None:
-                dv = F.col(value_col).cast(f"decimal(18,{exact_scale})")
-            else:
-                dv = F.col(value_col)
+                dv = dec(dv, exact_scale)
             # ONE fact aggregation: per-(gene, batch) decimal sums;
             # per-gene totals roll up from the tiny per_gb relation
             # (decimal addition is associative, so the rolled-up sums
@@ -201,16 +168,10 @@ def differential_expression(
                 + F.col("_s_g") / F.col("_n_g")
             )
             if exact_scale is not None:
-                # tie-free quantization: the adjusted doubles are
-                # bitwise identical across engines, but a later
-                # double->DECIMAL cast hits dyadic rounding TIES
-                # (x.125 at scale 2) where Spark HALF_UP and other
-                # engines' tie rules diverge; floor(x*q + 0.5)/q has
-                # no tie rule at all, so the quantized value — and
-                # every downstream decimal moment — stays bitwise
-                # cross-engine
-                q = float(10 ** exact_scale)
-                adj = F.floor(adj * q + F.lit(0.5)) / F.lit(q)
+                # the adjusted doubles are bitwise identical across
+                # engines; quantize them tie-free before the decimal
+                # moments downstream
+                adj = quantize(adj, exact_scale)
             labeled = (
                 labeled.join(per_gb, [gene_col, batch_col])
                 .join(per_g, gene_col)
@@ -226,14 +187,7 @@ def differential_expression(
         labeled, gene_col, group_col, value_col, group_a, group_b,
         top_k_genes, exact_scale,
     )
-    mod = moderated_t(tt)
-    adj = p_adjust(mod, "p_value", "adj_p_value", method=adjust, tiebreak_col=gene_col)
-    return adj.withColumn(
-        "decide",
-        F.when(F.col("adj_p_value") > alpha, 0).otherwise(
-            F.signum(F.col("log2fc")).cast("int")
-        ),
-    ).orderBy("p_value", gene_col)
+    return _toptable(tt, gene_col, adjust, alpha)
 
 
 def normalized_matrix_de(
@@ -286,10 +240,7 @@ def normalized_matrix_de(
         # before the downstream decimal moments (observed cells are
         # already exact at this scale; the floor form is a no-op on
         # them)
-        q = float(10 ** exact_scale)
-        df = df.withColumn(
-            value_col, F.floor(F.col(value_col) * q + F.lit(0.5)) / F.lit(q)
-        )
+        df = df.withColumn(value_col, quantize(F.col(value_col), exact_scale))
     labeled = df.join(
         F.broadcast(targets.select(sample_col, group_col)), sample_col
     )
@@ -297,11 +248,4 @@ def normalized_matrix_de(
         labeled, gene_col, group_col, value_col, group_a, group_b,
         top_k_genes, exact_scale,
     )
-    mod = moderated_t(tt)
-    adj = p_adjust(mod, "p_value", "adj_p_value", method=adjust, tiebreak_col=gene_col)
-    return adj.withColumn(
-        "decide",
-        F.when(F.col("adj_p_value") > alpha, 0).otherwise(
-            F.signum(F.col("log2fc")).cast("int")
-        ),
-    ).orderBy("p_value", gene_col)
+    return _toptable(tt, gene_col, adjust, alpha)

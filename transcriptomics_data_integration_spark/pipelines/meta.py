@@ -34,7 +34,8 @@ def meta_analysis(
     exact_scale: int | None = None,
 ) -> DataFrame:
     """Long multi-platform expression + sample sheet -> per-gene meta
-    results (avg log2fc, combined z, combined p, icc, n_platforms).
+    results (avg log2fc, combined z, combined p, icc, n_platforms),
+    ordered by combined p with nulls last, as R's ``order()`` does.
 
     ``exact_scale`` flows to the per-platform DE moments and the ICC
     pair moments (functions/exact.py scheme) so the composition is
@@ -86,4 +87,4 @@ def meta_analysis(
         "p_comb",
         "icc",
         (log2_ratio_sum / F.size("_ps")).alias("avg_p_improvement"),
-    ).orderBy("p_comb", gene_col)
+    ).orderBy(F.col("p_comb").asc_nulls_last(), gene_col)

@@ -16,7 +16,9 @@ to R ``p.adjust``:
     none : identity
 
 i.e. rank ascending by p, scale, then a cumulative extreme — reverse
-cummin for the step-up methods, forward cummax for holm.  Ties receive
+cummin for the step-up methods, forward cummax for holm.  R's NA rule
+holds on both arms: a null p stays null and counts neither in n nor
+in any rank (nulls sort after every p).  Ties receive
 identical adjusted values automatically (equal p with different ranks
 collapse under the cumulative extreme).  ``min(1, .)`` commutes with
 both cummin and cummax, so clamping per-row before the window is
@@ -82,9 +84,14 @@ def _harmonic(n_col: str, chunk: int = 1_000_000):
 
 
 def _orders(p_col: str, tiebreak_col: str | None) -> tuple[list[Column], list[Column]]:
-    """(ascending, descending) sort keys: p, then the tie-break column."""
-    keys = [F.col(p_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
-    return [k.asc() for k in keys], [k.desc() for k in keys]
+    """(ascending, descending) sort keys: p with nulls last, then the
+    tie-break column."""
+    p = F.col(p_col)
+    tie = [F.col(tiebreak_col)] if tiebreak_col else []
+    return (
+        [p.asc_nulls_last()] + [k.asc() for k in tie],
+        [p.desc_nulls_last()] + [k.desc() for k in tie],
+    )
 
 
 def _scaled(method: str, p_col: str) -> Column:
@@ -92,6 +99,11 @@ def _scaled(method: str, p_col: str) -> Column:
     return F.least(
         term(F.col(p_col), F.col("_n"), F.col("_rank"), F.col("_cn")), F.lit(1.0)
     )
+
+
+def _null_p_stays_null(p_col: str, adjusted: Column) -> Column:
+    """A null p's cumulative extreme would see its neighbours' values."""
+    return F.when(F.col(p_col).isNotNull(), adjusted)
 
 
 def _adjust_window(
@@ -112,7 +124,7 @@ def _adjust_window(
     if method == "BY":
         counts = (
             df.groupBy(*parts)
-            .agg(F.count(F.lit(1)).alias("_n"))
+            .agg(F.count(p_col).alias("_n"))
             .withColumn("_cn", _harmonic("_n"))
         )
         df = (
@@ -124,7 +136,7 @@ def _adjust_window(
         "_rank", F.row_number().over(Window.partitionBy(*parts).orderBy(*asc))
     )
     if method != "BY":
-        df = df.withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*parts)))
+        df = df.withColumn("_n", F.count(p_col).over(Window.partitionBy(*parts)))
     w_cum = (
         Window.partitionBy(*parts)
         .orderBy(*(desc if step_up else asc))
@@ -133,7 +145,7 @@ def _adjust_window(
     extreme = F.min if step_up else F.max
     return (
         df.withColumn("_scaled", _scaled(method, p_col))
-        .withColumn(out_col, extreme("_scaled").over(w_cum))
+        .withColumn(out_col, _null_p_stays_null(p_col, extreme("_scaled").over(w_cum)))
         .drop("_rank", "_n", "_cn", "_scaled")
     )
 
@@ -180,7 +192,9 @@ def _adjust_histogram(
             F.floor(F.col(p_col) * n_buckets).cast("int"), F.lit(n_buckets - 1)
         ),
     )
-    hist = with_b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
+    # null p lands in the last bucket (``least`` skips nulls) and
+    # counts nowhere; it sorts after that bucket's p-values
+    hist = with_b.groupBy("_bkt").agg(F.count(p_col).alias("_cnt"))
     w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
     cum = hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
     if method == "BY":
@@ -218,7 +232,9 @@ def _adjust_histogram(
     return (
         ranked.join(F.broadcast(edge), "_bkt")
         .withColumn("_within", extreme("_scaled").over(w_in))
-        .withColumn(out_col, combine(F.col("_within"), F.col("_edge")))
+        .withColumn(
+            out_col, _null_p_stays_null(p_col, combine(F.col("_within"), F.col("_edge")))
+        )
         .drop("_bkt", "_base", "_n", "_cn", "_rank", "_scaled", "_within", "_edge")
     )
 

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import dec, dprod
 from transcriptomics_data_integration_spark.runtime import register_persisted
 
 EB_SCHEMA = (
@@ -271,11 +272,10 @@ def combat_eb_fixed(
     relation (gene, sample, batch, value).
     """
     s = exact_scale
-    dv = F.col(value_col).cast(f"decimal(18,{s})")
     per_gb = df.groupBy(gene_col, batch_col).agg(
         F.count(F.lit(1)).alias("n_gb"),
-        F.sum(dv).alias("_sx_d"),
-        F.sum((dv * dv).cast(f"decimal(38,{2 * s})")).alias("_sx2_d"),
+        F.sum(dec(value_col, s)).alias("_sx_d"),
+        F.sum(dprod(value_col, value_col, s, s)).alias("_sx2_d"),
     ).persist()  # 3 consumers: per-gene rollup, vp terms, EB stats
     register_persisted(per_gb)
     per_g = (

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import dec, dsum, dsum2
+
 _CLAMP = 0.999999
 
 
@@ -51,11 +53,10 @@ def per_gene_block_icc(
     v = F.col(value_col)
     if exact_scale is not None:
         s = exact_scale
-        dv = v.cast(f"decimal(18,{s})")
         per_block = df.groupBy(gene_col, block_col).agg(
             F.count(v).alias("n_i"),
-            F.sum(dv).alias("s_dec"),
-            F.sum((dv * dv).cast(f"decimal(38,{2 * s})")).cast("double").alias("s2_i"),
+            F.sum(dec(v, s)).alias("s_dec"),
+            dsum2(v, s).alias("s2_i"),
         )
         s_i = F.col("s_dec").cast("double")
         # per-block scalar terms: deterministic functions of exact inputs,
@@ -228,13 +229,12 @@ def blocked_gls_ttest(
     v = F.col(value_col)
     if exact_scale is not None:
         s = exact_scale
-        dv = v.cast(f"decimal(18,{s})")
         per_block = df.where(F.col(group_col).isin([group_a, group_b])).groupBy(
             gene_col, group_col, block_col
         ).agg(
             F.count(v).alias("n_i"),
-            F.sum(dv).cast("double").alias("s_i"),
-            F.sum((dv * dv).cast(f"decimal(38,{2 * s})")).cast("double").alias("q_i"),
+            dsum(v, s).alias("s_i"),
+            dsum2(v, s).alias("q_i"),
         )
     else:
         per_block = df.where(F.col(group_col).isin([group_a, group_b])).groupBy(

@@ -26,6 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.stats.ttest import (
+    group_moment_aggregates,
+    group_moments_finish,
+    pooled_variance,
+)
+
 
 def effect_sizes(
     df: DataFrame,
@@ -42,55 +48,31 @@ def effect_sizes(
     With ``exact_scale`` set, group moments accumulate in DECIMAL so the
     result is bitwise-reproducible (see functions/exact.py).
     """
-    g, v = F.col(group_col), F.col(value_col)
-    v0c, v1c = F.when(g == group0, v), F.when(g == group1, v)
-    if exact_scale is not None:
-        s, s2 = exact_scale, 2 * exact_scale
-        d0c, d1c = v0c.cast(f"decimal(18,{s})"), v1c.cast(f"decimal(18,{s})")
-        s0 = F.sum(d0c).cast("double")
-        s1 = F.sum(d1c).cast("double")
-        s02 = F.sum((d0c * d0c).cast(f"decimal(38,{s2})")).cast("double")
-        s12 = F.sum((d1c * d1c).cast(f"decimal(38,{s2})")).cast("double")
-    else:
-        s0, s1 = F.sum(v0c), F.sum(v1c)
-        s02, s12 = F.sum(v0c * v0c), F.sum(v1c * v1c)
-    agg = (
-        df.where(g.isin([group0, group1]))
+    # the shared two-group kernel with group 1 as "a": n_a = n1 and
+    # mean_a = m1; the pooled variance is symmetric in the two groups
+    agg = group_moments_finish(
+        df.where(F.col(group_col).isin([group0, group1]))
         .groupBy(gene_col, platform_col)
-        .agg(
-            F.count(v0c).alias("n0"),
-            F.count(v1c).alias("n1"),
-            s0.alias("_s0"),
-            s1.alias("_s1"),
-            s02.alias("_s02"),
-            s12.alias("_s12"),
-        )
-        .where((F.col("n0") >= 2) & (F.col("n1") >= 2))
-        .withColumn("m0", F.col("_s0") / F.col("n0"))
-        .withColumn("m1", F.col("_s1") / F.col("n1"))
-        .withColumn(
-            "v0",
-            (F.col("_s02") - F.col("_s0") * F.col("_s0") / F.col("n0")) / (F.col("n0") - 1),
-        )
-        .withColumn(
-            "v1",
-            (F.col("_s12") - F.col("_s1") * F.col("_s1") / F.col("n1")) / (F.col("n1") - 1),
-        )
-        .drop("_s0", "_s1", "_s02", "_s12")
+        .agg(*group_moment_aggregates(group_col, value_col, group1, group0, exact_scale))
     )
-    sp = F.sqrt(
-        ((F.col("n0") - 1) * F.col("v0") + (F.col("n1") - 1) * F.col("v1"))
-        / (F.col("n0") + F.col("n1") - 2)
-    )
-    ntot = F.col("n0") + F.col("n1")
-    with_sp = agg.withColumn("_sp", sp).where(F.col("_sp") > 0)
-    with_d = with_sp.withColumn("_d", (F.col("m1") - F.col("m0")) / F.col("_sp")).drop("_sp")
+    ntot = F.col("n_a") + F.col("n_b")
+    with_sp = agg.withColumn("_sp", F.sqrt(pooled_variance())).where(F.col("_sp") > 0)
+    with_d = with_sp.withColumn(
+        "_d", (F.col("mean_a") - F.col("mean_b")) / F.col("_sp")
+    ).drop("_sp")
     d_adj = F.col("_d") - 3.0 * F.col("_d") / (4.0 * ntot - 9.0)
     out = with_d.withColumn("d_adj", d_adj).withColumn(
         "var_d",
-        1.0 / F.col("n0") + 1.0 / F.col("n1") + F.col("d_adj") ** 2 / (2.0 * ntot),
+        1.0 / F.col("n_b") + 1.0 / F.col("n_a") + F.col("d_adj") ** 2 / (2.0 * ntot),
     )
-    return out.select(gene_col, platform_col, "n0", "n1", "d_adj", "var_d")
+    return out.select(
+        gene_col,
+        platform_col,
+        F.col("n_b").alias("n0"),
+        F.col("n_a").alias("n1"),
+        "d_adj",
+        "var_d",
+    )
 
 
 def fem_rem_effects(effects: DataFrame, gene_col: str) -> DataFrame:

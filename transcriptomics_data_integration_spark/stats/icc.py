@@ -29,6 +29,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import dsum, dsum2, dsumprod
+
 
 def _pair_corr_moments(
     cells: DataFrame,
@@ -46,9 +48,8 @@ def _pair_corr_moments(
     profile is correlated over the same hashed partner subset on both
     platforms).  The subset is deterministic and SQL-replayable
     (DuckDB: ('0x' || substring(md5(salt || '#' || h), 1, 15))::BIGINT
-    < frac * 2^60), unlike DIMSUM's sampler — and unlike DIMSUM it
-    actually cuts work for unit-norm correlation columns (see
-    `platform_gene_correlations_dimsum`'s measured loss, PLANS.md r7).
+    < frac * 2^60), and it cuts the pair work in proportion to the
+    fraction.
     """
     left = cells.select(
         F.col("platform"), F.col("sample_id"), F.col("gene_id").alias("g"), F.col("value").alias("x")
@@ -74,15 +75,13 @@ def _pair_corr_moments(
     joined = left.join(right, ["platform", "sample_id"]).where(F.col("g") != F.col("h"))
     if exact_scale is not None:
         s = exact_scale
-        dx = F.col("x").cast(f"decimal(18,{s})")
-        dy = F.col("y").cast(f"decimal(18,{s})")
         agg = joined.groupBy("platform", "g", "h").agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(dx).cast("double").alias("sx"),
-            F.sum(dy).cast("double").alias("sy"),
-            F.sum((dx * dy).cast(f"decimal(38,{2 * s})")).cast("double").alias("sxy"),
-            F.sum((dx * dx).cast(f"decimal(38,{2 * s})")).cast("double").alias("sx2"),
-            F.sum((dy * dy).cast(f"decimal(38,{2 * s})")).cast("double").alias("sy2"),
+            dsum("x", s).alias("sx"),
+            dsum("y", s).alias("sy"),
+            dsumprod("x", "y", s, s).alias("sxy"),
+            dsum2("x", s).alias("sx2"),
+            dsum2("y", s).alias("sy2"),
         )
     else:
         agg = joined.groupBy("platform", "g", "h").agg(
@@ -133,7 +132,7 @@ def icc(
 def _profile_stage(
     rr: DataFrame, platforms: list[str], tick_scale: int | None = None
 ) -> DataFrame:
-    """Second ICC stage, shared by the exact / DIMSUM / partner-sampled
+    """Second ICC stage, shared by the exact and partner-sampled
     gene-correlation tiers: correlate each gene's two correlation
     profiles across partner genes per platform pair, then
     average over pairs.  ``rr``: (platform, g, h, r).
@@ -201,128 +200,3 @@ def _profile_stage(
     return unioned.groupBy("gene_id").agg(
         F.avg("pair_icc").alias("icc"), F.count(F.lit(1)).alias("n_pairs")
     )
-
-
-def platform_gene_correlations_dimsum(
-    cells: DataFrame, platforms: list[str], threshold: float
-) -> DataFrame:
-    """Approximation tier for the gene-gene correlation stage (SURVEY
-    §4.2 allows `RowMatrix.columnSimilarities(threshold)`): per
-    platform, standardized gene columns over sample rows make the
-    column-cosine EQUAL to Pearson r, and DIMSUM ("Dimension
-    Independent Matrix Square using MapReduce", Zadeh & Carlsson 2013
-    — the algorithm behind columnSimilarities) samples the row
-    outer-products so that pairs with |r| >= threshold are estimated
-    with high relative accuracy WITHOUT materializing the full G^2
-    gram product; sub-threshold pairs may be dropped or noisy.  With
-    ``threshold=0`` Spark computes the exact brute-force cosine.
-
-    Output: (platform, g, h, r) — both directions per surviving pair,
-    matching `_pair_corr_moments`' shape, restricted to pairs DIMSUM
-    kept.  Assumes a DENSE cell matrix (every retained gene observed
-    on every sample): absent cells enter the column vectors as 0,
-    whereas the exact tier correlates over pairwise-shared samples —
-    restrict to the post-F5 dense gene set first (the reference runs
-    ICC there too, `Meta_analysis.R:312-341`).
-    """
-    from pyspark.mllib.linalg import Vectors
-    from pyspark.mllib.linalg.distributed import RowMatrix
-
-    spark = cells.sparkSession
-    out = None
-    for plat in platforms:
-        sub = cells.where(F.col("platform") == plat)
-        stats = (
-            sub.groupBy("gene_id")
-            .agg(
-                F.avg("value").alias("m"),
-                F.stddev("value").alias("sd"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .where(F.col("sd") > 0)
-        )
-        std = sub.join(stats, "gene_id").withColumn(
-            "z",
-            (F.col("value") - F.col("m")) / (F.col("sd") * F.sqrt(F.col("n") - 1)),
-        )
-        genes = [
-            r["gene_id"]
-            for r in stats.select("gene_id").orderBy("gene_id").collect()
-        ]
-        g_idx = {g: i for i, g in enumerate(genes)}
-        bc_g = spark.sparkContext.broadcast(g_idx)
-        dim = len(genes)
-
-        # one row per SAMPLE (genes are the columns DIMSUM correlates);
-        # Arrow-batched assembly keeps the G x S cells out of
-        # row-at-a-time Python
-        def to_row(pdf):
-            import numpy as np
-            import pandas as pd
-
-            vec = np.zeros(dim)
-            vec[pdf["gene_id"].map(bc_g.value).to_numpy()] = pdf["z"].to_numpy()
-            return pd.DataFrame({"vec": [vec.tolist()]})
-
-        rows_df = (
-            std.select("sample_id", "gene_id", "z")
-            .groupBy("sample_id")
-            .applyInPandas(to_row, schema="vec array<double>")
-        )
-        # DIMSUM's per-row work is O(nnz_row^2) — with S small and AQE
-        # coalescing the tiny post-shuffle rows to ONE partition, the
-        # whole quadratic lands on a single task.  Spread the rows so
-        # every core carries ~1 row's outer products.
-        n_part = max(2, spark.sparkContext.defaultParallelism)
-        mat = RowMatrix(
-            rows_df.rdd.map(lambda r: Vectors.dense(r["vec"])).repartition(n_part)
-        )
-        sims = mat.columnSimilarities(threshold)  # upper-triangular i < j
-        ent = sims.entries.toDF()  # i, j, value
-        inv_g = spark.createDataFrame(
-            [(i, g) for g, i in g_idx.items()], ["idx", "gene_id"]
-        )
-        both = ent.select(
-            F.col("i").alias("gi"), F.col("j").alias("hj"), F.col("value").alias("r")
-        ).unionByName(
-            ent.select(
-                F.col("j").alias("gi"), F.col("i").alias("hj"), F.col("value").alias("r")
-            )
-        )
-        rdf = (
-            both.join(
-                F.broadcast(
-                    inv_g.withColumnRenamed("idx", "gi").withColumnRenamed(
-                        "gene_id", "g"
-                    )
-                ),
-                "gi",
-            )
-            .join(
-                F.broadcast(
-                    inv_g.withColumnRenamed("idx", "hj").withColumnRenamed(
-                        "gene_id", "h"
-                    )
-                ),
-                "hj",
-            )
-            .select(F.lit(plat).alias("platform"), "g", "h", "r")
-        )
-        out = rdf if out is None else out.unionByName(rdf)
-    return out
-
-
-def icc_dimsum(
-    cells: DataFrame, platforms: list[str], threshold: float = 0.3
-) -> DataFrame:
-    """ICC with the DIMSUM-thresholded gene-correlation tier feeding
-    the shared profile stage — the 100 TB approximation path next to
-    the exact relational tier (exact stays the oracle;
-    this tier is bounded against it by
-    `tests/test_stats_ml.py::test_icc_dimsum_tiers`).  The profile
-    correlations run over the partner genes DIMSUM kept (|r| above
-    threshold dominate both profile moments, which is what makes the
-    truncation tolerable), so cost scales with surviving pairs, not
-    G^2."""
-    rr = platform_gene_correlations_dimsum(cells, platforms, threshold)
-    return _profile_stage(rr, platforms)

@@ -31,6 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import (
+    dec_sql,
+    dsum_sql,
+    dsumprod_sql,
+)
+
 from transcriptomics_data_integration_spark.functions.normal import two_sided_p_sql
 
 
@@ -41,24 +47,16 @@ def lmfit_moment_sql(cond: str, x2: str, y: str, scale: int = 2) -> dict[str, st
     numeric covariate column, ``y`` the response column.  All sums ride
     decimals so they are exact and order-independent in both engines.
     """
-    s2 = 2 * scale
-
-    def dec(e: str) -> str:
-        return f"CAST({e} AS DECIMAL(18,{scale}))"
-
-    def dprod(a: str, b: str) -> str:
-        return f"CAST(SUM(CAST({dec(a)} * {dec(b)} AS DECIMAL(38,{s2}))) AS DOUBLE)"
-
     return {
         "n": "CAST(COUNT(*) AS DOUBLE)",
         "s1": f"CAST(SUM(CASE WHEN {cond} THEN 1 ELSE 0 END) AS DOUBLE)",
-        "s2": f"CAST(SUM({dec(x2)}) AS DOUBLE)",
-        "s12": f"CAST(SUM(CASE WHEN {cond} THEN {dec(x2)} END) AS DOUBLE)",
-        "s22": dprod(x2, x2),
-        "sy": f"CAST(SUM({dec(y)}) AS DOUBLE)",
-        "s1y": f"CAST(SUM(CASE WHEN {cond} THEN {dec(y)} END) AS DOUBLE)",
-        "s2y": dprod(x2, y),
-        "syy": dprod(y, y),
+        "s2": dsum_sql(x2, scale),
+        "s12": f"CAST(SUM(CASE WHEN {cond} THEN {dec_sql(x2, scale)} END) AS DOUBLE)",
+        "s22": dsumprod_sql(x2, x2, scale, scale),
+        "sy": dsum_sql(y, scale),
+        "s1y": f"CAST(SUM(CASE WHEN {cond} THEN {dec_sql(y, scale)} END) AS DOUBLE)",
+        "s2y": dsumprod_sql(x2, y, scale, scale),
+        "syy": dsumprod_sql(y, y, scale, scale),
     }
 
 

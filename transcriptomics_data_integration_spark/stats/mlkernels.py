@@ -16,6 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import (
+    corr_from_moments,
+    dec,
+    dprod,
+    dsum,
+    dsum2,
+    dsumprod,
+)
+
 
 def sample_vectors(
     df: DataFrame,
@@ -230,9 +239,7 @@ def impute_missing(
     the mean to the decimal-exact sum/count form (order-independent,
     oracle-reproducible — functions/exact.py)."""
     if strategy == "mean" and exact_scale is not None:
-        fill = F.sum(
-            F.col(value_col).cast(f"decimal(18,{exact_scale})")
-        ).cast("double") / F.count(value_col)
+        fill = dsum(value_col, exact_scale) / F.count(value_col)
     elif strategy == "mean":
         fill = F.avg(value_col)
     else:
@@ -370,8 +377,6 @@ def feature_covariance(
     Output: one row per unordered gene pair (ga <= gb) with n and the
     requested statistic.
     """
-    from transcriptomics_data_integration_spark.functions import exact
-
     a = long_df.select(
         F.col(gene_col).alias("ga"),
         F.col(sample_col).alias("s"),
@@ -384,9 +389,9 @@ def feature_covariance(
     )
     pairs = a.join(b, "s").where(F.col("ga") <= F.col("gb"))
     if exact_scale is not None:
-        sx, sy = exact.dsum("x", exact_scale), exact.dsum("y", exact_scale)
-        sxy = exact.dsumprod("x", "y", exact_scale, exact_scale)
-        sx2, sy2 = exact.dsum2("x", exact_scale), exact.dsum2("y", exact_scale)
+        sx, sy = dsum("x", exact_scale), dsum("y", exact_scale)
+        sxy = dsumprod("x", "y", exact_scale, exact_scale)
+        sx2, sy2 = dsum2("x", exact_scale), dsum2("y", exact_scale)
     else:
         sx, sy = F.sum("x"), F.sum("y")
         sxy = F.sum(F.col("x") * F.col("y"))
@@ -402,7 +407,7 @@ def feature_covariance(
     )
     n = F.col("n").cast("double")
     if standardize:
-        stat = exact.corr_from_moments(
+        stat = corr_from_moments(
             F.col("sx"), F.col("sy"), F.col("sxy"), F.col("sx2"), F.col("sy2"), n
         ).alias("stat")
     else:
@@ -544,11 +549,8 @@ def mds_bmatrix(
         # Spark's precision-loss rule (DuckDB keeps it -> ulp drift).
         # Narrow back to (18,s) first — exact, diffs are in range —
         # so the square is decimal(37,2s) on both engines.
-        d = (
-            F.col("x").cast(f"decimal(18,{exact_scale})")
-            - F.col("y").cast(f"decimal(18,{exact_scale})")
-        ).cast(f"decimal(18,{exact_scale})")
-        d2sum = F.sum((d * d).cast(f"decimal(38,{2 * exact_scale})"))
+        d = dec(dec("x", exact_scale) - dec("y", exact_scale), exact_scale)
+        d2sum = F.sum(dprod(d, d, exact_scale, exact_scale))
     else:
         d2sum = F.sum((F.col("x") - F.col("y")) ** 2)
     d2 = joined.groupBy("sa", "sb").agg(d2sum.alias("_d2"))

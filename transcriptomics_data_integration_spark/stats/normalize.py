@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import dsum
+
 
 def log2_cpm(
     df: DataFrame, sample_col: str, count_col: str, out_col: str = "lcpm"
@@ -484,7 +486,7 @@ def rna_degradation(
     def _mean(p: int):
         v = F.when(F.col(position_col) == p, F.col(value_col))
         if exact_scale is not None:
-            s = F.sum(v.cast(f"decimal(18,{exact_scale})")).cast("double")
+            s = dsum(v, exact_scale)
         else:
             s = F.sum(v)
         # ANSI mode: a sample missing this position must yield NULL,

@@ -61,8 +61,10 @@ def stouffer_aggregates(p_col: str, fc_col: str, icc_col: str | None = None) -> 
 def stouffer_finish(agg: DataFrame) -> DataFrame:
     """Keep genes on > 1 platform and append z_comb and p_comb to a
     relation grouped with :func:`stouffer_aggregates`; its other
-    columns pass through."""
-    z_comb = F.col("_wz") / F.sqrt(F.col("_w_sum"))
+    columns pass through.  A gene whose weights sum to 0 (every fold
+    change 0) or to null (every fold change null) gets a null z_comb
+    and p_comb, where R gives NaN."""
+    z_comb = F.try_divide(F.col("_wz"), F.sqrt(F.col("_w_sum")))
     out = (
         agg.where(F.col("n_platforms") > 1)
         .withColumn("z_comb", z_comb)

@@ -21,9 +21,14 @@ Set to None for plain float aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import (
+    dsum,
+    dsum2,
+    var_from_moments,
+)
 from transcriptomics_data_integration_spark.functions.normal import two_sided_p_sql
 
 import math
@@ -43,53 +48,56 @@ def _dlit(x: float) -> str:
     return f"{x!r}d"
 
 
-def _group_moments(
-    df: DataFrame,
-    gene_cols: list[str],
+_MOMENT_SUMS = ("_sa", "_sb", "_sa2", "_sb2")
+
+
+def group_moment_aggregates(
     group_col: str,
     value_col: str,
     group_a: str,
     group_b: str,
     exact_scale: int | None,
-):
+) -> list[Column]:
+    """The per-gene aggregate columns of the two-group moments: ``n_a``,
+    ``n_b`` and the private sums :func:`group_moments_finish` reads.
+    Add them to any ``groupBy`` keyed at gene level."""
     g = F.col(group_col)
     v = F.col(value_col)
     va = F.when(g == F.lit(group_a), v)
     vb = F.when(g == F.lit(group_b), v)
     if exact_scale is not None:
-        s, s2 = exact_scale, 2 * exact_scale
-        ca, cb = va.cast(f"decimal(18,{s})"), vb.cast(f"decimal(18,{s})")
-        sum_a = F.sum(ca).cast("double")
-        sum_b = F.sum(cb).cast("double")
-        sum2_a = F.sum((ca * ca).cast(f"decimal(38,{s2})")).cast("double")
-        sum2_b = F.sum((cb * cb).cast(f"decimal(38,{s2})")).cast("double")
+        s = exact_scale
+        sums = [dsum(va, s), dsum(vb, s), dsum2(va, s), dsum2(vb, s)]
     else:
-        sum_a, sum_b = F.sum(va), F.sum(vb)
-        sum2_a, sum2_b = F.sum(va * va), F.sum(vb * vb)
+        sums = [F.sum(va), F.sum(vb), F.sum(va * va), F.sum(vb * vb)]
+    return [
+        F.count(va).alias("n_a"),
+        F.count(vb).alias("n_b"),
+        *(c.alias(name) for c, name in zip(sums, _MOMENT_SUMS)),
+    ]
+
+
+def group_moments_finish(agg: DataFrame) -> DataFrame:
+    """Keep genes with >= 2 observations per group and turn the sums of
+    :func:`group_moment_aggregates` into ``mean_a/b`` and ``var_a/b``;
+    the relation's other columns pass through."""
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    sa, sb, sa2, sb2 = (F.col(c) for c in _MOMENT_SUMS)
     return (
-        df.where(g.isin([group_a, group_b]))
-        .groupBy(*gene_cols)
-        .agg(
-            F.count(va).alias("n_a"),
-            F.count(vb).alias("n_b"),
-            sum_a.alias("_sa"),
-            sum_b.alias("_sb"),
-            sum2_a.alias("_sa2"),
-            sum2_b.alias("_sb2"),
-        )
-        .where((F.col("n_a") >= 2) & (F.col("n_b") >= 2))
-        .withColumn("mean_a", F.col("_sa") / F.col("n_a"))
-        .withColumn("mean_b", F.col("_sb") / F.col("n_b"))
-        .withColumn(
-            "var_a",
-            (F.col("_sa2") - F.col("_sa") * F.col("_sa") / F.col("n_a")) / (F.col("n_a") - 1),
-        )
-        .withColumn(
-            "var_b",
-            (F.col("_sb2") - F.col("_sb") * F.col("_sb") / F.col("n_b")) / (F.col("n_b") - 1),
-        )
-        .drop("_sa", "_sb", "_sa2", "_sb2")
+        agg.where((n_a >= 2) & (n_b >= 2))
+        .withColumn("mean_a", sa / n_a)
+        .withColumn("mean_b", sb / n_b)
+        .withColumn("var_a", var_from_moments(sa, sa2, n_a))
+        .withColumn("var_b", var_from_moments(sb, sb2, n_b))
+        .drop(*_MOMENT_SUMS)
     )
+
+
+def pooled_variance() -> Column:
+    """Pooled two-group variance over ``n_a, n_b, var_a, var_b``."""
+    return (
+        (F.col("n_a") - 1) * F.col("var_a") + (F.col("n_b") - 1) * F.col("var_b")
+    ) / (F.col("n_a") + F.col("n_b") - 2)
 
 
 def two_group_ttest(
@@ -122,8 +130,12 @@ def two_group_ttest(
     combine its null fold change adds nothing to z or to the weight sum.
     """
     gene_cols = [gene_col] if isinstance(gene_col, str) else list(gene_col)
-    agg = _group_moments(df, gene_cols, group_col, value_col, group_a, group_b, exact_scale)
-    return ttest_from_group_moments(agg, log_scale_values)
+    agg = (
+        df.where(F.col(group_col).isin([group_a, group_b]))
+        .groupBy(*gene_cols)
+        .agg(*group_moment_aggregates(group_col, value_col, group_a, group_b, exact_scale))
+    )
+    return ttest_from_group_moments(group_moments_finish(agg), log_scale_values)
 
 
 def ttest_from_group_moments(
@@ -134,10 +146,7 @@ def ttest_from_group_moments(
     composition aggregate the fact relation ONCE and feed both the F5
     ranking and the DE fit from the same moments (single fact pass;
     values identical to :func:`two_group_ttest` by construction)."""
-    sp2 = (
-        (F.col("n_a") - 1) * F.col("var_a") + (F.col("n_b") - 1) * F.col("var_b")
-    ) / (F.col("n_a") + F.col("n_b") - 2)
-    se = F.sqrt(sp2 * (1.0 / F.col("n_a") + 1.0 / F.col("n_b")))
+    se = F.sqrt(pooled_variance() * (1.0 / F.col("n_a") + 1.0 / F.col("n_b")))
     lfc = (
         F.col("mean_a") - F.col("mean_b")
         if log_scale_values
@@ -293,9 +302,7 @@ def moderated_t(
         sp2 = F.col(s2_col)
         dfree = F.col(df_col or "df_pooled")
     else:
-        sp2 = (
-            (F.col("n_a") - 1) * F.col("var_a") + (F.col("n_b") - 1) * F.col("var_b")
-        ) / (F.col("n_a") + F.col("n_b") - 2)
+        sp2 = pooled_variance()
         dfree = F.col("n_a") + F.col("n_b") - 2
     with_s2 = ttest_df.withColumn("_s2", sp2).withColumn(
         "_df", dfree.cast("double")

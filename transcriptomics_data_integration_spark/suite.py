@@ -27,6 +27,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import (
+    dec,
+    dsum,
+    dsum2,
+    dsum2_sql,
+    dsum_sql,
+)
 from transcriptomics_data_integration_spark.functions.normal import norm_ppf_sql, two_sided_p_sql
 from transcriptomics_data_integration_spark.operators import (
     argmax_dedup,
@@ -58,29 +65,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _dec(col, scale: int = 2):
-    return col.cast(f"decimal(18,{scale})")
-
-
-def _dsum(col, scale: int = 2):
-    """Exact SUM via decimal accumulation, back to double."""
-    return F.sum(_dec(col, scale)).cast("double")
-
-
-def _dsum2(col, scale: int = 2):
-    c = _dec(col, scale)
-    return F.sum((c * c).cast(f"decimal(38,{2 * scale})")).cast("double")
-
-
-def _dsum_sql(expr: str, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-
-
-def _dsum2_sql(expr: str, scale: int = 2) -> str:
-    c = f"CAST({expr} AS DECIMAL(18,{scale}))"
-    return f"CAST(SUM(CAST({c} * {c} AS DECIMAL(38,{2 * scale}))) AS DOUBLE)"
-
-
 # ---------------------------------------------------------------------------
 # Core relational queries (SURVEY.md sections 2.1-2.4, 2.6)
 # ---------------------------------------------------------------------------
@@ -92,18 +76,18 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exercises S1-style scan -> filter -> partial+final hash aggregation.
     """
     li = _t(spark, sf_dir, "lineitem")
-    disc_price = _dec(F.col("l_extendedprice")) * (
-        F.lit(1).cast("decimal(18,2)") - _dec(F.col("l_discount"))
+    disc_price = dec(F.col("l_extendedprice")) * (
+        F.lit(1).cast("decimal(18,2)") - dec(F.col("l_discount"))
     )
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum("l_quantity").alias("sum_qty"),
-            _dsum(F.col("l_extendedprice")).alias("sum_base_price"),
+            dsum(F.col("l_extendedprice")).alias("sum_base_price"),
             F.sum(disc_price.cast("decimal(38,4)")).cast("double").alias("sum_disc_price"),
             (F.sum("l_quantity") / F.count(F.lit(1))).alias("avg_qty"),
-            (_dsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("avg_price"),
+            (dsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("avg_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -112,12 +96,12 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_PRICING = f"""
 SELECT l_returnflag, l_linestatus,
        SUM(l_quantity) AS sum_qty,
-       {_dsum_sql('l_extendedprice')} AS sum_base_price,
+       {dsum_sql('l_extendedprice')} AS sum_base_price,
        CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
                      * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
                 AS DECIMAL(38,4))) AS DOUBLE) AS sum_disc_price,
        SUM(l_quantity) / COUNT(*) AS avg_qty,
-       {_dsum_sql('l_extendedprice')} / COUNT(*) AS avg_price,
+       {dsum_sql('l_extendedprice')} / COUNT(*) AS avg_price,
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -130,8 +114,8 @@ def q_gene_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact moments (`MultiGene2ProbeFilter.R:31`)."""
     li = _t(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_partkey").agg(
-        _dsum(F.col("l_extendedprice")).alias("_s"),
-        _dsum2(F.col("l_extendedprice")).alias("_s2"),
+        dsum(F.col("l_extendedprice")).alias("_s"),
+        dsum2(F.col("l_extendedprice")).alias("_s2"),
         F.count("l_extendedprice").alias("n_obs"),
     )
     return agg.select(
@@ -148,8 +132,8 @@ def q_gene_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_GENE_STATS = f"""
 WITH agg AS (
   SELECT l_partkey,
-         {_dsum_sql('l_extendedprice')} AS s,
-         {_dsum2_sql('l_extendedprice')} AS s2,
+         {dsum_sql('l_extendedprice')} AS s,
+         {dsum2_sql('l_extendedprice')} AS s2,
          COUNT(l_extendedprice) AS n_obs
   FROM lineitem GROUP BY l_partkey
 )
@@ -183,13 +167,13 @@ def q_gene_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = exclude_ids(li, excl, "l_partkey")
     return kept.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        _dsum(F.col("l_extendedprice")).alias("sum_price"),
+        dsum(F.col("l_extendedprice")).alias("sum_price"),
     )
 
 
 ORACLE_GENE_EXCLUSION = f"""
 SELECT l_returnflag, COUNT(*) AS n_rows,
-       {_dsum_sql('l_extendedprice')} AS sum_price
+       {dsum_sql('l_extendedprice')} AS sum_price
 FROM lineitem
 WHERE l_partkey NOT IN (SELECT p_partkey FROM part WHERE p_size > 45)
 GROUP BY l_returnflag
@@ -217,7 +201,7 @@ def q_outlier_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = remove_outlier_samples(cust, packed, "samples2exclude", "n_name")
     return kept.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        _dsum(F.col("c_acctbal")).alias("sum_acctbal"),
+        dsum(F.col("c_acctbal")).alias("sum_acctbal"),
     )
 
 
@@ -229,7 +213,7 @@ WITH packed AS (
   SELECT DISTINCT TRIM(UNNEST(STRING_SPLIT(samples2exclude, ','))) AS n_name FROM packed
 )
 SELECT c_mktsegment, COUNT(*) AS n_customers,
-       {_dsum_sql('c_acctbal')} AS sum_acctbal
+       {dsum_sql('c_acctbal')} AS sum_acctbal
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 WHERE n_name NOT IN (SELECT n_name FROM excl)
 GROUP BY c_mktsegment
@@ -248,8 +232,8 @@ def q_zero_variance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = (
         li.groupBy("l_partkey")
         .agg(
-            _dsum(F.col("l_tax")).alias("_s"),
-            _dsum2(F.col("l_tax")).alias("_s2"),
+            dsum(F.col("l_tax")).alias("_s"),
+            dsum2(F.col("l_tax")).alias("_s2"),
             F.count(F.lit(1)).alias("_n"),
         )
         .where(F.col("_n") >= 2)
@@ -266,8 +250,8 @@ def q_zero_variance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_ZERO_VARIANCE = f"""
 WITH agg AS (
   SELECT l_partkey,
-         {_dsum_sql('l_tax')} AS s,
-         {_dsum2_sql('l_tax')} AS s2,
+         {dsum_sql('l_tax')} AS s,
+         {dsum2_sql('l_tax')} AS s2,
          COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey
 ), keep AS (
@@ -285,8 +269,8 @@ def q_nonspecific_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     var = (F.col("_s2") - F.col("_s") * F.col("_s") / F.col("_n")) / (F.col("_n") - 1)
     sd = li.groupBy("l_partkey").agg(
-        _dsum(F.col("l_extendedprice")).alias("_s"),
-        _dsum2(F.col("l_extendedprice")).alias("_s2"),
+        dsum(F.col("l_extendedprice")).alias("_s"),
+        dsum2(F.col("l_extendedprice")).alias("_s2"),
         F.count(F.lit(1)).alias("_n"),
     ).where(F.col("_n") >= 2).withColumn("_sd", F.sqrt(var))
     w = Window.orderBy(F.col("_sd").desc(), F.col("l_partkey"))
@@ -301,8 +285,8 @@ def q_nonspecific_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_NONSPECIFIC = f"""
 WITH agg AS (
   SELECT l_partkey,
-         {_dsum_sql('l_extendedprice')} AS s,
-         {_dsum2_sql('l_extendedprice')} AS s2,
+         {dsum_sql('l_extendedprice')} AS s,
+         {dsum2_sql('l_extendedprice')} AS s2,
          COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey
 ), sd AS (
@@ -429,7 +413,7 @@ def q_value_conditioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored = low_value_floor(li, "l_discount", 0.02, 0.0)
     repaired = zero_repair(floored, "l_suppkey", "l_discount")
     return repaired.groupBy("l_suppkey").agg(
-        _dsum(F.col("l_discount")).alias("sum_discount"),
+        dsum(F.col("l_discount")).alias("sum_discount"),
         F.count(F.when(F.col("l_discount") == 0, 1)).alias("n_zero"),
     )
 
@@ -445,7 +429,7 @@ WITH floored AS (
               ELSE d END AS d
   FROM floored
 )
-SELECT l_suppkey, {_dsum_sql('d')} AS sum_discount,
+SELECT l_suppkey, {dsum_sql('d')} AS sum_discount,
        COUNT(CASE WHEN d = 0 THEN 1 END) AS n_zero
 FROM repaired GROUP BY l_suppkey
 """
@@ -569,8 +553,8 @@ def q_argmax_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_per_part = (
         li.groupBy("l_partkey")
         .agg(
-            _dsum(F.col("l_extendedprice")).alias("_s"),
-            _dsum2(F.col("l_extendedprice")).alias("_s2"),
+            dsum(F.col("l_extendedprice")).alias("_s"),
+            dsum2(F.col("l_extendedprice")).alias("_s2"),
             F.count(F.lit(1)).alias("_n"),
         )
         .where(F.col("_n") >= 2)
@@ -591,8 +575,8 @@ def q_argmax_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_ARGMAX_DEDUP = f"""
 WITH agg AS (
   SELECT l_partkey,
-         {_dsum_sql('l_extendedprice')} AS s,
-         {_dsum2_sql('l_extendedprice')} AS s2,
+         {dsum_sql('l_extendedprice')} AS s,
+         {dsum2_sql('l_extendedprice')} AS s2,
          COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey
 ), v AS (
@@ -711,8 +695,8 @@ def q_sample_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11 — per-sample Pearson correlation of price vs quantity from
     decimal-exact cross-moments (`Study_effect.R:320-398`)."""
     li = _t(spark, sf_dir, "lineitem")
-    x = _dec(F.col("l_extendedprice"), 2)
-    y = _dec(F.col("l_quantity"), 0)
+    x = dec(F.col("l_extendedprice"), 2)
+    y = dec(F.col("l_quantity"), 0)
     agg = li.groupBy("l_suppkey").agg(
         F.sum(x).cast("double").alias("sx"),
         F.sum(y).cast("double").alias("sy"),
@@ -757,7 +741,7 @@ def q_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("l_suppkey").orderBy(F.col("l_extendedprice").asc(), F.col("row_id").asc())
     ranked = li.withColumn("_rank", F.row_number().over(w))
     ref = ranked.groupBy("_rank").agg(
-        (_dsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("qn_value")
+        (dsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("qn_value")
     )
     joined = ranked.join(F.broadcast(ref), "_rank")
     return joined.select("l_suppkey", "row_id", "qn_value")
@@ -772,7 +756,7 @@ WITH ranked AS (
          ) AS rank
   FROM lineitem
 ), ref AS (
-  SELECT rank, {_dsum_sql('l_extendedprice')} / COUNT(*) AS qn_value
+  SELECT rank, {dsum_sql('l_extendedprice')} / COUNT(*) AS qn_value
   FROM ranked GROUP BY rank
 )
 SELECT ranked.l_suppkey, ranked.row_id, ref.qn_value
@@ -794,7 +778,7 @@ def _ttest_cte(
 ) -> str:
     """Oracle CTE chain computing the exact-moment pooled t per group.
 
-    Mirrors stats/ttest.py `_group_moments` + `two_group_ttest` op
+    Mirrors stats/ttest.py `group_moment_aggregates` + `two_group_ttest` op
     shapes exactly (same IEEE op sequence on identical inputs).
     """
     case_a = f"CASE WHEN l_returnflag = 'R' THEN {value_expr} END"
@@ -804,10 +788,10 @@ agg AS (
   SELECT {group_by}{extra_col},
          COUNT({case_a}) AS n_a,
          COUNT({case_b}) AS n_b,
-         {_dsum_sql(case_a, scale)} AS sa,
-         {_dsum_sql(case_b, scale)} AS sb,
-         {_dsum2_sql(case_a, scale)} AS sa2,
-         {_dsum2_sql(case_b, scale)} AS sb2
+         {dsum_sql(case_a, scale)} AS sa,
+         {dsum_sql(case_b, scale)} AS sb,
+         {dsum2_sql(case_a, scale)} AS sa2,
+         {dsum2_sql(case_b, scale)} AS sb2
   FROM lineitem
   WHERE l_returnflag IN ('R', 'A'){table_filter}
   GROUP BY ALL
@@ -1045,10 +1029,10 @@ WITH agg AS (
   SELECT l_partkey, l_linestatus AS platform,
          COUNT({case_a}) AS n0,
          COUNT({case_r}) AS n1,
-         {_dsum_sql(case_a)} AS s0,
-         {_dsum_sql(case_r)} AS s1,
-         {_dsum2_sql(case_a)} AS s02,
-         {_dsum2_sql(case_r)} AS s12
+         {dsum_sql(case_a)} AS s0,
+         {dsum_sql(case_r)} AS s1,
+         {dsum2_sql(case_a)} AS s02,
+         {dsum2_sql(case_r)} AS s12
   FROM lineitem
   WHERE l_returnflag IN ('A', 'R') AND l_linestatus IN ('O', 'F')
   GROUP BY ALL
@@ -1295,11 +1279,11 @@ def q_pivot_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the reference's count-matrix pivot
     (`GenExpressionComb_RNAseq.pl:232-238`)."""
     li = _t(spark, sf_dir, "lineitem")
-    dec = F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+    rev = F.sum(dec(F.col("l_extendedprice")))
     return (
         li.groupBy("l_suppkey")
         .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(dec)
+        .agg(rev)
         .select(
             "l_suppkey",
             *[
@@ -1388,7 +1372,7 @@ def q_full_outer_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = _t(spark, sf_dir, "lineitem")
     base = li.groupBy("l_partkey", "l_linestatus").agg(
-        _dsum(F.col("l_extendedprice")).alias("s"), F.count(F.lit(1)).alias("n")
+        dsum(F.col("l_extendedprice")).alias("s"), F.count(F.lit(1)).alias("n")
     )
     o = base.where(F.col("l_linestatus") == "O").select(
         "l_partkey", (F.col("s") / F.col("n")).alias("mean_o")
@@ -1405,7 +1389,7 @@ def q_full_outer_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_FULL_OUTER = f"""
 WITH base AS (
   SELECT l_partkey, l_linestatus,
-         {_dsum_sql('l_extendedprice')} AS s, COUNT(*) AS n
+         {dsum_sql('l_extendedprice')} AS s, COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey, l_linestatus
 ), o AS (
   SELECT l_partkey, s / n AS mean_o FROM base WHERE l_linestatus = 'O'
@@ -1882,42 +1866,8 @@ ORACLES["jsonl_parse"] = ORACLE_JSONL_PARSE
 # Driver-window ordering
 # ---------------------------------------------------------------------------
 # The correctness driver gates the FIRST 50 entries of ``QUERIES`` in
-# iteration order.  Round 1 proved the first 50 green (47 pass + 2
-# oracle-typing artifacts, both cast-fixed above); the remaining ~43
-# declared queries never got a hard-signal row.  Rotate them to the
-# front so round 2 gates the SURVEY section-2 core (expression_pipeline,
-# moderated/weighted DE, voom, ComBat, ICC, permutation FDR, ...) plus
-# every other not-yet-gated query.  Oracled queries come before
-# rows-only ones; previously-green queries trail (pytest still covers
-# them every round).
-_ROUND2_FRONT = [
-    # -- sect. 2 core, oracled, untested in r01 --------------------------
-    "expression_pipeline", "moderated_de", "weighted_de", "pairwise_contrasts",
-    "lmfit_design", "moderated_lmfit", "voom_trend", "batch_center",
-    "icc_meta", "permutation_fdr", "dup_correlation", "array_weights",
-    "term_enrichment", "fisher_enrichment", "cqn_bias", "dataset_group_means",
-    "strata_correlation", "ks_strata", "mahalanobis_outliers", "impute_missing",
-    "impute_em",
-    "qc_sample_metrics", "registry_upsert", "melt_measures", "pivot_matrix",
-    "full_outer_merge", "rollup_summary", "skyline",
-    # -- S5/S6 source contracts, gated this round ------------------------
-    "htseq_scan", "rsem_convert",
-    # -- llm-data / events, oracled, untested in r01 ---------------------
-    "rolling_stats", "quality_filter", "mixture_sample", "funnel",
-    "cohort_retention", "normalize_dedup",
-    # -- r01 hash-artifact rows, oracle casts fixed this round -----------
-    "reliability_filter", "set_compare",
-    # -- never had a driver row; round-2 additions prioritized ----------
-    # oracled: median_polish_fixed, pii_scrub, sample_distances,
-    # logistic_irls2, (impute_em above).  rows-only: the rest.
-    "median_polish", "median_polish_fixed", "pii_scrub", "combat_full",
-    "combat_nonparam", "pca_samples", "sample_distances", "logistic_irls2",
-    # -- round-2 full-fidelity kernels (rows-only: not SQL-expressible) --
-    # rotating to the r03 window to stay at exactly 50: ivf_ann, pq_ann,
-    # hclust_samples, kmeans_samples, mds_samples, quantile_sketch
-    # (ward_hclust + sample_distances supersede the hclust/mds slots)
-    "voom_lowess", "cqn_spline", "ward_hclust", "rnaseq_pipeline",
-]
+# iteration order; ``_reorder_front`` moves the current window's
+# queries there.
 
 
 def _reorder_front(registry: dict, front: list[str]) -> dict:
@@ -1947,298 +1897,8 @@ def _with_persist_drain(fn: QueryFn) -> QueryFn:
     return wrapped
 
 
-# Round-3 window: (a) the 7 queries that have NEVER produced a driver
-# row (rows-only by nature — the rotation debt VERDICT r2 item 1 holds
-# us to), (b) the round-3 additions (hash-gated compositions A/B/C +
-# meta, PCA-space M17, the distributed phases of M11/M12
-# [pca_covariance, mds_bmatrix, kmeans_lloyd2], the deterministic ANN
-# twins [ivf_fixed, pq_fixed], fixed-schedule EB ComBat [combat_eb2]
-# the unigram-LM quality score [doc_logprob] and the MOSS winnowing
-# overlap [winnow_overlap]), plus the three
-# adaptive-window queries whose physical plan changed this round
-# (skyline, ks_strata + pack_sequences below) and moderated_de for the
-# ttest seam refactor, (c) the three r2 hash-reds with
-# their oracles cast/sign-fixed this round, (d) the rows-only kernels
-# whose code changed this round (ward.D, voom residual SD) plus the
-# r2 rows-only set for a second stamp, and (e) 30 r1-gated oracled
-# queries for cumulative reconfirmation under the strict gate —
-# including the three perf-flagged bucketed rewrites.  With this
-# window every one of the 107 declared queries has a driver row
-# across r1-r3.
-_ROUND3_FRONT = [
-    # -- (a) never gated ------------------------------------------------
-    "ivf_ann", "pq_ann", "hclust_samples", "kmeans_samples", "mds_samples",
-    "quantile_sketch", "logistic_de",
-    # -- (b) round-3 additions ------------------------------------------
-    "rnaseq_pipeline_binned", "closed_pipeline", "normalized_de",
-    "meta_pipeline", "pca_outliers", "pca_covariance", "mds_bmatrix",
-    "kmeans_lloyd2", "ivf_fixed", "pq_fixed", "combat_eb2", "doc_logprob", "jsonl_parse", "bpe_merges", "edit_pairs", "url_canonical", "line_dedup",
-    "winnow_overlap", "dedup_keep_best",
-    # -- (c) r2 hash-reds, oracles fixed --------------------------------
-    "icc_meta", "dup_correlation", "quality_filter",
-    # -- (d) changed kernels + r2 rows-only re-stamp --------------------
-    "ward_hclust", "voom_lowess", "rnaseq_pipeline", "cqn_spline",
-    "median_polish", "combat_full", "combat_nonparam", "pca_samples",
-    # -- (e) cumulative reconfirmation (r1-only oracled) -----------------
-    "skyline", "ks_strata", "moderated_de",
-    "merge_left_join", "interval_join",
-    "quantile_thresholds", "sample_correlation", "quantile_normalization",
-    "diff_expression", "bh_histogram", "stouffer_meta", "fem_rem",
-    "pack_sequences",
-]
-
-# Round-4 window: (a) the five queries that have NEVER produced a
-# driver row (r4 additions media_header_decode / voom_loess2 /
-# cqn_irls2 + late-r3 winnow_containment / domain_dup_rate), (b) every
-# query whose kernel or oracle changed in r4 — the exact-fitFDist
-# eBayes chain (moderated_de, moderated_lmfit, weighted_de,
-# rnaseq_pipeline_binned, closed_pipeline, normalized_de,
-# diff_expression + bh_histogram for the optimized-plan window
-# routing, with skyline/ks_strata/pack_sequences re-stamping the other
-# adaptive-window users), the overflow-safe Knuth hash (ivf_fixed,
-# pq_fixed), the real-header multimodal semantics
-# (multimodal_featurize), the covariance-route M17 (pca_outliers,
-# rows-only), and the jsonl/keep_best ADVICE fixes (jsonl_parse,
-# dedup_keep_best), (c) the r3-touched kernels the r3 plan deferred
-# (permutation_fdr, sample_distances, cosine_topk, lsh_ann,
-# batch_center, expression_pipeline, minhash_lsh, p_improvement), and
-# (d) a 20-slice of the r1-only-gated remainder (llm-data + sources
-# families per plan).
-_ROUND4_FRONT = [
-    # -- (a) never gated -------------------------------------------------
-    "media_header_decode", "winnow_containment", "domain_dup_rate",
-    "voom_loess2", "cqn_irls2", "paragraph_dedup", "ngram_span_mask",
-    "cel_decode",
-    # -- (b) r4-changed kernels/oracles ----------------------------------
-    "moderated_de", "moderated_lmfit", "weighted_de",
-    "rnaseq_pipeline_binned", "closed_pipeline", "normalized_de",
-    "diff_expression", "bh_histogram", "skyline", "ks_strata",
-    "pack_sequences", "ivf_fixed", "pq_fixed", "multimodal_featurize",
-    "pca_outliers", "jsonl_parse", "dedup_keep_best",
-    # -- (c) r3-touched, deferred from the r3 window ---------------------
-    "permutation_fdr", "sample_distances", "cosine_topk", "lsh_ann",
-    "batch_center", "expression_pipeline", "minhash_lsh", "p_improvement",
-    # -- (d) r1-only-gated slice (llm-data + sources families) -----------
-    "token_stats", "text_quality", "language_id", "doc_fingerprint",
-    "dedup_exact", "ngram_jaccard", "simhash", "cosine_neardup",
-    "event_window_counts", "sessionize", "json_extract",
-    "duplicate_chunks", "simhash_neardup", "asof_join", "dedup_clusters",
-    "vocab_topk", "embedding_quantize",
-]
-
-# Round-5 window, executing the r4 plan verbatim: (a) the 16-query
-# r1-only remainder — the last queries without a strict-gate-era
-# driver row; after this window every declared query has one, (b)
-# every query whose kernel changed in r5 — the plan-build-time
-# fitFDist prior (moderated_de, moderated_lmfit, weighted_de,
-# diff_expression, closed_pipeline, normalized_de,
-# rnaseq_pipeline_binned), the unrolled pq_fixed ADC sum, the
-# vectorized CEL decode (cel_decode, expression_pipeline), the
-# vectorized media checksum (media_header_decode,
-# multimodal_featurize), the regex-safe paragraph separator
-# (paragraph_dedup), and the pre-collect gene bound in the
-# covariance-route M17 (pca_outliers, rows-only), and (c) a 20-slice
-# of the longest-unstamped remainder (r2-only-stamped queries,
-# registry order).
-_ROUND5_FRONT = [
-    # -- (a) never driver-gated (r1-only rows) ---------------------------
-    "pricing_summary", "gene_stats", "library_size", "gene_exclusion",
-    "outlier_removal", "zero_variance_filter", "nonspecific_filter",
-    "value_conditioning", "argmax_dedup", "dedup_rows", "frequency_table",
-    "venn_membership", "doc_sample", "contamination", "language_id_ngram",
-    "vocab_size_sketch",
-    # -- (b) r5-changed/new kernels --------------------------------------
-    "moderated_de", "moderated_lmfit", "weighted_de", "diff_expression",
-    "closed_pipeline", "normalized_de", "rnaseq_pipeline_binned",
-    "pq_fixed", "cel_decode", "expression_pipeline", "media_header_decode",
-    "multimodal_featurize", "paragraph_dedup", "pca_outliers",
-    "voom_loess3", "gopher_repetition", "semdedup", "idat_decode",
-    "quality_model", "minhash_accuracy", "corpus_pipeline",
-    # -- (c) longest-unstamped slice (r2-only driver rows) ---------------
-    "reliability_filter", "set_compare", "rolling_stats", "mixture_sample",
-    "funnel", "cohort_retention", "normalize_dedup", "pii_scrub",
-    "mahalanobis_outliers", "strata_correlation", "term_enrichment",
-    "fisher_enrichment", "pairwise_contrasts",
-]
-
-# Round-6 window, executing the r5 verdict item 1 exactly: (a) the 17
-# remaining r2-only-stamped queries (pure evidence debt — all pass the
-# judge's 3-SF strict gate, they just lack a recent driver row), (b)
-# every query whose kernel changed or was added in r6 — the corpus
-# tokenizer fix (corpus_pipeline), the _dlit non-finite literal guard
-# in the fitFDist prior (the 7-query DE chain), the _semdedup_flag
-# refactor (semdedup), the NEW semdedup_2level and detection_p gates,
-# the dedup_clusters re-stamp after the drift adjudication, the
-# expression_pipeline optional-F12 param, and the idat.py extension
-# (idat_decode) — and (c) a 12-slice of the r3-only-stamped remainder
-# in registry order.  Exactly 50 = the driver's gated window.
-_ROUND6_FRONT = [
-    # -- (a) r2-only-stamped (longest evidence debt) ----------------------
-    "lmfit_design", "impute_missing", "impute_em", "median_polish_fixed",
-    "logistic_irls2", "voom_trend", "cqn_bias", "array_weights",
-    "qc_sample_metrics", "dataset_group_means", "rollup_summary",
-    "pivot_matrix", "melt_measures", "registry_upsert", "full_outer_merge",
-    "htseq_scan", "rsem_convert",
-    # -- (b) r6-changed/new kernels ---------------------------------------
-    "corpus_pipeline", "diff_expression", "moderated_de", "moderated_lmfit",
-    "weighted_de", "closed_pipeline", "normalized_de",
-    "rnaseq_pipeline_binned", "semdedup", "semdedup_2level", "detection_p",
-    "png_pixels", "wav_decode", "gopher_quality", "bpe_encode",
-    "token_budget_sample", "ann_recall", "leakage_split",
-    "dedup_clusters", "expression_pipeline", "idat_decode",
-    # -- (c) r3-only-stamped slice (registry order; rnaseq_pipeline /
-    # ivf_ann / ward_hclust / cqn_spline — all declared rows-only —
-    # bumped to the r7 front to keep the window's oracled coverage at
-    # the new-gate additions)
-    "merge_left_join", "interval_join", "quantile_thresholds",
-    "sample_correlation", "quantile_normalization", "stouffer_meta",
-    "fem_rem", "icc_meta", "dup_correlation", "quality_filter",
-    "median_polish", "combat_full",
-]
-
-# Round-7 window, executing the r6 verdict item 3 exactly: (a) the 24
-# r3-only-stamped queries bumped from the r6 window (pure evidence
-# debt — all pass the judge's 3-SF strict gate), (b) every r7-touched
-# kernel — token_budget_sample FIRST (the one r6 red row; oracle
-# HUGEINT cast fix, engine untouched), the NEW jpeg_pixels gate,
-# wav_decode (odd-length data-chunk guard), dedup_clusters (the
-# stars-fallback non-converged dedup fix lives in the same module),
-# and icc_meta (DIMSUM tier added beside the exact kernel) — and (c) a
-# 12-slice of the r4-only-stamped remainder in registry order.
-# Exactly 50 = the driver's gated window.
-_ROUND7_FRONT = [
-    # -- (b-head) the r6 red row, cleared first ---------------------------
-    "token_budget_sample",
-    # -- (a) r3-only-stamped carry-overs (24) -----------------------------
-    "rnaseq_pipeline", "ivf_ann", "ward_hclust", "cqn_spline",
-    "voom_lowess", "pca_samples", "combat_nonparam", "pq_ann",
-    "hclust_samples", "kmeans_samples", "mds_samples", "quantile_sketch",
-    "logistic_de", "meta_pipeline", "pca_covariance", "mds_bmatrix",
-    "kmeans_lloyd2", "combat_eb2", "doc_logprob", "bpe_merges",
-    "edit_pairs", "url_canonical", "line_dedup", "winnow_overlap",
-    # -- (b) r7-touched kernels -------------------------------------------
-    "jpeg_pixels", "gif_pixels", "wav_decode", "dedup_clusters",
-    "icc_meta", "icc_dimsum", "icc_sampled", "temperature_sample",
-    "mp4_header", "html_extract", "bloom_contamination",
-    "asof_directions", "web_pipeline",
-    # -- (c) r4-only-stamped slice (registry order) -----------------------
-    "bh_histogram", "p_improvement", "token_stats", "text_quality",
-    "language_id", "doc_fingerprint", "dedup_exact", "ngram_jaccard",
-    "minhash_lsh", "simhash", "cosine_topk", "lsh_ann",
-]
-
-# Round-8 window, executing the r7 verdict item 2 exactly: (a) the
-# seven r7 gates added AFTER the r7 window froze (never
-# driver-stamped; compression_ratio is the window's one declared
-# rows-only member — DEFLATE is not SQL-expressible), (b) the 23
-# r4-only-stamped queries bumped from the r7 window, (c) every
-# r8-touched kernel — the three NEW gates (dabg_filter, qc_rle,
-# video_frames), temperature_sample (largest-remainder allocation),
-# web_pipeline (allocation change flows through its oracle),
-# mp4_header (spec-valid mvhd), and the simhash star-compression
-# closure consumers (dedup_clusters, leakage_split, corpus_pipeline;
-# dedup_keep_best already in (b), robots_filter already in (a)) —
-# and (d) a 10-slice of the r5-only-stamped remainder in registry
-# order.  Exactly 50 = the driver's gated window.
-_ROUND8_FRONT = [
-    # -- (a) never-stamped r7 gates ----------------------------------------
-    "global_shuffle", "variant_extract", "unicode_clean",
-    "compression_ratio", "flac_header", "robots_filter", "bigram_logprob",
-    # -- (b) r4-only-stamped carry-overs (23) ------------------------------
-    "cosine_neardup", "event_window_counts", "sessionize", "json_extract",
-    "duplicate_chunks", "simhash_neardup", "asof_join", "vocab_topk",
-    "embedding_quantize", "pack_sequences", "batch_center",
-    "permutation_fdr", "ks_strata", "skyline", "sample_distances",
-    "ivf_fixed", "jsonl_parse", "dedup_keep_best", "winnow_containment",
-    "domain_dup_rate", "voom_loess2", "cqn_irls2", "ngram_span_mask",
-    # -- (c) r8-touched kernels ---------------------------------------------
-    "dabg_filter", "qc_rle", "rna_degradation", "video_frames",
-    "temperature_sample", "web_pipeline", "mp4_header", "dedup_clusters",
-    "leakage_split", "corpus_pipeline",
-    # -- (d) r5-only-stamped slice (registry order) -------------------------
-    "pricing_summary", "gene_stats", "library_size", "gene_exclusion",
-    "outlier_removal", "zero_variance_filter", "nonspecific_filter",
-    "reliability_filter", "value_conditioning", "argmax_dedup",
-]
-
-# Round-9 window, executing the r8 verdict item 1 exactly: (a) the 21
-# second-wave r8 gates never driver-stamped (judge-verified at 3 SFs
-# in r8), (b) every r9-touched/new kernel — the two re-keyed minhash
-# gates (two-lane md5 seed family; incremental_dedup already in (a)),
-# the new unigram-LM tokenizer pair, and rle_deflate (the oracled
-# DEFLATE-subset twin replacing the permanently-no_oracle
-# compression_ratio row, which left the driver window), plus the new
-# flac_decode gate (frame/Rice decode closing the r8 header-only FLAC
-# boundary) and the image_dhash / audio_neardup perceptual near-dup
-# gates (the modality-dedup triple) — and (c)
-# the r5-only-stamped remainder in registry order up to the 50-query
-# window (cohort_retention, dedup_rows, doc_sample, funnel,
-# voom_loess3, vocab_size_sketch, venn_membership, term_enrichment
-# slip to r10 along with the rest of the r5/r6-only backlog).  (Compare r9
-# bench rows against the r8 driver column THROUGH the host band
-# recorded in BASELINE.md "r8 driver column".)
-_ROUND9_FRONT = [
-    # -- (a) never-stamped second-wave r8 gates (21) -----------------------
-    "bm25_topk", "pagerank3", "perplexity_buckets", "substring_spans",
-    "repetition_schedule", "warc_extract", "ingest_pipeline",
-    "tfidf_keywords", "kneser_ney", "c4_filter", "doc_chunks",
-    "dsir_select", "zipf_fit", "incremental_dedup", "prototype_prune",
-    "gsea_es", "c4_span_dedup", "pack_bins", "url_blocklist",
-    "curation_pipeline", "domain_prior",
-    # -- (b) r9-touched / new kernels --------------------------------------
-    "minhash_lsh", "minhash_accuracy",
-    "unigram_train", "unigram_encode", "wordpiece_merges", "rle_deflate",
-    "flac_decode", "image_dhash", "audio_neardup",
-    # -- (c) r5-only-stamped slice (registry order, 20 of 28) --------------
-    "cel_decode", "contamination", "fisher_enrichment", "frequency_table",
-    "gopher_repetition", "language_id_ngram", "mahalanobis_outliers",
-    "media_header_decode", "mixture_sample", "multimodal_featurize",
-    "normalize_dedup", "pairwise_contrasts", "paragraph_dedup",
-    "pca_outliers", "pii_scrub", "pq_fixed", "quality_model",
-    "rolling_stats", "set_compare", "strata_correlation",
-]
-
-# Round-10 rotation plan: (a) any r9 gate that misses a driver stamp
-# this window (all nine r9-new/re-keyed kernels sit in positions 22-30
-# of this window, so they should stamp in r9 — verify in
-# CORRECTNESS_r09.json), then (b) r10-touched/new kernels, (c) the
-# r5/r6-only-stamped backlog in registry order: the seven bumped from
-# this window (cohort_retention, dedup_rows, doc_sample, funnel,
-# voom_loess3, vocab_size_sketch, venn_membership, term_enrichment)
-# FIRST, then the r6-only-stamped remainder.  (Compare r10 bench rows
-# against BOTH the r8 driver column (through its recorded host band)
-# and the r9 clean local column in BASELINE.md.)
-_ROUND10_FRONT = [
-    # -- (a) the seven bumped from the r9 window (r5-stamped; the
-    # eighth bump, vocab_size_sketch, is rows-only and stays OUT of
-    # front lists per the r9 verdict — no wasted no_oracle slots) ----
-    "cohort_retention", "dedup_rows", "doc_sample", "funnel",
-    "voom_loess3", "venn_membership", "term_enrichment",
-    # -- (b) r10-new kernels: the BY/holm completion of M10's adjust
-    # surface and the capacity-scaled perceptual near-dup twins ------
-    "p_adjust_by", "p_adjust_holm", "de_adjust_methods", "image_dhash_wide",
-    "audio_neardup_wide", "video_neardup", "tfrecord_roundtrip",
-    # -- (c) the r6-only-stamped backlog in registry order (56 total
-    # with (a)+(b); registry_upsert, full_outer_merge, htseq_scan,
-    # rsem_convert, idat_decode, detection_p slip to r11)
-    "merge_left_join", "interval_join", "quantile_thresholds",
-    "sample_correlation", "quantile_normalization", "diff_expression",
-    "stouffer_meta", "fem_rem", "bpe_encode", "ann_recall",
-    "png_pixels", "semdedup", "semdedup_2level", "quality_filter",
-    "gopher_quality", "moderated_de", "dup_correlation",
-    "lmfit_design", "impute_missing", "impute_em",
-    "median_polish_fixed", "logistic_irls2", "moderated_lmfit",
-    "voom_trend", "closed_pipeline", "normalized_de",
-    "rnaseq_pipeline_binned", "cqn_bias", "array_weights",
-    "qc_sample_metrics", "expression_pipeline", "weighted_de",
-    "dataset_group_means", "rollup_summary", "pivot_matrix",
-    "melt_measures",
-]
-
-# Round-11 rotation window (executed this round; CORRECTNESS_r10.json
-# confirmed every _ROUND10_FRONT slot stamped, including the late
-# de_adjust_methods): (a) the six r6-only-stamped gates that slipped
-# the r10 window, (b) r11-new gates (blocked_de = duplicateCorrelation
+# Round-11 rotation window: (a) the six r6-only-stamped gates that
+# slipped the r10 window, (b) r11-new gates (blocked_de = duplicateCorrelation
 # CONSUMED by the GLS DE fit; video_offset_neardup = the
 # offset-tolerant video tier) and r11-TOUCHED kernels that must
 # re-stamp under the reworked plans (incremental_dedup's broadcast

@@ -123,35 +123,6 @@ JOIN per_g ON li.l_partkey = per_g.l_partkey
 """
 
 
-def q_icc_dimsum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 approximation tier (r7, SURVEY §4.2): the same ICC as
-    `icc_meta` but with the gene-gene correlation stage computed by
-    `RowMatrix.columnSimilarities(threshold)` (DIMSUM sampling) on
-    standardized gene columns instead of the exact relational
-    self-join — the 100 TB path when G^2 pairs stop fitting a
-    shuffle.  Declared rows-only (DIMSUM's sampled estimates are not
-    SQL-replayable); the exact `icc_meta` stays the oracle, and
-    `tests/test_stats_ml.py::test_icc_dimsum_tiers` bounds this
-    tier's error against it."""
-    from transcriptomics_data_integration_spark.stats.icc import icc_dimsum
-
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["F", "O"]))
-    genes = _top_genes(spark, sf_dir, 40)
-    cells = (
-        li.join(F.broadcast(genes), "l_partkey")
-        .groupBy(
-            F.col("l_linestatus").alias("platform"),
-            F.col("l_partkey").alias("gene_id"),
-            (F.col("l_suppkey") % 100).alias("sample_id"),
-        )
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("value"))
-    )
-    out = icc_dimsum(cells, ["F", "O"], threshold=0.2)
-    return out.select(
-        "gene_id", "n_pairs", (F.round("icc", 6) + F.lit(0.0)).alias("icc")
-    )
-
-
 def q_icc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 — integrative correlation over the (O, F) platform pair on
     the top-40-variance genes (`Meta_analysis.R:312-347`)."""
@@ -223,12 +194,10 @@ def q_icc_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 ORACLED approximation tier (r7): the same ICC as `icc_meta`
     but with each gene's correlation profile restricted to the
     deterministic md5-hashed HALF of partner genes
-    (`stats/icc.py:_pair_corr_moments(partner_frac=0.5)`) — the
-    approximation that actually cuts the quadratic for unit-norm
-    correlation columns (DIMSUM's magnitude-proportional sampler
-    saturates there; measured loss in PLANS.md r7).  The partner
-    subset is SQL-replayable, so unlike DIMSUM this tier hash-matches
-    a DuckDB oracle end-to-end."""
+    (`stats/icc.py:_pair_corr_moments(partner_frac=0.5)`), which cuts
+    the quadratic pair work in proportion to the fraction.  The partner
+    subset is SQL-replayable, so this tier hash-matches a DuckDB oracle
+    end-to-end."""
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["F", "O"]))
     genes = _top_genes(spark, sf_dir, 40)
     cells = (
@@ -723,7 +692,6 @@ FROM posted
 QUERIES_STATS = {
     "batch_center": q_batch_center,
     "icc_meta": q_icc_meta,
-    "icc_dimsum": q_icc_dimsum,
     "icc_sampled": q_icc_sampled,
     "permutation_fdr": q_permutation_fdr,
     "mahalanobis_outliers": q_mahalanobis_outliers,
