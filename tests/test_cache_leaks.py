@@ -2,7 +2,8 @@
 through ``runtime.register_persisted``, so once its action has run,
 ``cleanup_persisted()`` leaves the session's CacheManager empty.  An
 unregistered ``.cache()`` would outlive the query and be silently read
-by a later call on the same input."""
+by a later call on the same input.  The dedup pair operators give each
+relation one consumer and persist nothing at all."""
 
 from __future__ import annotations
 
@@ -52,9 +53,9 @@ def _p_adjust(spark):
 
 # (operator, builder of the DataFrame its action collects, whether it caches)
 CASES = [
-    ("minhash_lsh_pairs_all", lambda s: dedup_clusters(minhash_lsh_pairs(_docs(s), "doc_id", expand="all")), True),
-    ("minhash_lsh_pairs_star", lambda s: dedup_clusters(minhash_lsh_pairs(_docs(s), "doc_id", expand="star")), True),
-    ("ngram_jaccard_pairs", lambda s: ngram_jaccard_pairs(_docs(s), "doc_id"), True),
+    ("minhash_lsh_pairs_all", lambda s: dedup_clusters(minhash_lsh_pairs(_docs(s), "doc_id", expand="all")), False),
+    ("minhash_lsh_pairs_star", lambda s: dedup_clusters(minhash_lsh_pairs(_docs(s), "doc_id", expand="star")), False),
+    ("ngram_jaccard_pairs", lambda s: ngram_jaccard_pairs(_docs(s), "doc_id"), False),
     ("meta_analysis", _meta, False),
     ("p_adjust", _p_adjust, True),
 ]
@@ -66,7 +67,25 @@ def test_cleanup_persisted_empties_cache_manager(spark, build, caches):
     spark.catalog.clearCache()
     cleanup_persisted()
     assert build(spark).collect()
-    # the case reaches its persist sites (or, for meta_analysis, has none)
+    # the case reaches its persist sites, or registers none at all
     assert cache_manager.isEmpty() is not caches
-    cleanup_persisted()
+    assert (cleanup_persisted() > 0) is caches
     assert cache_manager.isEmpty()
+
+
+def test_minhash_lsh_pairs_star_clusters_in_few_jobs(spark):
+    """Clustering the star edges runs a bounded number of Spark jobs
+    from a cold cache: no relation is built once for several consumers
+    (the cached form ran 32 jobs here, 17 of them cache builds)."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    cleanup_persisted()
+    sc.setJobGroup("minhash_lsh_pairs_jobs", "minhash_lsh_pairs")
+    try:
+        rows = dedup_clusters(minhash_lsh_pairs(_docs(spark), "doc_id", expand="star")).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("minhash_lsh_pairs_jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 12, len(jobs)
+    # docs 0-3 are exact duplicates of each other, 4-6 near duplicates of them
+    assert {r["doc_id"]: r["canonical_id"] for r in rows} == {i: 0 for i in range(7)}

@@ -1454,6 +1454,116 @@ def test_minhash_star_mode_connectivity_equivalent(spark):
     assert comp(all_pairs) == comp(star_pairs)
 
 
+def _minhash_lsh_pairs_joined(df, id_col, threshold, expand):
+    """``minhash_lsh_pairs`` in the shape it had before each relation got
+    one consumer: digest-keyed representatives joined back to the docs,
+    candidates verified by two joins to the per-doc sets, and the
+    member expansion routed through the digest.  (Its two caches are
+    left out: they never changed rows.)"""
+    from transcriptomics_data_integration_spark.llmdata.dedup import (
+        N_HASHES,
+        content_digest,
+        hashed_shingles,
+        lsh_candidates_from_columns,
+        shingles,
+    )
+
+    member = df.select(F.col(id_col), content_digest(F.col("text")).alias("digest"))
+    rep = member.groupBy("digest").agg(F.min(id_col).alias("rep_id"))
+    rep_docs = df.join(rep.select(F.col("rep_id").alias(id_col)), id_col)
+    per_doc = hashed_shingles(shingles(rep_docs, id_col)).groupBy(id_col).agg(
+        *[F.min(f"h{j}").alias(f"m{j}") for j in range(N_HASHES)],
+        F.collect_set("sid").alias("sset"),
+    )
+    cands = lsh_candidates_from_columns(per_doc.drop("sset"), id_col)
+    sets = per_doc.select(id_col, "sset")
+    rep_pairs = (
+        cands.join(sets.select(F.col(id_col).alias("id_a"), F.col("sset").alias("set_a")), "id_a")
+        .join(sets.select(F.col(id_col).alias("id_b"), F.col("sset").alias("set_b")), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("set_a", "set_b")).alias("n_inter"),
+            F.size("set_a").alias("n_a"),
+            F.size("set_b").alias("n_b"),
+        )
+        .withColumn("jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+    if expand == "star":
+        star = (
+            member.join(rep, "digest")
+            .where(F.col(id_col) != F.col("rep_id"))
+            .select(
+                F.least(id_col, "rep_id").alias("id_a"),
+                F.greatest(id_col, "rep_id").alias("id_b"),
+                F.lit(1.0).alias("jaccard"),
+            )
+        )
+        return rep_pairs.unionByName(star)
+    ma = member.select(F.col(id_col).alias("id_a"), "digest")
+    mb = member.select(F.col(id_col).alias("id_b"), "digest")
+    intra = (
+        ma.join(mb, "digest")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
+    )
+    cross = (
+        rep_pairs.join(rep.select(F.col("rep_id").alias("id_a"), F.col("digest").alias("dig_a")), "id_a")
+        .join(rep.select(F.col("rep_id").alias("id_b"), F.col("digest").alias("dig_b")), "id_b")
+        .join(ma.select(F.col("id_a").alias("mem_a"), F.col("digest").alias("dig_a")), "dig_a")
+        .join(mb.select(F.col("id_b").alias("mem_b"), F.col("digest").alias("dig_b")), "dig_b")
+        .select(
+            F.least("mem_a", "mem_b").alias("id_a"),
+            F.greatest("mem_a", "mem_b").alias("id_b"),
+            "jaccard",
+        )
+    )
+    return cross.unionByName(intra)
+
+
+def test_minhash_lsh_pairs_equals_joined_form_property(spark):
+    """Property: on ANY corpus of exact-duplicate cliques, near
+    duplicates, empty and null texts, ``minhash_lsh_pairs`` returns
+    exactly the rows of the joined form above, in both ``expand``
+    modes.  Counts are integers and the Jaccard is one IEEE division,
+    so the comparison is exact."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from transcriptomics_data_integration_spark.llmdata.dedup import minhash_lsh_pairs
+
+    word = st.sampled_from(["alpha", "beta", "gamma", "delta", "kappa", "sigma", "omega"])
+    text = st.lists(word, min_size=3, max_size=10).map(" ".join)
+    kind = st.sampled_from(["copy", "near", "empty", "null", "fresh"])
+
+    @given(
+        st.lists(text, min_size=1, max_size=3),
+        st.lists(st.tuples(kind, st.integers(0, 2), word), min_size=2, max_size=14),
+        st.randoms(use_true_random=False),
+        st.sampled_from([0.5, 0.8]),
+    )
+    @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+    def check(bases, docs, rnd, threshold):
+        texts = []
+        for k, i, w in docs:
+            base = bases[i % len(bases)]
+            texts.append(
+                {"copy": base, "near": f"{base} {w}", "empty": "", "null": None, "fresh": f"{w} {w} {w}"}[k]
+            )
+        ids = [7 * i + 3 for i in range(len(texts))]
+        rnd.shuffle(ids)
+        df = spark.createDataFrame(list(zip(ids, texts)), "doc_id long, text string")
+        for expand in ("all", "star"):
+            got = minhash_lsh_pairs(df, "doc_id", threshold=threshold, expand=expand)
+            want = _minhash_lsh_pairs_joined(df, "doc_id", threshold, expand)
+            assert got.columns == want.columns
+            assert sorted(got.collect()) == sorted(want.collect()), expand
+
+    check()
+
+
 def test_connected_components_stats_rounds(spark, monkeypatch):
     from transcriptomics_data_integration_spark.llmdata import dedup as dd
     from transcriptomics_data_integration_spark.llmdata.dedup import (
@@ -3212,30 +3322,6 @@ def test_dedup_line_spans_keeps_canonical_occurrence(spark):
     assert got[2]["clean_text"] == "different tail here"
     # doc 3: too short for any span -> untouched
     assert got[3]["n_removed"] == 0 and got[3]["clean_text"] == "short\ndoc"
-
-
-def test_hashed_shingles_strategies_identical(spark):
-    """hashed_shingles (r8): the inline strategy produces the same
-    hash values as the broadcast-dim strategy — only the plan differs
-    (no broadcast collect on high-entropy corpora)."""
-    from transcriptomics_data_integration_spark.llmdata.dedup import (
-        hashed_shingles,
-        shingles,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "abcdefghij"), (2, "defghijklm"), (3, "zzzzzz")],
-        "doc_id long, text string",
-    )
-    sh = shingles(df, "doc_id", "text", 5)
-    cols = ["doc_id", "shingle", "h0", "h1", "h2", "h3"]
-
-    def rows(strategy):
-        out = hashed_shingles(sh, 4, strategy).select(*cols)
-        return sorted(map(tuple, out.collect()))
-
-    a, b = rows("broadcast_dim"), rows("inline")
-    assert a == b and len(a) > 0
 
 
 def test_pack_bins_nfd_semantics(spark):

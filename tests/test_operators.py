@@ -60,6 +60,18 @@ def test_nonspecific_filter_topk(spark):
     assert {r["gene_id"] for r in out.collect()} == {"g1", "g3"}
 
 
+def test_nonspecific_filter_topk_exact_mode_skips_nulls(spark):
+    """The decimal moments count only non-null values, as ``stddev``
+    does: gA's sd is that of {1, 2} (0.707), below gC's (0.816), in
+    both modes (counting gA's null rows would read 0.957)."""
+    rows = [("gA", 1.0), ("gA", 2.0), ("gA", None), ("gA", None)]
+    rows += [("gC", v) for v in (0.0, 1.0, 1.0, 2.0)]
+    df = spark.createDataFrame(rows, "gene_id string, value double")
+    for scale in (None, 2):
+        out = nonspecific_filter_topk(df, "gene_id", "value", 1, exact_scale=scale)
+        assert {r["gene_id"] for r in out.collect()} == {"gC"}, scale
+
+
 def test_reliability_filter_thresholds(spark):
     # ps1: 1 unreliable, single gene -> kept; ps2: 3 unreliable -> dropped;
     # ps3: multi-gene -> dropped

@@ -132,6 +132,21 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
     )
 
 
+def _jaccard() -> Column:
+    """Jaccard from the integer counts ``n_inter``, ``n_a``, ``n_b`` — one
+    IEEE division, so bit-identical across engines."""
+    return F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+
+
+def _set_counts(set_a: str, set_b: str) -> list[Column]:
+    """``n_inter``, ``n_a``, ``n_b`` of two shingle-id set columns."""
+    return [
+        F.size(F.array_intersect(set_a, set_b)).alias("n_inter"),
+        F.size(set_a).alias("n_a"),
+        F.size(set_b).alias("n_b"),
+    ]
+
+
 def shingles(df: DataFrame, id_col: str, text_col: str = "text", k: int = SHINGLE_LEN) -> DataFrame:
     """Distinct character k-shingles per document (posting list)."""
     expr = (
@@ -140,6 +155,23 @@ def shingles(df: DataFrame, id_col: str, text_col: str = "text", k: int = SHINGL
     )
     return df.select(
         F.col(id_col), F.explode(F.expr(expr)).alias("shingle")
+    )
+
+
+def _shingle_overlaps(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, n_a, n_b, n_inter) for every pair (id_a < id_b)
+    sharing a shingle of the posting relation ``sh``.  Each posting
+    carries its doc's set size from a window on ``id_col``, so the
+    inverted-index self-join yields both sizes and no sizes relation
+    is joined back; both join sides read the same exchange."""
+    sized = sh.withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+    a = sized.select(F.col(id_col).alias("id_a"), "shingle", F.col("_n").alias("n_a"))
+    b = sized.select(F.col(id_col).alias("id_b"), "shingle", F.col("_n").alias("n_b"))
+    return (
+        a.join(b, "shingle")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
     )
 
 
@@ -157,23 +189,9 @@ def ngram_jaccard_pairs(
     inter/union are integers, so the ratio is a single IEEE division —
     bit-identical across engines.
     """
-    sh = register_persisted(shingles(df, id_col, text_col, k).cache())
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     out = (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
+        _shingle_overlaps(shingles(df, id_col, text_col, k), id_col)
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
     )
     return out.select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard")
@@ -182,9 +200,10 @@ def ngram_jaccard_pairs(
 def minhash_from_shingles(
     sh: DataFrame, id_col: str, n_hashes: int = N_HASHES
 ) -> DataFrame:
-    """MinHash signatures from a prebuilt (id, shingle) posting relation
-    — callers that also need the postings for sizes/verification should
-    build them once, ``.cache()`` them, and use this entry point."""
+    """MinHash signatures, long form (id, seed, minhash), from a prebuilt
+    (id, shingle) posting relation — the entry point for callers that
+    also read the postings for sizes or verification
+    (:func:`minhash_accuracy`)."""
     # ceil(n/4) md5 digests per DISTINCT shingle (before the seed
     # explode), four 30-bit lanes each — md5 + conv are the expensive
     # parts and both are per-word, not per-seed
@@ -242,15 +261,6 @@ def minhash_accuracy(
     path stays `minhash_lsh_pairs`.
     """
     sh = shingles(docs, id_col, text_col, k)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     sig = minhash_from_shingles(sh, id_col, n_hashes)
     sa = sig.select(F.col(id_col).alias("id_a"), "seed", F.col("minhash").alias("ha"))
     sb = sig.select(F.col(id_col).alias("id_b"), "seed", F.col("minhash").alias("hb"))
@@ -261,20 +271,10 @@ def minhash_accuracy(
         .agg(F.sum(F.when(F.col("ha") == F.col("hb"), 1).otherwise(0)).alias("n_match"))
     )
     out = (
-        inter.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")),
-            "id_b",
-        )
+        _shingle_overlaps(sh, id_col)
         .join(est, ["id_a", "id_b"], "left")
         .withColumn("n_match", F.coalesce("n_match", F.lit(0)))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
+        .withColumn("jaccard", _jaccard())
         .withColumn("estimate", F.col("n_match") / F.lit(float(n_hashes)))
         .withColumn("abs_err", F.abs(F.col("estimate") - F.col("jaccard")))
     )
@@ -322,13 +322,13 @@ def minhash_sig_columns(
     sh: DataFrame, id_col: str, n_hashes: int = N_HASHES
 ) -> DataFrame:
     """MinHash signatures as n_hashes COLUMNS (m0..m{n-1}) instead of
-    (id, seed, minhash) long form: the per-seed hashes ride the distinct
-    -shingle dim as extra columns, and one groupBy takes element-wise
-    mins.  Versus the long form this avoids the n_hashes-fold row
-    explosion through the shuffle (1 row per doc with n columns vs
-    n rows per doc) and the second banding aggregation.  Hash values are
-    identical to :func:`minhash_from_shingles` (30-bit md5-lane family,
-    see module notes at ``_minhash_words``).
+    (id, seed, minhash) long form: the per-seed hashes ride each posting
+    as extra columns, and one groupBy takes element-wise mins.  Versus
+    the long form this avoids the n_hashes-fold row explosion through
+    the shuffle (1 row per doc with n columns vs n rows per doc) and the
+    second banding aggregation.  Hash values are identical to
+    :func:`minhash_from_shingles` (30-bit md5-lane family, see module
+    notes at ``_minhash_words``).
     """
     hashed = hashed_shingles(sh, n_hashes)
     return hashed.groupBy(id_col).agg(
@@ -336,46 +336,61 @@ def minhash_sig_columns(
     )
 
 
-def hashed_shingles(
-    sh: DataFrame, n_hashes: int = N_HASHES, strategy: str = "broadcast_dim"
-) -> DataFrame:
+def _minhash_sig_sets(sh: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
+    """One row per doc: the signature columns m0..m{n-1} and ``sset``,
+    the doc's set of 60-bit shingle ids — both from ONE aggregation of
+    the posting relation, so the wide posting-level intermediate is
+    never re-read."""
+    return hashed_shingles(sh, n_hashes).groupBy(id_col).agg(
+        *[F.min(f"h{j}").alias(f"m{j}") for j in range(n_hashes)],
+        F.collect_set("sid").alias("sset"),
+    )
+
+
+def hashed_shingles(sh: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     """Posting relation with the per-seed hash columns h0..h{n-1}
     (30-bit lanes) plus ``sid`` — the 60-bit shingle id (word 0
     undivided) for set operations; primitive long arrays instead of
-    string arrays keeps verification allocation-light.  Hash VALUES
-    are identical under either strategy; only the plan differs:
+    string arrays keeps verification allocation-light.
 
-    - ``"broadcast_dim"``: md5 computed once per DISTINCT shingle and
-      broadcast back.  Wins when cross-doc shingle repetition is high
-      (dup-storm crawls, bounded vocabularies) — but the dim is
-      collected to the driver, so it breaks past
-      ``spark.driver.maxResultSize`` on HIGH-ENTROPY corpora, where
-      distinct shingles grow with the corpus (measured r8: a 1 M-doc
-      md5-token corpus killed the collect at >1 GiB; PLANS.md).
-    - ``"inline"``: the 16 hash columns are computed per POSTING row —
-      ~distinct-ratio more md5 calls, but ZERO broadcast and zero
-      extra shuffle, CPU-linear at any corpus size.  The safe default
-      for arbitrary (non-storm) input.
+    The hashes are computed per POSTING row: ceil(n/4) md5s and
+    ceil(n/2) convs each, no broadcast and no extra shuffle, so the
+    cost is CPU-linear at any corpus size.  (Hashing each DISTINCT
+    shingle once and broadcasting the result back collects the
+    distinct-shingle relation to the driver, which breaks past
+    ``spark.driver.maxResultSize`` on high-entropy corpora — r8,
+    PLANS.md — and it measured no faster than this path on the
+    200-document benchmark corpus: 1.3–1.4 s warm each, same jobs,
+    4-core host.)
     """
     words = _minhash_words(F.col("shingle"), n_hashes)
-    n_w = len(words)
+    rel = sh
+    for w, c in enumerate(words):
+        rel = rel.withColumn(f"_w{w}", c)
+    for j in range(n_hashes):
+        rel = rel.withColumn(f"h{j}", _minhash_half(f"_w{j // 2}", j))
+    rel = rel.withColumn("sid", F.col("_w0"))
+    return rel.drop(*[f"_w{w}" for w in range(len(words))])
 
-    def _attach(rel: DataFrame) -> DataFrame:
-        # ceil(n/4) md5s + ceil(n/2) convs per row (was n of each
-        # before r9's lane split); the h_j columns are integer halves
-        for w, c in enumerate(words):
-            rel = rel.withColumn(f"_w{w}", c)
-        for j in range(n_hashes):
-            rel = rel.withColumn(f"h{j}", _minhash_half(f"_w{j // 2}", j))
-        rel = rel.withColumn("sid", F.col("_w0"))
-        return rel.drop(*[f"_w{w}" for w in range(n_w)])
 
-    if strategy == "inline":
-        return _attach(sh)
-    if strategy != "broadcast_dim":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    dim = _attach(sh.select("shingle").distinct())
-    return sh.join(F.broadcast(dim), "shingle")
+def _band_rows(sigcols: DataFrame, n_bands: int, n_hashes: int) -> DataFrame:
+    """Explode columnar signatures to n_bands rows per doc: ``band`` and
+    ``band_key``, the band's minhash columns packed into an
+    array<bigint> join key.  Every non-signature column passes
+    through."""
+    rows_per_band = n_hashes // n_bands
+    sig = [f"m{j}" for j in range(n_hashes)]
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.array(*sig[b * rows_per_band : (b + 1) * rows_per_band]).alias("band_key"),
+        )
+        for b in range(n_bands)
+    ]
+    rest = [c for c in sigcols.columns if c not in sig]
+    return sigcols.select(*rest, F.explode(F.array(*bands)).alias("_bb")).select(
+        *rest, "_bb.band", "_bb.band_key"
+    )
 
 
 def lsh_candidates_from_columns(
@@ -384,24 +399,13 @@ def lsh_candidates_from_columns(
     n_bands: int = N_BANDS,
     n_hashes: int = N_HASHES,
 ) -> DataFrame:
-    """Candidates from columnar signatures: band keys are plain
-    projections — the band's minhash columns packed into an
-    array<bigint> join key (hashes/compares 4 longs instead of an
-    80-char concat string), exploded to n_bands rows per doc for the
-    band-bucket self-join.  Bucket membership is identical to the
-    long-form string band_key (same values, seed order)."""
-    rows_per_band = n_hashes // n_bands
-    bands = []
-    for b in range(n_bands):
-        cols = [
-            F.col(f"m{j}") for j in range(b * rows_per_band, (b + 1) * rows_per_band)
-        ]
-        bands.append(
-            F.struct(F.lit(b).alias("band"), F.array(*cols).alias("band_key"))
-        )
-    banded = sigcols.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("bb")
-    ).select(id_col, "bb.band", "bb.band_key")
+    """Candidates from columnar signatures: docs sharing a band bucket
+    (an array<bigint> key — hashes/compares 4 longs instead of an
+    80-char concat string), id_a < id_b, distinct.  Bucket membership is
+    identical to the long-form string band_key (same values, seed
+    order)."""
+    sig = sigcols.select(id_col, *[f"m{j}" for j in range(n_hashes)])
+    banded = _band_rows(sig, n_bands, n_hashes)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
     return (
@@ -487,7 +491,6 @@ def minhash_lsh_pairs(
     n_bands: int = N_BANDS,
     threshold: float = 0.8,
     expand: str = "all",
-    hash_strategy: str = "broadcast_dim",
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline with exact-duplicate cluster
     compression: signatures -> banded candidates -> exact-Jaccard
@@ -517,124 +520,82 @@ def minhash_lsh_pairs(
       web-crawl dup storm of 10^6 identical docs yields 10^6 - 1 star
       edges instead of ~5*10^11 pairs; the transitive closure (and
       hence dedup_clusters / keep_best_per_cluster) is IDENTICAL.
+
+    Plan shape: every relation has ONE consumer, so nothing is cached.
+    One ``min(id) over (partition by digest)`` window tags each doc
+    with its representative; the representatives, the star edges and
+    the member expansion all filter that one tagged relation (Spark
+    reuses its exchange inside the query).  The shingle-id sets ride
+    the band explode, so the band self-join yields both sets of each
+    candidate and verifies it in place — no join back to the per-doc
+    relation.
     """
     if expand not in ("all", "star"):
         raise ValueError(f"expand must be 'all' or 'star', got {expand!r}")
-    # (id, digest) is two narrow columns — cache it; it feeds the rep
-    # election and both expansion joins.  No broadcast hints on the rep
-    # relation: one row per *distinct text* is not a small dim at crawl
-    # scale, so the join strategy is left to Catalyst/AQE.
-    member = df.select(
-        F.col(id_col), content_digest(F.col(text_col)).alias("digest")
-    ).cache()
-    register_persisted(member)
-    rep = member.groupBy("digest").agg(F.min(id_col).alias("rep_id"))
-    rep_docs = df.join(rep.select(F.col("rep_id").alias(id_col)), id_col)
+    # No broadcast hints: one row per *distinct text* is not a small dim
+    # at crawl scale, so join strategies are left to Catalyst/AQE.
+    tagged = df.select(
+        id_col, text_col, content_digest(F.col(text_col)).alias("digest")
+    ).withColumn("rep_id", F.min(id_col).over(Window.partitionBy("digest")))
+    rep_docs = tagged.where(F.col(id_col) == F.col("rep_id"))
+    # exact duplicates of a representative (null text has no digest)
+    members = tagged.where(F.col("digest").isNotNull()).select(id_col, "rep_id")
 
     sh = shingles(rep_docs, id_col, text_col, k)
-    # hash_strategy: "broadcast_dim" wins on storm-shaped crawls (reps
-    # << docs, distinct shingles bounded); pass "inline" for
-    # high-entropy corpora where the distinct-shingle dim would grow
-    # with the corpus and break the driver collect (r8, PLANS.md)
-    hashed = hashed_shingles(sh, n_hashes, strategy=hash_strategy)
-    # ONE pass over the posting relation produces both the signature
-    # columns (element-wise mins) and the per-doc shingle-set array
-    # (collect_set of the sid shingle ids) — fusing the two aggregations
-    # means the wide 1-row-per-posting intermediate is never cached or
-    # re-aggregated; only the 1-row-per-doc result is (measured: the
-    # posting-level cache materialization was the pipeline's single
-    # largest cost at sf0.1).
-    per_doc = (
-        hashed.groupBy(id_col)
-        .agg(
-            *[F.min(f"h{j}").alias(f"m{j}") for j in range(n_hashes)],
-            F.collect_set("sid").alias("sset"),
-        )
-        .cache()
+    banded = _band_rows(_minhash_sig_sets(sh, id_col, n_hashes), n_bands, n_hashes)
+    a = banded.select(
+        F.col(id_col).alias("id_a"), F.col("sset").alias("set_a"), "band", "band_key"
     )
-    register_persisted(per_doc)
-    sigs = per_doc.select(id_col, *[f"m{j}" for j in range(n_hashes)])
-    cands = lsh_candidates_from_columns(sigs, id_col, n_bands, n_hashes)
-    # verification via per-doc shingle-set arrays: two equi-joins on doc
-    # id each carrying ONE array row, and a native array_intersect per
-    # candidate pair.  This replaces the posting-level shuffle join
-    # (|candidates| x avg-postings rows through two exchanges) with a
-    # per-pair set intersection — the shuffle carries |reps| arrays, not
-    # |reps| x |shingles| posting rows.  The sets hold the sid shingle
-    # ids (word 0 undivided, 60-bit longs — not the 30-bit h-lanes;
-    # primitive longs, no string-array GC churn); counts —
-    # and hence the Jaccard division — are identical to string sets.
-    doc_sets = per_doc.select(id_col, "sset")
+    b = banded.select(
+        F.col(id_col).alias("id_b"), F.col("sset").alias("set_b"), "band", "band_key"
+    )
+    # verification on the candidate rows themselves: the sets hold the
+    # sid shingle ids (60-bit longs), so the counts — and hence the
+    # Jaccard division — equal those of string shingle sets.  A pair
+    # sharing several bands shows up once per band; the distinct over
+    # its integer counts keeps one row before the division.
     rep_pairs = (
-        cands.join(
-            doc_sets.select(F.col(id_col).alias("id_a"), F.col("sset").alias("set_a")),
-            "id_a",
-        )
-        .join(
-            doc_sets.select(F.col(id_col).alias("id_b"), F.col("sset").alias("set_b")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("set_a", "set_b")).alias("n_inter"),
-            F.size("set_a").alias("n_a"),
-            F.size("set_b").alias("n_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
+        a.join(b, ["band", "band_key"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *_set_counts("set_a", "set_b"))
+        .distinct()
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+    if expand == "star":
+        # member -> representative star edges; rep_id = min(id) of the
+        # digest, so it is the smaller id of every edge
+        star = members.where(F.col(id_col) != F.col("rep_id")).select(
+            F.col("rep_id").alias("id_a"),
+            F.col(id_col).alias("id_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+        return rep_pairs.unionByName(star)
 
     # intra-cluster expansion: every pair of exact dups is a candidate
     # (identical band keys) with n_inter = n_a = n_b, i.e. Jaccard = 1.0
-    ma = member.select(F.col(id_col).alias("id_a"), "digest")
-    mb = member.select(F.col(id_col).alias("id_b"), "digest")
+    ma = members.select(F.col(id_col).alias("mem_a"), F.col("rep_id").alias("id_a"))
+    mb = members.select(F.col(id_col).alias("mem_b"), F.col("rep_id").alias("id_b"))
     intra = (
-        ma.join(mb, "digest")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
+        ma.join(mb, F.col("id_a") == F.col("id_b"))
+        .where(F.col("mem_a") < F.col("mem_b"))
+        .select(
+            F.col("mem_a").alias("id_a"),
+            F.col("mem_b").alias("id_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
     )
-
     # cross-cluster expansion: rep pair -> all member pairs, reoriented
-    rep_digest = rep
     cross = (
-        rep_pairs.join(
-            rep_digest.select(
-                F.col("rep_id").alias("id_a"), F.col("digest").alias("dig_a")
-            ),
-            "id_a",
-        )
-        .join(
-            rep_digest.select(
-                F.col("rep_id").alias("id_b"), F.col("digest").alias("dig_b")
-            ),
-            "id_b",
-        )
-        .join(ma.select(F.col("id_a").alias("mem_a"), F.col("digest").alias("dig_a")), "dig_a")
-        .join(mb.select(F.col("id_b").alias("mem_b"), F.col("digest").alias("dig_b")), "dig_b")
+        rep_pairs.join(ma, "id_a")
+        .join(mb, "id_b")
         .select(
             F.least("mem_a", "mem_b").alias("id_a"),
             F.greatest("mem_a", "mem_b").alias("id_b"),
             "jaccard",
         )
     )
-    if expand == "star":
-        # member -> representative star edges (id order normalized);
-        # rep-level cross pairs stay as-is — already one per clique pair
-        star = (
-            member.join(rep, "digest")
-            .where(F.col(id_col) != F.col("rep_id"))
-            .select(
-                F.least(id_col, "rep_id").alias("id_a"),
-                F.greatest(id_col, "rep_id").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        return rep_pairs.unionByName(star)
     return cross.unionByName(intra)
 
 
@@ -1385,11 +1346,7 @@ def build_minhash_index(
     ``existing_index=``).  Inline hashing throughout — zero broadcast,
     CPU-linear at any corpus size."""
     sh = shingles(existing, id_col, text_col, k)
-    hashed = hashed_shingles(sh, n_hashes, strategy="inline")
-    sigs = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{j}").alias(f"m{j}") for j in range(n_hashes)],
-        F.collect_set("sid").alias("sset"),
-    )
+    sigs = _minhash_sig_sets(sh, id_col, n_hashes)
     dig = existing.select(
         F.col(id_col), content_digest(F.col(text_col)).alias("digest")
     )
@@ -1634,21 +1591,11 @@ def incremental_minhash_dedup(
         F.col("inc_id").alias(id_col), F.col("_txt").alias(text_col)
     )
 
-    def _sig_sets(df: DataFrame, out_id: str) -> DataFrame:
-        # inline hashing: an incoming crawl batch is arbitrary content,
-        # so the broadcast-dim strategy's driver collect is a scale
-        # hazard here (measured r8, PLANS.md) — inline is CPU-linear
-        # with zero broadcast at any batch size
-        sh = shingles(df, id_col, text_col, k)
-        hashed = hashed_shingles(sh, n_hashes, strategy="inline")
-        return hashed.groupBy(id_col).agg(
-            *[F.min(f"h{j}").alias(f"m{j}") for j in range(n_hashes)],
-            F.collect_set("sid").alias("sset"),
-        ).withColumnRenamed(id_col, out_id)
-
     # two consumers (band keys + verify): cache the batch-sized
     # signature relation so the shingle/md5 pipeline runs once
-    inc_sigs = _sig_sets(rest, "inc_id").cache()
+    inc_sigs = _minhash_sig_sets(
+        shingles(rest, id_col, text_col, k), id_col, n_hashes
+    ).withColumnRenamed(id_col, "inc_id").cache()
     register_persisted(inc_sigs)
     ex_sigs = existing_index.select(
         "ex_id", *[f"m{j}" for j in range(n_hashes)], "sset"
@@ -1685,17 +1632,8 @@ def incremental_minhash_dedup(
     verified = (
         cands.join(inc_sigs.select("inc_id", F.col("sset").alias("set_a")), "inc_id")
         .join(ex_sets.select("ex_id", F.col("sset").alias("set_b")), "ex_id")
-        .select(
-            "inc_id",
-            "ex_id",
-            F.size(F.array_intersect("set_a", "set_b")).alias("n_inter"),
-            F.size("set_a").alias("n_a"),
-            F.size("set_b").alias("n_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
+        .select("inc_id", "ex_id", *_set_counts("set_a", "set_b"))
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
     )
     best = verified.withColumn(

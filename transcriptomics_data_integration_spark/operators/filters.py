@@ -113,11 +113,13 @@ def nonspecific_filter_topk(
 def top_variance_aggregates(value_col: str, exact_scale: int | None) -> list[Column]:
     """The per-gene aggregate columns F5 ranks on, finished by
     :func:`top_variance_genes`: ``_sd`` itself in float mode, the
-    decimal moments ``_n``, ``_s``, ``_s2`` with ``exact_scale``."""
+    decimal moments ``_n``, ``_s``, ``_s2`` with ``exact_scale``.  Like
+    ``stddev`` and the decimal sums, ``_n`` skips null values, so both
+    modes rank a gene with missing cells on the same moments."""
     if exact_scale is None:
         return [F.stddev(value_col).alias("_sd")]
     return [
-        F.count(F.lit(1)).alias("_n"),
+        F.count(value_col).alias("_n"),
         dsum(value_col, exact_scale).alias("_s"),
         dsum2(value_col, exact_scale).alias("_s2"),
     ]

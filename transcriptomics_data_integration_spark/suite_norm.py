@@ -704,9 +704,9 @@ WITH cells AS (
   JOIN per_gb gb ON l.gene_id = gb.gene_id AND l.b = gb.b
   JOIN per_g g ON l.gene_id = g.gene_id
 ), mom AS (
-  SELECT gene_id, COUNT(*) AS n,
+  SELECT gene_id, COUNT(v) AS n,
          {dsum.format(x='v')} AS s, {dsum2.format(x='v')} AS s2
-  FROM adjv GROUP BY gene_id HAVING COUNT(*) >= 2
+  FROM adjv GROUP BY gene_id HAVING COUNT(v) >= 2
 ), sdv AS (
   SELECT gene_id, sqrt((s2 - s * s / n) / (n - 1)) AS sd FROM mom
 ), keep AS (
@@ -861,9 +861,9 @@ WITH cells0 AS (
          CASE WHEN sample_id % 2 = 0 THEN 'tumor' ELSE 'normal' END AS grp
   FROM fillv
 ), mom AS (
-  SELECT gene_id, COUNT(*) AS n,
+  SELECT gene_id, COUNT(v) AS n,
          {dsum.format(x='v')} AS s, {dsum2.format(x='v')} AS s2
-  FROM lab GROUP BY gene_id HAVING COUNT(*) >= 2
+  FROM lab GROUP BY gene_id HAVING COUNT(v) >= 2
 ), sdv AS (
   SELECT gene_id, sqrt((s2 - s * s / n) / (n - 1)) AS sd FROM mom
 ), keep AS (
