@@ -43,6 +43,23 @@ def test_batch_mean_center_removes_batch_offset(spark):
         assert abs(r["gap"]) < 1e-9
 
 
+def test_combat_eb_fixed_skips_null_cells(spark):
+    """A null cell adjusts the rest of its gene exactly as dropping its
+    row does: the per-(gene, batch) n counts values, as the decimal
+    sums do."""
+    from transcriptomics_data_integration_spark.stats.combat import combat_eb_fixed
+
+    df = _expr_df(spark)
+    hole = (F.col("gene_id") == "g0") & F.col("sample_id").isin("b1_s0", "b1_s1")
+    nulled = df.withColumn("value", F.when(hole, F.lit(None)).otherwise(F.col("value")))
+
+    def adjusted(d):
+        out = combat_eb_fixed(d, "gene_id", "sample_id", "batch", "value").collect()
+        return {(r["gene_id"], r["sample_id"]): r["value"] for r in out if r["value"] is not None}
+
+    assert adjusted(nulled) == adjusted(df.where(~hole))
+
+
 def test_combat_shrinks_batch_effect_and_preserves_scale(spark):
     df = _expr_df(spark)
     out = combat(df, "gene_id", "sample_id", "batch", "value")

@@ -19,6 +19,12 @@ oracle evaluate the identical formula (same pattern as
 
 from __future__ import annotations
 
+from transcriptomics_data_integration_spark.functions.exact import (
+    dsum2_sql,
+    dsum_sql,
+    var_from_moments_sql,
+)
+
 # 0.5 * ln(2 * pi)
 _HALF_LN_2PI = "9.18938533204672742e-01"
 
@@ -195,7 +201,8 @@ def fitfdist_prior_ctes_sql(s2t: str = "s2t", prefix: str = "ff") -> str:
 
     ``s2t`` must be a prior CTE with columns ``s2`` (residual variance)
     and ``df`` (residual df, DOUBLE).  Emits CTEs ``{prefix}_med/
-    {prefix}_et/{prefix}_mom/{prefix}_prior`` and ``{prefix}_prior2``;
+    {prefix}_et/{prefix}_sums/{prefix}_mom/{prefix}_prior`` and
+    ``{prefix}_prior2``;
     join the consumer against ``{prefix}_prior2`` (one row: emean,
     evar, d0, s20) and compute per-row
     ``CASE WHEN isinf(d0) THEN s20 ELSE (d0*s20 + df*s2)/(d0+df) END``.
@@ -206,6 +213,9 @@ def fitfdist_prior_ctes_sql(s2t: str = "s2t", prefix: str = "ff") -> str:
     tri = trigamma_sql("(df / 2.0e0)")
     triinv = trigamma_inverse_sql("evar", dialect="duckdb")
     dig_d0 = digamma_sql("(d0 / 2.0e0)")
+    # the engine's quantize(., 12): tie-free ticks, so the moments are
+    # exact decimal sums
+    eq, triq = "(FLOOR(e * 1.0e12 + 0.5e0) / 1.0e12)", "(FLOOR(tri * 1.0e12 + 0.5e0) / 1.0e12)"
     p = prefix
     return f"""{p}_med AS (
   SELECT median(s2) AS med FROM {s2t}
@@ -215,8 +225,15 @@ def fitfdist_prior_ctes_sql(s2t: str = "s2t", prefix: str = "ff") -> str:
            - {dig} + ln(df / 2.0e0) AS e,
          {tri} AS tri
   FROM {s2t} CROSS JOIN {p}_med
+), {p}_sums AS (
+  SELECT COUNT(e) AS n, {dsum_sql(eq, 12)} AS se, {dsum2_sql(eq, 12)} AS se2,
+         {dsum_sql(triq, 12)} AS stri
+  FROM {p}_et
 ), {p}_mom AS (
-  SELECT AVG(e) AS emean, VAR_SAMP(e) - AVG(tri) AS evar FROM {p}_et
+  SELECT se / n AS emean,
+         CASE WHEN n >= 2 THEN {var_from_moments_sql("se", "se2", "n")} END
+           - stri / n AS evar
+  FROM {p}_sums
 ), {p}_prior AS (
   SELECT emean, evar,
          CASE WHEN evar > 0.0e0 THEN 2.0e0 * {triinv}

@@ -106,7 +106,7 @@ def nonspecific_filter_topk(
     filter gates a hash-checked composition.
     """
     per_gene = df.groupBy(gene_col).agg(*top_variance_aggregates(value_col, exact_scale))
-    keep = top_variance_genes(per_gene, gene_col, k, exact_scale)
+    keep = top_variance_genes(per_gene, gene_col, k, exact_scale).select(gene_col)
     return df.join(F.broadcast(keep), gene_col, "left_semi")
 
 
@@ -128,9 +128,9 @@ def top_variance_aggregates(value_col: str, exact_scale: int | None) -> list[Col
 def top_variance_genes(
     per_gene: DataFrame, gene_col: str, k: int, exact_scale: int | None
 ) -> DataFrame:
-    """The ``gene_col`` ids of the k genes with the largest sd in a
-    relation grouped with :func:`top_variance_aggregates`, ties broken
-    on gene id."""
+    """The rows of the k genes with the largest sd in a relation
+    grouped with :func:`top_variance_aggregates` (all its columns plus
+    ``_sd``), ties broken on gene id."""
     if exact_scale is not None:
         n, sx, sx2 = F.col("_n"), F.col("_s"), F.col("_s2")
         per_gene = per_gene.where(n >= 2).withColumn(
@@ -140,7 +140,7 @@ def top_variance_genes(
     return (
         per_gene.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
-        .select(gene_col)
+        .drop("_rn")
     )
 
 

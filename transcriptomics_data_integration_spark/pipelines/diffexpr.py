@@ -13,14 +13,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from transcriptomics_data_integration_spark.functions.exact import dec, quantize
+from transcriptomics_data_integration_spark.functions.exact import quantize
 from transcriptomics_data_integration_spark.operators.filters import (
     top_variance_aggregates,
     top_variance_genes,
 )
-from transcriptomics_data_integration_spark.runtime import register_persisted
 from transcriptomics_data_integration_spark.stats.bh import p_adjust
-from transcriptomics_data_integration_spark.stats.combat import check_confounding, combat
+from transcriptomics_data_integration_spark.stats.combat import (
+    batch_mean_center,
+    combat,
+    groups_per_batch,
+)
 from transcriptomics_data_integration_spark.stats.ttest import (
     group_moment_aggregates,
     group_moments_finish,
@@ -45,9 +48,9 @@ def _f5_ttest_single_pass(
     The per-gene relation below carries both F5's sd aggregates (the
     ones ``nonspecific_filter_topk`` ranks on, with its tie-break) and
     the per-group moments the pooled t consumes, so the fact relation
-    is aggregated exactly once; the top-k semi-join then restricts the
-    BOUNDED per-gene relation, which is row-for-row what filtering
-    facts first would produce (gene-level filter feeding a gene-level
+    is aggregated exactly once; F5 then keeps the top-k ROWS of that
+    bounded relation, which is row-for-row what filtering facts first
+    would produce (gene-level filter feeding a gene-level
     aggregation).  Without ``top_k_genes`` this is plain
     :func:`two_group_ttest`.
     """
@@ -56,18 +59,15 @@ def _f5_ttest_single_pass(
             labeled, gene_col, group_col, value_col, group_a, group_b,
             exact_scale=exact_scale, log_scale_values=True,
         )
-    # persist the BOUNDED per-gene moment relation: it has two
-    # consumers (the F5 ranking and the semi-joined t input), and an
-    # unpersisted DAG fork re-executes the whole fact aggregation
-    # subtree per consumer — one row per gene is always cacheable,
-    # the fact relation never is
+    # the ranking reads the per-gene relation itself, so it has one
+    # consumer and needs no cache (a semi-join of its top-k ids back
+    # onto it would be pushed below the aggregate by Catalyst, which
+    # then aggregates the facts twice)
     mom = labeled.groupBy(gene_col).agg(
         *top_variance_aggregates(value_col, exact_scale),
         *group_moment_aggregates(group_col, value_col, group_a, group_b, exact_scale),
-    ).persist()
-    register_persisted(mom)
-    keep = top_variance_genes(mom, gene_col, top_k_genes, exact_scale)
-    agg = group_moments_finish(mom.join(F.broadcast(keep), gene_col, "left_semi"))
+    )
+    agg = group_moments_finish(top_variance_genes(mom, gene_col, top_k_genes, exact_scale))
     # drop F5's columns (float mode has ``_sd`` alone)
     return ttest_from_group_moments(
         agg.drop("_n", "_s", "_s2", "_sd"), log_scale_values=True
@@ -127,57 +127,22 @@ def differential_expression(
     )
     # batch cardinality + confounding come from the SAMPLE SHEET (the
     # broadcast dim the reference itself checks,
-    # DiffExpression_closedPlatform.R:390-418) — not from `labeled`:
-    # both were driver actions that re-executed the full fact scan+join
-    # before the pipeline even started
-    if batch_correct and targets.select(batch_col).distinct().count() > 1:
-        if not check_confounding(targets, batch_col, group_col):
+    # DiffExpression_closedPlatform.R:390-418), in one job — not from
+    # `labeled`, whose actions would re-execute the fact scan+join
+    n_groups = groups_per_batch(targets, batch_col, group_col) if batch_correct else []
+    if len(n_groups) > 1:
+        if min(n_groups) < 2:
             raise ValueError(
                 "batch is confounded with the biological group "
                 "(reference guard, DiffExpression_closedPlatform.R:390-418)"
             )
         if batch_adjust == "center":
-            dv = F.col(value_col)
-            if exact_scale is not None:
-                dv = dec(dv, exact_scale)
-            # ONE fact aggregation: per-(gene, batch) decimal sums;
-            # per-gene totals roll up from the tiny per_gb relation
-            # (decimal addition is associative, so the rolled-up sums
-            # are bitwise the values a direct fact aggregation yields)
-            # instead of re-executing the scan+join subtree
-            # persisted: two consumers (per-gene rollup + the adjust
-            # join) and one row per (gene, batch) — bounded
-            per_gb_dec = labeled.groupBy(gene_col, batch_col).agg(
-                F.sum(dv).alias("_sd_gb"),
-                F.count(F.lit(1)).alias("_n_gb"),
-            ).persist()
-            register_persisted(per_gb_dec)
-            per_g = per_gb_dec.groupBy(gene_col).agg(
-                F.sum("_sd_gb").cast("double").alias("_s_g"),
-                F.sum("_n_gb").alias("_n_g"),
-            )
-            per_gb = per_gb_dec.select(
-                gene_col,
-                batch_col,
-                F.col("_sd_gb").cast("double").alias("_s_gb"),
-                "_n_gb",
-            )
-            adj = (
-                F.col(value_col)
-                - F.col("_s_gb") / F.col("_n_gb")
-                + F.col("_s_g") / F.col("_n_g")
-            )
+            labeled = batch_mean_center(labeled, gene_col, batch_col, value_col, exact_scale)
             if exact_scale is not None:
                 # the adjusted doubles are bitwise identical across
                 # engines; quantize them tie-free before the decimal
                 # moments downstream
-                adj = quantize(adj, exact_scale)
-            labeled = (
-                labeled.join(per_gb, [gene_col, batch_col])
-                .join(per_g, gene_col)
-                .withColumn(value_col, adj)
-                .drop("_s_gb", "_n_gb", "_s_g", "_n_g")
-            )
+                labeled = labeled.withColumn(value_col, quantize(F.col(value_col), exact_scale))
         else:
             corrected = combat(labeled, gene_col, sample_col, batch_col, value_col)
             labeled = corrected.join(

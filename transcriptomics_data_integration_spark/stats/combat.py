@@ -25,24 +25,27 @@ from __future__ import annotations
 
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.functions.exact import dec, dprod
-from transcriptomics_data_integration_spark.runtime import register_persisted
 
 EB_SCHEMA = (
     "gene_id string, batch string, gamma_star double, delta_star double"
 )
 
 
+def groups_per_batch(df: DataFrame, batch_col: str, group_col: str) -> list[int]:
+    """The number of distinct biological groups in each batch, from one
+    driver job; its length is the number of batches."""
+    per_batch = df.groupBy(batch_col).agg(F.countDistinct(group_col).alias("n"))
+    return [r["n"] for r in per_batch.collect()]
+
+
 def check_confounding(df: DataFrame, batch_col: str, group_col: str) -> bool:
     """True if every batch contains more than one biological group
     (reference confound check, `DiffExpression_closedPlatform.R:390-418`)."""
-    per_batch = df.groupBy(batch_col).agg(
-        F.countDistinct(group_col).alias("n_groups")
-    )
-    return per_batch.where(F.col("n_groups") < 2).count() == 0
+    return all(n >= 2 for n in groups_per_batch(df, batch_col, group_col))
 
 
 def _eb_solver(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -267,88 +270,63 @@ def combat_eb_fixed(
     - the ``n_iter`` fixed-point steps are plain column arithmetic,
       unrolled into the plan (and into the oracle's CTE chain).
 
-    Two fact passes (moments, adjust); everything between operates on
-    the bounded per-(gene, batch) relation.  Output: the adjusted long
-    relation (gene, sample, batch, value).
+    Two fact passes (moments, adjust).  Between them one window chain
+    runs over the bounded per-(gene, batch) relation: per-gene windows
+    give the grand mean and pooled variance, per-batch windows the EB
+    priors, and the fixed point reads the same rows, so nothing is
+    cached or joined back.  Output: the adjusted long relation (gene,
+    sample, batch, value).
     """
     s = exact_scale
-    per_gb = df.groupBy(gene_col, batch_col).agg(
-        F.count(F.lit(1)).alias("n_gb"),
+    by_gene, by_batch = Window.partitionBy(gene_col), Window.partitionBy(batch_col)
+    gb = df.groupBy(gene_col, batch_col).agg(
+        F.count(value_col).alias("n_gb"),
         F.sum(dec(value_col, s)).alias("_sx_d"),
         F.sum(dprod(value_col, value_col, s, s)).alias("_sx2_d"),
-    ).persist()  # 3 consumers: per-gene rollup, vp terms, EB stats
-    register_persisted(per_gb)
-    per_g = (
-        per_gb.groupBy(gene_col)
-        .agg(
-            F.sum("_sx_d").cast("double").alias("_sx_g"),
-            F.sum("n_gb").alias("n_g"),
-        )
-        .withColumn("gm", F.col("_sx_g") / F.col("n_g"))
-        .select(gene_col, "n_g", "gm")
     )
+    sx, sx2, n_gb = F.col("sx"), F.col("sx2"), F.col("n_gb")
     # pooled variance: per-batch centered-SS terms, tick-quantized
     # (scale 4) so the cross-batch sum is order-independent
-    gb = per_gb.select(
+    vp_tick = F.floor((sx2 - sx * sx / n_gb) * 1e4 + F.lit(0.5)).cast("decimal(38,0)")
+    n_g = F.sum("n_gb").over(by_gene)
+    gb = gb.select(
         gene_col,
         batch_col,
         "n_gb",
         F.col("_sx_d").cast("double").alias("sx"),
         F.col("_sx2_d").cast("double").alias("sx2"),
+        (F.sum("_sx_d").over(by_gene).cast("double") / n_g).alias("gm"),
+        n_g.alias("n_g"),
     )
-    vp_terms = gb.withColumn(
-        "_t",
-        F.floor(
-            (F.col("sx2") - F.col("sx") * F.col("sx") / F.col("n_gb")) * 1e4
-            + F.lit(0.5)
-        ).cast("decimal(38,0)"),
-    )
-    vp = (
-        vp_terms.groupBy(gene_col)
-        .agg(F.sum("_t").cast("double").alias("_tsum"))
-        .join(per_g, gene_col)
-        .withColumn("vp", F.col("_tsum") / 1e4 / F.col("n_g"))
-        .where(F.col("vp") > 0)
-        .select(gene_col, "n_g", "gm", "vp")
-    )
-    # standardized per-(gene, batch) moments from exact identities
+    gm, vp = F.col("gm"), F.col("vp")
     stats = (
-        gb.join(vp, gene_col)
+        gb.withColumn("vp", F.sum(vp_tick).over(by_gene).cast("double") / 1e4 / F.col("n_g"))
+        .where(vp > 0)
         # a (gene, batch) cell with one sample has no within-batch
         # variance — the Arrow solver drops it via var_samp -> NULL;
         # drop it BEFORE the d_hat division (ANSI errors on /0)
-        .where(F.col("n_gb") >= 2)
-        .withColumn("s_sum", (F.col("sx") - F.col("n_gb") * F.col("gm")) / F.sqrt("vp"))
-        .withColumn(
-            "s_sum2",
-            (
-                F.col("sx2")
-                - 2.0 * F.col("gm") * F.col("sx")
-                + F.col("n_gb") * F.col("gm") * F.col("gm")
-            )
-            / F.col("vp"),
-        )
-        .withColumn("g_hat", F.col("s_sum") / F.col("n_gb"))
+        .where(n_gb >= 2)
+        # standardized per-(gene, batch) moments from exact identities
+        .withColumn("s_sum", (sx - n_gb * gm) / F.sqrt(vp))
+        .withColumn("s_sum2", (sx2 - 2.0 * gm * sx + n_gb * gm * gm) / vp)
+        .withColumn("g_hat", F.col("s_sum") / n_gb)
         .withColumn(
             "d_hat",
-            (F.col("s_sum2") - F.col("s_sum") * F.col("s_sum") / F.col("n_gb"))
-            / (F.col("n_gb") - 1),
+            (F.col("s_sum2") - F.col("s_sum") * F.col("s_sum") / n_gb) / (n_gb - 1),
         )
         .where(F.col("d_hat") > 0)
-        # quantize to ticks so the per-batch prior aggregates below are
-        # exact decimal sums (scale 6: standardized stats are O(1-100))
-        .withColumn("gq", F.floor(F.col("g_hat") * 1e6 + F.lit(0.5)))
-        .withColumn("dq", F.floor(F.col("d_hat") * 1e6 + F.lit(0.5)))
-        .persist()  # consumers: prior aggregation + iteration rows
     )
-    register_persisted(stats)
-    gq, dq = F.col("gq").cast("decimal(18,0)"), F.col("dq").cast("decimal(18,0)")
-    priors = stats.groupBy(batch_col).agg(
-        F.count(F.lit(1)).alias("_G"),
-        F.sum(gq).cast("double").alias("_sg"),
-        F.sum((gq * gq).cast("decimal(38,0)")).cast("double").alias("_sg2"),
-        F.sum(dq).cast("double").alias("_sd"),
-        F.sum((dq * dq).cast("decimal(38,0)")).cast("double").alias("_sd2"),
+    # quantize to ticks so the per-batch prior sums are exact decimal
+    # sums (scale 6: standardized stats are O(1-100))
+    gq = F.floor(F.col("g_hat") * 1e6 + F.lit(0.5)).cast("decimal(18,0)")
+    dq = F.floor(F.col("d_hat") * 1e6 + F.lit(0.5)).cast("decimal(18,0)")
+    stats = stats.select(
+        "*",
+        F.count(F.lit(1)).over(by_batch).alias("_G"),
+        F.sum(gq).over(by_batch).cast("double").alias("_sg"),
+        F.sum((gq * gq).cast("decimal(38,0)")).over(by_batch).cast("double").alias("_sg2"),
+        F.sum(dq).over(by_batch).cast("double").alias("_sd"),
+        F.sum((dq * dq).cast("decimal(38,0)")).over(by_batch).cast("double").alias("_sd2"),
     )
     gbar = F.col("_sg") / F.col("_G") / 1e6
     t2 = (
@@ -362,8 +340,8 @@ def combat_eb_fixed(
         / (F.col("_G") - 1)
         / 1e12
     )
-    priors = (
-        priors.withColumn("gbar", gbar)
+    it = (
+        stats.withColumn("gbar", gbar)
         .withColumn("t2", F.when(F.col("_G") > 1, t2).otherwise(F.lit(1.0)))
         .withColumn("_m", mprior)
         .withColumn("_v", F.when(F.col("_G") > 1, vprior).otherwise(F.lit(1.0)))
@@ -383,10 +361,7 @@ def combat_eb_fixed(
                 / F.col("_v"),
             ).otherwise(F.col("_m")),
         )
-        .select(batch_col, "gbar", "t2", "aprior", "bprior")
-    )
-    it = stats.join(F.broadcast(priors), batch_col).withColumn(
-        "d_cur", F.col("d_hat")
+        .withColumn("d_cur", F.col("d_hat"))
     )
     n = F.col("n_gb").cast("double")
     for _ in range(n_iter):
@@ -425,23 +400,40 @@ def combat_eb_fixed(
 
 
 def batch_mean_center(
-    df: DataFrame, gene_col: str, batch_col: str, value_col: str
+    df: DataFrame,
+    gene_col: str,
+    batch_col: str,
+    value_col: str,
+    exact_scale: int | None = None,
 ) -> DataFrame:
     """Location-only batch adjustment (the closed-form core of ComBat
     without EB scale moderation): x - batch_mean_g + grand_mean_g with
-    the n-weighted grand mean.  Pure SQL; oracle-checkable."""
-    per_gb = df.groupBy(gene_col, batch_col).agg(
-        F.count(value_col).alias("n_gb"), F.avg(value_col).alias("mean_gb")
-    )
-    per_g = (
-        per_gb.groupBy(gene_col)
-        .agg(
-            (F.sum(F.col("n_gb") * F.col("mean_gb")) / F.sum("n_gb")).alias("grand_mean")
+    the n-weighted grand mean.  Both means skip null cells.  With
+    ``exact_scale`` the sums accumulate in DECIMAL, so the adjusted
+    value is the same double in every engine.  Pure SQL;
+    oracle-checkable.
+
+    One fact aggregation per (gene, batch); the per-gene totals are
+    windows over that bounded relation (decimal sums are associative,
+    so with ``exact_scale`` they equal a direct fact aggregation), and
+    it joins back to the facts once.
+    """
+    v = F.col(value_col) if exact_scale is None else dec(value_col, exact_scale)
+    w = Window.partitionBy(gene_col)
+    per_gb = (
+        df.groupBy(gene_col, batch_col)
+        .agg(F.sum(v).alias("_s_gb"), F.count(value_col).alias("_n_gb"))
+        .select(
+            gene_col,
+            batch_col,
+            (F.col("_s_gb").cast("double") / F.col("_n_gb")).alias("_m_gb"),
+            (
+                F.sum("_s_gb").over(w).cast("double") / F.sum("_n_gb").over(w)
+            ).alias("_m_g"),
         )
     )
     return (
-        df.join(F.broadcast(per_gb.select(gene_col, batch_col, "mean_gb")), [gene_col, batch_col])
-        .join(F.broadcast(per_g), gene_col)
-        .withColumn(value_col, F.col(value_col) - F.col("mean_gb") + F.col("grand_mean"))
-        .drop("mean_gb", "grand_mean", "n_gb")
+        df.join(per_gb, [gene_col, batch_col])
+        .withColumn(value_col, F.col(value_col) - F.col("_m_gb") + F.col("_m_g"))
+        .drop("_m_gb", "_m_g")
     )

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from transcriptomics_data_integration_spark.runtime import register_persisted
-
 
 def permuted_labels(
     samples: DataFrame, sample_col: str, group_col: str, n_perm: int
@@ -73,26 +71,21 @@ def permutation_fdr(
 
     perms = permuted_labels(df, sample_col, group_col, n_perm)
     expanded = df.join(perms, sample_col)
-    # persisted: (gene x K) rows, bounded — its two consumers (observed
-    # split + permuted split) would otherwise each re-execute the
-    # K-expanded fact aggregation
     tstats = two_group_ttest(
         expanded, [gene_col, "k"], "perm_group", value_col, group_a, group_b, exact_scale
-    ).select(gene_col, "k", "t_statistic").persist()
-    register_persisted(tstats)
-    obs = tstats.where(F.col("k") == 0).select(
-        gene_col, F.col("t_statistic").alias("t_obs")
     )
-    perm = tstats.where(F.col("k") > 0)
-    joined = perm.join(obs, gene_col)
+    # the observed t rides along each gene's (gene x K) rows as a
+    # window, so the t relation has one consumer and needs no cache
+    t = F.col("t_statistic")
+    t_obs = F.max(F.when(F.col("k") == 0, t)).over(Window.partitionBy(gene_col))
     return (
-        joined.groupBy(gene_col)
+        tstats.withColumn("t_obs", t_obs)
+        .where((F.col("k") > 0) & F.col("t_obs").isNotNull())
+        .groupBy(gene_col)
         .agg(
-            F.first("t_obs").alias("t_obs"),
+            F.max("t_obs").alias("t_obs"),
             F.count(F.lit(1)).alias("n_perm_done"),
-            F.sum(
-                F.when(F.abs(F.col("t_statistic")) >= F.abs(F.col("t_obs")), 1).otherwise(0)
-            ).alias("n_extreme"),
+            F.sum(F.when(F.abs(t) >= F.abs(F.col("t_obs")), 1).otherwise(0)).alias("n_extreme"),
         )
         .withColumn("p_perm", (1 + F.col("n_extreme")) / (F.col("n_perm_done") + 1))
     )

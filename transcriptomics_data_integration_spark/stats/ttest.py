@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from transcriptomics_data_integration_spark.functions.exact import (
     dsum,
     dsum2,
+    quantize,
     var_from_moments,
 )
 from transcriptomics_data_integration_spark.functions.normal import two_sided_p_sql
@@ -180,7 +181,11 @@ def squeeze_var_fitfdist(with_s2: DataFrame) -> DataFrame:
         s2post = (d0 * s2_0 + df_g * s2_g) / (d0 + df_g)
 
     evar <= 0 degenerates to d0 = Inf, s2post = exp(mean(e)) — full
-    shrinkage, as in limma.  The polygamma family and the fixed-
+    shrinkage, as in limma; so does a single gene, whose var(e) is
+    null.  mean(e), var(e) and mean(trigamma) are taken from exact
+    DECIMAL sums of e and trigamma quantized tie-free to 12 decimals
+    (functions/exact.py), so the prior does not depend on the plan's
+    row order or partitioning.  The polygamma family and the fixed-
     schedule Newton ``trigammaInverse`` are portable SQL text
     (functions/special.py), so the whole prior stays IN the lazy plan
     (no driver action) and the DuckDB oracle can replay it
@@ -199,11 +204,11 @@ def squeeze_var_fitfdist(with_s2: DataFrame) -> DataFrame:
     embedded twice in every consuming plan, seconds of construction
     per query).  Here the prior is finished at plan-build time
     instead: the bounded per-gene relation is persisted (gene-count
-    rows, never data-sized), the two moment aggregates are collected
-    (tiny map-side-partial jobs over the cache), and the Newton chain
-    runs ONCE on a 1-row relation — still through the Spark SQL
-    expression engine, so the arithmetic is bit-identical to the
-    in-plan r4 form and the DuckDB oracle replays it unchanged.  The
+    rows, never data-sized), the median and the moment sums are
+    collected (tiny map-side-partial jobs over the cache), and the
+    Newton chain runs ONCE on a 1-row relation — still through the
+    Spark SQL expression engine, so the DuckDB oracle replays the
+    same arithmetic.  The
     returned plan carries only the finished (d0, s2_0) LITERALS and
     two codegen-able arithmetic CASEs per row; the giant tree never
     enters a composed plan (so downstream ``optimizedPlan``-stats
@@ -225,6 +230,17 @@ def squeeze_var_fitfdist(with_s2: DataFrame) -> DataFrame:
         return ws2.withColumn("_s2_post", F.col("_s2")).withColumn(
             "_d0", F.lit(float("inf"))
         )
+
+    def tick_sum(agg, c: str) -> Column:
+        """``agg`` (dsum or dsum2) of ``c`` quantized tie-free to 12
+        decimals.  A non-finite e or trigamma (an infinite variance)
+        has no decimal tick; the NaN term carries it into every moment,
+        as a float sum would."""
+        x = F.col(c)
+        ticks = F.when(F.abs(x) < F.lit(float("inf")), quantize(x, 12))
+        nonfinite = (F.sum("_e") + F.sum("_tri")) * 0.0
+        return F.coalesce(agg(ticks, 12), F.lit(0.0)) + nonfinite
+
     mom = (
         ws2.withColumn("_tri", F.expr(trigamma_sql("(_df / 2.0e0)")))
         .withColumn("_dig", F.expr(digamma_sql("(_df / 2.0e0)")))
@@ -237,15 +253,23 @@ def squeeze_var_fitfdist(with_s2: DataFrame) -> DataFrame:
             ),
         )
         .agg(
-            F.avg("_e").alias("_emean"),
-            F.var_samp("_e").alias("_evsamp"),
-            F.avg("_tri").alias("_tribar"),
+            F.count("_e").alias("_n"),
+            tick_sum(dsum, "_e").alias("_se"),
+            tick_sum(dsum2, "_e").alias("_se2"),
+            tick_sum(dsum, "_tri").alias("_stri"),
+        )
+        .select(
+            (F.col("_se") / F.col("_n")).alias("_emean"),
+            F.when(
+                F.col("_n") >= 2, var_from_moments(F.col("_se"), F.col("_se2"), F.col("_n"))
+            ).alias("_evsamp"),
+            (F.col("_stri") / F.col("_n")).alias("_tribar"),
         )
         .collect()[0]
     )
     emean, evsamp, tribar = mom["_emean"], mom["_evsamp"], mom["_tribar"]
     if evsamp is None or tribar is None:
-        # single-gene input: var_samp is NULL, so the r4 in-plan CASE
+        # single-gene input: var(e) is NULL, so the r4 in-plan CASE
         # (NULL > 0 is false) took the degenerate full-shrinkage branch
         evar = "(CAST(NULL AS DOUBLE) - CAST(NULL AS DOUBLE))"
     else:

@@ -692,10 +692,10 @@ WITH cells AS (
          sample_id % 3 AS b
   FROM cells
 ), per_gb AS (
-  SELECT gene_id, b, {dsum.format(x='v')} AS s_gb, COUNT(*) AS n_gb
+  SELECT gene_id, b, {dsum.format(x='v')} AS s_gb, COUNT(v) AS n_gb
   FROM lab GROUP BY gene_id, b
 ), per_g AS (
-  SELECT gene_id, {dsum.format(x='v')} AS s_g, COUNT(*) AS n_g
+  SELECT gene_id, {dsum.format(x='v')} AS s_g, COUNT(v) AS n_g
   FROM lab GROUP BY gene_id
 ), adjv AS (
   SELECT l.gene_id, l.sample_id, l.grp,
@@ -1145,7 +1145,7 @@ WITH cells AS (
 ), cb AS (
   SELECT *, 'b' || CAST(sample_id % 3 AS VARCHAR) AS batch FROM cells
 ), pgb AS (
-  SELECT gene_id, batch, COUNT(*) AS n_gb,
+  SELECT gene_id, batch, COUNT(v) AS n_gb,
          {dsum.format(x='v')} AS sxd,
          {dsum2.format(x='v')} AS sx2d
   FROM cb GROUP BY 1, 2

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.functions.normal import two_sided_p_sql
+from transcriptomics_data_integration_spark.stats.combat import batch_mean_center
 from transcriptomics_data_integration_spark.stats.enrichment import enrichment_chi2
 from transcriptomics_data_integration_spark.stats.icc import icc
 from transcriptomics_data_integration_spark.stats.permutation import permutation_fdr
@@ -78,28 +79,15 @@ def q_batch_center(spark: SparkSession, sf_dir: str) -> DataFrame:
     x - batch_mean_g + weighted grand_mean_g, exact decimal moments
     (`DiffExpression_closedPlatform.R:368-437`)."""
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 100)
-    per_gb = li.groupBy("l_partkey", "l_linestatus").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("s_gb"),
-        F.count(F.lit(1)).alias("n_gb"),
+    adjusted = batch_mean_center(
+        li, "l_partkey", "l_linestatus", "l_extendedprice", exact_scale=2
     )
-    per_g = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("s_g"),
-        F.count(F.lit(1)).alias("n_g"),
-    )
-    return (
-        li.join(F.broadcast(per_gb), ["l_partkey", "l_linestatus"])
-        .join(F.broadcast(per_g), "l_partkey")
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_partkey",
-            "l_linestatus",
-            (
-                F.col("l_extendedprice")
-                - F.col("s_gb") / F.col("n_gb")
-                + F.col("s_g") / F.col("n_g")
-            ).alias("adjusted"),
-        )
+    return adjusted.select(
+        "l_orderkey",
+        "l_linenumber",
+        "l_partkey",
+        "l_linestatus",
+        F.col("l_extendedprice").alias("adjusted"),
     )
 
 
@@ -108,11 +96,13 @@ WITH li AS (
   SELECT * FROM lineitem WHERE l_partkey <= 100
 ), per_gb AS (
   SELECT l_partkey, l_linestatus,
-         {_DSUM.format(x='l_extendedprice')} AS s_gb, COUNT(*) AS n_gb
+         {_DSUM.format(x='l_extendedprice')} AS s_gb,
+         COUNT(l_extendedprice) AS n_gb
   FROM li GROUP BY l_partkey, l_linestatus
 ), per_g AS (
   SELECT l_partkey,
-         {_DSUM.format(x='l_extendedprice')} AS s_g, COUNT(*) AS n_g
+         {_DSUM.format(x='l_extendedprice')} AS s_g,
+         COUNT(l_extendedprice) AS n_g
   FROM li GROUP BY l_partkey
 )
 SELECT l_orderkey, l_linenumber, li.l_partkey, li.l_linestatus,
