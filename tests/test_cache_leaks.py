@@ -2,22 +2,37 @@
 through ``runtime.register_persisted``, so once its action has run,
 ``cleanup_persisted()`` leaves the session's CacheManager empty.  An
 unregistered ``.cache()`` would outlive the query and be silently read
-by a later call on the same input.  The dedup pair operators and the
-closed-platform DE chain give each relation one consumer, so they
-persist nothing (DE keeps only the eBayes prior's per-gene input)."""
+by a later call on the same input.  The near-duplicate pair operators
+(one banded-pairs kernel) and the closed-platform DE chain give each
+relation one consumer, so they persist nothing (DE keeps only the
+eBayes prior's per-gene input)."""
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.llmdata.dedup import (
     dedup_clusters,
+    edit_distance_pairs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    simhash_neardup_pairs,
 )
+from transcriptomics_data_integration_spark.llmdata.multimodal import (
+    dhash_neardup_pairs,
+    encode_avi_mjpeg,
+    encode_png,
+    hamming_neardup_pairs_wide,
+    image_dhash,
+    image_dhash_wide,
+    video_neardup_offset_tolerant,
+    video_phash_wide,
+)
+from transcriptomics_data_integration_spark.llmdata.similarity import cosine_neardup_pairs
 from transcriptomics_data_integration_spark.pipelines import meta_analysis
 from transcriptomics_data_integration_spark.pipelines.diffexpr import (
     differential_expression,
@@ -107,10 +122,81 @@ def _permutation_fdr(spark):
     return permutation_fdr(labeled, "gene_id", "sample_id", "grp", "value", "A", "B", n_perm=10)
 
 
+def _images(spark):
+    """A gradient image, a brightened copy, a one-pixel edit and an
+    unrelated image, as PNG payloads."""
+    r = np.arange(16).reshape(-1, 1)
+    c = np.arange(18).reshape(1, -1)
+    base = (5 * (r * 19 + c * 7 + 1) + 3 * r * c) % 200
+    edited = base.copy()
+    edited[6, 9] += 90
+    other = (11 * (r * 5 + c * 13 + 3) + 7 * r * r) % 200
+    rows = [
+        (i, bytearray(encode_png(np.repeat(np.clip(g, 0, 255).astype(np.uint8)[:, :, None], 3, axis=2))))
+        for i, g in enumerate([base, base + 40, edited, other], start=1)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, payload binary")
+
+
+def _clips(spark):
+    """An 8-frame MJPEG clip, its one-frame delay and an unrelated clip."""
+    ones = np.ones((8, 8), dtype=np.uint8)
+
+    def frames(seed, n=8):
+        rng = np.random.RandomState(seed)
+        return [np.kron(rng.randint(0, 256, (2, 17)).astype(np.uint8), ones) for _ in range(n)]
+
+    base = frames(7)
+    clips = {1: base, 2: frames(555, 1) + base[:-1], 3: frames(99)}
+    return spark.createDataFrame(
+        [(i, bytearray(encode_avi_mjpeg(fs, fps=12))) for i, fs in clips.items()],
+        "doc_id long, payload binary",
+    )
+
+
+def _vectors(spark):
+    """40 unit vectors and a slightly shifted copy of each."""
+    rnd = random.Random(11)
+    base = []
+    for i in range(40):
+        v = [rnd.gauss(0, 1) for _ in range(16)]
+        n = sum(x * x for x in v) ** 0.5
+        base.append((i, [x / n for x in v]))
+    planted = [(i + 1000, [x + 1e-4 for x in v]) for i, v in base]
+    return spark.createDataFrame(base + planted, "vec_id long, embedding array<double>")
+
+
+def _words(spark):
+    words = ["spark", "spork", "sparks", "shuffle", "shufle", "shovel", "join", "joins"]
+    return spark.createDataFrame(list(enumerate(words)), "id long, w string")
+
+
+# every near-duplicate pair operator, each through the banded-pairs
+# kernel: (family, builder of the DataFrame its action collects)
+NEARDUP = [
+    ("minhash_lsh_pairs_all", lambda s: dedup_clusters(minhash_lsh_pairs(_docs(s), "doc_id", expand="all"))),
+    ("minhash_lsh_pairs_star", lambda s: dedup_clusters(minhash_lsh_pairs(_docs(s), "doc_id", expand="star"))),
+    ("simhash_neardup_pairs_all", lambda s: dedup_clusters(simhash_neardup_pairs(_docs(s), "doc_id", expand="all"))),
+    ("simhash_neardup_pairs_star", lambda s: dedup_clusters(simhash_neardup_pairs(_docs(s), "doc_id", expand="star"))),
+    ("edit_distance_pairs", lambda s: edit_distance_pairs(_words(s), "id", "w")),
+    ("dhash_neardup_pairs", lambda s: dhash_neardup_pairs(image_dhash(_images(s), "doc_id"), "doc_id")),
+    (
+        "hamming_neardup_pairs_wide",
+        lambda s: hamming_neardup_pairs_wide(image_dhash_wide(_images(s), "doc_id"), "doc_id", n_words=8),
+    ),
+    (
+        "video_neardup_offset_tolerant",
+        lambda s: video_neardup_offset_tolerant(video_phash_wide(_clips(s), "doc_id"), "doc_id", n_frames=8),
+    ),
+    (
+        "cosine_neardup_pairs",
+        lambda s: cosine_neardup_pairs(_vectors(s), threshold=0.999, n_planes=8, n_bands=4, dim=16),
+    ),
+]
+
 # (operator, builder of the DataFrame its action collects, whether it caches)
 CASES = [
-    ("minhash_lsh_pairs_all", lambda s: dedup_clusters(minhash_lsh_pairs(_docs(s), "doc_id", expand="all")), False),
-    ("minhash_lsh_pairs_star", lambda s: dedup_clusters(minhash_lsh_pairs(_docs(s), "doc_id", expand="star")), False),
+    *[(name, build, False) for name, build in NEARDUP],
     ("ngram_jaccard_pairs", lambda s: ngram_jaccard_pairs(_docs(s), "doc_id"), False),
     ("meta_analysis", _meta, False),
     ("p_adjust", _p_adjust, True),
@@ -147,6 +233,75 @@ def _cold_jobs(spark, group, build):
         sc.setLocalProperty("spark.jobGroup.id", None)
         cleanup_persisted()
     return rows, len(jobs)
+
+
+def _plan_nodes(df, node):
+    """(collected rows, occurrences of ``node`` in ``df``'s final
+    adaptive plan, occurrences in its initial plan).  A reused exchange
+    is one line in the final plan, so the first count is the number of
+    times the node ran; the initial plan is planned before any exchange
+    is reused."""
+    rows = df.collect()
+    final, initial = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")
+    return rows, final.count(node), initial.count(node)
+
+
+# Spark jobs each family's builder runs from a cold cache (the MinHash
+# and SimHash builders include dedup_clusters).  A persist adds jobs,
+# so a bound at the measured count keeps every family cache-free; the
+# persisted forms ran 5 (dHash), 5 (wide), 9 (video) and 6 (cosine).
+NEARDUP_JOBS = {
+    "minhash_lsh_pairs_all": 11,
+    "minhash_lsh_pairs_star": 9,
+    "simhash_neardup_pairs_all": 8,
+    "simhash_neardup_pairs_star": 10,
+    "edit_distance_pairs": 4,
+    "dhash_neardup_pairs": 4,
+    "hamming_neardup_pairs_wide": 4,
+    "video_neardup_offset_tolerant": 4,
+    "cosine_neardup_pairs": 4,
+}
+
+
+@pytest.mark.parametrize("name,build", NEARDUP, ids=[n for n, _ in NEARDUP])
+def test_neardup_pairs_in_few_jobs(spark, name, build):
+    rows, jobs = _cold_jobs(spark, f"{name}_jobs", lambda: build(spark))
+    assert rows
+    assert jobs <= NEARDUP_JOBS[name], jobs
+
+
+def test_dhash_pairs_decode_each_image_once(spark, tmp_path):
+    """Both sides of the band self-join read one exchange, so the image
+    codec runs once even on a parquet input, where Spark broadcasts one
+    side of the join and would otherwise plan the codec twice."""
+    path = str(tmp_path / "images")
+    _images(spark).write.parquet(path)
+    pairs = dhash_neardup_pairs(image_dhash(spark.read.parquet(path), "doc_id"), "doc_id")
+    rows, codecs, _ = _plan_nodes(pairs, "MapInPandas")
+    assert {(r["id_a"], r["id_b"]) for r in rows} >= {(1, 2), (1, 3)}
+    assert codecs == 1
+
+
+def test_permutation_fdr_reads_facts_twice(spark, tmp_path):
+    """The permuted labels come from one read of the facts' labels (the
+    collected sample sheet, whose deck each row reads one element of —
+    no self-join), and the t statistics read the facts once more: the
+    query's own plan holds one scan (the self-join form planned 3)."""
+    path = str(tmp_path / "cells")
+    rows = [
+        (f"g{g}", f"s{j}", "A" if j < 5 else "B", 10.0 + g + (j * 7 + g) % 5 + (2.0 if j < 5 else 0.0))
+        for g in range(4)
+        for j in range(10)
+    ]
+    spark.createDataFrame(rows, "gene_id string, sample_id string, grp string, value double").coalesce(
+        1
+    ).write.parquet(path)
+    cells = spark.read.parquet(path)
+    assert cells.count() == 40
+    out = permutation_fdr(cells, "gene_id", "sample_id", "grp", "value", "A", "B", n_perm=10)
+    rows, scans, planned = _plan_nodes(out, "FileScan parquet")
+    assert len(rows) == 4
+    assert scans == 1 and planned == 1, (scans, planned)
 
 
 def test_minhash_lsh_pairs_star_clusters_in_few_jobs(spark):

@@ -10,9 +10,10 @@ from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.llmdata.dedup import (
     exact_dedup,
-    lsh_candidates,
-    minhash_signatures,
+    lsh_candidates_from_columns,
+    minhash_sig_columns,
     ngram_jaccard_pairs,
+    shingles,
     simhash,
 )
 from transcriptomics_data_integration_spark.llmdata.multimodal import (
@@ -74,12 +75,13 @@ def test_ngram_jaccard_identical_docs(spark):
 
 def test_minhash_identical_docs_share_all_bands(spark):
     df = _docs(spark, [(1, "abcdefghijklm"), (2, "abcdefghijklm"), (3, "nopqrstuvwxyz")])
-    sigs = minhash_signatures(df, "doc_id")
+    sigs = minhash_sig_columns(shingles(df, "doc_id"), "doc_id")
     # identical shingle sets -> identical signatures
-    s1 = {r["seed"]: r["minhash"] for r in sigs.where("doc_id = 1").collect()}
-    s2 = {r["seed"]: r["minhash"] for r in sigs.where("doc_id = 2").collect()}
-    assert s1 == s2
-    cands = lsh_candidates(sigs, "doc_id").collect()
+    rows = {r["doc_id"]: r.asDict() for r in sigs.collect()}
+    assert {k: v for k, v in rows[1].items() if k != "doc_id"} == {
+        k: v for k, v in rows[2].items() if k != "doc_id"
+    }
+    cands = lsh_candidates_from_columns(sigs, "doc_id").collect()
     assert {(r["id_a"], r["id_b"]) for r in cands} == {(1, 2)}
 
 
@@ -90,8 +92,9 @@ def test_minhash_matches_python_md5(spark):
     # independent lanes per md5 call (r9 recipe)
     text = "abcdefg"
     df = _docs(spark, [(1, text)])
-    sigs = {r["seed"]: r["minhash"] for r in minhash_signatures(df, "doc_id").collect()}
-    shingles = {text[i : i + 5] for i in range(len(text) - 4)}
+    (row,) = minhash_sig_columns(shingles(df, "doc_id"), "doc_id").collect()
+    sigs = {j: row[f"m{j}"] for j in range(16)}
+    grams = {text[i : i + 5] for i in range(len(text) - 4)}
 
     def lane(s, j):
         w = (j // 2) % 2
@@ -102,7 +105,7 @@ def test_minhash_matches_python_md5(spark):
         return word >> 30 if j % 2 == 0 else word & ((1 << 30) - 1)
 
     for seed in (0, 1, 2, 3, 4, 7, 15):
-        assert sigs[seed] == min(lane(s, seed) for s in shingles)
+        assert sigs[seed] == min(lane(s, seed) for s in grams)
 
 
 def test_simhash_equal_for_identical_token_multisets(spark):
@@ -264,6 +267,31 @@ def test_cosine_neardup_finds_planted_pairs(spark):
     # 2-bit bands -> every planted pair is a candidate; all must verify
     assert pairs == {(i, i + 1000) for i in range(40)}
     assert all(r["cosine"] > 0.999 for r in out)
+
+
+def test_simhash_star_and_all_agree_on_null_text(spark):
+    """Null text has no digest, so it is no one's exact duplicate: the
+    star edge set pairs no null docs, and star and all give the same
+    clusters when some texts are null."""
+    from transcriptomics_data_integration_spark.llmdata.dedup import (
+        dedup_clusters,
+        simhash_neardup_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delta"), (2, None), (3, None)],
+        "doc_id long, text string",
+    )
+    star = simhash_neardup_pairs(docs, "doc_id", expand="star")
+    assert {tuple(r) for r in star.collect()} == {(0, 1, 0)}
+    clusters = {
+        mode: {
+            (r["doc_id"], r["canonical_id"])
+            for r in dedup_clusters(simhash_neardup_pairs(docs, "doc_id", expand=mode)).collect()
+        }
+        for mode in ("all", "star")
+    }
+    assert clusters["all"] == clusters["star"] == {(0, 0), (1, 0)}
 
 
 def test_minhash_accuracy_estimator_calibration(spark):
@@ -495,26 +523,6 @@ def test_simhash_neardup_pigeonhole_complete(spark):
                 expect[(a, b)] = bin(sigs[a] ^ sigs[b]).count("1")
     assert got == expect
     assert got[(1, 2)] == 0  # exact dup found at distance 0
-
-
-def test_minhash_columnar_equals_long_form(spark):
-    from transcriptomics_data_integration_spark.llmdata.dedup import (
-        minhash_from_shingles,
-        minhash_sig_columns,
-        shingles,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "abcdefgh"), (2, "abcdxyzw"), (3, "qqqqqqqq")], ["doc_id", "text"]
-    )
-    sh = shingles(df, "doc_id")
-    long = {
-        (r["doc_id"], r["seed"]): r["minhash"]
-        for r in minhash_from_shingles(sh, "doc_id", n_hashes=4).collect()
-    }
-    for r in minhash_sig_columns(sh, "doc_id", n_hashes=4).collect():
-        for j in range(4):
-            assert r[f"m{j}"] == long[(r["doc_id"], j)]
 
 
 def test_connected_components_chain_and_cliques(spark, monkeypatch):
@@ -4584,3 +4592,28 @@ def test_video_offset_tolerant_tier_catches_trims(spark):
     shift, ham = tol[(1, 2)]
     assert abs(shift) == 1 and ham <= 6
     assert not any(3 in p for p in tol)
+
+
+def test_unrolled_hamming_verify_rejects_other_fingerprint_sizes(spark):
+    """The unrolled verifies read words 1..n only: a 10-word pair that
+    differs in words 9-10 (32 bits) would pass as hamming 0 at n = 8,
+    so any fingerprint whose size is not n raises; the generic folds
+    see every word."""
+    from transcriptomics_data_integration_spark.llmdata.multimodal import (
+        hamming_neardup_pairs_wide,
+        video_neardup_offset_tolerant,
+    )
+
+    base = list(range(1, 11))
+    twin = base[:8] + [w ^ 0xFFFF for w in base[8:]]
+    hdf = spark.createDataFrame([(1, base), (2, twin)], "doc_id long, dwords array<long>")
+    assert not hamming_neardup_pairs_wide(hdf, "doc_id", max_hamming=6).collect()
+    assert not video_neardup_offset_tolerant(hdf, "doc_id", max_hamming=6).collect()
+    with pytest.raises(Exception, match="holds 10 words, not 8"):
+        hamming_neardup_pairs_wide(hdf, "doc_id", max_hamming=6, n_words=8).collect()
+    with pytest.raises(Exception, match="holds 10 words, not 8"):
+        video_neardup_offset_tolerant(hdf, "doc_id", max_hamming=6, n_frames=8).collect()
+    # the exact size still verifies with the unrolled sums
+    assert hamming_neardup_pairs_wide(hdf, "doc_id", max_hamming=32, n_words=10).collect() == [
+        (1, 2, 32)
+    ]

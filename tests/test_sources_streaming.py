@@ -498,7 +498,8 @@ def test_streaming_minhash_neardup_finds_cross_batch_dups(spark, tmp_path):
     via band-bucket state; signatures agree bit-for-bit with the batch
     minhash pipeline."""
     from transcriptomics_data_integration_spark.llmdata.dedup import (
-        minhash_signatures,
+        minhash_sig_columns,
+        shingles,
     )
     from transcriptomics_data_integration_spark.streaming.ingest import (
         run_stream_to_memory,
@@ -532,10 +533,14 @@ def test_streaming_minhash_neardup_finds_cross_batch_dups(spark, tmp_path):
 
     # the streamed signature path is bit-identical to the batch one:
     # an exact-dup pair agrees on ALL 16 positions in both worlds
-    batch_sigs = minhash_signatures(
-        b1.unionByName(b2), "doc_id", "text"
-    ).groupBy("doc_id").count().collect()
-    assert {r["doc_id"]: r["count"] for r in batch_sigs} == {1: 16, 2: 16, 3: 16}
+    batch_sigs = {
+        r["doc_id"]: [r[f"m{j}"] for j in range(16)]
+        for r in minhash_sig_columns(
+            shingles(b1.unionByName(b2), "doc_id", "text"), "doc_id"
+        ).collect()
+    }
+    assert set(batch_sigs) == {1, 2, 3}
+    assert batch_sigs[1] == batch_sigs[3] != batch_sigs[2]
 
 
 def test_streaming_minhash_state_cap_evicts_oldest(spark, tmp_path):

@@ -124,6 +124,25 @@ def test_permuted_labels_preserve_multiset(spark):
     assert ident.where("perm_group != grp").count() == 0
 
 
+def test_permuted_labels_match_python_deal(spark):
+    """A cohort of 300 samples: every permutation deals the labels, in
+    sample order, to the samples in md5(sample || '#' || k) order."""
+    import hashlib
+
+    labels = {f"s{i:03d}": "ABC"[(i * 7) % 3] for i in range(300)}
+    samples = spark.createDataFrame(sorted(labels.items()), ["sample_id", "grp"])
+    got = {
+        (r["sample_id"], r["k"]): r["perm_group"]
+        for r in permuted_labels(samples, "sample_id", "grp", n_perm=3).collect()
+    }
+    deck = [labels[s] for s in sorted(labels)]
+    want = {(s, 0): g for s, g in labels.items()}
+    for k in range(1, 4):
+        order = sorted(labels, key=lambda s: (hashlib.md5(f"{s}#{k}".encode()).hexdigest(), s))
+        want.update({(s, k): deck[i] for i, s in enumerate(order)})
+    assert got == want
+
+
 def test_permutation_fdr_detects_real_effect(spark):
     rows = []
     for s in range(12):

@@ -25,7 +25,6 @@ from transcriptomics_data_integration_spark.llmdata.text import (
 from transcriptomics_data_integration_spark.llmdata.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
-    minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
 )
@@ -60,7 +59,6 @@ __all__ = [
     "exact_dedup",
     "language_id",
     "minhash_lsh_pairs",
-    "minhash_signatures",
     "ngram_jaccard_pairs",
     "simhash",
     "text_quality",

@@ -11,13 +11,19 @@ Scale notes (the reason each variant exists):
 - ``ngram_jaccard_pairs``: exact pairwise Jaccard via shingle inverted
   index — O(sum of postings^2) worst case; the quadratic baseline.
   Use only within small candidate buckets.
-- ``minhash_signatures`` + ``lsh_candidates``: the scale path.  k
-  min-hashes per doc (one shuffle), banded into b bands; docs sharing a
-  band bucket are candidates (equi-join on band hash — linear-ish when
-  near-dup clusters are bounded).  Candidates are then verified with
-  exact Jaccard.
-- ``simhash``: 60-bit weighted-bit signature; equal or near-equal
-  signatures (banded) find near-dups with one shuffle.
+- ``minhash_lsh_pairs``: the scale path.  n min-hashes per doc as
+  columns (``minhash_sig_columns``, one shuffle), banded into b bands;
+  docs sharing a band bucket are candidates, verified with exact
+  Jaccard on the shingle-id sets that ride the band rows.
+- ``simhash_neardup_pairs``: 60-bit weighted-bit signature; near-equal
+  signatures (banded, pigeonhole-exact) verified by Hamming distance.
+- ``edit_distance_pairs``: symmetric-delete variants as band keys,
+  verified by Levenshtein distance.
+
+Every near-duplicate pair operator — these, the perceptual-hash ones in
+``multimodal`` and ``similarity.cosine_neardup_pairs`` — is candidate
+generation by bucketing followed by exact verification, and runs
+through one kernel, :func:`_banded_pairs`.
 """
 
 from __future__ import annotations
@@ -132,19 +138,133 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
     )
 
 
-def _jaccard() -> Column:
-    """Jaccard from the integer counts ``n_inter``, ``n_a``, ``n_b`` — one
-    IEEE division, so bit-identical across engines."""
-    return F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+def _jaccard(
+    n_inter: Column | str = "n_inter", n_a: Column | str = "n_a", n_b: Column | str = "n_b"
+) -> Column:
+    """Jaccard from integer counts (by default the columns ``n_inter``,
+    ``n_a``, ``n_b``) — one IEEE division, so bit-identical across
+    engines."""
+    i, a, b = (F.col(c) if isinstance(c, str) else c for c in (n_inter, n_a, n_b))
+    return i / (a + b - i)
 
 
-def _set_counts(set_a: str, set_b: str) -> list[Column]:
+def _set_counts(set_a: str, set_b: str) -> dict[str, Column]:
     """``n_inter``, ``n_a``, ``n_b`` of two shingle-id set columns."""
-    return [
-        F.size(F.array_intersect(set_a, set_b)).alias("n_inter"),
-        F.size(set_a).alias("n_a"),
-        F.size(set_b).alias("n_b"),
-    ]
+    return {
+        "n_inter": F.size(F.array_intersect(set_a, set_b)),
+        "n_a": F.size(set_a),
+        "n_b": F.size(set_b),
+    }
+
+
+# --- Banded pairs: the one near-duplicate kernel --------------------------
+#
+# Every near-duplicate pair operator is candidate generation by
+# bucketing followed by exact verification.  A family emits one row per
+# (item, band) — ``id``, ``band``, ``band_key`` and the payload its
+# check reads — and supplies the check; items sharing a (band,
+# band_key) bucket are candidates.  The payload rides the band rows, so
+# each candidate row holds both payloads and verifies in place, with no
+# join back to a per-item relation and nothing persisted.
+
+
+def _banded_pairs(
+    rows: DataFrame,
+    verify: dict[str, Column],
+    keep: Column | None = None,
+    max_bucket: int | None = None,
+    shuffle: bool = False,
+    dedup_first: bool = False,
+) -> DataFrame:
+    """Verified pairs ``(id_a, id_b, *verify)`` with id_a < id_b, distinct.
+
+    ``rows`` holds ``id``, ``band``, ``band_key`` and payload columns; a
+    payload ``p`` is ``p_a`` on the smaller id's side of a candidate and
+    ``p_b`` on the other.  ``verify`` names the output columns computed
+    from those, and ``keep`` is the predicate (over payloads and
+    outputs) a verified pair meets.  A pair sharing several buckets
+    surfaces once per bucket; the outputs are a pure function of the
+    pair, so checking before the final distinct returns the same set
+    and the distinct's exchange carries only verified pairs.
+    ``dedup_first`` instead takes the distinct of the candidates with
+    both payloads and checks each pair once: for a check that costs
+    more than shuffling its payloads (the shift-swept video fold, run
+    once per shared anchor, doubled that query's time).
+
+    ``max_bucket`` caps bucket size: a (band, band_key) bucket with
+    more rows is left out of the join (a window count on the join's own
+    key).  A true pair is lost only if every bucket it shares is over
+    the cap — a dup storm that exact dedup upstream should collapse.
+
+    ``shuffle`` hash-partitions the rows on (band, band_key) before the
+    self-join, so both join sides read one exchange and the rows'
+    producer runs once even where Spark broadcasts one side and reuses
+    no exchange (a small parquet input ran an image codec twice without
+    it).  Rows made by a per-row producer (a Python codec, a hyperplane
+    fold) set it; rows behind an aggregate (MinHash, SimHash) are read
+    once through the aggregate's own reused exchange, and an extra
+    exchange there only costs time.
+    """
+    if shuffle:
+        rows = rows.repartition("band", "band_key")
+    if max_bucket is not None:
+        size = F.count(F.lit(1)).over(Window.partitionBy("band", "band_key"))
+        rows = rows.withColumn("_bn", size).where(F.col("_bn") <= max_bucket).drop("_bn")
+    payload = [c for c in rows.columns if c not in ("id", "band", "band_key")]
+
+    def side(s: str) -> DataFrame:
+        return rows.select(
+            F.col("id").alias(f"id_{s}"),
+            "band",
+            "band_key",
+            *[F.col(p).alias(f"{p}_{s}") for p in payload],
+        )
+
+    pairs = side("a").join(side("b"), ["band", "band_key"]).where(F.col("id_a") < F.col("id_b"))
+    if dedup_first:
+        pairs = pairs.select("id_a", "id_b", *[f"{p}_{s}" for s in "ab" for p in payload]).distinct()
+    if verify:
+        pairs = pairs.withColumns(verify)
+    if keep is not None:
+        pairs = pairs.where(keep)
+    out = pairs.select("id_a", "id_b", *verify)
+    return out if dedup_first else out.distinct()
+
+
+def _bit_bands(col: str, n_bands: int, width: int) -> Column:
+    """``n_bands`` (band, band_key) structs of a non-negative integer
+    hash: band b is bits [b * width, (b + 1) * width).  Two hashes within
+    Hamming distance n_bands - 1 agree on at least one band
+    (pigeonhole)."""
+    mask = (1 << width) - 1
+    return F.expr(
+        f"transform(sequence(0, {n_bands - 1}), b -> named_struct("
+        f"'band', b, 'band_key', shiftright({col}, b * {width}) & CAST({mask} AS BIGINT)))"
+    )
+
+
+def _rep_tagged(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``df`` plus ``_digest`` (md5 of the text) and ``_rep``, the min id
+    of the digest: each doc's exact-duplicate representative, from one
+    window."""
+    return df.withColumn("_digest", content_digest(F.col(text_col))).withColumn(
+        "_rep", F.min(id_col).over(Window.partitionBy("_digest"))
+    )
+
+
+def _star_edges(tagged: DataFrame, id_col: str, **exact) -> DataFrame:
+    """One (representative, member) edge per exact duplicate of a
+    :func:`_rep_tagged` relation, carrying ``exact`` — the verify
+    outputs of two identical texts.  ``_rep`` is the min id, so it is
+    the smaller id of every edge.  Null text has no digest, hence no
+    duplicate and no edge."""
+    return tagged.where(
+        F.col("_digest").isNotNull() & (F.col(id_col) != F.col("_rep"))
+    ).select(
+        F.col("_rep").alias("id_a"),
+        F.col(id_col).alias("id_b"),
+        *[F.lit(v).alias(k) for k, v in exact.items()],
+    )
 
 
 def shingles(df: DataFrame, id_col: str, text_col: str = "text", k: int = SHINGLE_LEN) -> DataFrame:
@@ -197,45 +317,6 @@ def ngram_jaccard_pairs(
     return out.select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard")
 
 
-def minhash_from_shingles(
-    sh: DataFrame, id_col: str, n_hashes: int = N_HASHES
-) -> DataFrame:
-    """MinHash signatures, long form (id, seed, minhash), from a prebuilt
-    (id, shingle) posting relation — the entry point for callers that
-    also read the postings for sizes or verification
-    (:func:`minhash_accuracy`)."""
-    # ceil(n/4) md5 digests per DISTINCT shingle (before the seed
-    # explode), four 30-bit lanes each — md5 + conv are the expensive
-    # parts and both are per-word, not per-seed
-    dim = sh.select("shingle").distinct()
-    words = _minhash_words(F.col("shingle"), n_hashes)
-    for w, c in enumerate(words):
-        dim = dim.withColumn(f"_w{w}", c)
-    lanes = [_minhash_half(f"_w{j // 2}", j) for j in range(n_hashes)]
-    shingle_dim = dim.select(
-        "shingle", F.posexplode(F.array(*lanes)).alias("seed", "h")
-    )
-    hashed = sh.join(F.broadcast(shingle_dim), "shingle")
-    return hashed.groupBy(id_col, "seed").agg(F.min("h").alias("minhash"))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    k: int = SHINGLE_LEN,
-    n_hashes: int = N_HASHES,
-) -> DataFrame:
-    """MinHash: for seed j, sig_j = min over shingles of the 30-bit
-    lane of md5(shingle || '#' || j//4) picked by (j//2)%2, j%2 — four
-    independent lanes per md5 call (module notes at ``_minhash_words``).
-    Output: (id, seed, minhash) long form — one row per (doc, seed),
-    computed with a single aggregation.
-    """
-    sh = shingles(df, id_col, text_col, k)
-    return minhash_from_shingles(sh, id_col, n_hashes)
-
-
 def minhash_accuracy(
     docs: DataFrame,
     id_col: str,
@@ -255,25 +336,39 @@ def minhash_accuracy(
     counts, so both ratios are single IEEE divisions —
     engine-bit-identical and fully oracle-replayable.
 
-    Scale shape: deliberately quadratic in the SAMPLE (signature
-    self-join on seed + inverted-index intersection) — bound the input
-    like the other exact baselines (`ngram_jaccard`); the production
-    path stays `minhash_lsh_pairs`.
+    Scale shape: deliberately quadratic in the SAMPLE (inverted-index
+    intersection, and a self-join of the signatures on seed that
+    counts equal ``m_j`` per pair) — bound the input like the other
+    exact baselines (`ngram_jaccard`); the production path stays
+    `minhash_lsh_pairs`.
     """
     sh = shingles(docs, id_col, text_col, k)
-    sig = minhash_from_shingles(sh, id_col, n_hashes)
-    sa = sig.select(F.col(id_col).alias("id_a"), "seed", F.col("minhash").alias("ha"))
-    sb = sig.select(F.col(id_col).alias("id_b"), "seed", F.col("minhash").alias("hb"))
+    # each DISTINCT shingle's lanes, one row per seed, joined back to
+    # its postings: at 64 hashes this took 0.5 s less on the sf0.1
+    # sample than hashing every posting (minhash_sig_columns), and the
+    # per-(doc, seed) minima meet on seed 0.5 s faster than a join of
+    # both docs' 64 signature columns to each pair
+    lanes = hashed_shingles(sh.select("shingle").distinct(), n_hashes).select(
+        "shingle",
+        F.posexplode(F.array(*[f"h{j}" for j in range(n_hashes)])).alias("seed", "h"),
+    )
+    by_seed = sh.join(lanes, "shingle").groupBy(F.col(id_col).alias("id"), "seed").agg(
+        F.min("h").alias("m")
+    )
+    sa = by_seed.select(F.col("id").alias("id_a"), "seed", F.col("m").alias("m_a"))
+    sb = by_seed.select(F.col("id").alias("id_b"), "seed", F.col("m").alias("m_b"))
     est = (
         sa.join(sb, "seed")
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
-        .agg(F.sum(F.when(F.col("ha") == F.col("hb"), 1).otherwise(0)).alias("n_match"))
+        .agg(F.sum((F.col("m_a") == F.col("m_b")).cast("int")).alias("n_match"))
     )
+    # every doc of an overlapping pair has shingles, hence a signature
+    # and an estimate; the left join lets Spark drop the estimate under
+    # an action that reads none of its columns (a count)
     out = (
         _shingle_overlaps(sh, id_col)
         .join(est, ["id_a", "id_b"], "left")
-        .withColumn("n_match", F.coalesce("n_match", F.lit(0)))
         .withColumn("jaccard", _jaccard())
         .withColumn("estimate", F.col("n_match") / F.lit(float(n_hashes)))
         .withColumn("abs_err", F.abs(F.col("estimate") - F.col("jaccard")))
@@ -284,56 +379,22 @@ def minhash_accuracy(
     )
 
 
-def lsh_candidates(
-    signatures: DataFrame,
-    id_col: str,
-    n_bands: int = N_BANDS,
-    n_hashes: int = N_HASHES,
-) -> DataFrame:
-    """Band the signature (rows_per_band = n_hashes / n_bands) and emit
-    candidate pairs sharing any band bucket (id_a < id_b, distinct)."""
-    rows_per_band = n_hashes // n_bands
-    banded = (
-        signatures.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("seed"), F.col("minhash")))
-                    ),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-                "_",
-            ).alias("band_key")
-        )
-    )
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def minhash_sig_columns(
     sh: DataFrame, id_col: str, n_hashes: int = N_HASHES
 ) -> DataFrame:
-    """MinHash signatures as n_hashes COLUMNS (m0..m{n-1}) instead of
-    (id, seed, minhash) long form: the per-seed hashes ride each posting
-    as extra columns, and one groupBy takes element-wise mins.  Versus
-    the long form this avoids the n_hashes-fold row explosion through
-    the shuffle (1 row per doc with n columns vs n rows per doc) and the
-    second banding aggregation.  Hash values are identical to
-    :func:`minhash_from_shingles` (30-bit md5-lane family, see module
-    notes at ``_minhash_words``).
+    """MinHash signatures as n_hashes COLUMNS (m0..m{n-1}), one row per
+    doc: the per-seed hashes ride each posting as extra columns, and one
+    groupBy takes element-wise mins — no n_hashes-fold row explosion
+    through the shuffle.  ``m_j`` is the min over the doc's shingles of
+    the 30-bit md5 lane j (module notes at ``_minhash_words``).
     """
-    hashed = hashed_shingles(sh, n_hashes)
-    return hashed.groupBy(id_col).agg(
-        *[F.min(f"h{j}").alias(f"m{j}") for j in range(n_hashes)]
-    )
+    return hashed_shingles(sh, n_hashes).groupBy(id_col).agg(*_sig_mins(n_hashes))
+
+
+def _sig_mins(n_hashes: int) -> list[Column]:
+    """The signature aggregates ``m_j = min(h_j)`` over a doc's hashed
+    postings."""
+    return [F.min(f"h{j}").alias(f"m{j}") for j in range(n_hashes)]
 
 
 def _minhash_sig_sets(sh: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
@@ -342,8 +403,7 @@ def _minhash_sig_sets(sh: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
     the posting relation, so the wide posting-level intermediate is
     never re-read."""
     return hashed_shingles(sh, n_hashes).groupBy(id_col).agg(
-        *[F.min(f"h{j}").alias(f"m{j}") for j in range(n_hashes)],
-        F.collect_set("sid").alias("sset"),
+        *_sig_mins(n_hashes), F.collect_set("sid").alias("sset")
     )
 
 
@@ -364,12 +424,11 @@ def hashed_shingles(sh: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     4-core host.)
     """
     words = _minhash_words(F.col("shingle"), n_hashes)
-    rel = sh
-    for w, c in enumerate(words):
-        rel = rel.withColumn(f"_w{w}", c)
-    for j in range(n_hashes):
-        rel = rel.withColumn(f"h{j}", _minhash_half(f"_w{j // 2}", j))
-    rel = rel.withColumn("sid", F.col("_w0"))
+    # two projections in all, not one analysed plan per column
+    rel = sh.withColumns({f"_w{w}": c for w, c in enumerate(words)})
+    rel = rel.withColumns(
+        {f"h{j}": _minhash_half(f"_w{j // 2}", j) for j in range(n_hashes)} | {"sid": F.col("_w0")}
+    )
     return rel.drop(*[f"_w{w}" for w in range(len(words))])
 
 
@@ -400,20 +459,10 @@ def lsh_candidates_from_columns(
     n_hashes: int = N_HASHES,
 ) -> DataFrame:
     """Candidates from columnar signatures: docs sharing a band bucket
-    (an array<bigint> key — hashes/compares 4 longs instead of an
-    80-char concat string), id_a < id_b, distinct.  Bucket membership is
-    identical to the long-form string band_key (same values, seed
-    order)."""
-    sig = sigcols.select(id_col, *[f"m{j}" for j in range(n_hashes)])
-    banded = _band_rows(sig, n_bands, n_hashes)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    (an array<bigint> key of the band's ``m_j`` in seed order), id_a <
+    id_b, distinct — unverified."""
+    sig = sigcols.select(F.col(id_col).alias("id"), *[f"m{j}" for j in range(n_hashes)])
+    return _banded_pairs(_band_rows(sig, n_bands, n_hashes), {})
 
 
 def edit_distance_pairs(
@@ -435,7 +484,8 @@ def edit_distance_pairs(
     tiny.  Candidates verify with exact ``levenshtein``.
 
     Shape: explode x O(len^max_dist) variants -> one shuffle on the
-    variant key -> in-bucket pairing -> id-distinct -> exact verify.
+    variant key -> in-bucket pairing -> exact verify -> distinct
+    (:func:`_banded_pairs`, one band whose keys are the variants).
     Quadratic only within a variant bucket (strings sharing a deletion
     variant), the same contract as the MinHash band buckets.  Intended
     for SHORT strings (titles, entities, vocabulary terms); for
@@ -447,38 +497,30 @@ def edit_distance_pairs(
     """
     if max_dist not in (1, 2):
         raise ValueError("edit_distance_pairs supports max_dist in {1, 2}")
-    base = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     # 0- and 1-deletion variants; for max_dist=2 also 2-deletions
     del1 = (
-        "transform(sequence(1, length(_t)), "
-        "i -> concat(substring(_t, 1, i - 1), substring(_t, i + 1, length(_t))))"
+        "transform(sequence(1, length(t)), "
+        "i -> concat(substring(t, 1, i - 1), substring(t, i + 1, length(t))))"
     )
-    variants = f"array_union(array(_t), {del1})"
+    variants = f"array_union(array(t), {del1})"
     if max_dist == 2:
         variants = (
             f"array_union({variants}, flatten(transform({del1}, v -> "
             "transform(sequence(1, length(v)), "
             "j -> concat(substring(v, 1, j - 1), substring(v, j + 1, length(v)))))))"
         )
-    banded = base.select(
-        "_id", "_t", F.explode(F.expr(f"CASE WHEN length(_t) = 0 THEN array(_t) ELSE {variants} END")).alias("_v")
+    rows = base.select(
+        "id",
+        "t",
+        F.lit(0).alias("band"),
+        F.explode(
+            F.expr(f"CASE WHEN length(t) = 0 THEN array(t) ELSE {variants} END")
+        ).alias("band_key"),
     )
-    a = banded.select(
-        F.col("_id").alias("id_a"), F.col("_t").alias("ta"), "_v"
-    )
-    b = banded.select(
-        F.col("_id").alias("id_b"), F.col("_t").alias("tb"), "_v"
-    )
-    cands = (
-        a.join(b, "_v")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ta", "tb")
-        .distinct()
-    )
-    return (
-        cands.withColumn("dist", F.levenshtein("ta", "tb"))
-        .where((F.col("dist") >= 1) & (F.col("dist") <= max_dist))
-        .select("id_a", "id_b", "dist")
+    dist = F.col("dist")
+    return _banded_pairs(
+        rows, {"dist": F.levenshtein("t_a", "t_b")}, (dist >= 1) & (dist <= max_dist)
     )
 
 
@@ -524,59 +566,37 @@ def minhash_lsh_pairs(
     Plan shape: every relation has ONE consumer, so nothing is cached.
     One ``min(id) over (partition by digest)`` window tags each doc
     with its representative; the representatives, the star edges and
-    the member expansion all filter that one tagged relation (Spark
-    reuses its exchange inside the query).  The shingle-id sets ride
-    the band explode, so the band self-join yields both sets of each
-    candidate and verifies it in place — no join back to the per-doc
-    relation.
+    the member expansion all filter that one tagged relation.  (Spark
+    does not share its exchange between them: the representatives
+    keep the text, the edges and members do not, so column pruning
+    plans the digest window once per branch.)  The shingle-id sets ride
+    the band rows of :func:`_banded_pairs`, so the band self-join
+    yields both sets of each candidate and verifies it in place — no
+    join back to the per-doc relation.
     """
     if expand not in ("all", "star"):
         raise ValueError(f"expand must be 'all' or 'star', got {expand!r}")
     # No broadcast hints: one row per *distinct text* is not a small dim
     # at crawl scale, so join strategies are left to Catalyst/AQE.
-    tagged = df.select(
-        id_col, text_col, content_digest(F.col(text_col)).alias("digest")
-    ).withColumn("rep_id", F.min(id_col).over(Window.partitionBy("digest")))
-    rep_docs = tagged.where(F.col(id_col) == F.col("rep_id"))
-    # exact duplicates of a representative (null text has no digest)
-    members = tagged.where(F.col("digest").isNotNull()).select(id_col, "rep_id")
+    tagged = _rep_tagged(df.select(id_col, text_col), id_col, text_col)
+    rep_docs = tagged.where(F.col(id_col) == F.col("_rep"))
 
     sh = shingles(rep_docs, id_col, text_col, k)
-    banded = _band_rows(_minhash_sig_sets(sh, id_col, n_hashes), n_bands, n_hashes)
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("sset").alias("set_a"), "band", "band_key"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("sset").alias("set_b"), "band", "band_key"
-    )
-    # verification on the candidate rows themselves: the sets hold the
-    # sid shingle ids (60-bit longs), so the counts — and hence the
-    # Jaccard division — equal those of string shingle sets.  A pair
-    # sharing several bands shows up once per band; the distinct over
-    # its integer counts keeps one row before the division.
-    rep_pairs = (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", *_set_counts("set_a", "set_b"))
-        .distinct()
-        .withColumn("jaccard", _jaccard())
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    sigs = _minhash_sig_sets(sh, id_col, n_hashes).withColumnRenamed(id_col, "id")
+    rows = _band_rows(sigs.withColumnRenamed("sset", "set"), n_bands, n_hashes)
+    # the sets hold the sid shingle ids (60-bit longs), so the counts —
+    # and hence the Jaccard division — equal those of string shingle sets
+    jaccard = _jaccard(**_set_counts("set_a", "set_b"))
+    rep_pairs = _banded_pairs(rows, {"jaccard": jaccard}, F.col("jaccard") >= threshold)
     if expand == "star":
-        # member -> representative star edges; rep_id = min(id) of the
-        # digest, so it is the smaller id of every edge
-        star = members.where(F.col(id_col) != F.col("rep_id")).select(
-            F.col("rep_id").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        return rep_pairs.unionByName(star)
+        return rep_pairs.unionByName(_star_edges(tagged, id_col, jaccard=1.0))
 
     # intra-cluster expansion: every pair of exact dups is a candidate
-    # (identical band keys) with n_inter = n_a = n_b, i.e. Jaccard = 1.0
-    ma = members.select(F.col(id_col).alias("mem_a"), F.col("rep_id").alias("id_a"))
-    mb = members.select(F.col(id_col).alias("mem_b"), F.col("rep_id").alias("id_b"))
+    # (identical band keys) with n_inter = n_a = n_b, i.e. Jaccard = 1.0;
+    # null text has no digest, hence no duplicate
+    members = tagged.where(F.col("_digest").isNotNull())
+    ma = members.select(F.col(id_col).alias("mem_a"), F.col("_rep").alias("id_a"))
+    mb = members.select(F.col(id_col).alias("mem_b"), F.col("_rep").alias("id_b"))
     intra = (
         ma.join(mb, F.col("id_a") == F.col("id_b"))
         .where(F.col("mem_a") < F.col("mem_b"))
@@ -674,9 +694,10 @@ def simhash_neardup_pairs(
       digest (no digest join, no cache — min-id-per-digest rides the
       same shuffle), the explode-heavy simhash/banding/verify stages
       run on the representatives only, output = verified rep pairs +
-      one member->rep edge per exact duplicate.  A web-crawl dup
-      storm of 10^6 identical docs yields 10^6 - 1 star edges instead
-      of ~5*10^11 pairs; the transitive closure — and hence
+      one member->rep edge per exact duplicate (null texts have no
+      digest, so they are no one's duplicate, as in "all").  A
+      web-crawl dup storm of 10^6 identical docs yields 10^6 - 1 star
+      edges instead of ~5*10^11 pairs; the transitive closure — and hence
       dedup_clusters / keep_best_per_cluster / leakage_safe_split —
       is IDENTICAL (201x fewer edges, 7.4x faster closure at the
       200k-doc storm probe; PLANS.md r8).
@@ -684,60 +705,23 @@ def simhash_neardup_pairs(
     if expand not in ("all", "star"):
         raise ValueError(f"expand must be 'all' or 'star', got {expand!r}")
     if expand == "star":
-        tagged = df.withColumn("_dig", content_digest(F.col(text_col))).withColumn(
-            "_rep", F.min(id_col).over(Window.partitionBy("_dig"))
-        )
-        src = tagged.where(F.col(id_col) == F.col("_rep")).drop("_dig", "_rep")
+        tagged = _rep_tagged(df, id_col, text_col)
+        src = tagged.where(F.col(id_col) == F.col("_rep"))
     else:
         src = df
 
-    sigs = simhash(src, id_col, text_col)
-    band_bits = SIMHASH_BITS // n_bands
-    mask = (1 << band_bits) - 1
-    banded = sigs.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {n_bands - 1}), b -> named_struct("
-                f"'band', b, 'key', shiftright(simhash, b * {band_bits}) "
-                f"& CAST({mask} AS BIGINT)))"
-            )
-        ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band", "bb.key")
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"), "band", "key"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sig_b"), "band", "key"
-    )
-    pairs = (
-        a.join(b, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        # r11 plan shape: verify BEFORE the distinct.  A candidate pair
-        # surfaces once per shared band (<= n_bands dup rows); hamming
-        # is a pure function of the pair, so dedup-then-filter and
-        # filter-then-dedup return the same pair set — but filtering
-        # first means the distinct exchange carries only VERIFIED pairs
-        # (3 narrow columns), not every banded candidate plus two
-        # 64-bit signatures.  The bit_count runs per duplicate row —
-        # one codegen'd integer op, orders cheaper than the shuffle
-        # bytes it saves (guide §2.3: shuffle fewer bytes).
-        .withColumn("hamming", F.expr("bit_count(sig_a ^ sig_b)"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
+    rows = simhash(src, id_col, text_col).select(
+        F.col(id_col).alias("id"),
+        F.col("simhash").alias("sig"),
+        F.explode(_bit_bands("simhash", n_bands, SIMHASH_BITS // n_bands)).alias("bb"),
+    ).select("id", "sig", "bb.band", "bb.band_key")
+    pairs = _banded_pairs(
+        rows,
+        {"hamming": F.expr("bit_count(sig_a ^ sig_b)")},
+        F.col("hamming") <= max_hamming,
     )
     if expand == "star":
-        star = (
-            tagged.where(F.col(id_col) != F.col("_rep"))
-            .select(
-                F.least(id_col, "_rep").alias("id_a"),
-                F.greatest(id_col, "_rep").alias("id_b"),
-                F.lit(0).alias("hamming"),
-            )
-        )
-        return pairs.unionByName(star)
+        return pairs.unionByName(_star_edges(tagged, id_col, hamming=0))
     return pairs
 
 
@@ -1632,7 +1616,8 @@ def incremental_minhash_dedup(
     verified = (
         cands.join(inc_sigs.select("inc_id", F.col("sset").alias("set_a")), "inc_id")
         .join(ex_sets.select("ex_id", F.col("sset").alias("set_b")), "ex_id")
-        .select("inc_id", "ex_id", *_set_counts("set_a", "set_b"))
+        .withColumns(_set_counts("set_a", "set_b"))
+        .select("inc_id", "ex_id", "n_inter", "n_a", "n_b")
         .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
     )

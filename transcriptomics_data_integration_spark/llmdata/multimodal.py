@@ -33,8 +33,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from transcriptomics_data_integration_spark.llmdata.dedup import _banded_pairs, _bit_bands
 
 MEDIA_SCHEMA = (
     "media_id bigint, n_bytes int, media_type string, "
@@ -2202,45 +2204,19 @@ def dhash_neardup_pairs(
     any corpus size by widening band keys with log2(n).
 
     Output: (id_a, id_b, hamming) with id_a < id_b, deduped across
-    bands."""
-    from transcriptomics_data_integration_spark.runtime import register_persisted
-
-    # the self-join would otherwise execute the upstream codec+hash
-    # map TWICE (Spark shares no unpersisted subtrees — the r9 explain
-    # audit showed two full scans); the hash relation is narrow (two
-    # longs per item), so persisting it is the standard bounded-fork
-    # move and halves the dominant Arrow stage
-    hashes = hashes.persist()
-    register_persisted(hashes)
-    width = n_bits // n_bands
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(
-                    f"({hash_col} DIV {1 << (b * width)}) % {1 << width}"
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    banded = hashes.select(
-        F.col(id_col), F.col(hash_col), F.explode(bands).alias("bb")
-    ).select(id_col, hash_col, "bb.band", "bb.band_key")
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col(hash_col).alias("ha"), "band", "band_key"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col(hash_col).alias("hb"), "band", "band_key"
-    )
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", F.expr("bit_count(ha ^ hb)").alias("hamming")
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    bands.  Nothing is persisted: the band rows are shuffled once on
+    their bucket key (:func:`~.dedup._banded_pairs`), so the codec
+    behind ``hashes`` runs once per item."""
+    rows = hashes.select(
+        F.col(id_col).alias("id"),
+        F.col(hash_col).alias("h"),
+        F.explode(_bit_bands(hash_col, n_bands, n_bits // n_bands)).alias("bb"),
+    ).select("id", "h", "bb.band", "bb.band_key")
+    return _banded_pairs(
+        rows,
+        {"hamming": F.expr("bit_count(h_a ^ h_b)")},
+        F.col("hamming") <= max_hamming,
+        shuffle=True,
     )
 
 
@@ -2501,6 +2477,19 @@ def audio_envelope_hash_wide(
     )
 
 
+def _fixed_size(words: Column, n: int, id_col: str, op: str) -> Column:
+    """``words``, raising for an item whose fingerprint does not hold
+    exactly ``n`` words: an unrolled verify reads words 1..n only, so a
+    longer fingerprint would lose its tail silently (a shorter one
+    already fails its ``element_at``)."""
+    msg = F.format_string(
+        f"{op}: fingerprint of %s holds %d words, not {n}",
+        F.col(id_col).cast("string"),
+        F.size(words),
+    )
+    return F.when(F.size(words) != n, F.raise_error(msg)).otherwise(words)
+
+
 def hamming_neardup_pairs_wide(
     hashes: DataFrame,
     id_col: str,
@@ -2520,7 +2509,8 @@ def hamming_neardup_pairs_wide(
     words (the wide-profile contract — profiles emit fixed n_bands
     arrays), the verify fold UNROLLS to a flat sum of ``bit_count``
     terms — whole-stage codegen instead of an interpreted HOF lambda
-    per candidate.  Integer sums either way — identical output.
+    per candidate.  Integer sums either way — identical output.  A
+    fingerprint of any other size raises.
 
     ``max_bucket`` is the skew/adversary guard for dup-storm keys: a
     (band, band_key) bucket larger than the cap is excluded from that
@@ -2533,48 +2523,29 @@ def hamming_neardup_pairs_wide(
 
     Output: (id_a, id_b, hamming) with id_a < id_b, deduped across
     bands."""
-    from transcriptomics_data_integration_spark.runtime import register_persisted
-
-    # same bounded-fork persist as dhash_neardup_pairs: the relation is
-    # (long, small array) per item and feeds both join sides
-    hashes = hashes.persist()
-    register_persisted(hashes)
-    banded = hashes.select(
-        F.col(id_col),
-        F.col(hash_col),
-        F.posexplode(hash_col).alias("band", "band_key"),
-    )
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "band_key")
-        banded = (
-            banded.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .where(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col(hash_col).alias("wa"), "band", "band_key"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col(hash_col).alias("wb"), "band", "band_key"
-    )
+    words = F.col(hash_col)
     if n_words is not None:
+        words = _fixed_size(words, n_words, id_col, "hamming_neardup_pairs_wide")
         ham = F.expr(
             " + ".join(
-                f"bit_count(element_at(wa, {i}) ^ element_at(wb, {i}))"
+                f"bit_count(element_at(w_a, {i}) ^ element_at(w_b, {i}))"
                 for i in range(1, n_words + 1)
             )
         )
     else:
         ham = F.expr(
-            "aggregate(zip_with(wa, wb, (x, y) -> bit_count(x ^ y)),"
+            "aggregate(zip_with(w_a, w_b, (x, y) -> bit_count(x ^ y)),"
             " 0, (acc, v) -> acc + v)"
         )
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    rows = hashes.select(F.col(id_col).alias("id"), words.alias("w")).select(
+        "id", "w", F.posexplode("w").alias("band", "band_key")
+    )
+    return _banded_pairs(
+        rows,
+        {"hamming": ham},
+        F.col("hamming") <= max_hamming,
+        max_bucket=max_bucket,
+        shuffle=True,
     )
 
 
@@ -2730,12 +2701,12 @@ def video_neardup_offset_tolerant(
     |shifts| folds per candidate pair, and value-banded candidate
     counts are corpus-shaped (a shared 16-bit word is a weak filter),
     so the per-pair cost is the stage's wall clock.  Integer sums in
-    either form — identical output.  Leave ``None`` for variable-
-    length fingerprints (the generic fold)."""
-    from transcriptomics_data_integration_spark.runtime import register_persisted
-
-    hashes = hashes.persist()
-    register_persisted(hashes)
+    either form — identical output; a fingerprint of any other size
+    raises.  Leave ``None`` for variable-length fingerprints (the
+    generic fold)."""
+    words = F.col(hash_col)
+    if n_frames is not None:
+        words = _fixed_size(words, n_frames, id_col, "video_neardup_offset_tolerant")
     # min-k distinct frame words per clip, computed MAP-SIDE (r11):
     # array_distinct -> array_sort -> slice over the fingerprint array
     # is exactly "distinct words, ascending, first anchor_k" — the
@@ -2743,55 +2714,35 @@ def video_neardup_offset_tolerant(
     # shuffles (hash dedup + window sort) for a per-row array
     # computation (guide §2.4: remove shuffles outright).  Identical
     # anchor set: dwords holds no nulls, and slice past the array end
-    # returns the shorter prefix just as _rk <= k did.
-    anchors = hashes.select(
-        F.col(id_col),
-        F.explode(
-            F.slice(
-                F.array_sort(F.array_distinct(F.col(hash_col))), 1, anchor_k
-            )
-        ).alias("word"),
-    )
-    if max_bucket is not None:
-        w = Window.partitionBy("word")
-        anchors = (
-            anchors.withColumn("_bn", F.count(F.lit(1)).over(w))
-            .where(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
-    a = anchors.select(F.col(id_col).alias("id_a"), "word")
-    b = anchors.select(F.col(id_col).alias("id_b"), "word")
-    cands = (
-        a.join(b, "word")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    pairs = cands.join(
-        hashes.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("wa")),
-        "id_a",
-    ).join(
-        hashes.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("wb")),
-        "id_b",
+    # returns the shorter prefix just as _rk <= k did.  Every anchor is
+    # a key of one band, so clips meet on a shared word wherever it
+    # sits in either clip.
+    rows = hashes.select(F.col(id_col).alias("id"), words.alias("w")).select(
+        "id",
+        "w",
+        F.lit(0).alias("band"),
+        F.explode(F.slice(F.array_sort(F.array_distinct("w")), 1, anchor_k)).alias(
+            "band_key"
+        ),
     )
 
     def _shift_sum(s: int) -> str:
-        # overlap fold at integer shift s: wa[i + max(s,0)] vs
-        # wb[i + max(-s,0)] for i = 1 .. min(len) - |s| (1-based HOF)
+        # overlap fold at integer shift s: w_a[i + max(s,0)] vs
+        # w_b[i + max(-s,0)] for i = 1 .. min(len) - |s| (1-based HOF)
         off_a, off_b, width = max(s, 0), max(-s, 0), abs(s)
         if n_frames is not None:
             # static unroll (codegen): same integer sum, same term
             # order, no per-element lambda interpretation
             terms = " + ".join(
-                f"bit_count(element_at(wa, {i + off_a}) "
-                f"^ element_at(wb, {i + off_b}))"
+                f"bit_count(element_at(w_a, {i + off_a}) "
+                f"^ element_at(w_b, {i + off_b}))"
                 for i in range(1, n_frames - width + 1)
             )
             return f"({terms})"
         return (
-            f"aggregate(sequence(1, least(size(wa), size(wb)) - {width}), 0, "
-            f"(acc, i) -> acc + bit_count(element_at(wa, i + {off_a}) "
-            f"^ element_at(wb, i + {off_b})))"
+            f"aggregate(sequence(1, least(size(w_a), size(w_b)) - {width}), 0, "
+            f"(acc, i) -> acc + bit_count(element_at(w_a, i + {off_a}) "
+            f"^ element_at(w_b, i + {off_b})))"
         )
 
     shifts = list(range(-max_shift, max_shift + 1))
@@ -2803,20 +2754,18 @@ def video_neardup_offset_tolerant(
         + ")"
     )
     # array_min on (h, s) structs: lexicographic -> min hamming, then
-    # smallest shift — deterministic tie-break
-    best = F.expr(f"array_min({struct_expr})")
-    return (
-        # fingerprints too short to overlap at max_shift would fold an
-        # EMPTY sequence to hamming 0 (a spurious match) — drop them
-        pairs.where(
-            F.expr("least(size(wa), size(wb))") > F.lit(max_shift)
-        )
-        .withColumn("_best", best)
-        .select(
-            "id_a",
-            "id_b",
-            F.col("_best.s").alias("best_shift"),
-            F.col("_best.h").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
+    # smallest shift — deterministic tie-break.  Fingerprints too short
+    # to overlap at max_shift would fold an EMPTY sequence to hamming 0
+    # (a spurious match), so they get no alignment.
+    best = F.when(
+        F.least(F.size("w_a"), F.size("w_b")) > max_shift,
+        F.expr(f"array_min({struct_expr})"),
+    )
+    return _banded_pairs(
+        rows,
+        {"best_shift": best["s"], "hamming": best["h"]},
+        F.col("hamming") <= max_hamming,
+        max_bucket=max_bucket,
+        shuffle=True,
+        dedup_first=True,
     )

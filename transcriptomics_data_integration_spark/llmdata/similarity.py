@@ -31,6 +31,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.llmdata.dedup import _banded_pairs, _bit_bands
+
 
 _FOLD_UNROLL_MAX = 16  # flat-unroll ceiling (janino 64 KB, measured r11)
 
@@ -481,64 +483,35 @@ def cosine_neardup_pairs(
     band key are candidates (both orientations of the classic
     sim ~ 1 - hamming/planes estimate).  Within a band bucket the join
     is quadratic — at larger corpora raise n_planes (keys get longer,
-    buckets smaller) rather than scanning more candidates.  One shuffle
-    on (band, key), one id-distinct, two id-joins to re-attach vectors,
-    then a per-pair fold for the exact cosine.  Semantics (including
-    LSH recall) are deterministic and engine-reproducible, so a SQL
-    oracle can replay the whole pipeline.
+    buckets smaller) rather than scanning more candidates.  Each band
+    row carries its vector and norm, so the band self-join
+    (:func:`~.dedup._banded_pairs`, one shuffle on (band, key) that
+    both sides read) verifies every candidate in place with a per-pair
+    fold for the exact cosine — no join back to the vectors, and the
+    hyperplane folds run once per vector.  Semantics (including LSH
+    recall) are deterministic and engine-reproducible, so a SQL oracle
+    can replay the whole pipeline.
     """
-    rows_per_band = n_planes // n_bands
-    mask = (1 << rows_per_band) - 1
-    # r11 measured NEGATIVE (do not re-attempt): repartitioning a
-    # few-split corpus here before the per-row hyperplane folds —
-    # ``base`` feeds THREE plan branches (banding + both vector
-    # re-attach joins), so the keyless repartition's sort+exchange
-    # re-executes per branch and the A/B regressed 2.7 -> 5.0 s.
-    base = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).alias("vec"),
-        hyperplane_bits(vec_col, n_planes, dim).alias("_bits"),
-        F.sqrt(_norm2(vec_col, dim)).alias("_norm"),
+    rows = (
+        embeddings.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("vec"),
+            F.sqrt(_norm2(vec_col, dim)).alias("norm"),
+            hyperplane_bits(vec_col, n_planes, dim).alias("_bits"),
+        )
+        .select(
+            "id", "vec", "norm",
+            F.explode(_bit_bands("_bits", n_bands, n_planes // n_bands)).alias("bb"),
+        )
+        .select("id", "vec", "norm", "bb.band", "bb.band_key")
     )
-    banded = base.select(
-        F.col(id_col),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {n_bands - 1}), b -> named_struct("
-                f"'band', b, 'key', shiftright(_bits, b * {rows_per_band}) "
-                f"& CAST({mask} AS BIGINT)))"
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.key")
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "key")
-    cands = (
-        a.join(b, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    # ANSI guard: a zero vector has no cosine — no division for it
+    cosine = F.when(
+        (F.col("norm_a") > 0) & (F.col("norm_b") > 0),
+        _dot("vec_a", "vec_b", dim) / (F.col("norm_a") * F.col("norm_b")),
     )
-    withv = cands.join(
-        base.select(
-            F.col(id_col).alias("id_a"),
-            F.col("vec").alias("va"),
-            F.col("_norm").alias("na"),
-        ),
-        "id_a",
-    ).join(
-        base.select(
-            F.col(id_col).alias("id_b"),
-            F.col("vec").alias("vb"),
-            F.col("_norm").alias("nb"),
-        ),
-        "id_b",
-    )
-    return (
-        # ANSI guard: a zero vector has no cosine — drop before dividing
-        withv.where((F.col("na") > 0) & (F.col("nb") > 0))
-        .withColumn("cosine", _dot("va", "vb", dim) / (F.col("na") * F.col("nb")))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    return _banded_pairs(
+        rows, {"cosine": cosine}, F.col("cosine") >= threshold, shuffle=True
     )
 
 

@@ -14,9 +14,10 @@ engine reproduces bit-for-bit — the property the correctness gate
 needs, and seeded-reproducible in production too.
 
 Shape: the K permutations are a (sample x K) dimension table joined
-onto the fact — the fact is scanned once; the grouped aggregation runs
-on (gene, k) with map-side combine.  K multiplies the shuffle, not the
-scan.
+onto the fact — built from the sample sheet, which one read of the
+fact's distinct (sample, label) rows collects, so the fact is read
+once more, for the join; the grouped aggregation runs on (gene, k)
+with map-side combine.  K multiplies the shuffle, not the scan.
 """
 
 from __future__ import annotations
@@ -29,28 +30,33 @@ def permuted_labels(
     samples: DataFrame, sample_col: str, group_col: str, n_perm: int
 ) -> DataFrame:
     """(sample, k, perm_group) for k = 0..n_perm; k = 0 is the identity
-    permutation (observed labels)."""
-    w_orig = Window.partitionBy("k").orderBy(sample_col)
-    w_hash = Window.partitionBy("k").orderBy("h", sample_col)
-    labels = (
-        samples.select(sample_col, group_col)
-        .distinct()
-        .withColumn("k", F.explode(F.sequence(F.lit(0), F.lit(n_perm))))
+    permutation (observed labels).
+
+    Permutation k deals the label multiset, ordered by sample id, to
+    the samples in ``md5(sample || '#' || k)`` order: the sample in
+    hash slot s gets the s-th label.  The sample sheet — the distinct
+    (sample, label) rows, one read of ``samples`` — is collected in
+    sample order: it becomes the local relation the K permutations
+    expand and the literal deck each row reads one element of, so
+    the (sample x K) table neither rereads ``samples`` nor joins back
+    to itself."""
+    sheet = samples.select(sample_col, group_col).distinct()
+    rows = sheet.orderBy(sample_col, group_col).collect()
+    deck = F.array(*[F.lit(r[group_col]) for r in rows])
+    labels = samples.sparkSession.createDataFrame(rows, sheet.schema).withColumn(
+        "k", F.explode(F.sequence(F.lit(0), F.lit(n_perm)))
     )
     hashed = labels.withColumn(
         "h", F.md5(F.concat_ws("#", F.col(sample_col), F.col("k")).cast("binary"))
     )
-    ordered = hashed.withColumn("slot", F.row_number().over(w_hash)).withColumn(
-        "orig_rank", F.row_number().over(w_orig)
-    )
-    # deal the label multiset (ordered by sample id) to hash-ordered slots
-    deal = ordered.select("k", F.col("orig_rank").alias("slot"), F.col(group_col).alias("dealt"))
-    permuted = ordered.join(deal, ["k", "slot"]).select(
+    slot = F.row_number().over(Window.partitionBy("k").orderBy("h", sample_col))
+    return hashed.select(
         sample_col,
         "k",
-        F.when(F.col("k") == 0, F.col(group_col)).otherwise(F.col("dealt")).alias("perm_group"),
+        F.when(F.col("k") == 0, F.col(group_col))
+        .otherwise(F.element_at(deck, slot))
+        .alias("perm_group"),
     )
-    return permuted
 
 
 def permutation_fdr(
