@@ -3,16 +3,19 @@ through ``runtime.register_persisted``, so once its action has run,
 ``cleanup_persisted()`` leaves the session's CacheManager empty.  An
 unregistered ``.cache()`` would outlive the query and be silently read
 by a later call on the same input.  The near-duplicate pair operators
-(one banded-pairs kernel) and the closed-platform DE chain give each
-relation one consumer, so they persist nothing (DE keeps only the
-eBayes prior's per-gene input)."""
+(one banded-pairs kernel), the closed-platform DE chain and the
+TSV -> meta-analysis -> BH chain give each relation one consumer, so
+they persist nothing (DE keeps only the eBayes prior's per-gene
+input)."""
 
 from __future__ import annotations
 
 import random
+from functools import reduce
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.llmdata.dedup import (
@@ -33,11 +36,13 @@ from transcriptomics_data_integration_spark.llmdata.multimodal import (
     video_phash_wide,
 )
 from transcriptomics_data_integration_spark.llmdata.similarity import cosine_neardup_pairs
+from transcriptomics_data_integration_spark.operators.filters import zero_variance_filter
 from transcriptomics_data_integration_spark.pipelines import meta_analysis
 from transcriptomics_data_integration_spark.pipelines.diffexpr import (
     differential_expression,
 )
 from transcriptomics_data_integration_spark.runtime import cleanup_persisted
+from transcriptomics_data_integration_spark.sources import read_matrix_tsv, write_matrix_tsv
 from transcriptomics_data_integration_spark.stats.bh import p_adjust
 from transcriptomics_data_integration_spark.stats.combat import combat_eb_fixed
 from transcriptomics_data_integration_spark.stats.permutation import permutation_fdr
@@ -51,6 +56,15 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _values(spark, rows, columns):
+    """``rows`` as a VALUES relation, whose size Catalyst knows, as it
+    knows a file's (an RDD-backed ``createDataFrame`` has no estimate)."""
+    cells = ", ".join(
+        "(" + ", ".join(repr(v) if isinstance(v, str) else f"{v!r}D" for v in r) + ")" for r in rows
+    )
+    return spark.sql(f"SELECT * FROM VALUES {cells} AS t({', '.join(columns)})")
+
+
 def _meta(spark):
     rows, trows = [], []
     for pl in ("P1", "P2"):
@@ -59,9 +73,41 @@ def _meta(spark):
             trows.append((s, "T" if j < 3 else "N"))
             for g in range(5):
                 rows.append((f"g{g}", s, pl, 5.0 + g + 0.3 * ((j * 7 + g) % 5)))
-    expr = spark.createDataFrame(rows, "gene_id string, sample_id string, platform string, value double")
-    targets = spark.createDataFrame(trows, "sample_id string, target string")
+    expr = _values(spark, rows, ["gene_id", "sample_id", "platform", "value"])
+    targets = _values(spark, trows, ["sample_id", "target"])
     return meta_analysis(expr, targets, "T", "N", with_icc=False)
+
+
+def _bh_on_meta(spark):
+    # the sheet is collected, not joined, so the meta table's size
+    # estimate is its own (one row per gene) and BH takes the window
+    # arm without persisting the table to measure it
+    return p_adjust(_meta(spark), "p_comb", "adj_p_comb", tiebreak_col="gene_id")
+
+
+def _meta_chain(spark, tmp_path):
+    """The meta_tsv iteration on two tiny platforms: read both TSVs,
+    write the merged matrix, F4 zero-variance filter, meta-analysis,
+    BH.  The first platform has one gene of its own and one of zero
+    variance."""
+    parts = []
+    for pl, genes in (("P1", 6), ("P2", 5)):
+        samples = [f"{pl}_s{j}" for j in range(6)]
+        lines = ["\t" + "\t".join(samples)]
+        for g in range(genes):
+            cells = [5.0 if g == 5 else 5.0 + g + 0.3 * ((j * 7 + g) % 5) for j in range(6)]
+            lines.append(f"g{g}\t" + "\t".join(map(str, cells)))
+        path = tmp_path / f"{pl}.tsv"
+        path.write_text("\n".join(lines) + "\n")
+        parts.append(read_matrix_tsv(spark, str(path)).withColumn("platform", F.lit(pl)))
+    expr = reduce(DataFrame.unionByName, parts)
+    write_matrix_tsv(expr.drop("platform"), str(tmp_path / "merged"))
+    targets = spark.createDataFrame(
+        [(f"{pl}_s{j}", "T" if j < 3 else "N") for pl in ("P1", "P2") for j in range(6)],
+        "sample_id string, target string",
+    )
+    meta = meta_analysis(zero_variance_filter(expr, "gene_id", "value"), targets, "T", "N", with_icc=False)
+    return p_adjust(meta, "p_comb", "adj_p_comb", tiebreak_col="gene_id")
 
 
 def _p_adjust(spark):
@@ -199,6 +245,7 @@ CASES = [
     *[(name, build, False) for name, build in NEARDUP],
     ("ngram_jaccard_pairs", lambda s: ngram_jaccard_pairs(_docs(s), "doc_id"), False),
     ("meta_analysis", _meta, False),
+    ("p_adjust_on_meta_analysis", _bh_on_meta, False),
     ("p_adjust", _p_adjust, True),
     ("combat_eb_fixed", _combat, False),
     ("permutation_fdr", _permutation_fdr, False),
@@ -221,7 +268,8 @@ def test_cleanup_persisted_empties_cache_manager(spark, build, caches):
 
 
 def _cold_jobs(spark, group, build):
-    """(collected rows, Spark jobs run) of ``build()`` from a cold cache."""
+    """(collected rows, Spark jobs run, relations left persisted) of
+    ``build()`` from a cold cache."""
     sc = spark.sparkContext
     spark.catalog.clearCache()
     cleanup_persisted()
@@ -231,8 +279,8 @@ def _cold_jobs(spark, group, build):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        cleanup_persisted()
-    return rows, len(jobs)
+        persisted = cleanup_persisted()
+    return rows, len(jobs), persisted
 
 
 def _plan_nodes(df, node):
@@ -265,7 +313,7 @@ NEARDUP_JOBS = {
 
 @pytest.mark.parametrize("name,build", NEARDUP, ids=[n for n, _ in NEARDUP])
 def test_neardup_pairs_in_few_jobs(spark, name, build):
-    rows, jobs = _cold_jobs(spark, f"{name}_jobs", lambda: build(spark))
+    rows, jobs, _ = _cold_jobs(spark, f"{name}_jobs", lambda: build(spark))
     assert rows
     assert jobs <= NEARDUP_JOBS[name], jobs
 
@@ -308,7 +356,7 @@ def test_minhash_lsh_pairs_star_clusters_in_few_jobs(spark):
     """Clustering the star edges runs a bounded number of Spark jobs
     from a cold cache: no relation is built once for several consumers
     (the cached form ran 32 jobs here, 17 of them cache builds)."""
-    rows, jobs = _cold_jobs(
+    rows, jobs, _ = _cold_jobs(
         spark, "minhash_lsh_pairs_jobs",
         lambda: dedup_clusters(minhash_lsh_pairs(_docs(spark), "doc_id", expand="star")),
     )
@@ -319,16 +367,31 @@ def test_minhash_lsh_pairs_star_clusters_in_few_jobs(spark):
 
 def test_closed_platform_de_in_few_jobs(spark):
     """Batch centring, F5 and the pooled t read each gene-bounded
-    relation once, and the sample sheet is checked in one job (the
-    cached form ran 29 jobs here)."""
-    rows, jobs = _cold_jobs(spark, "closed_de_jobs", lambda: _closed_de(spark))
-    assert jobs <= 22, jobs
+    relation once, and one collect of the sample sheet both labels the
+    cells and checks the batches (the cached form ran 29 jobs here, the
+    broadcast-joined sheet 15)."""
+    rows, jobs, _ = _cold_jobs(spark, "closed_de_jobs", lambda: _closed_de(spark))
+    assert jobs <= 11, jobs
     assert len(rows) == 30
 
 
 def test_combat_eb_fixed_in_few_jobs(spark):
     """The EB moments, priors and fixed point are one window chain over
     the per-(gene, batch) relation (the cached form ran 15 jobs here)."""
-    rows, jobs = _cold_jobs(spark, "combat_eb_fixed_jobs", lambda: _combat(spark))
+    rows, jobs, _ = _cold_jobs(spark, "combat_eb_fixed_jobs", lambda: _combat(spark))
     assert jobs <= 10, jobs
     assert len(rows) == 80 * 18
+
+
+def test_meta_tsv_chain_in_few_jobs(spark, tmp_path):
+    """Two TSV reads, the merged write, the F4 filter, meta-analysis
+    and BH, from a cold cache: the header lines are read on the driver,
+    the sheet is collected once instead of joined, and the meta table
+    is sorted in the one partition the BH windows read, so nothing is
+    persisted and no job only measures or samples (the joined,
+    globally sorted form ran 18 jobs here and persisted the table)."""
+    rows, jobs, persisted = _cold_jobs(spark, "meta_tsv_chain_jobs", lambda: _meta_chain(spark, tmp_path))
+    assert jobs <= 9, jobs
+    assert persisted == 0
+    assert sorted(r["gene_id"] for r in rows) == [f"g{g}" for g in range(5)]
+    assert all(r["adj_p_comb"] >= r["p_comb"] for r in rows)

@@ -1,11 +1,17 @@
 """Interval-join (J6) semantics: overlap detection, first-gene pick,
-overlap counting, bucket-boundary straddling."""
+overlap counting, bucket-boundary straddling; the sample-sheet lookup
+(J7) against the join it replaces, and its domain checks."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from transcriptomics_data_integration_spark.operators.joins import left_merge
+from transcriptomics_data_integration_spark.operators.joins import (
+    MAX_SHEET_SAMPLES,
+    label_samples,
+    left_merge,
+)
 
 
 def _interval_join_small(spark, probes, genes, bucket=100):
@@ -186,3 +192,45 @@ def test_asof_join_directions_and_tolerance(spark):
     assert run("backward", tolerance=7) == {10: 1, 25: 2, 40: None, 70: None}
     assert run("forward", tolerance=7) == {10: None, 25: 3, 40: None, 70: None}
     assert run("nearest", tolerance=5) == {10: 1, 25: 2, 40: None, 70: None}
+
+
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+def test_label_samples_matches_inner_join(spark, id_type):
+    """Row for row the inner join: a sample missing from the sheet and
+    a null id lose their cells, a sample listed with a null group keeps
+    them, and a sheet row with a null id matches nothing.  Ids compare
+    in their own type; 300 samples fill many hash slots."""
+    cast = str if id_type == "string" else int
+    cells = [(f"g{g}", cast(s), float(g * 1000 + s)) for g in range(3) for s in range(305)]
+    cells += [("g0", None, -1.0)]
+    sheet = [(cast(s), "T" if s % 2 else "N", f"d{s % 3}") for s in range(300)]
+    sheet[7] = (cast(7), None, "d1")
+    sheet += [(None, "T", "d0")]
+    facts = spark.createDataFrame(cells, f"gene_id string, sample_id {id_type}, value double")
+    targets = spark.createDataFrame(sheet, f"sample_id {id_type}, target string, dataset string")
+    got = label_samples(facts, targets, "sample_id", "target", "dataset")
+    want = facts.join(targets, "sample_id")
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 3 * 300
+
+
+def test_label_samples_rejects_a_sample_listed_twice(spark):
+    """The join would silently double the sample's cells."""
+    facts = spark.createDataFrame([("g1", "s1", 1.0)], "gene_id string, sample_id string, value double")
+    targets = spark.createDataFrame(
+        [("s1", "T"), ("s2", "N"), ("s2", "T")], "sample_id string, target string"
+    )
+    with pytest.raises(ValueError, match="'s2' more than once"):
+        label_samples(facts, targets, "sample_id", "target")
+
+
+def test_label_samples_rejects_a_sheet_past_its_bound(spark):
+    facts = spark.createDataFrame([("g1", 1, 1.0)], "gene_id string, sample_id bigint, value double")
+    targets = spark.range(MAX_SHEET_SAMPLES + 1).select(
+        F.col("id").alias("sample_id"), F.lit("T").alias("target")
+    )
+    with pytest.raises(ValueError, match=f"{MAX_SHEET_SAMPLES + 1} samples"):
+        label_samples(facts, targets, "sample_id", "target")
+    ok = label_samples(facts, targets.where(F.col("sample_id") < MAX_SHEET_SAMPLES), "sample_id", "target")
+    assert [r["target"] for r in ok.collect()] == ["T"]

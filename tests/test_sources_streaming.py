@@ -48,11 +48,11 @@ def test_tsv_matrix_io_roundtrip(spark, tmp_path):
     assert got[("g2", "s2")] == 4.5
 
 
-def test_read_matrix_tsv_keeps_string_ids_in_one_job(spark, tmp_path):
+def test_read_matrix_tsv_keeps_string_ids_without_a_job(spark, tmp_path):
     """The reference's matrix layout (unnamed rowname column): an
     all-numeric id column stays strings, an ``NA`` cell reads as null,
-    and the read runs one job (the header line), not a schema-inference
-    scan."""
+    and building the read runs no job: the driver reads the header
+    line itself, and no schema-inference scan runs."""
     path = tmp_path / "m.tsv"
     path.write_text("\ts1\ts2\n00123\t1.5\tNA\n00456\t2\t3.25\n")
     sc = spark.sparkContext
@@ -62,7 +62,7 @@ def test_read_matrix_tsv_keeps_string_ids_in_one_job(spark, tmp_path):
         jobs = sc.statusTracker().getJobIdsForGroup("read_matrix_tsv_jobs")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(jobs) <= 1
+    assert len(jobs) == 0
     assert dict(long.dtypes) == {"gene_id": "string", "sample_id": "string", "value": "double"}
     got = {(r["gene_id"], r["sample_id"]): r["value"] for r in long.collect()}
     assert got == {
@@ -71,6 +71,91 @@ def test_read_matrix_tsv_keeps_string_ids_in_one_job(spark, tmp_path):
         ("00456", "s1"): 2.0,
         ("00456", "s2"): 3.25,
     }
+
+
+def _gzip_tsv(tmp_path, text):
+    import gzip
+
+    path = tmp_path / "m.tsv.gz"
+    with gzip.open(path, "wt") as f:
+        f.write(text)
+    return str(path)
+
+
+def _part_files(tmp_path, text):
+    """A directory as a write leaves it: a ``_SUCCESS`` marker (some
+    committers write a report into it), checksum files and part files.
+    The CSV source reads the header from the largest part file, not
+    from a smaller one with another first line, an empty one, or the
+    larger hidden files."""
+    d = tmp_path / "written"
+    d.mkdir()
+    (d / "_SUCCESS").write_text("\tcommitter\treport" * 50 + "\n")
+    (d / ".part-00001.csv.crc").write_text("\tcrc" * 100 + "\n")
+    (d / "part-00000.csv").write_text("")
+    (d / "part-00001.csv").write_text(text)
+    (d / "part-00002.csv").write_text("\tz1\tz2\n")
+    return str(d)
+
+
+def _plain(name):
+    def write(tmp_path, text):
+        path = tmp_path / name
+        path.write_text(text)
+        return str(path)
+
+    return write
+
+
+HEADER_LAYOUTS = [
+    ("empty_first_cell", _plain("m.tsv"), "\ts1\ts2\ng1\t1\t2\n"),
+    ("quoted_cell", _plain("m.tsv"), 'gene\t"s 1"\t"s\t2"\ts3\ng1\t1\t2\t3\n'),
+    ("blank_first_line", _plain("m.tsv"), "\n\ts1\ts2\ng1\t1\t2\n"),
+    ("repeated_names", _plain("m.tsv"), "\tS1\ts1\ts2\t\ng1\t1\t2\t3\t4\n"),
+    ("gzip", _gzip_tsv, "\ts1\ts2\ng1\t1\t2\n"),
+    ("part_files_with_success", _part_files, "\ts1\ts2\ng1\t1\t2\n"),
+]
+
+
+@pytest.mark.parametrize(
+    "write,text", [c[1:] for c in HEADER_LAYOUTS], ids=[c[0] for c in HEADER_LAYOUTS]
+)
+def test_read_matrix_tsv_header_matches_csv_source(spark, tmp_path, write, text):
+    """The driver-read column names are the ones the CSV source itself
+    gives the file."""
+    from transcriptomics_data_integration_spark.sources.tsv_matrix import _header_cells
+
+    path = write(tmp_path, text)
+    want = spark.read.csv(path, sep="\t", header=True).columns
+    assert _header_cells(spark, path) == want
+    long = read_matrix_tsv(spark, path)
+    assert {r["sample_id"] for r in long.collect()} == set(want[1:])
+
+
+def test_write_matrix_tsv_orders_samples_as_pivot_does(spark, tmp_path):
+    """Without ``var_values`` the columns come out in the order Spark's
+    own ``pivot`` gives them (sorted, a null sample first as ``null``),
+    and the matrix reads back cell for cell."""
+    rows = [("g1", "s10", 1.0), ("g1", "S2", 2.0), ("g1", None, 3.0), ("g2", "b1", 4.0), ("g2", "s10", 5.0)]
+    long = spark.createDataFrame(rows, "gene_id string, sample_id string, value double")
+    out = str(tmp_path / "matrix_out")
+    write_matrix_tsv(long, out)
+    pivoted = long.groupBy("gene_id").pivot("sample_id").agg(F.first("value"))
+    assert spark.read.csv(out, sep="\t", header=True).columns == pivoted.columns
+    assert pivoted.columns == ["gene_id", "null", "S2", "b1", "s10"]
+    got = {(r["gene_id"], r["sample_id"]): r["value"] for r in read_matrix_tsv(spark, out).collect()}
+    want = {(g, "null" if s is None else s): v for g, s, v in rows}
+    assert {k: v for k, v in got.items() if v is not None} == want
+
+
+def test_write_matrix_tsv_of_empty_input_writes_header_only(spark, tmp_path):
+    """An empty long relation writes one part file holding the id
+    column's header alone."""
+    long = spark.createDataFrame([], "gene_id string, sample_id string, value double")
+    out = tmp_path / "matrix_out"
+    write_matrix_tsv(long, str(out))
+    parts = sorted(out.glob("part-*"))
+    assert [p.read_text() for p in parts] == ["gene_id\n"]
 
 
 def test_read_htseq_counts_filters_summary_rows(spark, tmp_path):

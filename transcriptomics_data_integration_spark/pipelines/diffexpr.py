@@ -18,12 +18,9 @@ from transcriptomics_data_integration_spark.operators.filters import (
     top_variance_aggregates,
     top_variance_genes,
 )
+from transcriptomics_data_integration_spark.operators.joins import SampleSheet, label_samples
 from transcriptomics_data_integration_spark.stats.bh import p_adjust
-from transcriptomics_data_integration_spark.stats.combat import (
-    batch_mean_center,
-    combat,
-    groups_per_batch,
-)
+from transcriptomics_data_integration_spark.stats.combat import batch_mean_center, combat
 from transcriptomics_data_integration_spark.stats.ttest import (
     group_moment_aggregates,
     group_moments_finish,
@@ -74,6 +71,15 @@ def _f5_ttest_single_pass(
     )
 
 
+def _groups_per_batch(sheet: SampleSheet, batch_col: str, group_col: str) -> list[int]:
+    """The number of distinct non-null groups of each batch in the
+    collected sheet; its length is the number of batches."""
+    groups: dict = {}
+    for r in sheet.rows:
+        groups.setdefault(r[batch_col], set()).update({r[group_col]} - {None})
+    return [len(g) for g in groups.values()]
+
+
 def _toptable(tt: DataFrame, gene_col: str, adjust: str, alpha: float) -> DataFrame:
     """limma's tail over a pooled-t table: eBayes moderation, p-value
     adjustment, the decideTests sign and the topTable order."""
@@ -122,14 +128,12 @@ def differential_expression(
     """
     if batch_adjust not in ("combat", "center"):
         raise ValueError("batch_adjust must be 'combat' or 'center'")
-    labeled = expr.join(
-        F.broadcast(targets.select(sample_col, group_col, batch_col)), sample_col
-    )
-    # batch cardinality + confounding come from the SAMPLE SHEET (the
-    # broadcast dim the reference itself checks,
-    # DiffExpression_closedPlatform.R:390-418), in one job — not from
-    # `labeled`, whose actions would re-execute the fact scan+join
-    n_groups = groups_per_batch(targets, batch_col, group_col) if batch_correct else []
+    sheet = SampleSheet(targets, sample_col, group_col, batch_col)
+    labeled = sheet.label(expr)
+    # batch cardinality + confounding come from the SAMPLE SHEET the
+    # reference itself checks (DiffExpression_closedPlatform.R:390-418):
+    # the rows collected for the labels, so no job runs for them
+    n_groups = _groups_per_batch(sheet, batch_col, group_col) if batch_correct else []
     if len(n_groups) > 1:
         if min(n_groups) < 2:
             raise ValueError(
@@ -145,9 +149,7 @@ def differential_expression(
                 labeled = labeled.withColumn(value_col, quantize(F.col(value_col), exact_scale))
         else:
             corrected = combat(labeled, gene_col, sample_col, batch_col, value_col)
-            labeled = corrected.join(
-                F.broadcast(targets.select(sample_col, group_col)), sample_col
-            )
+            labeled = sheet.label(corrected, group_col)
     tt = _f5_ttest_single_pass(
         labeled, gene_col, group_col, value_col, group_a, group_b,
         top_k_genes, exact_scale,
@@ -206,9 +208,7 @@ def normalized_matrix_de(
         # already exact at this scale; the floor form is a no-op on
         # them)
         df = df.withColumn(value_col, quantize(F.col(value_col), exact_scale))
-    labeled = df.join(
-        F.broadcast(targets.select(sample_col, group_col)), sample_col
-    )
+    labeled = label_samples(df, targets, sample_col, group_col)
     tt = _f5_ttest_single_pass(
         labeled, gene_col, group_col, value_col, group_a, group_b,
         top_k_genes, exact_scale,

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.operators.joins import label_samples
 from transcriptomics_data_integration_spark.stats.icc import icc
 from transcriptomics_data_integration_spark.stats.stouffer import (
     stouffer_aggregates,
@@ -35,12 +36,22 @@ def meta_analysis(
 ) -> DataFrame:
     """Long multi-platform expression + sample sheet -> per-gene meta
     results (avg log2fc, combined z, combined p, icc, n_platforms),
-    ordered by combined p with nulls last, as R's ``order()`` does.
+    ordered by combined p with nulls last (as R's ``order()`` does),
+    then by gene.
+
+    The order is a sort inside ONE partition, not a global ``orderBy``:
+    the table holds one row per gene (at most ~10^5), and a global sort
+    would add a range-partition exchange and its sampling job, only for
+    a following unpartitioned window (``stats.bh.p_adjust``) to gather
+    the rows into one partition again.  Sorted in one partition, the
+    BH windows reuse both the distribution and the order.  The samples
+    are labelled from the collected sheet (``label_samples``), so no
+    join inflates the table's size estimate.
 
     ``exact_scale`` flows to the per-platform DE moments and the ICC
     pair moments (functions/exact.py scheme) so the composition is
     hash-gateable end-to-end (``q_meta_pipeline``)."""
-    labeled = expr.join(F.broadcast(targets.select(sample_col, group_col)), sample_col)
+    labeled = label_samples(expr, targets, sample_col, group_col)
     de = two_group_ttest(
         labeled,
         [gene_col, platform_col],
@@ -87,4 +98,4 @@ def meta_analysis(
         "p_comb",
         "icc",
         (log2_ratio_sum / F.size("_ps")).alias("avg_p_improvement"),
-    ).orderBy(F.col("p_comb").asc_nulls_last(), gene_col)
+    ).repartition(1).sortWithinPartitions(F.col("p_comb").asc_nulls_last(), gene_col)

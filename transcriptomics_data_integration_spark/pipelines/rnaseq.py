@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.operators.filters import low_value_floor
+from transcriptomics_data_integration_spark.operators.joins import label_samples
 from transcriptomics_data_integration_spark.stats.bh import p_adjust
 from transcriptomics_data_integration_spark.stats.normalize import (
     cqn_simplified,
@@ -81,7 +82,7 @@ def rnaseq_differential_expression(
         threshold=floor_threshold,
     )
     labeled = (
-        floored.join(F.broadcast(targets.select(sample_col, group_col)), sample_col)
+        label_samples(floored, targets, sample_col, group_col)
         # gene-keyed join, NOT broadcast: the per-gene weight relation
         # is gene-dimension (unbounded); AQE still picks BHJ when small
         .join(weights, gene_col)

@@ -9,8 +9,10 @@ Reference contract: header row + gene IDs in an unnamed first column
 The engine keeps the long form ``(gene_id, sample_id, value)`` as the
 canonical relation (SURVEY.md section 1.1); wide TSV exists only at the
 external boundary.  ``melt_wide`` uses the SQL ``stack`` generator —
-one pass, no shuffle; ``pivot_long`` passes explicit sample values to
-``pivot`` so no extra distinct-collect job runs.
+one pass, no shuffle; ``pivot_long`` always hands ``pivot`` its sample
+values, so Spark's own distinct -> limit -> sort pre-job never runs.
+``read_matrix_tsv`` reads the header line on the driver, so building
+the read runs no Spark job.
 
 Scale: a 100 TB corpus is many matrices; each TSV's sample set is
 O(10-1000) columns (`README.md:15-23`) so a pivoted row is always
@@ -18,6 +20,8 @@ small.  The genes dimension is the parallel axis.
 """
 
 from __future__ import annotations
+
+import csv
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,11 +53,97 @@ def pivot_long(
     value_col: str = "value",
     var_values: list[str] | None = None,
 ) -> DataFrame:
-    """Long -> wide.  Pass ``var_values`` when known to skip the
-    distinct-collect pre-job (SURVEY.md section 4.3)."""
-    g = df.groupBy(id_col)
-    p = g.pivot(var_col, var_values) if var_values else g.pivot(var_col)
-    return p.agg(F.first(value_col))
+    """Long -> wide, one column per ``var_values`` entry.  Pass
+    ``var_values`` when known (SURVEY.md section 4.3); otherwise one
+    distinct-collect job reads them, sorted as ``pivot`` sorts them
+    (nulls first), and more than ``spark.sql.pivotMaxValues`` distinct
+    values raise, as ``pivot`` raises."""
+    if var_values is None:
+        var_values = sorted(
+            (r[0] for r in df.select(var_col).distinct().collect()),
+            key=lambda v: (v is not None, v),
+        )
+        limit = int(df.sparkSession.conf.get("spark.sql.pivotMaxValues"))
+        if len(var_values) > limit:
+            raise ValueError(
+                f"pivot column {var_col!r} has {len(var_values)} distinct values, "
+                f"more than spark.sql.pivotMaxValues ({limit})"
+            )
+    return df.groupBy(id_col).pivot(var_col, var_values).agg(F.first(value_col))
+
+
+def _is_hidden(name: str) -> bool:
+    """Names the file sources skip when listing a directory (Spark's
+    ``HadoopFSUtils.shouldFilterOutPathName``)."""
+    if name.startswith(("_common_metadata", "_metadata")):
+        return False
+    return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith(
+        "._COPYING_"
+    )
+
+
+def _data_files(jvm, conf, path: str) -> list:
+    """The files ``spark.read.csv(path)`` reads, largest
+    first (the order its scan packs them in): the path's glob matches,
+    directories listed recursively without hidden entries."""
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(conf)
+    files = []
+
+    def walk(statuses):
+        for st in statuses:
+            if st.isDirectory():
+                walk(s for s in fs.listStatus(st.getPath()) if not _is_hidden(s.getPath().getName()))
+            else:
+                files.append(st)
+
+    matches = fs.globStatus(hpath)
+    if not matches:
+        raise FileNotFoundError(f"no file matches {path!r}")
+    walk(matches)
+    return [st.getPath() for st in sorted(files, key=lambda st: -st.getLen())]
+
+
+def _header_cells(spark: SparkSession, path: str) -> list[str]:
+    """The column names ``spark.read.csv(path, sep="\\t", header=True)``
+    gives, read on the driver: the first non-blank line of the largest
+    file (decompressed by the codec Hadoop picks from its name, as the
+    text reader does), split on tabs with ``"`` quoting.  As the CSV
+    source names them, an empty cell is ``_c<i>``, and a repeated name
+    (case-insensitively, unless ``spark.sql.caseSensitive``) gets its
+    index appended."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    line = None
+    for hpath in _data_files(jvm, conf, path):
+        stream = hpath.getFileSystem(conf).open(hpath)
+        codec = codecs.getCodec(hpath)
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
+        try:
+            line = reader.readLine()
+            while line is not None and not line.strip():
+                line = reader.readLine()
+        finally:
+            reader.close()
+        if line is not None:
+            break
+    if line is None:
+        raise ValueError(f"{path!r} has no header line")
+    cells = next(csv.reader([line], delimiter="\t", quotechar='"'))
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+
+    def fold(c: str) -> str:
+        return c if case_sensitive else c.lower()
+
+    names = [fold(c) for c in cells if c]
+    repeated = {c for c in names if names.count(c) > 1}
+    return [
+        f"_c{i}" if not c else f"{c}{i}" if fold(c) in repeated else c
+        for i, c in enumerate(cells)
+    ]
 
 
 def read_matrix_tsv(
@@ -62,12 +152,13 @@ def read_matrix_tsv(
     """Read a reference-style TSV matrix into long form.  The unnamed
     rowname column arrives as ``_c0``/first header cell.
 
-    The schema is built from the header line (one job reads it): the
+    The schema is built from the header line, which the driver reads
+    itself (``_header_cells``), so the call runs no Spark job: the
     gene ids stay strings, so a numeric id like ``00123`` keeps its
     zeros, and every sample column is double.  ``NA`` cells read as
-    null, as R's ``read.table`` reads them.  The data read itself runs
-    no job; schema inference would scan the whole file first."""
-    header = spark.read.csv(path, sep="\t", header=True).columns
+    null, as R's ``read.table`` reads them.  Schema inference would
+    scan the whole file first."""
+    header = _header_cells(spark, path)
     schema = StructType(
         [StructField(header[0], StringType())]
         + [StructField(c, DoubleType()) for c in header[1:]]

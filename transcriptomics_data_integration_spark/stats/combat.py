@@ -35,17 +35,12 @@ EB_SCHEMA = (
 )
 
 
-def groups_per_batch(df: DataFrame, batch_col: str, group_col: str) -> list[int]:
-    """The number of distinct biological groups in each batch, from one
-    driver job; its length is the number of batches."""
-    per_batch = df.groupBy(batch_col).agg(F.countDistinct(group_col).alias("n"))
-    return [r["n"] for r in per_batch.collect()]
-
-
 def check_confounding(df: DataFrame, batch_col: str, group_col: str) -> bool:
     """True if every batch contains more than one biological group
-    (reference confound check, `DiffExpression_closedPlatform.R:390-418`)."""
-    return all(n >= 2 for n in groups_per_batch(df, batch_col, group_col))
+    (reference confound check, `DiffExpression_closedPlatform.R:390-418`),
+    from one driver job."""
+    per_batch = df.groupBy(batch_col).agg(F.countDistinct(group_col).alias("n"))
+    return all(r["n"] >= 2 for r in per_batch.collect())
 
 
 def _eb_solver(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.functions.exact import dsum
+from transcriptomics_data_integration_spark.operators.joins import label_samples
 
 
 def log2_cpm(
@@ -127,7 +128,7 @@ def voom_weights_lowess(
     4. ``weight = trend^-4``.
 
     Execution: the per-gene (mean, sqrt_sd) aggregate is distributed
-    (with a design: one broadcast join + per-(gene, group) partial
+    (with a design: one sample-sheet lookup + per-(gene, group) partial
     moments, still a single gene-keyed shuffle); the lowess fit runs
     in ONE Arrow batch over that bounded relation (gene count is
     O(10^4..10^6) — SURVEY §2.5 M5 documents the split, mirroring
@@ -142,9 +143,7 @@ def voom_weights_lowess(
     if targets is not None and group_col is not None:
         # residual variance about group means (~0+group lmFit):
         # sum over groups of within-group SS, df = n - n_groups
-        labeled = lcpm.join(
-            F.broadcast(targets.select(sample_col, group_col)), sample_col
-        )
+        labeled = label_samples(lcpm, targets, sample_col, group_col)
         # within-group SS from var_samp (numerically stable centered
         # form — the raw-moment form s2 - s^2/n loses ~1e-9 relative
         # precision to cancellation); a single-observation group
