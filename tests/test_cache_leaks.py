@@ -11,6 +11,7 @@ input)."""
 from __future__ import annotations
 
 import random
+import re
 from functools import reduce
 
 import numpy as np
@@ -316,6 +317,40 @@ def test_neardup_pairs_in_few_jobs(spark, name, build):
     rows, jobs, _ = _cold_jobs(spark, f"{name}_jobs", lambda: build(spark))
     assert rows
     assert jobs <= NEARDUP_JOBS[name], jobs
+
+
+@pytest.mark.parametrize("expand", ["all", "star"])
+def test_minhash_hashes_on_every_shuffle_partition(spark, tmp_path, expand):
+    """A one-file corpus scans in one task and shuffles a few KB, so
+    AQE would coalesce the digest exchange to one partition and the
+    stage that shingles and hashes the representatives would run one
+    task.  That exchange is a repartition by number, which AQE leaves
+    at ``spark.sql.shuffle.partitions``: every digest exchange in the
+    final plan has that many partitions and no coalescing read."""
+    path = str(tmp_path / "docs")
+    _docs(spark).coalesce(1).write.parquet(path)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n > 1
+    sc = spark.sparkContext
+    group = f"minhash_{expand}_stages"
+    sc.setJobGroup(group, group)
+    try:
+        pairs = minhash_lsh_pairs(spark.read.parquet(path), "doc_id", expand=expand)
+        assert pairs.collect()
+        tracker = sc.statusTracker()
+        stages = [s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert max(tracker.getStageInfo(s).numTasks for s in stages) >= n
+    final = pairs._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    digest = [i for i, line in enumerate(lines) if "Exchange hashpartitioning(_digest#" in line]
+    assert digest
+    for i in digest:
+        assert re.search(rf"hashpartitioning\(_digest#\d+, {n}\), REPARTITION_BY_NUM", lines[i])
+        # the exchange's query stage, then the operator reading it
+        assert "ShuffleQueryStage" in lines[i - 1]
+        assert "AQEShuffleRead" not in lines[i - 2]
 
 
 def test_dhash_pairs_decode_each_image_once(spark, tmp_path):

@@ -158,6 +158,17 @@ def test_write_matrix_tsv_of_empty_input_writes_header_only(spark, tmp_path):
     assert [p.read_text() for p in parts] == ["gene_id\n"]
 
 
+def test_read_matrix_tsv_reads_an_empty_matrix_back(spark, tmp_path):
+    """The header-only file an empty relation writes reads back as an
+    empty long relation, with no sample column to melt."""
+    long = spark.createDataFrame([], "gene_id string, sample_id string, value double")
+    out = str(tmp_path / "matrix_out")
+    write_matrix_tsv(long, out)
+    back = read_matrix_tsv(spark, out)
+    assert back.dtypes == [("gene_id", "string"), ("sample_id", "string"), ("value", "double")]
+    assert back.collect() == []
+
+
 def test_read_htseq_counts_filters_summary_rows(spark, tmp_path):
     d = tmp_path / "counts"
     d.mkdir()

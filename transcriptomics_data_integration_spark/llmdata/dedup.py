@@ -24,6 +24,14 @@ Every near-duplicate pair operator — these, the perceptual-hash ones in
 ``multimodal`` and ``similarity.cosine_neardup_pairs`` — is candidate
 generation by bucketing followed by exact verification, and runs
 through one kernel, :func:`_banded_pairs`.
+
+Parallelism: the expensive work (a few hundred shingles per document,
+each hashed) follows exchanges whose input is only the documents.  AQE
+sizes a planned exchange by those bytes, so a small corpus would hash
+in one task; the representative election (:func:`_rep_tagged`, behind
+``minhash_lsh_pairs`` and the star form of ``simhash_neardup_pairs``)
+fixes its exchange at ``spark.sql.shuffle.partitions`` partitions, which
+AQE does not coalesce.
 """
 
 from __future__ import annotations
@@ -101,23 +109,12 @@ def _md5_60bit(col: Column) -> Column:
 
 _MINHASH_SPLIT = 1 << 30
 
-
-def _minhash_words(shingle: Column, n_hashes: int) -> list[Column]:
-    """The ceil(n/2) 60-bit words (two per md5 digest) feeding the
-    30-bit lane family — one conv per word, one md5 per two words."""
-    words = []
-    for k in range((n_hashes + 3) // 4):
-        d = F.md5(F.concat_ws("#", shingle, F.lit(k)).cast("binary"))
-        words.append(F.conv(F.substring(d, 1, 15), 16, 10).cast("bigint"))
-        words.append(F.conv(F.substring(d, 16, 15), 16, 10).cast("bigint"))
-    return words[: (n_hashes + 1) // 2]
-
-
-def _minhash_half(word_name: str, j: int) -> Column:
-    """30-bit half j%2 of the named 60-bit word column."""
-    if j % 2 == 0:
-        return F.expr(f"{word_name} DIV {_MINHASH_SPLIT}")
-    return F.col(word_name) % _MINHASH_SPLIT
+# word w of a ``shingle`` column, the recipe above as a SQL template
+# (one parse per word, not a py4j call per operator)
+_MINHASH_WORD_SQL = (
+    "CAST(conv(substring(md5(CAST(concat_ws('#', shingle, '{k}') AS BINARY)), {start}, 15), "
+    "16, 10) AS BIGINT) AS _w{w}"
+)
 
 
 def content_digest(col: Column) -> Column:
@@ -246,9 +243,21 @@ def _bit_bands(col: str, n_bands: int, width: int) -> Column:
 def _rep_tagged(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """``df`` plus ``_digest`` (md5 of the text) and ``_rep``, the min id
     of the digest: each doc's exact-duplicate representative, from one
-    window."""
-    return df.withColumn("_digest", content_digest(F.col(text_col))).withColumn(
-        "_rep", F.min(id_col).over(Window.partitionBy("_digest"))
+    window.
+
+    The digest exchange is planned explicitly, ``spark.sql.shuffle.partitions``
+    wide: it meets the window's distribution, so it is the window's own
+    exchange, not an extra one, and AQE leaves a repartition by number
+    uncoalesced.  AQE sizes the partitions it plans by the bytes
+    shuffled, and the documents are small next to what follows in the
+    same stage (each representative explodes to hundreds of shingles,
+    each hashed); left to it, a one-file corpus ran that stage as one
+    task on one core."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        df.withColumn("_digest", content_digest(F.col(text_col)))
+        .repartition(n, "_digest")
+        .withColumn("_rep", F.min(id_col).over(Window.partitionBy("_digest")))
     )
 
 
@@ -386,7 +395,7 @@ def minhash_sig_columns(
     doc: the per-seed hashes ride each posting as extra columns, and one
     groupBy takes element-wise mins — no n_hashes-fold row explosion
     through the shuffle.  ``m_j`` is the min over the doc's shingles of
-    the 30-bit md5 lane j (module notes at ``_minhash_words``).
+    the 30-bit md5 lane j (module notes at ``_MINHASH_SPLIT``).
     """
     return hashed_shingles(sh, n_hashes).groupBy(id_col).agg(*_sig_mins(n_hashes))
 
@@ -394,7 +403,7 @@ def minhash_sig_columns(
 def _sig_mins(n_hashes: int) -> list[Column]:
     """The signature aggregates ``m_j = min(h_j)`` over a doc's hashed
     postings."""
-    return [F.min(f"h{j}").alias(f"m{j}") for j in range(n_hashes)]
+    return [F.expr(f"min(h{j}) AS m{j}") for j in range(n_hashes)]
 
 
 def _minhash_sig_sets(sh: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
@@ -403,7 +412,7 @@ def _minhash_sig_sets(sh: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
     the posting relation, so the wide posting-level intermediate is
     never re-read."""
     return hashed_shingles(sh, n_hashes).groupBy(id_col).agg(
-        *_sig_mins(n_hashes), F.collect_set("sid").alias("sset")
+        *_sig_mins(n_hashes), F.expr("collect_set(sid) AS sset")
     )
 
 
@@ -415,21 +424,24 @@ def hashed_shingles(sh: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
 
     The hashes are computed per POSTING row: ceil(n/4) md5s and
     ceil(n/2) convs each, no broadcast and no extra shuffle, so the
-    cost is CPU-linear at any corpus size.  (Hashing each DISTINCT
-    shingle once and broadcasting the result back collects the
-    distinct-shingle relation to the driver, which breaks past
-    ``spark.driver.maxResultSize`` on high-entropy corpora — r8,
-    PLANS.md — and it measured no faster than this path on the
-    200-document benchmark corpus: 1.3–1.4 s warm each, same jobs,
-    4-core host.)
+    cost is CPU-linear at any corpus size.  Two projections, each one
+    ``selectExpr`` of the SQL templates above: the words, then the
+    lanes.  (Hashing each DISTINCT shingle once and broadcasting the
+    result back collects the distinct-shingle relation to the driver,
+    which breaks past ``spark.driver.maxResultSize`` on high-entropy
+    corpora — r8, PLANS.md — and it measured no faster than this path
+    on the 200-document benchmark corpus.)
     """
-    words = _minhash_words(F.col("shingle"), n_hashes)
-    # two projections in all, not one analysed plan per column
-    rel = sh.withColumns({f"_w{w}": c for w, c in enumerate(words)})
-    rel = rel.withColumns(
-        {f"h{j}": _minhash_half(f"_w{j // 2}", j) for j in range(n_hashes)} | {"sid": F.col("_w0")}
-    )
-    return rel.drop(*[f"_w{w}" for w in range(len(words))])
+    words = [
+        _MINHASH_WORD_SQL.format(k=w // 2, start=1 + 15 * (w % 2), w=w)
+        for w in range((n_hashes + 1) // 2)
+    ]
+    # lane j: the high (j even) or low (j odd) 30 bits of word j // 2
+    lanes = [
+        f"_w{j // 2} {'%' if j % 2 else 'DIV'} {_MINHASH_SPLIT} AS h{j}" for j in range(n_hashes)
+    ]
+    keep = ["`" + c.replace("`", "``") + "`" for c in sh.columns]
+    return sh.selectExpr(*keep, *words).selectExpr(*keep, *lanes, "_w0 AS sid")
 
 
 def _band_rows(sigcols: DataFrame, n_bands: int, n_hashes: int) -> DataFrame:
@@ -569,7 +581,11 @@ def minhash_lsh_pairs(
     the member expansion all filter that one tagged relation.  (Spark
     does not share its exchange between them: the representatives
     keep the text, the edges and members do not, so column pruning
-    plans the digest window once per branch.)  The shingle-id sets ride
+    plans the digest window once per branch.)  Every branch's digest
+    exchange is ``spark.sql.shuffle.partitions`` wide and uncoalesced
+    (:func:`_rep_tagged`), so the stage that shingles, hashes and
+    partially aggregates the representatives runs on every core even
+    when the corpus is one small file.  The shingle-id sets ride
     the band rows of :func:`_banded_pairs`, so the band self-join
     yields both sets of each candidate and verifies it in place — no
     join back to the per-doc relation.

@@ -36,9 +36,18 @@ def melt_wide(
     value_name: str = "value",
 ) -> DataFrame:
     """Wide (one column per sample) -> long.  ``stack`` is generated
-    column-pruning-friendly and runs inside whole-stage codegen."""
+    column-pruning-friendly and runs inside whole-stage codegen.  A
+    matrix with no sample column (``write_matrix_tsv`` of an empty
+    relation writes one) melts to an empty relation, ``var_name``
+    string and ``value_name`` double."""
     if value_cols is None:
         value_cols = [c for c in df.columns if c != id_col]
+    if not value_cols:
+        return df.select(
+            F.col(id_col),
+            F.lit(None).cast("string").alias(var_name),
+            F.lit(None).cast("double").alias(value_name),
+        ).where(F.lit(False))
     pairs = ", ".join(f"'{c}', `{c}`" for c in value_cols)
     return df.select(
         F.col(id_col),

@@ -253,7 +253,7 @@ def streaming_minhash_neardup(
     Per-row signature (no shuffle): the same 30-bit md5-lane minhash
     as the batch path (seed j = the 30-bit half of
     ``md5(shingle || '#' || j//4)`` picked by (j//2)%2 and j%2 — see
-    ``llmdata.dedup._minhash_words``), computed in an Arrow-batched
+    ``llmdata.dedup.hashed_shingles``), computed in an Arrow-batched
     pandas UDF so signatures are BIT-IDENTICAL to the batch
     pipeline's.  Docs then explode to their
     ``n_bands`` band keys and ``applyInPandasWithState`` keyed by
