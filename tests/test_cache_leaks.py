@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.llmdata.dedup import (
+    connected_components,
     dedup_clusters,
     edit_distance_pairs,
     minhash_lsh_pairs,
@@ -300,10 +301,10 @@ def _plan_nodes(df, node):
 # so a bound at the measured count keeps every family cache-free; the
 # persisted forms ran 5 (dHash), 5 (wide), 9 (video) and 6 (cosine).
 NEARDUP_JOBS = {
-    "minhash_lsh_pairs_all": 11,
-    "minhash_lsh_pairs_star": 9,
-    "simhash_neardup_pairs_all": 8,
-    "simhash_neardup_pairs_star": 10,
+    "minhash_lsh_pairs_all": 8,
+    "minhash_lsh_pairs_star": 6,
+    "simhash_neardup_pairs_all": 6,
+    "simhash_neardup_pairs_star": 7,
     "edit_distance_pairs": 4,
     "dhash_neardup_pairs": 4,
     "hamming_neardup_pairs_wide": 4,
@@ -353,6 +354,64 @@ def test_minhash_hashes_on_every_shuffle_partition(spark, tmp_path, expand):
         assert "AQEShuffleRead" not in lines[i - 2]
 
 
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda d: minhash_lsh_pairs(d, "doc_id", expand="all"),
+        lambda d: minhash_lsh_pairs(d, "doc_id", expand="star"),
+        lambda d: simhash_neardup_pairs(d, "doc_id", expand="star"),
+    ],
+    ids=["minhash_all", "minhash_star", "simhash_star"],
+)
+def test_representative_branches_share_one_scan(spark, tmp_path, build):
+    """The representatives, the star edges and the member expansion
+    all filter one digest-tagged relation on columns the digest window
+    does not partition by, so no filter is pushed below the window,
+    every branch reads the same digest exchange, and the final plan
+    scans the corpus once (null digests filtered on ``_digest`` gave
+    the edges and members an exchange and a scan of their own)."""
+    path = str(tmp_path / "docs")
+    _docs(spark).coalesce(1).write.parquet(path)
+    rows, scans, _ = _plan_nodes(build(spark.read.parquet(path)), "FileScan parquet")
+    assert rows
+    assert scans == 1, scans
+
+
+def test_connected_components_reads_its_edges_once(spark):
+    """Both orientations of each edge come from one read of the edge
+    relation: a row-counting UDF over the edges runs once per edge row
+    (a self-union of the edges ran it twice per row)."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        seen.add(1)
+        return x
+
+    edges = spark.sql("SELECT * FROM VALUES (1, 2), (2, 3), (4, 5), (6, 6) AS t(id_a, id_b)")
+    counted = edges.select(F.udf(tick, "int")("id_a").alias("id_a"), "id_b")
+    rows = connected_components(counted).collect()
+    assert {(r["node"], r["component"]) for r in rows} == {
+        (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)
+    }
+    assert seen.value == 4
+
+
+def test_dedup_clusters_driver_arm_runs_no_job_after_the_closure(spark):
+    """On the driver arm, dedup_clusters runs three Spark jobs from a
+    cold cache: the distinct's shuffle stage and the checkpoint of the
+    symmetric edges, then the collect of one orientation.  The cluster
+    sizes come from the union-find mapping, so the decision table is a
+    local relation whose collect runs no job (the size window over it
+    ran 2 more)."""
+    edges = spark.sql("SELECT * FROM VALUES (1, 2), (2, 3), (4, 5), (6, 6) AS t(id_a, id_b)")
+    rows, jobs, persisted = _cold_jobs(spark, "dedup_clusters_driver_jobs", lambda: dedup_clusters(edges))
+    assert sorted(tuple(r) for r in rows) == [
+        (1, 1, 3), (2, 1, 3), (3, 1, 3), (4, 4, 2), (5, 4, 2), (6, 6, 1)
+    ]
+    assert jobs == 3, jobs
+    assert persisted == 0
+
+
 def test_dhash_pairs_decode_each_image_once(spark, tmp_path):
     """Both sides of the band self-join read one exchange, so the image
     codec runs once even on a parquet input, where Spark broadcasts one
@@ -395,7 +454,7 @@ def test_minhash_lsh_pairs_star_clusters_in_few_jobs(spark):
         spark, "minhash_lsh_pairs_jobs",
         lambda: dedup_clusters(minhash_lsh_pairs(_docs(spark), "doc_id", expand="star")),
     )
-    assert jobs <= 12, jobs
+    assert jobs <= 6, jobs
     # docs 0-3 are exact duplicates of each other, 4-6 near duplicates of them
     assert {r["doc_id"]: r["canonical_id"] for r in rows} == {i: 0 for i in range(7)}
 

@@ -4246,6 +4246,55 @@ def test_connected_components_arms_agree_property(spark):
     check()
 
 
+def _clusters(spark, rows, schema, bound):
+    """dedup_clusters with the driver-arm bound set to ``bound`` ->
+    ({(doc_id, canonical_id, cluster_size)}, dtypes)."""
+    from transcriptomics_data_integration_spark.llmdata import dedup as dd
+
+    old = dd.DRIVER_CLOSURE_MAX_EDGES
+    dd.DRIVER_CLOSURE_MAX_EDGES = bound
+    try:
+        out = dd.dedup_clusters(spark.createDataFrame(rows, schema))
+        return {tuple(r) for r in out.collect()}, out.dtypes
+    finally:
+        dd.DRIVER_CLOSURE_MAX_EDGES = old
+
+
+def test_dedup_clusters_arms_agree_property(spark):
+    """Property: the driver arm (cluster sizes counted from the
+    union-find mapping) and the propagation arm (a size window over the
+    labels) return identical (doc_id, canonical_id, cluster_size) sets
+    with identical column types, for integer and string ids, with
+    self-loops and duplicate, reversed edges."""
+    from hypothesis import HealthCheck, example, given, settings
+    from hypothesis import strategies as st
+
+    @st.composite
+    def graphs(draw):
+        edges = draw(st.lists(st.tuples(st.integers(0, 15), st.integers(0, 15)), min_size=1, max_size=12))
+        loops = draw(st.lists(st.integers(20, 25), max_size=3))
+        edges += [(v, v) for v in loops]
+        edges += [(b, a) for a, b in draw(st.lists(st.sampled_from(edges), max_size=3))]
+        return draw(st.permutations(edges))
+
+    @given(graphs(), st.booleans())
+    @example([(3, 3), (1, 2), (2, 1), (2, 9), (10, 11)], True)
+    @settings(max_examples=6, deadline=None, database=None,
+              suppress_health_check=list(HealthCheck))
+    def check(rows, as_str):
+        schema = "id_a long, id_b long"
+        if as_str:
+            rows = [(f"d{a:02d}", f"d{b:02d}") for a, b in rows]
+            schema = "id_a string, id_b string"
+        driver, dt_d = _clusters(spark, rows, schema, 10**9)
+        prop, dt_p = _clusters(spark, rows, schema, -1)
+        id_t = "string" if as_str else "bigint"
+        assert dt_d == dt_p == [("doc_id", id_t), ("canonical_id", id_t), ("cluster_size", "bigint")]
+        assert driver == prop, rows
+
+    check()
+
+
 def test_connected_components_string_ids_use_spark_order(spark):
     """String ids: Python's codepoint order equals Spark's UTF-8 byte
     order, so both arms pick the same min id — including past the BMP,

@@ -32,6 +32,14 @@ in one task; the representative election (:func:`_rep_tagged`, behind
 ``minhash_lsh_pairs`` and the star form of ``simhash_neardup_pairs``)
 fixes its exchange at ``spark.sql.shuffle.partitions`` partitions, which
 AQE does not coalesce.
+
+Clustering (``connected_components`` / ``dedup_clusters``): at dedup
+sizes a closure costs Spark jobs and query planning, not data.  The
+symmetric edge list is built from one read of the pair relation (a
+self-union planned the whole pair query twice, and AQE reuses
+exchanges, not the work above them), and on the driver arm the
+decision table, cluster sizes included, is a local relation built from
+the union-find result, so nothing after the closure runs a Spark job.
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ from __future__ import annotations
 import re
 import time
 import warnings
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -154,6 +163,11 @@ def _set_counts(set_a: str, set_b: str) -> dict[str, Column]:
     }
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # --- Banded pairs: the one near-duplicate kernel --------------------------
 #
 # Every near-duplicate pair operator is candidate generation by
@@ -210,12 +224,8 @@ def _banded_pairs(
     payload = [c for c in rows.columns if c not in ("id", "band", "band_key")]
 
     def side(s: str) -> DataFrame:
-        return rows.select(
-            F.col("id").alias(f"id_{s}"),
-            "band",
-            "band_key",
-            *[F.col(p).alias(f"{p}_{s}") for p in payload],
-        )
+        renamed = [f"{_quoted(p)} AS {_quoted(f'{p}_{s}')}" for p in payload]
+        return rows.selectExpr(f"id AS id_{s}", "band", "band_key", *renamed)
 
     pairs = side("a").join(side("b"), ["band", "band_key"]).where(F.col("id_a") < F.col("id_b"))
     if dedup_first:
@@ -261,14 +271,17 @@ def _rep_tagged(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _star_edges(tagged: DataFrame, id_col: str, **exact) -> DataFrame:
+def _star_edges(tagged: DataFrame, id_col: str, text_col: str, **exact) -> DataFrame:
     """One (representative, member) edge per exact duplicate of a
     :func:`_rep_tagged` relation, carrying ``exact`` — the verify
     outputs of two identical texts.  ``_rep`` is the min id, so it is
     the smaller id of every edge.  Null text has no digest, hence no
-    duplicate and no edge."""
+    duplicate and no edge: the filter tests the text, not the digest
+    (md5 is null exactly when its input is), because a predicate on the
+    window's partition column is pushed below the window and would
+    give this branch a digest exchange of its own."""
     return tagged.where(
-        F.col("_digest").isNotNull() & (F.col(id_col) != F.col("_rep"))
+        F.col(text_col).isNotNull() & (F.col(id_col) != F.col("_rep"))
     ).select(
         F.col("_rep").alias("id_a"),
         F.col(id_col).alias("id_b"),
@@ -440,7 +453,7 @@ def hashed_shingles(sh: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     lanes = [
         f"_w{j // 2} {'%' if j % 2 else 'DIV'} {_MINHASH_SPLIT} AS h{j}" for j in range(n_hashes)
     ]
-    keep = ["`" + c.replace("`", "``") + "`" for c in sh.columns]
+    keep = [_quoted(c) for c in sh.columns]
     return sh.selectExpr(*keep, *words).selectExpr(*keep, *lanes, "_w0 AS sid")
 
 
@@ -448,20 +461,17 @@ def _band_rows(sigcols: DataFrame, n_bands: int, n_hashes: int) -> DataFrame:
     """Explode columnar signatures to n_bands rows per doc: ``band`` and
     ``band_key``, the band's minhash columns packed into an
     array<bigint> join key.  Every non-signature column passes
-    through."""
+    through.  One ``selectExpr`` (an ``inline`` of the band structs),
+    so building it costs a few py4j calls, not several per column."""
     rows_per_band = n_hashes // n_bands
     sig = [f"m{j}" for j in range(n_hashes)]
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array(*sig[b * rows_per_band : (b + 1) * rows_per_band]).alias("band_key"),
-        )
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'band_key', "
+        f"array({', '.join(sig[b * rows_per_band : (b + 1) * rows_per_band])}))"
         for b in range(n_bands)
-    ]
-    rest = [c for c in sigcols.columns if c not in sig]
-    return sigcols.select(*rest, F.explode(F.array(*bands)).alias("_bb")).select(
-        *rest, "_bb.band", "_bb.band_key"
     )
+    rest = [_quoted(c) for c in sigcols.columns if c not in sig]
+    return sigcols.selectExpr(*rest, f"inline(array({bands}))")
 
 
 def lsh_candidates_from_columns(
@@ -578,11 +588,12 @@ def minhash_lsh_pairs(
     Plan shape: every relation has ONE consumer, so nothing is cached.
     One ``min(id) over (partition by digest)`` window tags each doc
     with its representative; the representatives, the star edges and
-    the member expansion all filter that one tagged relation.  (Spark
-    does not share its exchange between them: the representatives
-    keep the text, the edges and members do not, so column pruning
-    plans the digest window once per branch.)  Every branch's digest
-    exchange is ``spark.sql.shuffle.partitions`` wide and uncoalesced
+    the member expansion all filter that one tagged relation on
+    columns the window does not partition by (``id = _rep``, ``text
+    IS NOT NULL``), so no filter is pushed below the window, every
+    branch plans the same digest exchange and Spark reuses it: the
+    final plan scans the corpus once.  That exchange is
+    ``spark.sql.shuffle.partitions`` wide and uncoalesced
     (:func:`_rep_tagged`), so the stage that shingles, hashes and
     partially aggregates the representatives runs on every core even
     when the corpus is one small file.  The shingle-id sets ride
@@ -598,19 +609,22 @@ def minhash_lsh_pairs(
     rep_docs = tagged.where(F.col(id_col) == F.col("_rep"))
 
     sh = shingles(rep_docs, id_col, text_col, k)
-    sigs = _minhash_sig_sets(sh, id_col, n_hashes).withColumnRenamed(id_col, "id")
-    rows = _band_rows(sigs.withColumnRenamed("sset", "set"), n_bands, n_hashes)
+    sigs = _minhash_sig_sets(sh, id_col, n_hashes).selectExpr(
+        f"{_quoted(id_col)} AS id", *[f"m{j}" for j in range(n_hashes)], "sset AS set"
+    )
+    rows = _band_rows(sigs, n_bands, n_hashes)
     # the sets hold the sid shingle ids (60-bit longs), so the counts —
     # and hence the Jaccard division — equal those of string shingle sets
     jaccard = _jaccard(**_set_counts("set_a", "set_b"))
     rep_pairs = _banded_pairs(rows, {"jaccard": jaccard}, F.col("jaccard") >= threshold)
     if expand == "star":
-        return rep_pairs.unionByName(_star_edges(tagged, id_col, jaccard=1.0))
+        return rep_pairs.unionByName(_star_edges(tagged, id_col, text_col, jaccard=1.0))
 
     # intra-cluster expansion: every pair of exact dups is a candidate
     # (identical band keys) with n_inter = n_a = n_b, i.e. Jaccard = 1.0;
-    # null text has no digest, hence no duplicate
-    members = tagged.where(F.col("_digest").isNotNull())
+    # null text has no digest, hence no duplicate (tested on the text,
+    # as in _star_edges, so this branch reuses the digest exchange)
+    members = tagged.where(F.col(text_col).isNotNull())
     ma = members.select(F.col(id_col).alias("mem_a"), F.col("_rep").alias("id_a"))
     mb = members.select(F.col(id_col).alias("mem_b"), F.col("_rep").alias("id_b"))
     intra = (
@@ -737,7 +751,7 @@ def simhash_neardup_pairs(
         F.col("hamming") <= max_hamming,
     )
     if expand == "star":
-        return pairs.unionByName(_star_edges(tagged, id_col, hamming=0))
+        return pairs.unionByName(_star_edges(tagged, id_col, text_col, hamming=0))
     return pairs
 
 
@@ -823,6 +837,12 @@ def connected_components(
     PAIRS, but "keep one copy" needs the transitive closure of those
     pairs (a~b, b~c => one cluster {a,b,c}).
 
+    Symmetric edges come from ONE read of ``edges``: each row emits
+    both orientations (``inline`` of a two-struct array) before the
+    distinct.  A self-union (``e ∪ swap(e)``) planned the whole edge
+    query twice; AQE reuses the exchanges inside it, but not the work
+    above them (the near-dup verify join and star window ran twice).
+
     Arm selection: the job that checkpoints the deduplicated symmetric
     edge list also counts its rows (an ``Observation`` on that job, so
     choosing costs no extra job).  At most
@@ -861,14 +881,64 @@ def connected_components(
     (the 50 M-doc probe converged in 4 rounds); per round it shuffles
     E on dst plus V.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    sym, comp = _closure(edges, src, dst, max_iter, stats, steps_per_cycle)
+    return comp if isinstance(comp, DataFrame) else _driver_frame(sym, comp)
+
+
+def _driver_frame(
+    sym: DataFrame,
+    comp: dict,
+    node: str = "node",
+    component: str = "component",
+    size: str | None = None,
+) -> DataFrame:
+    """The driver arm's node -> component mapping as a DataFrame
+    ``(node, component)`` with the id column's own type, plus, when
+    ``size`` names one, a bigint column of component sizes.  It is
+    built from an Arrow table, which becomes a LocalRelation: consumers
+    get exact size stats, scan it without Python workers (a list of
+    rows would go through a Python-side RDD on every evaluation), and
+    collecting it runs no Spark job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    id_type = to_arrow_type(sym.schema["a"].dataType)
+    columns = {
+        node: pa.array(list(comp), id_type),
+        component: pa.array(list(comp.values()), id_type),
+    }
+    if size is not None:
+        sizes = Counter(comp.values())
+        columns[size] = pa.array([sizes[c] for c in comp.values()], pa.int64())
+    return sym.sparkSession.createDataFrame(pa.table(columns))
+
+
+def _closure(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    max_iter: int = 25,
+    stats: dict | None = None,
+    steps_per_cycle: int = 2,
+) -> tuple[DataFrame, dict | DataFrame]:
+    """``(sym, comp)``: the checkpointed symmetric edge list ``(a, b)``
+    and the closure of :func:`connected_components` — on the driver
+    arm the union-find mapping node -> component, on the propagation
+    arm the ``(node, component)`` labels."""
     edge_aggs = (
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("a").isNull() | F.col("b").isNull(), 1)).alias("nulls"),
     )
     edge_obs = Observation()
     sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        edges.select(
+            F.inline(
+                F.array(
+                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+                )
+            )
+        )
         .distinct()
         .observe(edge_obs, *edge_aggs)
         .localCheckpoint(eager=True)
@@ -886,21 +956,7 @@ def connected_components(
         stats["edges"] = counts["n"]
         stats["rounds"] = 0
     if driver:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        comp = _union_find(sym.where(F.col("a") <= F.col("b")).collect())
-        arrow_type = to_arrow_type(id_type)
-        # an Arrow table becomes a LocalRelation: consumers get exact
-        # size stats and scan it without Python workers (a list of rows
-        # would go through a Python-side RDD on every evaluation)
-        table = pa.table(
-            {
-                "node": pa.array(list(comp), arrow_type),
-                "component": pa.array(list(comp.values()), arrow_type),
-            }
-        )
-        return sym.sparkSession.createDataFrame(table)
+        return sym, _union_find(sym.where(F.col("a") <= F.col("b")).collect())
 
     labels = (
         sym.select(F.col("a").alias("node"))
@@ -974,13 +1030,13 @@ def connected_components(
             "rounds; labels may be unconverged (components over-split). "
             "Raise max_iter — rounds needed grow with log(graph diameter).",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
     if stats is not None:
         # rounds-to-converge, measurable by scale probes (the last
         # round is the no-change confirmation pass)
         stats["rounds"] = rounds
-    return labels.select("node", F.col("label").alias("component"))
+    return sym, labels.select("node", F.col("label").alias("component"))
 
 
 def dedup_clusters(
@@ -991,14 +1047,21 @@ def dedup_clusters(
     """Near-dup pair list -> dedup decision table: one row per clustered
     doc with its canonical representative (min id in the component) and
     the cluster size.  Downstream "keep one copy" is then a single
-    ``where(doc_id == canonical_id)`` (or an anti-join of the rest)."""
-    cc = connected_components(pairs, src, dst)
-    w_size = F.count(F.lit(1)).over(Window.partitionBy("component"))
-    return cc.select(
-        F.col("node").alias("doc_id"),
-        F.col("component").alias("canonical_id"),
-        w_size.alias("cluster_size"),
-    )
+    ``where(doc_id == canonical_id)`` (or an anti-join of the rest).
+
+    On the driver arm of :func:`connected_components` the sizes are
+    counted from the union-find mapping, and the table is one local
+    Arrow relation, so nothing after the closure runs a Spark job.  The
+    propagation arm counts them with a window over the component."""
+    sym, comp = _closure(pairs, src, dst)
+    if isinstance(comp, DataFrame):
+        w_size = F.count(F.lit(1)).over(Window.partitionBy("component"))
+        return comp.select(
+            F.col("node").alias("doc_id"),
+            F.col("component").alias("canonical_id"),
+            w_size.alias("cluster_size"),
+        )
+    return _driver_frame(sym, comp, "doc_id", "canonical_id", "cluster_size")
 
 
 def keep_best_per_cluster(
