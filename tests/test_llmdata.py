@@ -1970,6 +1970,30 @@ def test_token_budget_sample_bucketed_path_matches_single_task(spark, monkeypatc
     assert len(results["single"]) > 0
 
 
+def test_temperature_sample_bucketed_path_matches_single_task(spark, monkeypatch):
+    """The bucketed per-source rank (md5-domain buckets + per-source
+    base counts) keeps BIT-IDENTICAL rows to the single-task per-source
+    window — forced by patching the size router both ways on the same
+    input."""
+    import transcriptomics_data_integration_spark.operators.windows as W
+    from transcriptomics_data_integration_spark.llmdata import sampling
+
+    rows = [(i, f"s{i % 3}" if i % 11 else "s0") for i in range(600)]
+    df = spark.createDataFrame(rows, "doc_id long, source string")
+
+    results = {}
+    for forced, label in ((True, "single"), (False, "bucketed")):
+        monkeypatch.setattr(W, "fits_single_task", lambda *_a, **_k: forced)
+        out = sampling.temperature_sample(df, "source", "doc_id", total_docs=200)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("_bkt" in plan) is not forced
+        results[label] = sorted(
+            (r["doc_id"], r["source"], r["k_target"], r["rk"]) for r in out.collect()
+        )
+    assert results["single"] == results["bucketed"]
+    assert len(results["single"]) == 200
+
+
 def test_leakage_safe_split_cluster_atomicity(spark):
     """Every near-dup cluster lands entirely on ONE side of the split
     (the leaked-answer guard), unclustered docs key on themselves, the

@@ -233,6 +233,67 @@ def test_adaptive_window_fast_path_bit_identical(spark, monkeypatch, tmp_path):
     assert fast == slow
 
 
+def test_ordered_scan_arms_agree_property(spark):
+    """ordered_scan: on random rows with tied and null order keys, an
+    optional (nullable) partition key and bucket columns of 1, 2 and 7
+    buckets (or the kernel's own range buckets), the window arm and the
+    bucketed arm agree value for value on every scan kind and frame, in
+    both directions and both null placements."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from transcriptomics_data_integration_spark.operators.windows import Scan, ordered_scan
+
+    small = st.one_of(st.none(), st.integers(-5, 5))
+    row = st.tuples(st.sampled_from([None, "a", "b"]), small, small, small)
+    scans = [
+        Scan(f"{fn}_{frame}", fn, None if fn == "row_number" else "v", frame)
+        for fn in ("row_number", "count", "sum", "min", "max")
+        for frame in ("inclusive", "exclusive", "total")
+        if not (fn == "row_number" and frame == "total")
+    ] + [Scan("kept_min", "min", "w", keep=F.col("w").isNotNull())]
+
+    @given(
+        st.lists(row, min_size=1, max_size=30),
+        st.sampled_from([None, 1, 2, 7]),
+        st.booleans(),
+        st.booleans(),
+        st.booleans(),
+    )
+    @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+    def check(rows, n_buckets, partitioned, descending, nulls_last):
+        df = spark.createDataFrame(
+            [(i, *r) for i, r in enumerate(rows)], "id int, part string, k int, v int, w int"
+        )
+        # monotone in k over its domain [-5, 5]
+        bucket = (
+            None if n_buckets is None
+            else F.floor((F.col("k") + 5) * n_buckets / 11).cast("int")
+        )
+        out = {}
+        for single_task in (True, False):
+            res = ordered_scan(
+                df, ["k", "id"], scans,
+                partition_by=["part"] if partitioned else [],
+                descending=descending, nulls_last=nulls_last,
+                bucket=bucket, single_task=single_task,
+            )
+            plan = res._jdf.queryExecution().optimizedPlan().toString()
+            assert ("_bkt" in plan) is not single_task
+            assert res.columns == df.columns + [s.out for s in scans]
+            out[single_task] = {r["id"]: r for r in res.collect()}
+        assert out[True] == out[False]
+
+    check()
+
+    from decimal import Decimal
+
+    df = spark.createDataFrame([(1, 1.5, Decimal("2.00"))], "id int, x double, d decimal(10,2)")
+    for col in ("x", "d"):
+        with pytest.raises(ValueError, match="integral"):
+            ordered_scan(df, ["id"], [Scan("s", "sum", col)])
+
+
 def test_estimated_plan_bytes_known_and_bounded(spark):
     df = spark.range(100).selectExpr("id", "id % 7 AS k")
     from transcriptomics_data_integration_spark.operators.windows import (

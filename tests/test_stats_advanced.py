@@ -295,7 +295,7 @@ def test_combat_nonparametric_matches_reference_loop():
         assert got["delta_star"][i] == pytest.approx(d_exp, rel=1e-9)
 
 
-def test_ks_test_matches_python_ecdf(spark):
+def test_ks_test_matches_python_ecdf(spark, monkeypatch):
     """KS statistic against a literal python ECDF computation (with
     ties), p monotone in D."""
     from transcriptomics_data_integration_spark.stats.kstest import ks_test
@@ -332,14 +332,17 @@ def test_ks_test_matches_python_ecdf(spark):
     )
     assert got["p_approx"] == pytest.approx(min(max(q, 0.0), 1.0), abs=1e-12)
 
-    # the bucketed two-pass ECDF (default) is bit-identical to the
-    # single global window (n_buckets=None), including with a bucket
-    # count small enough that shards really split the value range
-    for nb in (None, 4, 1024):
-        alt = ks_test(df, "grp", "v", "a", "b", n_buckets=nb).collect()[0]
+    # the bucketed two-pass ECDF is bit-identical to the single global
+    # window, each forced through the size router
+    from transcriptomics_data_integration_spark.operators import windows as W
+
+    for fits in (True, False):
+        monkeypatch.setattr(W, "fits_single_task", lambda d, fits=fits: fits)
+        alt = ks_test(df, "grp", "v", "a", "b").collect()[0]
         assert alt["d_stat"] == got["d_stat"]
         assert alt["p_approx"] == got["p_approx"]
         assert (alt["n1"], alt["n2"]) == (80, 60)
+    monkeypatch.undo()
 
     # same distribution -> D small, p large
     same = spark.createDataFrame(

@@ -16,18 +16,15 @@ from transcriptomics_data_integration_spark.stats import (
     stouffer_combine,
     two_group_ttest,
 )
-from transcriptomics_data_integration_spark.stats.bh import (
-    _adjust_histogram,
-    _adjust_window,
-)
+from transcriptomics_data_integration_spark.stats.bh import _adjust
 
 _R_GOLDEN_ROWS = [("g1", 0.01), ("g2", 0.02), ("g3", 0.02), ("g4", 0.5), ("g5", 0.04)]
 
 
 def _on_both_arms(monkeypatch, df, method, key="gene"):
-    """``p_adjust`` with the window arm and then the histogram arm
+    """``p_adjust`` with the window arm and then the bucketed arm
     forced through ``fits_single_task``; each plan is checked to be the
-    arm it claims (the histogram arm alone carries ``_bkt``)."""
+    arm it claims (the bucketed arm alone carries ``_bkt``)."""
     outs = []
     for fits in (True, False):
         monkeypatch.setattr(W, "fits_single_task", lambda d, fits=fits: fits)
@@ -65,7 +62,9 @@ def test_bh_histogram_matches_sort_window(spark, monkeypatch):
         exact, hist = _on_both_arms(monkeypatch, df, method)
         hist8 = {
             r["gene"]: r["adj"]
-            for r in _adjust_histogram(df, "p", "adj", method, "gene", n_buckets=8).collect()
+            for r in _adjust(
+                df, "p", "adj", method, None, "gene", single_task=False, n_buckets=8
+            ).collect()
         }
         assert hist == exact  # dict equality => bitwise-equal doubles
         assert hist8 == exact
@@ -433,12 +432,15 @@ def test_bh_histogram_property_random_psets(spark):
         for method in ("BH", "BY", "holm"):
             exact = {
                 r["gene"]: r["adj"]
-                for r in _adjust_window(df, "p", "adj", method, None, "gene").collect()
+                for r in _adjust(
+                    df, "p", "adj", method, None, "gene", single_task=True
+                ).collect()
             }
             hist = {
                 r["gene"]: r["adj"]
-                for r in _adjust_histogram(
-                    df, "p", "adj", method, "gene", n_buckets=n_buckets
+                for r in _adjust(
+                    df, "p", "adj", method, None, "gene", single_task=False,
+                    n_buckets=n_buckets,
                 ).collect()
             }
             assert hist == exact, method
@@ -494,8 +496,10 @@ def test_bh_property_random_ties_match_r_padjust(spark):
             [(i, float(p)) for i, p in enumerate(ps)], "id long, p double"
         )
         for arm in (
-            lambda d: _adjust_window(d, "p", "adj", method, None, "id"),
-            lambda d: _adjust_histogram(d, "p", "adj", method, "id", n_buckets=8),
+            lambda d: _adjust(d, "p", "adj", method, None, "id", single_task=True),
+            lambda d: _adjust(
+                d, "p", "adj", method, None, "id", single_task=False, n_buckets=8
+            ),
         ):
             got = {r["id"]: r["adj"] for r in arm(df).collect()}
             assert [got[i] for i in range(len(ps))] == expected, (method, ps)
@@ -536,7 +540,7 @@ def test_bh_arm_chosen_on_measured_size_when_joins_inflate_estimate(spark, tmp_p
     the join's children, so
     it is far above the single-task size; measured, the relation is a
     few KB and takes the window arm.  With the threshold at 0 bytes the
-    same input takes the histogram arm, and both arms agree bitwise."""
+    same input takes the bucketed arm, and both arms agree bitwise."""
     import random
 
     from transcriptomics_data_integration_spark.runtime import cleanup_persisted

@@ -107,12 +107,8 @@ _CDF_P = 0.2316419
 _INV_SQRT_2PI = 0.3989422804014327
 
 
-def norm_cdf_sql(x: str) -> str:
-    """SQL text for pnorm(x) (standard normal CDF), A&S 26.2.17.
-
-    Computes the upper tail for ``|x|`` then reflects, matching the
-    reference's two-sided p ``2*pnorm(-|z|)`` use (`Meta_analysis.R:1226`).
-    """
+def _upper_tail(x: str) -> tuple[str, str]:
+    """(pdf, poly) SQL text with ``pdf * poly`` = P(Z > |x|), A&S 26.2.17."""
     ax = f"abs({x})"
     t = f"(1.0 / (1.0 + {_lit(_CDF_P)} * {ax}))"
     poly = (
@@ -120,6 +116,16 @@ def norm_cdf_sql(x: str) -> str:
         f"+ {_lit(_CDF_B[1])}) * {t} + {_lit(_CDF_B[0])}) * {t})"
     )
     pdf = f"({_lit(_INV_SQRT_2PI)} * exp(-0.5 * {ax} * {ax}))"
+    return pdf, poly
+
+
+def norm_cdf_sql(x: str) -> str:
+    """SQL text for pnorm(x) (standard normal CDF), A&S 26.2.17.
+
+    Computes the upper tail for ``|x|`` then reflects, matching the
+    reference's two-sided p ``2*pnorm(-|z|)`` use (`Meta_analysis.R:1226`).
+    """
+    pdf, poly = _upper_tail(x)
     upper = f"({pdf} * {poly})"  # P(Z > |x|)
     return f"(CASE WHEN ({x}) >= 0.0 THEN 1.0 - {upper} ELSE {upper} END)"
 
@@ -135,13 +141,7 @@ def two_sided_p_sql(stat: str) -> str:
     ``stat`` gives a null p: ``greatest`` skips nulls, so the floor
     alone would turn a missing statistic into the strongest evidence.
     """
-    ax = f"abs({stat})"
-    t = f"(1.0 / (1.0 + {_lit(_CDF_P)} * {ax}))"
-    poly = (
-        f"((((({_lit(_CDF_B[4])} * {t} + {_lit(_CDF_B[3])}) * {t} + {_lit(_CDF_B[2])}) * {t} "
-        f"+ {_lit(_CDF_B[1])}) * {t} + {_lit(_CDF_B[0])}) * {t})"
-    )
-    pdf = f"({_lit(_INV_SQRT_2PI)} * exp(-0.5 * {ax} * {ax}))"
+    pdf, poly = _upper_tail(stat)
     return (
         f"(CASE WHEN ({stat}) IS NOT NULL"
         f" THEN greatest(2.0 * {pdf} * {poly}, {_lit(1e-300)}) END)"

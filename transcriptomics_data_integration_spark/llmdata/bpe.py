@@ -25,22 +25,20 @@ from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.runtime import register_persisted
 
-# Per-iteration lineage pin for the trainers (r10 A/B, PLANS.md):
-# True (default) localCheckpoint()s the bounded vocab relation each
-# iteration, truncating its lineage to a scanned RDD.  This is NOT an
-# optimization nicety — the A/B measured per-iteration cost DOUBLING
-# under plain persist() (0.83 s at iter 10 -> 8.6 s at iter 15;
-# n_merges=20 non-terminating at >270 s): each merge fold references
-# its input column several times, so Catalyst's project collapsing
-# substitutes the previous fold into every reference and the
-# optimized expression grows EXPONENTIALLY in the iteration count.
-# Truncation caps the visible plan at one fold — measured linear
-# ~0.25 s/iteration through n_merges=50.  Cluster caveat: a
-# localCheckpoint block lost to executor failure is not recomputable;
-# for these vocab-bounded trainer relations the recovery story is
-# "rerun the trainer", which is acceptable for a tokenizer-training
-# job.  False restores persist() for A/B measurement.
-ITER_TRUNCATE = True
+# Per-iteration lineage pin for the trainers (r10 A/B, PLANS.md): the
+# bounded vocab relation is localCheckpoint()ed each iteration, which
+# truncates its lineage to a scanned RDD.  This is NOT an optimization
+# nicety — plain persist() measured per-iteration cost DOUBLING (0.83 s
+# at iter 10 -> 8.6 s at iter 15; n_merges=20 did not terminate in
+# 270 s): each merge fold references its input column several times,
+# so Catalyst's project collapsing substitutes the previous fold into
+# every reference and the optimized expression grows EXPONENTIALLY in
+# the iteration count.  Truncation caps the visible plan at one fold —
+# measured linear ~0.25 s/iteration through n_merges=50.  Cluster
+# caveat: a localCheckpoint block lost to executor failure is not
+# recomputable; for these vocab-bounded trainer relations the recovery
+# story is "rerun the trainer", which is acceptable for a
+# tokenizer-training job.
 
 
 def _iter_pin(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
@@ -50,15 +48,11 @@ def _iter_pin(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
     discipline — without this, n_merges iterations accumulate cached
     RDD blocks for the session's lifetime (ContextCleaner only frees
     them on JVM GC of the orphaned Dataset).  ``prev`` must be a
-    DataFrame previously returned by this function's checkpoint arm."""
-    if ITER_TRUNCATE:
-        pinned = df.localCheckpoint()
-        if prev is not None:
-            _unpin(prev)
-        return pinned
-    df = df.persist()
-    register_persisted(df)
-    return df
+    DataFrame previously returned by this function."""
+    pinned = df.localCheckpoint()
+    if prev is not None:
+        _unpin(prev)
+    return pinned
 
 
 def _unpin(cp_df: DataFrame) -> None:
@@ -66,8 +60,6 @@ def _unpin(cp_df: DataFrame) -> None:
     RDD is the one wrapped by the plan's LogicalRDD node.  Safe only
     after every consumer of ``cp_df`` has materialized — the blocks are
     not recomputable.  Best-effort (internal API shape may vary)."""
-    if not ITER_TRUNCATE:
-        return
     try:
         cp_df._jdf.queryExecution().logical().rdd().unpersist(False)
     except Exception:

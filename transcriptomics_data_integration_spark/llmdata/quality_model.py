@@ -14,8 +14,8 @@ verbatim with the DuckDB oracle via ``stats.fixed_twins.cramer3_sql``)
 
 Physical shape: features and per-row IRLS working quantities are
 map-side codegen; each IRLS step is ONE 1-row moment aggregate
-(map-side partial) attached back by ``crossJoin(broadcast(...))`` —
-the monotone_range_buckets pattern.  Nothing data-sized ever windows
+(map-side partial) attached back by ``crossJoin(broadcast(...))``,
+like a bucketed scan's 1-row bounds.  Nothing data-sized ever windows
 or collects, so the operator holds at any corpus size.
 """
 

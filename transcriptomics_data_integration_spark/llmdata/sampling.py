@@ -17,12 +17,19 @@ swap (DuckDB computes the identical hash), and incremental reruns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.llmdata.dedup import _md5_60bit
+from transcriptomics_data_integration_spark.operators.windows import Scan, ordered_scan
 
 _HASH_SPACE = float(1 << 60)
+# the top 10 bits of a 60-bit hash: 1024 equal-width buckets
+_BUCKET_WIDTH = 1 << 50
+
+
+def _hash_bucket(hash_60bit: str) -> Column:
+    return F.expr(f"CAST({hash_60bit} DIV {_BUCKET_WIDTH} AS INT)")
 
 
 def hash_sample(df: DataFrame, key_col: str, rate: float) -> DataFrame:
@@ -69,71 +76,19 @@ def pack_sequences(
     each document in the global token stream, and the spanned sequence
     ids enumerate with ``sequence()``.
 
-    Scale: the prefix sum is bucketed, not a global-order window.  For
-    a numeric ``order_col``, ``monotone_range_buckets`` splits the
-    stream into value-range shards; per-shard token totals (a <= 1024-
-    row relation) carry the cross-shard base offsets via a broadcast
-    join, and the only large window is ``partitionBy(bucket)`` — no
-    task ever sees more than ~1/1024 of the corpus.  Output is
-    bit-identical to the single-window form (same order, same sums).
-    Non-numeric order columns fall back to the global window (cap the
-    input, or pre-map the key to a numeric rank).  Zero-token documents
-    are dropped (they occupy no stream positions).
-
-    Small inputs (Catalyst size estimate under
-    ``operators.windows._SINGLE_TASK_BYTES``) skip the bucketing and
-    use the single global window directly — below that size the
-    two-pass shape's extra stages cost more than the one task they
-    avoid (r2 bench: 0.445 s bucketed vs 0.18 s global at sf0.1).
-    Output is identical either way.
+    Scale: the prefix sum is an exclusive ``ordered_scan`` (its arms:
+    ``operators/windows.py``); a non-numeric ``order_col`` always takes
+    the single window (cap the input, or pre-map the key to a numeric
+    rank).  Zero-token documents are dropped (they occupy no stream
+    positions).
     """
-    from pyspark.sql.types import NumericType
-
-    from transcriptomics_data_integration_spark.operators.windows import (
-        fits_single_task,
-        monotone_range_buckets,
-    )
-
     order = order_col or id_col
     live = df.where(F.col(tokens_col) > 0)
-    if isinstance(live.schema[order].dataType, NumericType) and not fits_single_task(
-        live
-    ):
-        # Plan shape (measured, r3): the totals branch re-executes the
-        # scan+bounds subtree (Spark DAGs don't share un-materialized
-        # subtrees), so the source is scanned 4x — but the totals
-        # branch is a map-side partial aggregate over 2 pruned columns
-        # (tiny shuffle), which beats the alternative single-exchange
-        # shape that would shuffle the full corpus by bucket twice
-        # (exchange reuse does NOT fire: column pruning differentiates
-        # the exchanges).  The ~0.4 s local overhead vs the r1 global
-        # window is stage scheduling, the price of not funnelling the
-        # corpus through one task at scale.
-        bucketed = monotone_range_buckets(live, order)
-        totals = bucketed.groupBy("_bkt").agg(F.sum(tokens_col).alias("_tok"))
-        w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-        base = totals.withColumn(
-            "_base", F.coalesce(F.sum("_tok").over(w_base), F.lit(0))
-        ).select("_bkt", "_base")
-        w_in = (
-            Window.partitionBy("_bkt")
-            .orderBy(order)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        placed = (
-            bucketed.join(F.broadcast(base), "_bkt")
-            .withColumn(
-                "_start",
-                F.col("_base")
-                + F.coalesce(F.sum(tokens_col).over(w_in), F.lit(0)),
-            )
-            .withColumn("_end", F.col("_start") + F.col(tokens_col))
-        )
-    else:
-        w = Window.orderBy(order).rowsBetween(Window.unboundedPreceding, -1)
-        placed = live.withColumn(
-            "_start", F.coalesce(F.sum(tokens_col).over(w), F.lit(0))
-        ).withColumn("_end", F.col("_start") + F.col(tokens_col))
+    placed = (
+        ordered_scan(live, [order], [Scan("_start", "sum", tokens_col, "exclusive")])
+        .withColumn("_start", F.coalesce(F.col("_start"), F.lit(0)))
+        .withColumn("_end", F.col("_start") + F.col(tokens_col))
+    )
     spanned = placed.withColumn(
         "seq_id",
         F.explode(
@@ -223,23 +178,11 @@ def token_budget_sample(
     budget map.  Deterministic and engine-exact: integer token counts,
     integer cumulative sums, md5-hex priority with key tiebreak.
 
-    Scale: a per-source window is parallel ACROSS sources but
-    single-task per source — at 100 TB with a handful of sources that
-    is the whole corpus through a few tasks.  Above the Catalyst
-    single-task size estimate the cumsum routes to the bucketed
-    two-pass shape (the `pack_sequences` machinery): the md5 priority's
-    fixed uniform domain [0, 16^15) buckets for free (prefix-15 hex ->
-    long, top 10 bits — no bounds pass), per-(source, bucket) totals
-    carry cross-bucket base offsets via a small per-source window over
-    <= 1024 rows, and the only corpus-sized window is
-    ``partitionBy(source, bucket)``.  Bit-identical output either way
-    (fixed-length lowercase hex: numeric prefix order == string
-    order).
+    Scale: the per-source cumulative sum is an ``ordered_scan`` (its
+    arms: ``operators/windows.py``) bucketed by the top 10 bits of the
+    md5 priority's 60-bit prefix (fixed uniform domain, no bounds pass;
+    fixed-length lowercase hex: numeric prefix order == string order).
     """
-    from transcriptomics_data_integration_spark.operators.windows import (
-        fits_single_task,
-    )
-
     if len(budgets) > 1000:
         raise ValueError(
             "token_budget_sample takes budgets as a literal map; "
@@ -255,44 +198,15 @@ def token_budget_sample(
         F.lit(default_budget),
     ).cast("long")
     scored = df.withColumn("_n_tok", n_tok.cast("long")).withColumn("_pri", pri)
-    if fits_single_task(scored):
-        w = (
-            Window.partitionBy(source_col)
-            .orderBy(F.col("_pri"), F.col(key_col))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = scored.withColumn("_cum", F.sum("_n_tok").over(w))
-    else:
-        # bucketed two-pass prefix: md5's domain is fixed and uniform,
-        # so bucket = top 10 bits of the 60-bit hex prefix (2^60/2^10)
-        bucketed = scored.withColumn(
-            "_bkt",
-            F.expr(
-                # integer DIV: 60-bit prefix values exceed double's 53-bit
-                # mantissa, so float division could wobble at boundaries
-                "CAST(CAST(conv(substring(_pri, 1, 15), 16, 10) AS BIGINT) "
-                "DIV 1125899906842624 AS INT)"  # 2^50 -> 1024 buckets
-            ),
-        )
-        totals = bucketed.groupBy(source_col, "_bkt").agg(
-            F.sum("_n_tok").alias("_tok")
-        )
-        w_base = (
-            Window.partitionBy(source_col)
-            .orderBy("_bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        base = totals.withColumn(
-            "_base", F.coalesce(F.sum("_tok").over(w_base), F.lit(0))
-        ).select(source_col, "_bkt", "_base")
-        w_in = (
-            Window.partitionBy(source_col, "_bkt")
-            .orderBy(F.col("_pri"), F.col(key_col))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = bucketed.join(F.broadcast(base), [source_col, "_bkt"]).withColumn(
-            "_cum", F.col("_base") + F.sum("_n_tok").over(w_in)
-        )
+    cum = ordered_scan(
+        scored,
+        ["_pri", key_col],
+        [Scan("_cum", "sum", "_n_tok")],
+        partition_by=[source_col],
+        # integer DIV: 60-bit prefix values exceed double's 53-bit
+        # mantissa, so float division could wobble at boundaries
+        bucket=_hash_bucket("CAST(conv(substring(_pri, 1, 15), 16, 10) AS BIGINT)"),
+    )
     out = (
         cum.withColumn("_budget", budget)
         # a doc is kept iff the budget survives THROUGH it — whole-doc
@@ -390,10 +304,8 @@ def temperature_sample(
     Plan shape: one |sources|-row count aggregate -> integer weight /
     allocation arithmetic on that dim (an unpartitioned window over
     |sources| rows for sum(w), no BNLJ) -> broadcast join of k_s back
-    to the fact -> per-source md5-rank window.  At 100 TB the
-    per-source window is the same single-task-per-source shape as
-    token_budget_sample; route through its bucketed two-pass when a
-    source outgrows one task (documented there).
+    to the fact -> per-source md5 rank, an ``ordered_scan`` bucketed by
+    the hash's top 10 bits (its arms: ``operators/windows.py``).
 
     Output: the kept rows plus ``k_target`` (the source's allocation)
     and ``rk`` (the doc's priority rank).
@@ -447,44 +359,18 @@ def temperature_sample(
     keyed = df.join(F.broadcast(alloc), source_col).withColumn(
         "_h", _md5_60bit(F.col(key_col).cast("string"))
     )
-    from transcriptomics_data_integration_spark.operators.windows import (
-        fits_single_task,
+    ranked = ordered_scan(
+        keyed,
+        ["_h", key_col],
+        [Scan("rk", "row_number")],
+        partition_by=[source_col],
+        bucket=_hash_bucket("_h"),
     )
-
-    if fits_single_task(keyed):
-        w = Window.partitionBy(source_col).orderBy(
-            F.col("_h").asc(), F.col(key_col).asc()
-        )
-        ranked = keyed.withColumn("rk", F.row_number().over(w).cast("long"))
-    else:
-        # bucketed two-pass rank (the token_budget_sample machinery
-        # with unit weights): the md5 hash's domain is fixed and
-        # uniform, so bucket = top 10 bits — per-(source, bucket)
-        # counts carry cross-bucket base offsets via a <= 1024-row
-        # per-source window, and the only corpus-sized window is
-        # partitionBy(source, bucket).  row_number is a cumsum of 1s,
-        # so the composed rank is bit-identical to the single window.
-        bucketed = keyed.withColumn(
-            "_bkt", F.expr("CAST(_h DIV 1125899906842624 AS INT)")  # 2^50
-        )
-        totals = bucketed.groupBy(source_col, "_bkt").agg(
-            F.count(F.lit(1)).alias("_cnt")
-        )
-        w_base = (
-            Window.partitionBy(source_col)
-            .orderBy("_bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        base = totals.withColumn(
-            "_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0))
-        ).select(source_col, "_bkt", "_base")
-        w_in = Window.partitionBy(source_col, "_bkt").orderBy(
-            F.col("_h").asc(), F.col(key_col).asc()
-        )
-        ranked = bucketed.join(F.broadcast(base), [source_col, "_bkt"]).withColumn(
-            "rk", (F.col("_base") + F.row_number().over(w_in)).cast("long")
-        ).drop("_bkt", "_base")
-    return ranked.where(F.col("rk") <= F.col("k_target")).drop("_h")
+    return (
+        ranked.withColumn("rk", F.col("rk").cast("long"))
+        .where(F.col("rk") <= F.col("k_target"))
+        .drop("_h")
+    )
 
 
 def global_shuffle(df: DataFrame, key_col: str) -> DataFrame:
@@ -495,47 +381,14 @@ def global_shuffle(df: DataFrame, key_col: str) -> DataFrame:
     and partitionings (no seed bookkeeping, no rand()); stable
     pagination (consumers can read any position range).
 
-    Scale: a global ORDER BY rank is the canonical single-task trap.
-    Above the Catalyst single-task estimate, the rank routes through
-    the md5-domain bucketed two-pass (hash prefix -> 1024 buckets,
-    per-bucket counts carry base offsets via ONE <=1024-row window,
-    the only corpus-sized window is partitionBy(bucket)) —
-    bit-identical to the single window, no task sees more than ~1/1024
-    of the corpus.
+    Scale: a global ORDER BY rank is the canonical single-task trap; the
+    rank is an ``ordered_scan`` bucketed by the hash's top 10 bits (its
+    arms: ``operators/windows.py``).
     """
-    from transcriptomics_data_integration_spark.operators.windows import (
-        fits_single_task,
-    )
-
     keyed = df.withColumn("_h", _md5_60bit(F.col(key_col).cast("string")))
-    if fits_single_task(keyed):
-        w = Window.orderBy(F.col("_h").asc(), F.col(key_col).asc())
-        ranked = keyed.withColumn(
-            "shuffle_pos", F.row_number().over(w).cast("long") - 1
-        )
-    else:
-        bucketed = keyed.withColumn(
-            "_bkt", F.expr("CAST(_h DIV 1125899906842624 AS INT)")  # 2^50
-        )
-        totals = bucketed.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
-        w_base = Window.orderBy("_bkt").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        base = totals.withColumn(
-            "_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0))
-        ).select("_bkt", "_base")
-        w_in = Window.partitionBy("_bkt").orderBy(
-            F.col("_h").asc(), F.col(key_col).asc()
-        )
-        ranked = (
-            bucketed.join(F.broadcast(base), "_bkt")
-            .withColumn(
-                "shuffle_pos",
-                (F.col("_base") + F.row_number().over(w_in)).cast("long") - 1,
-            )
-            .drop("_bkt", "_base")
-        )
-    return ranked.drop("_h")
+    pos = Scan("shuffle_pos", "row_number", frame="exclusive")
+    ranked = ordered_scan(keyed, ["_h", key_col], [pos], bucket=_hash_bucket("_h"))
+    return ranked.withColumn("shuffle_pos", F.col("shuffle_pos").cast("long")).drop("_h")
 
 
 def repetition_schedule(
@@ -557,10 +410,10 @@ def repetition_schedule(
     Relational shape: the bucket->epochs map is a literal CASE (tiny,
     in-plan), the fan-out is one ``explode(sequence(1, n_epochs))``
     (conditional repartition upstream applies — the one-split trap),
-    and train_pos reuses :func:`global_shuffle`'s bucketed two-pass
-    rank, so nothing is single-task at any corpus size.  Docs whose
-    bucket is absent from the map get 0 epochs (dropped) — the
-    "discard tail bucket" convention.
+    and train_pos is :func:`global_shuffle`'s rank, so nothing is
+    single-task at any corpus size.  Docs whose bucket is absent from
+    the map get 0 epochs (dropped) — the "discard tail bucket"
+    convention.
 
     Output: (id, bucket, epoch, train_pos).
     """

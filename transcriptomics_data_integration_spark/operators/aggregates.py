@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.operators.windows import Scan, ordered_scan
+
 
 def group_stats(df: DataFrame, key: str, value_col: str) -> DataFrame:
     """A1/A2 — per-gene mean / sd / count over samples.
@@ -116,16 +118,9 @@ def skyline_2d(
     skyline-over-aggregates pattern of the Spark SQL skyline
     literature, as a plan shape instead of an operator extension.
 
-    Scale: the predecessor-min is computed with the bucketed two-pass
-    shape (``monotone_range_buckets`` on x), not a global-order window
-    — distinct (x, y) pairs are not guaranteed small.  Rows in earlier
-    x-range buckets have strictly smaller x (equal x shares a bucket),
-    so predecessor-min = least(prefix-min of earlier buckets'
-    per-bucket y-min — a <= 1024-row broadcast relation — and the
-    within-bucket running min over (x, y) order).  Identical output to
-    the single-window form, which is used directly when Catalyst
-    estimates the distinct-pair relation under the single-task
-    threshold (the two-pass shape's extra stages dominate there).
+    Scale: the predecessor-min is an ``ordered_scan`` over the distinct
+    pairs, which are not guaranteed small (its arms:
+    ``operators/windows.py``).
     """
     sign = 1 if minimize else -1
     pairs = (
@@ -135,45 +130,9 @@ def skyline_2d(
         .groupBy("_x", "_y")
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
-    from transcriptomics_data_integration_spark.operators.windows import (
-        fits_single_task,
-        monotone_range_buckets,
-    )
-
-    if fits_single_task(pairs):
-        w = Window.orderBy(F.col("_x").asc(), F.col("_y").asc()).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        return (
-            pairs.withColumn("_prev_min_y", F.min("_y").over(w))
-            .where(
-                F.col("_prev_min_y").isNull() | (F.col("_prev_min_y") > F.col("_y"))
-            )
-            .select(
-                (F.col("_x") * sign).alias(x_col),
-                (F.col("_y") * sign).alias(y_col),
-                "n_rows",
-            )
-        )
-
-    bucketed = monotone_range_buckets(pairs, "_x")
-    bmin = bucketed.groupBy("_bkt").agg(F.min("_y").alias("_ymin"))
-    w_pre = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    base = bmin.withColumn("_basemin", F.min("_ymin").over(w_pre)).select(
-        "_bkt", "_basemin"
-    )
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy(F.col("_x").asc(), F.col("_y").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # least() ignores nulls: first bucket / first row fall back to the
-    # other operand, both-null means no predecessor at all
+    prev = Scan("_prev_min_y", "min", "_y", "exclusive")
     return (
-        bucketed.join(F.broadcast(base), "_bkt")
-        .withColumn(
-            "_prev_min_y", F.least(F.col("_basemin"), F.min("_y").over(w_in))
-        )
+        ordered_scan(pairs, ["_x", "_y"], [prev])
         .where(F.col("_prev_min_y").isNull() | (F.col("_prev_min_y") > F.col("_y")))
         .select(
             (F.col("_x") * sign).alias(x_col),

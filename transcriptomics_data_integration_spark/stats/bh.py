@@ -30,22 +30,24 @@ reproducible in any engine that folds left — the DuckDB oracle replays
 the same fold via ``list_reduce``; an unordered SUM over 1/i would be
 permutation-dependent in the last ulp.
 
-Spark shape: one method table (scaled term + step direction) and two
-arm functions shared by all three methods.  ``_adjust_window`` runs the
-rank and the cumulative extreme as windows over the same (optional
-partition, order-by-p) window — one shuffle if partitioned,
-single-stage on post-aggregate relations otherwise.  Unpartitioned
-calls on relations that neither Catalyst's estimate nor a measurement
-proves small route to ``_adjust_histogram``, the bucket-partitioned
-billion-row scale path.
+Spark shape: one method table (scaled term + step direction) and one
+body, two ``operators.windows.ordered_scan`` calls shared by all three
+methods: the rank, then the cumulative extreme.  The scan owns the
+single-window and bucketed arms (the module docstring of
+``operators/windows.py``); p in [0, 1] buckets as ``floor(p * n)``
+without a bounds pass.  Unpartitioned calls decide the arm on the
+measured input (``p_adjust``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from functools import partial
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.operators import windows
+from transcriptomics_data_integration_spark.operators.windows import Scan
 
 # method -> (scaled term over (p, n, rank, c(n)) in R's operand order,
 # step-up).  Step-up methods take a reverse cummin, step-down a forward
@@ -83,17 +85,6 @@ def _harmonic(n_col: str, chunk: int = 1_000_000):
     )
 
 
-def _orders(p_col: str, tiebreak_col: str | None) -> tuple[list[Column], list[Column]]:
-    """(ascending, descending) sort keys: p with nulls last, then the
-    tie-break column."""
-    p = F.col(p_col)
-    tie = [F.col(tiebreak_col)] if tiebreak_col else []
-    return (
-        [p.asc_nulls_last()] + [k.asc() for k in tie],
-        [p.desc_nulls_last()] + [k.desc() for k in tie],
-    )
-
-
 def _scaled(method: str, p_col: str) -> Column:
     term, _ = _METHODS[method]
     return F.least(
@@ -101,26 +92,23 @@ def _scaled(method: str, p_col: str) -> Column:
     )
 
 
-def _null_p_stays_null(p_col: str, adjusted: Column) -> Column:
-    """A null p's cumulative extreme would see its neighbours' values."""
-    return F.when(F.col(p_col).isNotNull(), adjusted)
-
-
-def _adjust_window(
+def _adjust(
     df: DataFrame,
     p_col: str,
     out_col: str,
     method: str,
     partition_cols: list[str] | None,
     tiebreak_col: str | None,
+    single_task: bool,
+    n_buckets: int = 1024,
 ) -> DataFrame:
-    """Rank, scale, then the cumulative extreme — all windows over the
-    (partition, order-by-p) window.  BY alone joins the one-row-per-
-    partition (n, c(n)) aggregate, so the O(n) harmonic fold runs once
-    per partition, not once per row."""
+    """Rank, scale, then the cumulative extreme, both scans over the
+    (partition, order-by-p) order; ``single_task`` picks the arm and
+    ``n_buckets`` the bucketed arm's p-range buckets.  BY alone joins
+    the one-row-per-partition (n, c(n)) aggregate, so the O(n) harmonic
+    fold runs once per partition, not once per row."""
     parts = partition_cols or []
     step_up = _METHODS[method][1]
-    asc, desc = _orders(p_col, tiebreak_col)
     if method == "BY":
         counts = (
             df.groupBy(*parts)
@@ -132,111 +120,27 @@ def _adjust_window(
             if parts
             else df.crossJoin(F.broadcast(counts))
         )
-    df = df.withColumn(
-        "_rank", F.row_number().over(Window.partitionBy(*parts).orderBy(*asc))
-    )
-    if method != "BY":
-        df = df.withColumn("_n", F.count(p_col).over(Window.partitionBy(*parts)))
-    w_cum = (
-        Window.partitionBy(*parts)
-        .orderBy(*(desc if step_up else asc))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    extreme = F.min if step_up else F.max
-    return (
-        df.withColumn("_scaled", _scaled(method, p_col))
-        .withColumn(out_col, _null_p_stays_null(p_col, extreme("_scaled").over(w_cum)))
-        .drop("_rank", "_n", "_cn", "_scaled")
-    )
-
-
-def _adjust_histogram(
-    df: DataFrame,
-    p_col: str,
-    out_col: str,
-    method: str,
-    tiebreak_col: str | None,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Exact adjustment without a global sort window — the billion-row
-    scale path.  The window arm's unpartitioned ``orderBy(p)`` moves the
-    whole relation to ONE task; fine for post-aggregate gene lists,
-    fatal for permutation-scale p-sets.  This arm range-buckets p into
-    ``n_buckets`` equi-width bins (p in [0,1] by contract, so no bounds
-    pass) so every window is partitioned by bucket:
-
-    1. histogram pass: per-bucket counts -> cumulative base rank per
-       bucket + total n (a <= n_buckets-row relation, broadcast back);
-       BY's c(n) is folded ONCE on a one-row total and broadcast in;
-    2. rank pass: global rank = bucket base + row_number within bucket
-       (exact, because buckets are value ranges: every p in bucket k
-       sorts before every p in bucket k+1, and ties share a bucket);
-    3. cumulative extreme = within-bucket cumulative extreme combined
-       with the extreme over the buckets before it in the scan order —
-       the suffix-min of HIGHER buckets for the step-up methods, the
-       prefix-max of LOWER buckets for holm — again computed on the
-       tiny per-bucket relation and broadcast.  ``least``/``greatest``
-       ignore nulls, so the first bucket in scan order (null edge)
-       falls back to its within-bucket extreme alone.
-
-    Bit-identical to ``_adjust_window`` (same scaled expression, same
-    tie semantics); the only unpartitioned windows run on ``n_buckets``
-    rows regardless of |df|.  Under a uniform-ish p distribution each
-    bucket holds |df|/n_buckets rows; AQE skew-split covers spiky nulls
-    at p≈0."""
-    step_up = _METHODS[method][1]
-    asc, desc = _orders(p_col, tiebreak_col)
-    with_b = df.withColumn(
-        "_bkt",
-        F.least(
+    n = [] if method == "BY" else [Scan("_n", "count", p_col, "total")]
+    scan = partial(
+        windows.ordered_scan,
+        order=[p_col] + ([tiebreak_col] if tiebreak_col else []),
+        partition_by=parts,
+        nulls_last=True,
+        bucket=F.least(
             F.floor(F.col(p_col) * n_buckets).cast("int"), F.lit(n_buckets - 1)
         ),
+        single_task=single_task,
     )
-    # null p lands in the last bucket (``least`` skips nulls) and
-    # counts nowhere; it sorts after that bucket's p-values
-    hist = with_b.groupBy("_bkt").agg(F.count(p_col).alias("_cnt"))
-    w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    cum = hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
-    if method == "BY":
-        totals = hist.agg(F.sum("_cnt").alias("_n")).withColumn(
-            "_cn", _harmonic("_n")
-        )
-        cum = cum.crossJoin(F.broadcast(totals)).select("_bkt", "_base", "_n", "_cn")
-    else:
-        cum = cum.withColumn("_n", F.sum("_cnt").over(Window.partitionBy())).select(
-            "_bkt", "_base", "_n"
-        )
-    ranked = (
-        with_b.join(F.broadcast(cum), "_bkt")
-        .withColumn(
-            "_rank",
-            F.col("_base")
-            + F.row_number().over(Window.partitionBy("_bkt").orderBy(*asc)),
-        )
-        .withColumn("_scaled", _scaled(method, p_col))
+    ranked = scan(df, scans=[Scan("_rank", "row_number"), *n])
+    # a null p's cumulative extreme would see its neighbours' values
+    extreme = Scan(
+        out_col, "min" if step_up else "max", "_scaled", keep=F.col(p_col).isNotNull()
     )
-    extreme, combine = (F.min, F.least) if step_up else (F.max, F.greatest)
-    bkt = F.col("_bkt").desc() if step_up else F.col("_bkt").asc()
-    w_edge = Window.orderBy(bkt).rowsBetween(Window.unboundedPreceding, -1)
-    edge = (
-        ranked.groupBy("_bkt")
-        .agg(extreme("_scaled").alias("_bext"))
-        .withColumn("_edge", extreme("_bext").over(w_edge))
-        .select("_bkt", "_edge")
-    )
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy(*(desc if step_up else asc))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        ranked.join(F.broadcast(edge), "_bkt")
-        .withColumn("_within", extreme("_scaled").over(w_in))
-        .withColumn(
-            out_col, _null_p_stays_null(p_col, combine(F.col("_within"), F.col("_edge")))
-        )
-        .drop("_bkt", "_base", "_n", "_cn", "_rank", "_scaled", "_within", "_edge")
-    )
+    return scan(
+        ranked.withColumn("_scaled", _scaled(method, p_col)),
+        scans=[extreme],
+        descending=step_up,
+    ).drop("_rank", "_n", "_cn", "_scaled")
 
 
 def p_adjust(
@@ -252,13 +156,11 @@ def p_adjust(
     ``fdr`` is R's own alias of BH; ``none`` passes p through unchanged
     (R returns p itself).
 
-    Adaptive scale guard: an unpartitioned sort window funnels the
-    whole p-set through one task, so unpartitioned calls take it only
-    on an input that fits one task, and otherwise the bit-identical
-    bucket-partitioned histogram arm.  When Catalyst's estimate cannot
-    prove the input small, the call is EAGER: it persists the input
-    (registered for ``runtime.cleanup_persisted``), runs one
-    materializing job and decides on the measured size
+    Unpartitioned calls take the single window only on an input that
+    fits one task, and otherwise the bucketed arm.  When Catalyst's
+    estimate cannot prove the input small, the call is EAGER: it
+    persists the input (registered for ``runtime.cleanup_persisted``),
+    runs one materializing job and decides on the measured size
     (``windows.fits_single_task_measured``); either arm then reads the
     cached input.  Partitioned calls take the window arm and run no
     job."""
@@ -270,8 +172,7 @@ def p_adjust(
             f"unknown p-adjust method {method!r}; expected one of "
             "'none', 'BH', 'fdr', 'BY', 'holm'"
         )
+    small = True
     if not partition_cols:
         df, small = windows.fits_single_task_measured(df)
-        if not small:
-            return _adjust_histogram(df, p_col, out_col, method, tiebreak_col)
-    return _adjust_window(df, p_col, out_col, method, partition_cols, tiebreak_col)
+    return _adjust(df, p_col, out_col, method, partition_cols, tiebreak_col, small)

@@ -212,27 +212,29 @@ def cqn_irls2_fixed(
 # --------------------------------------------------------------------------
 
 
-def voom_loess_fixed(
-    df: DataFrame,
-    gene_col: str,
-    sample_col: str,
-    count_col: str,
-    n_bins: int = 64,
-) -> DataFrame:
-    """M5 twin — the lowess mean-variance trend as a deterministic
-    tricube-weighted LOCAL LINEAR fit over ``n_bins`` rank bins of the
-    per-gene mean-lcpm axis, evaluated at each gene's own mean:
+_TRICUBE = (
+    "(CASE WHEN h <= 0.0e0 THEN 1.0e0"  # degenerate axis: global fit
+    " WHEN abs(x - cb) / h < 1.0e0 THEN"
+    " (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
+    " * (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
+    " * (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
+    " ELSE 0.0e0 END)"
+)
+# the local-linear trend at x from the weighted sums; each twin closes
+# the CASE with its fallback for a singular fit
+_LOCAL_LINEAR = (
+    "CASE WHEN _den > 1.0e-12 THEN"
+    " (swy - ((sw * swxy - swx * swy) / _den) * swx) / sw"
+    " + ((sw * swxy - swx * swy) / _den) * x"
+)
 
-        trend(x_g) = b0 + b1 x_g  from the weighted fit over bin
-        moments, weight = tricube(|x_g - c_b| / h), h = half x-range
 
-    This is lowess's estimator with one global bandwidth, bin-moment
-    compression (the standard scale path for loess at big G) and no
-    robustifying pass — a fixed schedule, hence hash-gateable; the
-    R-exact sequential lowess stays in ``voom_weights_lowess``.
-    Output mirrors voom_trend: (gene, n_obs, mean_lcpm, sqrt_sd,
-    trend_sqrt_sd, weight).
-    """
+def _voom_bins(
+    df: DataFrame, gene_col: str, sample_col: str, count_col: str, n_bins: int
+) -> tuple[DataFrame, DataFrame]:
+    """Pass 1 of both voom twins: per-gene (x, y) = round-9 (mean lcpm,
+    sqrt sd) ranked into ``n_bins`` bins with the half x-range ``h``
+    (persisted, registered), and the bin moments."""
     lcpm = log2_cpm(df, sample_col, count_col)
     per_gene = (
         lcpm.groupBy(gene_col)
@@ -264,34 +266,53 @@ def voom_loess_fixed(
         F.round(F.sum(F.col("x") * F.col("y")), 9).alias("bsxy"),
         F.round(F.sum(F.col("x") * F.col("x")), 9).alias("bsxx"),
     )
-    tri = (
-        "(CASE WHEN h <= 0.0e0 THEN 1.0e0"  # degenerate axis: global fit
-        " WHEN abs(x - cb) / h < 1.0e0 THEN"
-        " (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
-        " * (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
-        " * (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
-        " ELSE 0.0e0 END)"
-    )
-    pairs = ranked.join(F.broadcast(bins)).withColumn("tw", F.round(F.expr(tri), 9))
-    fitted = (
-        pairs.groupBy(gene_col, "x", "mean_lcpm", "sqrt_sd", "n_obs")
+    return ranked, bins
+
+
+def _tricube_sums(pairs: DataFrame, keys: list[str], suffix: str = "") -> DataFrame:
+    """Per gene (``keys``), the tricube-weighted sums of the bin
+    moments ``nb``/``bsx``/... (+ ``suffix``) over every (gene, bin)
+    pair, and the local-linear determinant ``_den``."""
+    return (
+        pairs.withColumn("tw", F.round(F.expr(_TRICUBE), 9))
+        .groupBy(*keys)
         .agg(
-            F.sum(F.expr("tw * nb")).alias("sw"),
-            F.sum(F.expr("tw * bsx")).alias("swx"),
-            F.sum(F.expr("tw * bsy")).alias("swy"),
-            F.sum(F.expr("tw * bsxx")).alias("swxx"),
-            F.sum(F.expr("tw * bsxy")).alias("swxy"),
+            F.sum(F.expr(f"tw * nb{suffix}")).alias("sw"),
+            F.sum(F.expr(f"tw * bsx{suffix}")).alias("swx"),
+            F.sum(F.expr(f"tw * bsy{suffix}")).alias("swy"),
+            F.sum(F.expr(f"tw * bsxx{suffix}")).alias("swxx"),
+            F.sum(F.expr(f"tw * bsxy{suffix}")).alias("swxy"),
         )
         .withColumn("_den", F.expr("sw * swxx - swx * swx"))
-        .withColumn(
-            "trend_sqrt_sd",
-            F.expr(
-                "CASE WHEN _den > 1.0e-12 THEN"
-                " (swy - ((sw * swxy - swx * swy) / _den) * swx) / sw"
-                " + ((sw * swxy - swx * swy) / _den) * x"
-                " ELSE swy / sw END"
-            ),
-        )
+    )
+
+
+def voom_loess_fixed(
+    df: DataFrame,
+    gene_col: str,
+    sample_col: str,
+    count_col: str,
+    n_bins: int = 64,
+) -> DataFrame:
+    """M5 twin — the lowess mean-variance trend as a deterministic
+    tricube-weighted LOCAL LINEAR fit over ``n_bins`` rank bins of the
+    per-gene mean-lcpm axis, evaluated at each gene's own mean:
+
+        trend(x_g) = b0 + b1 x_g  from the weighted fit over bin
+        moments, weight = tricube(|x_g - c_b| / h), h = half x-range
+
+    This is lowess's estimator with one global bandwidth, bin-moment
+    compression (the standard scale path for loess at big G) and no
+    robustifying pass — a fixed schedule, hence hash-gateable; the
+    R-exact sequential lowess stays in ``voom_weights_lowess``.
+    Output mirrors voom_trend: (gene, n_obs, mean_lcpm, sqrt_sd,
+    trend_sqrt_sd, weight).
+    """
+    ranked, bins = _voom_bins(df, gene_col, sample_col, count_col, n_bins)
+    pairs = ranked.join(F.broadcast(bins))
+    fitted = (
+        _tricube_sums(pairs, [gene_col, "x", "mean_lcpm", "sqrt_sd", "n_obs"])
+        .withColumn("trend_sqrt_sd", F.expr(_LOCAL_LINEAR + " ELSE swy / sw END"))
         .where(F.col("trend_sqrt_sd") > 0)
         .withColumn("weight", F.pow(F.col("trend_sqrt_sd"), -4.0))
     )
@@ -327,67 +348,19 @@ def voom_loess_robust_fixed(
     Scale shape matches the 0-step twin: one per-gene moment pass, bin
     compression (bounded n_bins relation, broadcast), map-side
     combinable aggregates; the only additions are a second bounded bin
-    pass and a 1-row residual-median attach (crossJoin(broadcast),
-    monotone_range_buckets pattern).
+    pass and a 1-row residual-median attach (crossJoin(broadcast)).
     """
-    lcpm = log2_cpm(df, sample_col, count_col)
-    per_gene = (
-        lcpm.groupBy(gene_col)
-        .agg(
-            F.avg("lcpm").alias("mean_lcpm"),
-            F.sqrt(F.sqrt(F.var_samp("lcpm"))).alias("sqrt_sd"),
-            F.count(F.lit(1)).alias("n_obs"),
-        )
-        .where(F.col("sqrt_sd").isNotNull() & (F.col("sqrt_sd") > 0))
-        .withColumn("x", F.round("mean_lcpm", 9))
-        .withColumn("y", F.round("sqrt_sd", 9))
-    )
-    w_all = Window.partitionBy()
-    ranked = per_gene.withColumn(
-        "bin",
-        F.ntile(n_bins).over(Window.orderBy(F.col("x").asc(), F.col(gene_col).asc())),
-    ).withColumn(
-        "h",
-        F.round((F.max("x").over(w_all) - F.min("x").over(w_all)) / 2.0, 9),
-    ).persist()  # gene-bounded; read by the bin moments AND the sweep
-    register_persisted(ranked)
-    bins = ranked.groupBy("bin").agg(
-        F.round(F.avg("x"), 9).alias("cb"),
-        F.count(F.lit(1)).alias("nb"),
-        F.round(F.sum("x"), 9).alias("bsx"),
-        F.round(F.sum("y"), 9).alias("bsy"),
-        F.round(F.sum(F.col("x") * F.col("y")), 9).alias("bsxy"),
-        F.round(F.sum(F.col("x") * F.col("x")), 9).alias("bsxx"),
-    )
-    tri = (
-        "(CASE WHEN h <= 0.0e0 THEN 1.0e0"  # degenerate axis: global fit
-        " WHEN abs(x - cb) / h < 1.0e0 THEN"
-        " (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
-        " * (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
-        " * (1.0e0 - (abs(x - cb) / h) * (abs(x - cb) / h) * (abs(x - cb) / h))"
-        " ELSE 0.0e0 END)"
-    )
-    trend_sql = (
-        "CASE WHEN _den > 1.0e-12 THEN"
-        " (swy - ((sw * swxy - swx * swy) / _den) * swx) / sw"
-        " + ((sw * swxy - swx * swy) / _den) * x"
-        " ELSE swy / sw END"
-    )
+    ranked, bins = _voom_bins(df, gene_col, sample_col, count_col, n_bins)
+    trend_sql = _LOCAL_LINEAR + " ELSE swy / sw END"
     # bins enters pairs as a CROSS join (each gene weighs ALL bins via
     # the tricube, zero beyond h) — rename its key so the gene's own
     # bin id survives unambiguously into the residual pass
     binsr = bins.withColumnRenamed("bin", "_bb")
-    pairs = ranked.join(F.broadcast(binsr)).withColumn("tw", F.round(F.expr(tri), 9))
+    pairs = ranked.join(F.broadcast(binsr))
     fit1 = (
-        pairs.groupBy(gene_col, "bin", "x", "y", "mean_lcpm", "sqrt_sd", "n_obs", "h")
-        .agg(
-            F.sum(F.expr("tw * nb")).alias("sw"),
-            F.sum(F.expr("tw * bsx")).alias("swx"),
-            F.sum(F.expr("tw * bsy")).alias("swy"),
-            F.sum(F.expr("tw * bsxx")).alias("swxx"),
-            F.sum(F.expr("tw * bsxy")).alias("swxy"),
+        _tricube_sums(
+            pairs, [gene_col, "bin", "x", "y", "mean_lcpm", "sqrt_sd", "n_obs", "h"]
         )
-        .withColumn("_den", F.expr("sw * swxx - swx * swx"))
         .withColumn("r", F.expr(f"round(y - round({trend_sql}, 9), 9)"))
         .drop("sw", "swx", "swy", "swxx", "swxy", "_den")
         # gene-bounded; read by the residual-median agg, the pass-2
@@ -422,24 +395,13 @@ def voom_loess_robust_fixed(
         .join(binsr.select(F.col("_bb").alias("bin"), "cb"), "bin")
         .withColumnRenamed("bin", "_bb")
     )
-    pairs2 = rob.join(F.broadcast(bins2)).withColumn("tw", F.round(F.expr(tri), 9))
+    pairs2 = rob.join(F.broadcast(bins2))
     fitted = (
-        pairs2.groupBy(gene_col, "x", "y", "mean_lcpm", "sqrt_sd", "n_obs")
-        .agg(
-            F.sum(F.expr("tw * nb2")).alias("sw"),
-            F.sum(F.expr("tw * bsx2")).alias("swx"),
-            F.sum(F.expr("tw * bsy2")).alias("swy"),
-            F.sum(F.expr("tw * bsxx2")).alias("swxx"),
-            F.sum(F.expr("tw * bsxy2")).alias("swxy"),
-        )
-        .withColumn("_den", F.expr("sw * swxx - swx * swx"))
+        _tricube_sums(pairs2, [gene_col, "x", "y", "mean_lcpm", "sqrt_sd", "n_obs"], "2")
         .withColumn(
             "trend_sqrt_sd",
             F.expr(
-                "CASE WHEN _den > 1.0e-12 THEN"
-                " (swy - ((sw * swxy - swx * swy) / _den) * swx) / sw"
-                " + ((sw * swxy - swx * swy) / _den) * x"
-                " WHEN sw > 0.0e0 THEN swy / sw"
+                _LOCAL_LINEAR + " WHEN sw > 0.0e0 THEN swy / sw"
                 # every robustness weight in reach is 0: keep the
                 # gene's own y (then subject to the > 0 output filter)
                 " ELSE y END"

@@ -12,8 +12,10 @@ raw rows) -> global max gap.  The asymptotic Kolmogorov p-value is an
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from transcriptomics_data_integration_spark.operators.windows import Scan, ordered_scan
 
 
 def ks_test(
@@ -22,7 +24,6 @@ def ks_test(
     value_col: str,
     g1,
     g2,
-    n_buckets: int | None = 1024,
 ) -> DataFrame:
     """One-row result: (n1, n2, d_stat, p_approx) for the two-sample KS
     between ``value_col`` distributions of groups g1 and g2.
@@ -36,17 +37,9 @@ def ks_test(
     asymptotic path (it switches to an exact method only for small
     samples without ties).
 
-    Scale: with ``n_buckets`` (default 1024) the running ECDF is the
-    bucketed two-pass prefix sum (monotone value-range shards; per-
-    shard count totals — a <= n_buckets-row relation — carry the base
-    offsets, and the only large window is ``partitionBy(bucket)``).
-    Integer-count sums make the two-pass form bit-identical to the
-    single global window, which remains available via
-    ``n_buckets=None`` (and is the automatic fallback for non-numeric
-    value types).
+    Scale: the running ECDF counts are an ``ordered_scan`` over the
+    distinct values (its arms: ``operators/windows.py``).
     """
-    from pyspark.sql.types import NumericType
-
     tagged = df.where(F.col(group_col).isin([g1, g2])).select(
         F.col(value_col).alias("v"),
         F.when(F.col(group_col) == g1, 1).otherwise(0).alias("is1"),
@@ -55,48 +48,12 @@ def ks_test(
         F.sum("is1").alias("c1"),
         F.sum(1 - F.col("is1")).alias("c2"),
     )
-    from transcriptomics_data_integration_spark.operators.windows import (
-        fits_single_task,
-        monotone_range_buckets,
+    gaps = ordered_scan(
+        per_value, ["v"], [Scan("cum1", "sum", "c1"), Scan("cum2", "sum", "c2")]
     )
-
-    # adaptive physical choice: below the single-task size estimate the
-    # global window beats the two-pass shape's extra stages (identical
-    # counts either way — integer sums, no FP reassociation)
-    if (
-        n_buckets
-        and isinstance(df.schema[value_col].dataType, NumericType)
-        and not fits_single_task(per_value)
-    ):
-
-        bucketed = monotone_range_buckets(per_value, "v", n_buckets=n_buckets)
-        totals = bucketed.groupBy("_bkt").agg(
-            F.sum("c1").alias("_t1"), F.sum("c2").alias("_t2")
-        )
-        w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-        base = totals.select(
-            "_bkt",
-            F.coalesce(F.sum("_t1").over(w_base), F.lit(0)).alias("_b1"),
-            F.coalesce(F.sum("_t2").over(w_base), F.lit(0)).alias("_b2"),
-        )
-        w_in = (
-            Window.partitionBy("_bkt")
-            .orderBy("v")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        gaps = bucketed.join(F.broadcast(base), "_bkt").select(
-            (F.col("_b1") + F.sum("c1").over(w_in)).alias("cum1"),
-            (F.col("_b2") + F.sum("c2").over(w_in)).alias("cum2"),
-        )
-    else:
-        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-        gaps = per_value.select(
-            F.sum("c1").over(w).alias("cum1"),
-            F.sum("c2").over(w).alias("cum2"),
-        )
     # group sizes via a 1-row broadcast attach (deliberate bounded
-    # BNLJ, same shape as monotone_range_buckets' bounds) — not a
-    # second full-relation window
+    # BNLJ, like the bucketed scan's bounds attach) — not a second
+    # full-relation window
     tot = per_value.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
     agg = (
         gaps.join(F.broadcast(tot))

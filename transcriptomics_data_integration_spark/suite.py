@@ -56,7 +56,7 @@ from transcriptomics_data_integration_spark.stats import (
     stouffer_combine,
     two_group_ttest,
 )
-from transcriptomics_data_integration_spark.stats.bh import _adjust_histogram
+from transcriptomics_data_integration_spark.stats.bh import _adjust
 from transcriptomics_data_integration_spark.stats.genemeta import effect_sizes
 from transcriptomics_data_integration_spark.suite_llm import ORACLES_LLM, QUERIES_LLM
 
@@ -862,13 +862,13 @@ FROM adj
 
 def q_bh_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M10 scale path — same DE p-set as ``diff_expression`` but
-    adjusted with the two-pass histogram BH (bucket-partitioned windows,
-    no global single-partition sort; see ``stats/bh.py``).  Output is
+    adjusted on the bucketed arm of BH (bucket-partitioned windows, no
+    global single-partition sort; see ``operators/windows.py``).  Output is
     bit-identical to the sort-window form, so the oracle is the standard
     BH SQL — this query IS the equivalence proof at gate SF."""
     li = _t(spark, sf_dir, "lineitem")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
-    adj = _adjust_histogram(tt, "p_value", "adj_p_value", "BH", "l_partkey")
+    adj = _adjust(tt, "p_value", "adj_p_value", "BH", None, "l_partkey", single_task=False)
     return adj.select(
         "l_partkey",
         F.round("p_value", 8).alias("p_value"),
